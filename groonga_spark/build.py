@@ -357,7 +357,7 @@ def build_segment(
         "shard", ((F.col("doc_id") - F.lit(lo)) / F.lit(shard_size)).cast("int")
     )
 
-    def _enc(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _enc(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         return encode_shard(pdf, int(key[0]), segment, mode)
 
     blocks = sharded.groupBy("shard").applyInPandas(_enc, schema=BLOCK_SCHEMA)

@@ -32,6 +32,8 @@ from __future__ import annotations
 import json
 import os
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,7 +50,8 @@ from groonga_spark.ql import (
     Term,
     parse_query,
 )
-from groonga_spark.search import FulltextIndex
+from groonga_spark.search import RESULT_SCHEMA, FulltextIndex, result_frame
+from groonga_spark.wand import SegmentQueryKernel, TermPostings
 
 MANIFEST = "multifield.json"
 
@@ -68,6 +71,40 @@ def parse_match_columns(spec: str) -> list[tuple[str, float]]:
     if not out:
         raise ValueError(f"empty match_columns spec: {spec!r}")
     return out
+
+
+def _bm25f_topk(pdf: pd.DataFrame, pp: dict,
+                k: int) -> tuple[np.ndarray, np.ndarray]:
+    """BM25F top-k over one block frame whose term_ids are remapped into
+    the field namespace (MultiFieldIndex._FIELD_SHIFT) — ONE
+    interval-pruner call, each member carrying its field's
+    stats/tombstones and weight. ``pp`` is a MultiFieldIndex._pruned_plan
+    dict. The driver route and the per-shard UDF both run it. A group
+    whose members have no postings in the frame drops; under AND that
+    empties the result."""
+    empty = (np.empty(0, np.int64), np.empty(0, np.float64))
+    shift = MultiFieldIndex._FIELD_SHIFT
+    by_tid: dict[int, TermPostings] = {}
+    for tid, g in pdf.groupby("term_id"):
+        tid = int(tid)
+        fi = (tid >> shift) - 1
+        by_tid[tid] = TermPostings(
+            g, pp["df_by_tid"][tid], pp["tombs"][fi], pp["stats_by_field"][fi]
+        )
+    groups = []
+    for g in pp["groups"]:
+        members = [(t, w) for t, w in g["members"] if t in by_tid]
+        if members:
+            groups.append({"kind": "or", "members": members, "post": None})
+        elif pp["mode"] == "and":
+            return empty
+    if not groups:
+        return empty
+    neg_tids = [t for t in pp["neg_tids"] if t in by_tid]
+    kern = SegmentQueryKernel.from_term_postings(
+        by_tid, pp["stats_by_field"][0], k
+    )
+    return kern._topk_interval_pruned(groups, pp["mode"], None, neg_tids)
 
 
 def build_multifield_index(
@@ -174,7 +211,7 @@ class MultiFieldIndex:
     # -- evaluation ---------------------------------------------------------
 
     def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame([], "doc_id long, score double")
+        return result_frame(self.spark)
 
     def _leaf(self, node, cols: list[tuple[str, float]]) -> DataFrame:
         """Weighted cross-field OR of one query leaf — the reference's
@@ -232,14 +269,14 @@ class MultiFieldIndex:
     _FIELD_SHIFT = 40
 
     def _pruned_plan(self, ast, cols: list[tuple[str, float]]):
-        """Shape/lexicon analysis shared by the local and distributed
-        pruned paths (driver-cheap: tokenize the leaves once, one pruned
+        """Shape/lexicon analysis shared by the driver and cluster
+        pruned routes (driver-cheap: tokenize the leaves once, one pruned
         lexicon lookup per field). Returns None when the SHAPE isn't
         eligible (multi-token leaves, Prefix/Near/Similar, nested OR/AND
         mixes); "empty" when an AND leaf matches no field; else a dict:
         mode, groups/neg_tids over the mapped-tid namespace, per-mapped-
         tid df, per-field stats/tombstones, per-field raw-tid lists, and
-        Σdf (posting-volume estimate)."""
+        per-field Σdf (posting-volume estimate)."""
         from groonga_spark.normalize import normalize_str
         from groonga_spark.tokenize import tokenize_str
 
@@ -269,8 +306,8 @@ class MultiFieldIndex:
 
         # Driver-mask invariant (search.FulltextIndex._plan): past
         # TOMBSTONE_DRIVER_MAX rows the driver must never materialize the
-        # tombstone set. Both pruned kernels carry per-field masks inside
-        # the plan (the distributed variant broadcasts them too), so a
+        # tombstone set. Both pruned routes carry per-field masks inside
+        # the plan (the cluster route broadcasts them too), so a
         # giant pre-compaction delete makes the pruned SHAPE ineligible —
         # callers fall back to the exhaustive per-field algebra, whose
         # FulltextIndex path masks executor-side past the threshold.
@@ -288,7 +325,7 @@ class MultiFieldIndex:
         raw_tids: list[list[int]] = []
         stats_by_field: dict[int, dict] = {}
         tombs: dict[int, object] = {}
-        sum_df = 0.0
+        field_df: list[float] = []
         for fi, (name, _w) in enumerate(cols):
             fidx = self.field(name)
             fidx._check_generation()
@@ -300,7 +337,7 @@ class MultiFieldIndex:
             raw_tids.append(sorted({tid for tid, _ in tid_map.values()}))
             for _t, (tid, df) in tid_map.items():
                 df_by_tid[(fi + 1) * shift + tid] = float(df)
-                sum_df += float(df)
+            field_df.append(sum(float(df) for _tid, df in tid_map.values()))
             stats_by_field[fi] = fidx._stats()
             tombs[fi] = fidx.tombstones()
 
@@ -332,121 +369,57 @@ class MultiFieldIndex:
             "raw_tids": raw_tids,
             "stats_by_field": stats_by_field,
             "tombs": tombs,
-            "sum_df": sum_df,
+            "field_df": field_df,
         }
 
-    def _pruned_topk(self, ast, cols: list[tuple[str, float]], k: int,
-                     pp=None):
-        """BM25F top-k through the interval pruner — ONE kernel call over
-        members drawn from every field's postings, each member carrying
-        its field's stats/weight, instead of scoring every hit of every
-        field and sorting (the round-2 shape). Group model: one or-kind
-        group per query leaf, members = (field, token) in match_columns
-        order with weight w_f — upper bounds Σ w_f·bound_f per interval,
-        so a head-term query stops after the top-k stabilizes exactly
-        like the single-field path. Bit-identical to the exhaustive
-        DataFrame algebra (member adds in cols order == the combine('or')
-        chain; group adds in child order == the combine('and') chain).
+    def _fits_driver(self, pp: dict, cols: list[tuple[str, float]]) -> bool:
+        """Aggregate driver-volume gate: the SUM of every field's
+        FulltextIndex._posting_bytes estimate against
+        DRIVER_QUERY_MAX_BYTES — gating each field alone would let N
+        fields load N× the cap onto the driver."""
+        est = sum(self.field(name)._posting_bytes(pp["field_df"][fi])
+                  for fi, (name, _w) in enumerate(cols))
+        return est <= self.field(cols[0][0]).DRIVER_QUERY_MAX_BYTES
 
-        Returns (doc_ids, scores); "distributed" when the shape is
-        eligible but the posting volume is above the driver-local cap
-        (route to _pruned_topk_distributed, passing ``pp`` to avoid
-        re-planning); None when the shape isn't eligible — callers fall
-        back to the exhaustive evaluator."""
-        import numpy as np
-
-        from groonga_spark.wand import SegmentQueryKernel, TermPostings
-
-        pp = pp if pp is not None else self._pruned_plan(ast, cols)
-        if pp is None:
-            return None
+    def _driver_topk(self, pp, cols: list[tuple[str, float]],
+                     k: int) -> tuple[np.ndarray, np.ndarray]:
+        """BM25F top-k on the driver: every field's term_id-pruned blocks
+        (tids remapped into the field namespace) through _bm25f_topk.
+        Instead of scoring every hit of every field and sorting, one
+        or-kind group per query leaf (members = (field, token) in
+        match_columns order, weight w_f) bounds Σ w_f·bound_f per
+        interval, so a head-term query stops once the top-k stabilizes
+        exactly like the single-field path. Bit-identical to the
+        exhaustive DataFrame algebra (member adds in cols order == the
+        combine('or') chain; group adds in child order == the
+        combine('and') chain). ``pp`` is a _pruned_plan dict or
+        "empty"."""
         empty = (np.empty(0, np.int64), np.empty(0, np.float64))
         if pp == "empty":
             return empty
-
         shift = 1 << self._FIELD_SHIFT
-        # Aggregate driver-volume gate: _local_blocks caps each FIELD at
-        # DRIVER_QUERY_MAX_BYTES individually, so N fields could each
-        # pass while their sum loads N× the cap onto the driver. Estimate
-        # the total across all fields once (same formula as
-        # _local_blocks: Σdf × bytes-per-posting × 2) and route to the
-        # distributed path when the aggregate exceeds the cap.
-        agg_est = 0.0
-        for fi, (name, _w) in enumerate(cols):
-            fmeta = self.field(name).meta
-            bpp = (
-                fmeta["bytes_compressed"] / fmeta["postings_total"]
-                if fmeta.get("postings_total")
-                else 8.0
-            )
-            f_sum_df = sum(
-                d for t, d in pp["df_by_tid"].items()
-                if t >> self._FIELD_SHIFT == fi + 1
-            )
-            agg_est += f_sum_df * bpp * 2.0
-        if agg_est > self.field(cols[0][0]).DRIVER_QUERY_MAX_BYTES:
-            return "distributed"
-
-        by_tid: dict[int, TermPostings] = {}
+        parts = []
         for fi, (name, _w) in enumerate(cols):
             tids = pp["raw_tids"][fi]
-            if not tids:
-                continue
-            fidx = self.field(name)
-            plan_f = {
-                "df_by_tid": {
-                    t - (fi + 1) * shift: d
-                    for t, d in pp["df_by_tid"].items()
-                    if t >> self._FIELD_SHIFT == fi + 1
-                },
-                "tid_ranges": [],
-                "ranges_sum_df": 0.0,
-            }
-            pdf = fidx._local_blocks(tids, plan_f)
-            if pdf is None:
-                return "distributed"  # volume warrants the cluster
-            for tid, g in pdf.groupby("term_id"):
-                mt = (fi + 1) * shift + int(tid)
-                by_tid[mt] = TermPostings(
-                    g, pp["df_by_tid"][mt], pp["tombs"][fi],
-                    pp["stats_by_field"][fi]
-                )
-
-        # drop members whose postings are absent (belt-and-braces: a
-        # lexicon hit always has postings) — preserves member order
-        groups = []
-        for g in pp["groups"]:
-            members = [(t, w) for t, w in g["members"] if t in by_tid]
-            if members:
-                groups.append({"kind": "or", "members": members,
-                               "post": None})
-            elif pp["mode"] == "and":
-                return empty
-        if not groups:
+            if tids:
+                pdf = self.field(name)._local_blocks(tids, {}, force=True)
+                parts.append(pdf.assign(
+                    term_id=pdf["term_id"].astype("int64") + (fi + 1) * shift
+                ))
+        if not parts:
             return empty
-        neg_tids = [t for t in pp["neg_tids"] if t in by_tid]
+        return _bm25f_topk(pd.concat(parts, ignore_index=True), pp, k)
 
-        kern = SegmentQueryKernel.from_term_postings(
-            by_tid, pp["stats_by_field"][0], k
-        )
-        return kern._topk_interval_pruned(groups, pp["mode"], None, neg_tids)
-
-    def _pruned_topk_distributed(self, ast, cols: list[tuple[str, float]],
-                                 k: int, pp=None) -> DataFrame | None:
-        """Cluster-scale BM25F pruned top-k: union every field's
-        term_id-pruned postings (tids remapped into the field namespace),
-        group by (segment, shard) — field layouts share shard boundaries
-        (same segment_size/shard_size, same doc ids), so one shard group
-        holds EVERY field's blocks for its doc range — and run the same
-        interval-pruner kernel per shard; global top-k merge touches k
-        rows per shard (TakeOrderedAndProject). None when the field
-        layouts don't align (different shard geometry) — exhaustive
-        fallback."""
-        import pandas as pd
-
-        pp = pp if pp is not None else self._pruned_plan(ast, cols)
-        if pp is None or pp == "empty":
-            return None
+    def _cluster_topk(self, pp: dict, cols: list[tuple[str, float]],
+                      k: int) -> DataFrame | None:
+        """BM25F top-k on the cluster: union every field's term_id-pruned
+        postings (tids remapped into the field namespace), group by
+        (segment, shard) — field layouts share shard boundaries (same
+        segment_size/shard_size, same doc ids), so one shard group holds
+        EVERY field's blocks for its doc range — and run _bm25f_topk per
+        shard; the global top-k merge touches k rows per shard
+        (TakeOrderedAndProject). None when the field layouts don't align
+        (different shard geometry) — exhaustive fallback."""
         geom = {
             (self.field(n).meta.get("segment_size"),
              self.field(n).meta.get("shard_size"))
@@ -475,55 +448,14 @@ class MultiFieldIndex:
         for p in parts[1:]:
             blocks = blocks.unionByName(p)
         blocks = blocks.withColumn("shard", F.shiftright("block_id", 24))
+        plan_b = self.spark.sparkContext.broadcast(pp)
 
-        info = self.spark.sparkContext.broadcast({
-            "groups": pp["groups"],
-            "mode": pp["mode"],
-            "neg_tids": pp["neg_tids"],
-            "df_by_tid": pp["df_by_tid"],
-            "stats_by_field": pp["stats_by_field"],
-            "tombs": pp["tombs"],
-            "shift_bits": self._FIELD_SHIFT,
-            "k": k,
-        })
-
-        def _run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            from groonga_spark.wand import SegmentQueryKernel, TermPostings
-
-            v = info.value
-            out_empty = pd.DataFrame({
-                "doc_id": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-            })
-            by_tid = {}
-            for tid, g in pdf.groupby("term_id"):
-                tid = int(tid)
-                fi = (tid >> v["shift_bits"]) - 1
-                by_tid[tid] = TermPostings(
-                    g, v["df_by_tid"][tid], v["tombs"][fi],
-                    v["stats_by_field"][fi]
-                )
-            groups = []
-            for g in v["groups"]:
-                members = [(t, w) for t, w in g["members"] if t in by_tid]
-                if members:
-                    groups.append({"kind": "or", "members": members,
-                                   "post": None})
-                elif v["mode"] == "and":
-                    return out_empty  # leaf matches no field in this shard
-            if not groups:
-                return out_empty
-            neg = [t for t in v["neg_tids"] if t in by_tid]
-            kern = SegmentQueryKernel.from_term_postings(
-                by_tid, v["stats_by_field"][0], v["k"]
-            )
-            doc, score = kern._topk_interval_pruned(
-                groups, v["mode"], None, neg
-            )
+        def _run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+            doc, score = _bm25f_topk(pdf, plan_b.value, k)
             return pd.DataFrame({"doc_id": doc, "score": score})
 
         per_shard = blocks.groupBy("segment", "shard").applyInPandas(
-            _run, schema="doc_id long, score double"
+            _run, schema=RESULT_SCHEMA
         )
         return per_shard.orderBy(
             F.desc("score"), F.asc("doc_id")
@@ -562,28 +494,22 @@ class MultiFieldIndex:
                k: int = 10) -> DataFrame:
         """BM25F top-k → (doc_id, score), (score desc, doc_id asc).
 
-        Eligible shapes run the interval-pruned kernel — driver-local
-        for small posting volumes, per-(segment, shard) on the cluster
-        past the driver cap (field layouts share shard boundaries, so
-        one shard group holds every field's blocks for its doc range);
-        remaining shapes fall back to the exhaustive leaf-level algebra
-        + global sort."""
+        Eligible shapes run the interval-pruned kernel — on the driver
+        when the fields' summed posting volume fits the driver cap
+        (_fits_driver), else per-(segment, shard) on the cluster (field
+        layouts share shard boundaries, so one shard group holds every
+        field's blocks for its doc range); remaining shapes fall back to
+        the exhaustive leaf-level algebra + global sort."""
         ast = parse_query(query)
         cols = self._cols(match_columns)
         pp = self._pruned_plan(ast, cols)
-        got = self._pruned_topk(ast, cols, k, pp=pp) if pp is not None else None
-        if got == "distributed":
-            dist = self._pruned_topk_distributed(ast, cols, k, pp=pp)
+        if pp is not None:
+            if pp == "empty" or self._fits_driver(pp, cols):
+                return result_frame(self.spark,
+                                    *self._driver_topk(pp, cols, k))
+            dist = self._cluster_topk(pp, cols, k)
             if dist is not None:
                 return dist
-            got = None
-        if got is not None:
-            import pandas as pd
-
-            out = pd.DataFrame({"doc_id": got[0], "score": got[1]})
-            return self.spark.createDataFrame(
-                out, "doc_id long, score double"
-            )
         return (
             self.match_docs(query, match_columns)
             .orderBy(F.desc("score"), F.asc("doc_id"))

@@ -2,11 +2,22 @@
 
 The distributed shape of [G: lib/proc/proc_select.c · grn_select] step 3
 (selection): the driver parses the query and looks up the handful of query
-terms in the lexicon (tiny, pruned scan); executors each evaluate the AST
-over ONE segment's blocks (segments partition the doc-id space, so every
-set operation is segment-local); a global ``orderBy(score desc, doc_id
-asc).limit(k)`` merges per-segment top-k — Spark's TakeOrderedAndProject,
-touching k rows per segment, not the corpus.
+terms in the lexicon (tiny, pruned scan), then ONE executor
+(``FulltextIndex._execute``) runs the kernel for top-k and match-set
+queries alike, on one of two routes:
+
+- driver: when no more than TOMBSTONE_DRIVER_MAX docs are tombstoned and
+  the estimated posting volume fits DRIVER_QUERY_MAX_BYTES, the driver
+  reads the term_id-pruned blocks with pyarrow and runs the kernel over
+  them — no Spark job;
+- cluster: otherwise executors each evaluate the AST over ONE (segment,
+  shard)'s blocks (shards partition the doc-id space, so every set
+  operation is shard-local); a global ``orderBy(score desc, doc_id
+  asc).limit(k)`` merges per-shard top-k — Spark's TakeOrderedAndProject,
+  touching k rows per shard, not the corpus.
+
+Callers cannot force a route; the rule above is the only one. Every
+driver-side result becomes a DataFrame through ``result_frame``.
 
 Scale notes: the postings scan is filtered by ``term_id IN (...)`` which
 prunes parquet row groups (postings are written term_id-sorted) / Iceberg
@@ -21,6 +32,7 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,13 +42,27 @@ from groonga_spark.ql import parse_query, query_terms
 from groonga_spark.tokenize import tokenize_str
 from groonga_spark.wand import SegmentQueryKernel
 
+#: Spark schema of every query result: one row per matching doc
+RESULT_SCHEMA = "doc_id long, score double"
+
+
+def result_frame(spark: SparkSession, doc=(), score=()) -> DataFrame:
+    """(doc_id, score) DataFrame around driver-side result arrays. Built
+    from a typed Arrow table, which Spark wraps as a local relation with
+    no job — an empty pandas frame would start one with Python workers."""
+    return spark.createDataFrame(pa.table({
+        "doc_id": pa.array(doc, pa.int64()),
+        "score": pa.array(score, pa.float64()),
+    }))
+
 
 def _prefix_upper_bound(prefix: str) -> str | None:
     """Exclusive upper bound of the prefix range [p, succ(p)): increment
     the last codepoint (codepoint order == UTF-8 byte order), SKIPPING
     the surrogate gap (U+D7FF + 1 would be a lone surrogate — pyarrow
-    raises encoding it). None → no finite bound (all-U+10FFFF prefix);
-    callers fall back to enumeration."""
+    raises encoding it). None → no finite bound (all-U+10FFFF prefix):
+    every term at or above such a prefix starts with it, so the range
+    is [p, ∞)."""
     p = prefix
     while p and ord(p[-1]) >= 0x10FFFF:
         p = p[:-1]
@@ -82,7 +108,7 @@ class FulltextIndex:
         self._postings_df: DataFrame | None = None
         from collections import OrderedDict
 
-        self._result_cache: OrderedDict[tuple, pd.DataFrame] = OrderedDict()
+        self._result_cache: OrderedDict[tuple, tuple] = OrderedDict()
         self._generation = self._cache_generation()
 
     def _check_generation(self) -> tuple:
@@ -216,14 +242,17 @@ class FulltextIndex:
         range predicate pushed to the parquet/Iceberg scan — a hot
         prefix over a 10^8-term lexicon never fetches matched rows to
         the driver (the contract is two ints + two scalars); under it,
-        a driver pyarrow scan answers without a Spark job."""
+        a driver pyarrow scan answers without a Spark job. A prefix with
+        no finite successor (all U+10FFFF) is the open range [p, ∞):
+        every term there starts with it, so the ids stay contiguous."""
         ub = _prefix_upper_bound(prefix)
-        if ub is None:
-            return None  # degenerate all-U+10FFFF prefix: enumerate instead
         if self.meta.get("n_terms", 0) > self.PREFIX_DRIVER_SCAN_MAX:
+            cond = F.col("term") >= prefix
+            if ub is not None:
+                cond = cond & (F.col("term") < ub)
             row = (
                 self.lexicon
-                .filter((F.col("term") >= prefix) & (F.col("term") < ub))
+                .filter(cond)
                 .agg(
                     F.min("term_id").alias("lo"),
                     F.max("term_id").alias("hi"),
@@ -244,7 +273,9 @@ class FulltextIndex:
         import pyarrow.compute as pc
         import pyarrow.dataset as ds
 
-        f = (ds.field("term") >= prefix) & (ds.field("term") < ub)
+        f = ds.field("term") >= prefix
+        if ub is not None:
+            f = f & (ds.field("term") < ub)
         dset = ds.dataset(self.store.p("lexicon"), format="parquet")
         tbl = dset.to_table(columns=["term_id", "df"], filter=f)
         n = tbl.num_rows
@@ -331,7 +362,7 @@ class FulltextIndex:
 
         terms = self.fuzzy_terms(term, max_distance, prefix_length)
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return result_frame(self.spark)
         ast = Or([Term(t) for t in terms]) if len(terms) > 1 else Term(terms[0])
         return self.match_ast(ast)
 
@@ -357,7 +388,7 @@ class FulltextIndex:
 
         terms = self.prefix_rk_terms(romaji)
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return result_frame(self.spark)
         ast = Or([Term(t) for t in terms]) if len(terms) > 1 else Term(terms[0])
         return self.match_ast(ast)
 
@@ -409,16 +440,9 @@ class FulltextIndex:
             if isinstance(leaf, Prefix):
                 pfx = normalize_str(leaf.text)
                 rng = self._prefix_tid_range(pfx)
-                if rng is not None:
-                    return TermRange(pfx, rng[0], rng[1], rng[2], rng[3])
-                # no matching term (or degenerate prefix): enumerate —
-                # usually empty → the impossible term
-                terms = self._prefix_terms(pfx)
-                if not terms:
+                if rng is None:
                     return Term("\x00<no-match>")  # impossible term → ∅
-                if len(terms) == 1:
-                    return Term(terms[0])
-                return Or([Term(t) for t in terms])
+                return TermRange(pfx, rng[0], rng[1], rng[2], rng[3])
             if (expansions and isinstance(leaf, Term)
                     and leaf.text in expansions):
                 alts = [leaf.text, *expansions[leaf.text]]
@@ -639,29 +663,34 @@ class FulltextIndex:
         self._tombstone_est = total
         return total
 
-    def _local_blocks(self, tids: list[int], plan: dict,
-                      force: bool = False):
-        """term_id-pruned pyarrow scan of postings for the driver-local
-        path, or None when the estimated volume warrants the cluster.
-        TermRange spans prune as BETWEEN predicates (postings files are
-        term_id-sorted → row-group range pruning), never as IN lists."""
+    def _posting_bytes(self, sum_df: float) -> float:
+        """Estimated driver bytes to fetch and decode ``sum_df`` postings
+        of this index: bytes per stored posting × 2. Every driver-volume
+        gate (here and in multifield) compares this to
+        DRIVER_QUERY_MAX_BYTES."""
         meta = self.meta
         bpp = (
             meta["bytes_compressed"] / meta["postings_total"]
             if meta.get("postings_total")
             else 8.0
         )
-        ranges = plan.get("tid_ranges") or []
-        est = (
+        return sum_df * bpp * 2.0
+
+    def _local_blocks(self, tids: list[int], plan: dict,
+                      force: bool = False):
+        """term_id-pruned pyarrow scan of postings for the driver-local
+        path, or None when the estimated volume warrants the cluster.
+        TermRange spans prune as BETWEEN predicates (postings files are
+        term_id-sorted → row-group range pruning), never as IN lists."""
+        if not force and self._posting_bytes(
             sum(plan["df_by_tid"].get(t, 0.0) for t in tids)
             + plan.get("ranges_sum_df", 0.0)
-        ) * bpp * 2.0
-        if est > self.DRIVER_QUERY_MAX_BYTES and not force:
+        ) > self.DRIVER_QUERY_MAX_BYTES:
             return None
         import pyarrow.dataset as ds
 
         f = ds.field("term_id").isin(list(tids)) if tids else None
-        for lo, hi in ranges:
+        for lo, hi in plan.get("tid_ranges") or []:
             rf = (ds.field("term_id") >= lo) & (ds.field("term_id") <= hi)
             f = rf if f is None else (f | rf)
         dset = ds.dataset(self.store.p("postings"), format="parquet")
@@ -681,24 +710,38 @@ class FulltextIndex:
             cond = rc if cond is None else (cond | rc)
         return cond if cond is not None else F.lit(False)
 
-    def _run_local(self, pdf: pd.DataFrame, ast, plan: dict, stats: dict,
-                   k: int, topk: bool):
-        """Run the kernel on the driver over the whole pruned block set.
+    def _execute(self, ast, plan: dict, scorer: str | None, k: int | None):
+        """Run a planned query — the one place that picks its route.
 
-        Blocks across segments/shards are globally doc-disjoint and
-        ordered by (segment, block_id), so ONE kernel evaluates the full
-        index — no per-shard splitting cost on the driver."""
-        kernel = SegmentQueryKernel(pdf, plan, stats, k)
-        doc, score = kernel.run(ast) if topk else kernel.eval(ast)
-        out = pd.DataFrame({"doc_id": doc, "score": score})
-        return self.spark.createDataFrame(out, "doc_id long, score double")
+        ``k`` asks for the top-k by (score desc, doc_id asc); None asks
+        for every match. Past TOMBSTONE_DRIVER_MAX tombstones the plan
+        marks them external and the query runs on the cluster (the
+        driver never holds that mask); otherwise the volume estimate in
+        _local_blocks decides. The driver route runs ONE kernel over the
+        whole pruned block set (blocks are globally doc-disjoint and
+        ordered by (segment, block_id)) and returns ``(doc, score)``
+        arrays; the cluster route returns a DataFrame."""
+        if ast is None or not (plan["needed_tids"] or plan["tid_ranges"]):
+            return np.empty(0, np.int64), np.empty(0, np.float64)
+        stats = self._stats(scorer)
+        limit = (1 << 62) if k is None else k
+        if not plan.get("tombstones_external"):
+            pdf = self._local_blocks(plan["needed_tids"], plan)
+            if pdf is not None:
+                kernel = SegmentQueryKernel(pdf, plan, stats, limit)
+                return kernel.eval(ast) if k is None else kernel.run(ast)
+        per_shard = self._per_shard_eval(ast, plan, stats, limit,
+                                         topk=k is not None)
+        if k is None:
+            return per_shard
+        return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     # -- query result cache -------------------------------------------------
     #
     # The reference caches whole select outputs keyed by the request and
     # clears the cache on table update [G: lib/cache.c · grn_cache_fetch /
     # grn_cache_expire]. Here: an LRU of driver-local TOP-K results (tiny
-    # pandas frames) per handle, keyed by the query plus the index
+    # (doc, score) arrays) per handle, keyed by the query plus the index
     # generation (meta mtime + tombstone file count — two stat calls), so
     # deletes and compaction invalidate naturally. match_docs results are
     # unbounded and never cached.
@@ -715,79 +758,48 @@ class FulltextIndex:
                   if os.path.isdir(d) else 0)
         return (gen_meta, n_tomb)
 
-    def _result_cache_get(self, key: tuple) -> pd.DataFrame | None:
+    def _result_cache_get(self, key: tuple) -> tuple | None:
         got = self._result_cache.get(key)
         if got is not None:
             self._result_cache.move_to_end(key)
         return got
 
-    def _result_cache_put(self, key: tuple, pdf: pd.DataFrame) -> None:
-        self._result_cache[key] = pdf
+    def _result_cache_put(self, key: tuple, result: tuple) -> None:
+        self._result_cache[key] = result
         self._result_cache.move_to_end(key)
         while len(self._result_cache) > self.RESULT_CACHE_MAX:
             self._result_cache.popitem(last=False)
 
     def search(self, query: str, k: int = 10,
-               distributed: bool | None = None,
                expansions: dict | None = None,
                use_cache: bool = True,
                scorer: str | None = None) -> DataFrame:
         """Top-k for a Groonga-QL query → DataFrame(doc_id, score),
         ordered by (score desc, doc_id asc).
 
-        ``distributed=None`` auto-routes: small posting volumes run on
-        the driver over a term_id-pruned pyarrow scan (identical kernel,
-        no job latency); large ones fan out per (segment, shard).
-        ``expansions`` = synonym map (query_expand). Driver-local top-k
-        results are served from the per-handle result cache unless
-        ``use_cache=False`` (invalidated by deletes/compaction).
-        ``scorer`` picks a registered scorer (score.register_scorer —
-        the reference's pluggable scorers [G: lib/scorer.c]); default
-        BM25."""
+        The route (driver or cluster) is _execute's. ``expansions`` =
+        synonym map (query_expand). Driver-route results are served from
+        the per-handle result cache unless ``use_cache=False``
+        (invalidated by deletes/compaction). ``scorer`` picks a
+        registered scorer (score.register_scorer — the reference's
+        pluggable scorers [G: lib/scorer.c]); default BM25."""
         gen = self._check_generation()
         cache_key = None
-        if use_cache and distributed is not True:
+        if use_cache:
             exp_key = (tuple(sorted((t, tuple(v)) for t, v in
                                     expansions.items()))
                        if expansions else None)
-            cache_key = (query, k, exp_key, distributed, gen, scorer)
+            cache_key = (query, k, exp_key, gen, scorer)
             hit = self._result_cache_get(cache_key)
             if hit is not None:
-                return self.spark.createDataFrame(
-                    hit, "doc_id long, score double"
-                )
+                return result_frame(self.spark, *hit)
         ast = self._expand_ast(parse_query(query), expansions)
-        plan = self._plan(ast)
-        spark = self.spark
-        empty_schema = "doc_id long, score double"
-        tids = plan["needed_tids"]
-        if ast is None or not (tids or plan["tid_ranges"]):
-            return spark.createDataFrame([], empty_schema)
-
-        if distributed is not True:
-            # an explicit distributed=False override still runs on the
-            # driver even past the tombstone cap (the caller insisted);
-            # the auto route skips the local path so the driver never
-            # holds a TOMBSTONE_DRIVER_MAX-exceeding mask
-            if plan.get("tombstones_external") and distributed is False:
-                plan.pop("tombstones_external")
-                plan["tombstones"] = self.tombstones()
-            if not plan.get("tombstones_external"):
-                pdf = self._local_blocks(
-                    tids, plan, force=(distributed is False)
-                )
-                if pdf is not None:
-                    kernel = SegmentQueryKernel(pdf, plan,
-                                                self._stats(scorer), k)
-                    doc, score = kernel.run(ast)
-                    out = pd.DataFrame({"doc_id": doc, "score": score})
-                    if cache_key is not None:
-                        self._result_cache_put(cache_key, out)
-                    return spark.createDataFrame(out, empty_schema)
-
-        per_shard = self._per_shard_eval(ast, plan, self._stats(scorer), k,
-                                         topk=True)
-        return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        out = self._execute(ast, self._plan(ast), scorer, k)
+        if isinstance(out, DataFrame):
+            return out
+        if cache_key is not None:
+            self._result_cache_put(cache_key, out)
+        return result_frame(self.spark, *out)
 
     def _per_shard_eval(self, ast, plan: dict, stats: dict, k: int,
                         topk: bool) -> DataFrame:
@@ -802,7 +814,6 @@ class FulltextIndex:
         so the full set is never materialized on the driver nor shipped
         whole to any executor."""
         spark = self.spark
-        empty_schema = "doc_id long, score double"
         external = plan.pop("tombstones_external", False)
         bplan = spark.sparkContext.broadcast(plan)
         ast_b = spark.sparkContext.broadcast(ast)
@@ -811,14 +822,14 @@ class FulltextIndex:
         ).withColumn("shard", F.shiftright("block_id", 24))
 
         if not external:
-            def _run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+            def _run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
                 kernel = SegmentQueryKernel(pdf, bplan.value, stats, k)
                 doc, score = (kernel.run(ast_b.value) if topk
                               else kernel.eval(ast_b.value))
                 return pd.DataFrame({"doc_id": doc, "score": score})
 
             return blocks.groupBy("segment", "shard").applyInPandas(
-                _run, schema=empty_schema
+                _run, schema=RESULT_SCHEMA
             )
 
         # recursiveFileLookup: big deletes are adopted as whole t-<uuid>
@@ -860,37 +871,20 @@ class FulltextIndex:
 
         return blocks.groupBy("segment", "shard").cogroup(
             assign.groupBy("segment", "shard")
-        ).applyInPandas(_run_t, schema=empty_schema)
+        ).applyInPandas(_run_t, schema=RESULT_SCHEMA)
 
     def match_docs(self, query: str,
-                   distributed: bool | None = None,
                    expansions: dict | None = None,
                    scorer: str | None = None) -> DataFrame:
         """All matching doc ids (no top-k) — the COUNT/filter path."""
         ast = self._expand_ast(parse_query(query), expansions)
-        return self.match_ast(ast, distributed=distributed, scorer=scorer)
+        return self.match_ast(ast, scorer=scorer)
 
-    def match_ast(self, ast,
-                  distributed: bool | None = None,
-                  scorer: str | None = None) -> DataFrame:
+    def match_ast(self, ast, scorer: str | None = None) -> DataFrame:
         """match_docs over a pre-expanded AST (multi-field leaf eval and
         other composers enter here)."""
         self._check_generation()
-        plan = self._plan(ast)
-        spark = self.spark
-        if ast is None or not (plan["needed_tids"] or plan["tid_ranges"]):
-            return spark.createDataFrame([], "doc_id long, score double")
-        if distributed is not True:
-            if plan.get("tombstones_external") and distributed is False:
-                plan.pop("tombstones_external")
-                plan["tombstones"] = self.tombstones()
-            if not plan.get("tombstones_external"):
-                pdf = self._local_blocks(
-                    plan["needed_tids"], plan, force=(distributed is False)
-                )
-                if pdf is not None:
-                    return self._run_local(pdf, ast, plan,
-                                           self._stats(scorer),
-                                           1 << 62, topk=False)
-        return self._per_shard_eval(ast, plan, self._stats(scorer), 1 << 62,
-                                    topk=False)
+        out = self._execute(ast, self._plan(ast), scorer, None)
+        if isinstance(out, DataFrame):
+            return out
+        return result_frame(self.spark, *out)

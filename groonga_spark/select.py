@@ -830,13 +830,7 @@ def _escalate_ast(index, query: str, match_columns: str | None = None):
     from groonga_spark.normalize import normalize_str
     from groonga_spark.ql import And, Not, Or, Term, parse_query
 
-    import inspect as _inspect
-
-    takes_mc = (
-        match_columns is not None
-        and "match_columns"
-        in _inspect.signature(index._prefix_terms).parameters
-    )
+    takes_mc = match_columns is not None and _accepts_match_columns(index)
 
     def _expand_term(t: str):
         norm = normalize_str(t)

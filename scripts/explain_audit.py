@@ -125,8 +125,9 @@ def main() -> None:
     # IN pushed per field), global TakeOrderedAndProject merge
     from groonga_spark.ql import parse_query
 
-    dmf = mf._pruned_topk_distributed(
-        parse_query("spark merge"), mf._cols("title*3||body"), 10
+    cols = mf._cols("title*3||body")
+    dmf = mf._cluster_topk(
+        mf._pruned_plan(parse_query("spark merge"), cols), cols, 10
     )
     if dmf is not None:
         audit("multifield_distributed_pruned", dmf,

@@ -203,8 +203,9 @@ def test_multifield_pruned_topk_bit_identity(q, mc, built):
     from groonga_spark.ql import parse_query
 
     cols = built._cols(mc)
-    got = built._pruned_topk(parse_query(q), cols, 10)
-    assert got is not None, (q, mc)  # shape must be eligible
+    pp = built._pruned_plan(parse_query(q), cols)
+    assert pp is not None, (q, mc)  # shape must be eligible
+    got = built._driver_topk(pp, cols, 10)
     exhaustive = [
         (r["doc_id"], r["score"])
         for r in built.match_docs(q, match_columns=mc)
@@ -220,10 +221,10 @@ def test_multifield_pruned_ineligible_shapes(built):
     from groonga_spark.ql import parse_query
 
     cols = built._cols("title||body")
-    assert built._pruned_topk(parse_query('"spark fast"'), cols, 10) is None
-    assert built._pruned_topk(parse_query('*N3"spark merge"'), cols, 10) is None
-    assert built._pruned_topk(
-        parse_query("(spark OR merge) table"), cols, 10
+    assert built._pruned_plan(parse_query('"spark fast"'), cols) is None
+    assert built._pruned_plan(parse_query('*N3"spark merge"'), cols) is None
+    assert built._pruned_plan(
+        parse_query("(spark OR merge) table"), cols
     ) is None
 
 
@@ -240,10 +241,10 @@ def test_multifield_pruned_distributed_matches_local(q, mc, built):
     from groonga_spark.ql import parse_query
 
     cols = built._cols(mc)
-    ast = parse_query(q)
-    local = built._pruned_topk(ast, cols, 10)
+    pp = built._pruned_plan(parse_query(q), cols)
+    local = built._driver_topk(pp, cols, 10)
     assert isinstance(local, tuple)
-    dist = built._pruned_topk_distributed(ast, cols, 10)
+    dist = built._cluster_topk(pp, cols, 10)
     assert dist is not None
     got = [(r["doc_id"], r["score"]) for r in dist.collect()]
     assert [d for d, _ in got] == local[0].tolist(), (q, mc)
@@ -275,8 +276,10 @@ def test_multifield_pruned_fuzz(built):
             if rng.random() < 0.4:
                 q += f" -{rng.choice(vocab)}"
         mc = rng.choice(specs)
-        got = built._pruned_topk(parse_query(q), built._cols(mc), 10)
-        assert got is not None and not isinstance(got, str), (q, mc)
+        cols = built._cols(mc)
+        pp = built._pruned_plan(parse_query(q), cols)
+        assert pp is not None, (q, mc)
+        got = built._driver_topk(pp, cols, 10)
         exh = [
             (r["doc_id"], r["score"])
             for r in built.match_docs(q, match_columns=mc)
@@ -364,7 +367,7 @@ def test_multifield_aggregate_driver_cap(built, monkeypatch):
     # a cap every field passes individually but the aggregate exceeds
     monkeypatch.setattr(FulltextIndex, "DRIVER_QUERY_MAX_BYTES",
                         (max(per_field) + agg) / 2)
-    assert built._pruned_topk(ast, cols, 10) == "distributed"
+    assert not built._fits_driver(pp, cols)
 
 
 def test_multifield_escalation_per_field(spark, built, corpus, oracle):
@@ -472,3 +475,52 @@ def test_pruned_ineligible_past_tombstone_cap(spark, tmp_path, monkeypatch):
            for r in mf2.search("spark stream", "title*2||body", k=10)
            .collect()}
     assert got == want
+
+
+def _tiny_multifield(spark, path):
+    rows = [(0, "alpha beta", "beta"), (1, "gamma", "delta gamma"),
+            (2, "alpha", "beta beta")]
+    df = spark.createDataFrame(rows, "doc_id long, title string, body string")
+    build_multifield_index(spark, df, path, ["title", "body"],
+                           mode="delimit", segment_size=64)
+    return MultiFieldIndex(spark, path)
+
+
+def test_multifield_driver_route_starts_no_spark_job(spark, tmp_path,
+                                                     spark_jobs):
+    """A driver-routed BM25F search starts no Spark job: with hits, with
+    an AND of two known terms that share no doc, and with a term no
+    field's lexicon holds."""
+    mf = _tiny_multifield(spark, str(tmp_path / "mf_jobs"))
+    for q, want in [("alpha", {0, 2}), ("alpha gamma", set()),
+                    ("zzznope", set())]:
+        got = []
+        assert spark_jobs(lambda: got.extend(
+            mf.search(q, match_columns="title*2||body").collect())) == [], q
+        assert {r["doc_id"] for r in got} == want, q
+
+
+def test_grouped_map_udfs_declare_their_eval_type(spark, tmp_path,
+                                                  monkeypatch, spark_jobs):
+    """Every grouped-map UDF is annotated, so pyspark never warns that it
+    cannot infer the eval type: the build's shard encoder, the
+    single-field per-shard kernel and the BM25F per-shard kernel (both
+    forced onto the cluster by a zero driver cap)."""
+    import warnings
+
+    from groonga_spark.search import FulltextIndex
+
+    path = str(tmp_path / "mf_warn")
+    got = []
+    with warnings.catch_warnings():
+        warnings.filterwarnings("error", message="Cannot infer the eval type",
+                                category=UserWarning)
+        mf = _tiny_multifield(spark, path)
+        monkeypatch.setattr(FulltextIndex, "DRIVER_QUERY_MAX_BYTES", 0)
+        single = FulltextIndex(spark, f"{path}/fields/title")
+        assert spark_jobs(lambda: got.append(
+            single.search("alpha").collect())) != []
+        assert spark_jobs(lambda: got.append(
+            mf.search("alpha beta", match_columns="title||body")
+            .collect())) != []
+    assert [{r["doc_id"] for r in rows} for rows in got] == [{0, 2}, {0, 2}]

@@ -38,6 +38,13 @@ def built(spark, corpus, tmp_path_factory):
     return FulltextIndex(spark, path)
 
 
+def _cluster_handle(spark, path):
+    """A fresh handle whose driver cap sends every query to the cluster."""
+    idx = FulltextIndex(spark, path)
+    idx.DRIVER_QUERY_MAX_BYTES = 0
+    return idx
+
+
 @pytest.fixture(scope="module")
 def oracle(corpus):
     _, rows = corpus
@@ -65,18 +72,38 @@ def test_match_counts(q, built, oracle):
     assert built.match_docs(q).count() == oracle.match_count(q)
 
 
+def test_driver_route_starts_no_spark_job(spark, tmp_path, spark_jobs):
+    """A driver-routed query starts no Spark job, whatever it returns:
+    hits, an AND of two known terms that share no doc, and a term the
+    lexicon lacks."""
+    rows = [(0, "alpha beta"), (1, "gamma delta"), (2, "alpha alpha")]
+    path = str(tmp_path / "idx_jobs")
+    build_index(spark, spark.createDataFrame(rows, "doc_id long, text string"),
+                path, mode="delimit", segment_size=200)
+    idx = FulltextIndex(spark, path)
+    for q, want in [("alpha", {0, 2}), ("alpha gamma", set()),
+                    ("zzznope", set())]:
+        got = []
+        assert spark_jobs(lambda: got.append(
+            idx.search(q, 10, use_cache=False).collect())) == [], q
+        assert spark_jobs(lambda: got.append(
+            idx.match_docs(q).collect())) == [], q
+        assert [{r["doc_id"] for r in g} for g in got] == [want, want], q
+
+
 @pytest.mark.parametrize("q", ["spark merge", '"spark fast"', "table -scan",
                                '*N3"spark merge"', "(table OR merge) -slow"])
-def test_local_and_distributed_paths_identical(q, built):
+def test_local_and_distributed_paths_identical(q, spark, built):
     """The driver-local search-head path and the per-(segment, shard)
     cluster path run the same kernel — results must be identical."""
+    cluster = _cluster_handle(spark, built.store.path)
     loc = [(r["doc_id"], r["score"]) for r in
-           built.search(q, 10, distributed=False).collect()]
+           built.search(q, 10).collect()]
     dist = [(r["doc_id"], r["score"]) for r in
-            built.search(q, 10, distributed=True).collect()]
+            cluster.search(q, 10).collect()]
     assert loc == dist
-    lc = {r["doc_id"] for r in built.match_docs(q, distributed=False).collect()}
-    dc = {r["doc_id"] for r in built.match_docs(q, distributed=True).collect()}
+    lc = {r["doc_id"] for r in built.match_docs(q).collect()}
+    dc = {r["doc_id"] for r in cluster.match_docs(q).collect()}
     assert lc == dc
 
 
@@ -228,7 +255,8 @@ def test_delete_tombstones(spark, corpus, tmp_path):
 
     assert idx.match_docs("spark").count() <= n_before
     # distributed path honors tombstones too
-    dd = {r["doc_id"] for r in idx.search("spark merge", 10, distributed=True).collect()}
+    dd = {r["doc_id"] for r in
+          _cluster_handle(spark, path).search("spark merge", 10).collect()}
     assert not (set(victims) & dd)
 
     # a fresh handle sees the tombstones (metadata is durable)
@@ -1005,14 +1033,6 @@ def test_external_tombstones_executor_side(spark, corpus, tmp_path):
         gm = {r["doc_id"] for r in idx2.match_docs(q).collect()}
         assert gm == want_match[q], q
 
-    # explicit distributed=False override still honors the driver path
-    # (and is allowed to materialize): restore the real method for it
-    del idx2.tombstones
-    loc = [(r["doc_id"], r["score"])
-           for r in idx2.search("spark merge", 10, distributed=False,
-                                use_cache=False).collect()]
-    assert loc == want["spark merge"]
-
 
 def test_lexicon_driver_path_matches_distributed(spark, corpus, tmp_path,
                                                  monkeypatch):
@@ -1341,6 +1361,34 @@ def test_prefix_prod_path_never_materializes_matched_rows(spark, tmp_path):
     assert got_hits == want_hits
 
 
+def test_prefix_expansion_never_enumerates(spark, tmp_path, monkeypatch):
+    """A prefix leaf always plans as a TermRange — a prefix with no
+    finite successor (all U+10FFFF) included, as the open range [p, ∞)
+    — so planning never enumerates lexicon terms through _prefix_terms,
+    on either lexicon branch."""
+    top = "\U0010FFFF"
+    rows = [(0, f"{top}a common"), (1, f"{top}b common"),
+            (2, "zeta common"), (3, f"{top}{top}c"), (4, "prefab common")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    path = str(tmp_path / "idx_open_prefix")
+    build_index(spark, docs, path, mode="delimit", segment_size=200)
+
+    def boom(*a, **k):
+        raise AssertionError("prefix planning enumerated lexicon terms")
+
+    monkeypatch.setattr(FulltextIndex, "_prefix_terms", boom)
+    for scan_max in (FulltextIndex.PREFIX_DRIVER_SCAN_MAX, 0):
+        idx = FulltextIndex(spark, path)
+        idx.PREFIX_DRIVER_SCAN_MAX = scan_max
+        for q, want in [(f"{top}*", {0, 1, 3}), (f"{top}{top}*", {3}),
+                        ("pre*", {4}), ("nosuch*", set())]:
+            got = {r["doc_id"] for r in idx.match_docs(q).collect()}
+            assert got == want, (scan_max, q)
+            top_k = {r["doc_id"] for r in
+                     idx.search(f"{q} OR zeta", 10).collect()}
+            assert top_k == want | {2}, (scan_max, q)
+
+
 def test_similar_rare_term_selection_bounds_the_plan(spark, corpus, built,
                                                      oracle):
     """*S on a LONG input must plan a bounded leaf set: the expand-time
@@ -1405,8 +1453,9 @@ def test_tf_idf_scorer_rank_identity(spark, corpus, built):
             assert abs(gs - ws) <= 1e-6, q
     # distributed ≡ local under the non-default scorer
     dist = [(r["doc_id"], round(r["score"], 9)) for r in
-            built.search("spark merge", 10, scorer="tf_idf",
-                         distributed=True, use_cache=False).collect()]
+            _cluster_handle(spark, built.store.path)
+            .search("spark merge", 10, scorer="tf_idf",
+                    use_cache=False).collect()]
     loc = [(r["doc_id"], round(r["score"], 9)) for r in
            built.search("spark merge", 10, scorer="tf_idf",
                         use_cache=False).collect()]

@@ -51,7 +51,7 @@ from groonga_spark.ql import (
     parse_query,
 )
 from groonga_spark.search import RESULT_SCHEMA, FulltextIndex, result_frame
-from groonga_spark.wand import SegmentQueryKernel, TermPostings
+from groonga_spark.wand import SegmentQueryKernel
 
 MANIFEST = "multifield.json"
 
@@ -77,34 +77,31 @@ def _bm25f_topk(pdf: pd.DataFrame, pp: dict,
                 k: int) -> tuple[np.ndarray, np.ndarray]:
     """BM25F top-k over one block frame whose term_ids are remapped into
     the field namespace (MultiFieldIndex._FIELD_SHIFT) — ONE
-    interval-pruner call, each member carrying its field's
-    stats/tombstones and weight. ``pp`` is a MultiFieldIndex._pruned_plan
+    interval-pruner call over the whole frame; the plan hands the kernel
+    each field's term-id span, stats and tombstones, and each member
+    carries its field's weight. ``pp`` is a MultiFieldIndex._pruned_plan
     dict. The driver route and the per-shard UDF both run it. A group
     whose members have no postings in the frame drops; under AND that
     empties the result."""
     empty = (np.empty(0, np.int64), np.empty(0, np.float64))
     shift = MultiFieldIndex._FIELD_SHIFT
-    by_tid: dict[int, TermPostings] = {}
-    for tid, g in pdf.groupby("term_id"):
-        tid = int(tid)
-        fi = (tid >> shift) - 1
-        by_tid[tid] = TermPostings(
-            g, pp["df_by_tid"][tid], pp["tombs"][fi], pp["stats_by_field"][fi]
-        )
+    fields = [((fi + 1) << shift, st, pp["tombs"][fi])
+              for fi, st in sorted(pp["stats_by_field"].items())]
+    kern = SegmentQueryKernel(
+        pdf, {"tokens_by_text": {}, "df_by_tid": pp["df_by_tid"],
+              "tombstones": None, "fields": fields},
+        pp["stats_by_field"][0], k)
     groups = []
     for g in pp["groups"]:
-        members = [(t, w) for t, w in g["members"] if t in by_tid]
+        members = [(t, w) for t, w in g["members"] if t in kern.by_tid]
         if members:
             groups.append({"kind": "or", "members": members, "post": None})
         elif pp["mode"] == "and":
             return empty
     if not groups:
         return empty
-    neg_tids = [t for t in pp["neg_tids"] if t in by_tid]
-    kern = SegmentQueryKernel.from_term_postings(
-        by_tid, pp["stats_by_field"][0], k
-    )
-    return kern._topk_interval_pruned(groups, pp["mode"], None, neg_tids)
+    return kern._topk_interval_pruned(groups, pp["mode"], None,
+                                      pp["neg_tids"])
 
 
 def build_multifield_index(

@@ -6,14 +6,23 @@ grn_ii_select / grn_ii_sel; token_info cursors + result-set ops] — but
 where the reference scores EVERY hit then sorts [G: lib/ii.c → grn_hash →
 grn_table_sort], this kernel prunes with the skip-block metadata:
 
-- top-k (run): multi-term block-max WAND via the INTERVAL algorithm
-  (_topk_interval_pruned): doc-id space partitioned at every block edge,
+- top-k (run): two block-max pruners. A root that reduces to ONE term
+  takes the single-term loop (_topk_single_pruned): decode blocks in
+  descending-bound order, stop on a strict kth-score test. Every other
+  prunable root — AND/OR/NOT/phrase/near/similar, a TermRange (hot
+  prefix) at the root or as a child of any size — takes the interval
+  pruner (_topk_interval_pruned): every block of every member pooled
+  in one set of arrays, doc-id space partitioned at every block edge,
   interval bounds from Σ covering-block bounds, descending-bound
-  processing with a strict kth-score stop — covers AND/OR/NOT/phrase/
-  near roots (phrase/near verify positions on surviving candidates
-  only; NOT terms decode candidate-driven). Bit-identical to the
-  exhaustive path; indexes under PRUNE_MIN_BLOCKS route to the batched
-  exhaustive decode instead (cheaper at small scale / per shard);
+  processing with a strict kth-score stop (phrase/near verify positions
+  on surviving candidates only; NOT terms decode candidate-driven).
+  The single-term loop stays because it is ~2× faster on one term: on
+  a 200k-doc index (4 CPUs, k=10, kernel construction included) six
+  terms of ~1,250 blocks took 2.9–5.8 ms in it vs 5.5–10.5 ms as a
+  one-member interval-pruner call, same results. Both are
+  bit-identical to the exhaustive path; indexes under PRUNE_MIN_BLOCKS
+  route to the batched exhaustive decode instead (cheaper at small
+  scale / per shard);
 - match (eval): rarest term (min df) decoded first [G: lib/ii.c ·
   grn_ii_estimate_size — same rarest-first idea], other terms decode ONLY
   blocks whose [min_doc_id, max_doc_id] overlap surviving candidates
@@ -50,7 +59,8 @@ from groonga_spark.score import get_scorer
 
 #: bench/test hook: when set to a list, pooled-path decodes append their
 #: block counts here (TermPostings.decode_idx* can be monkeypatch-spied,
-#: but the pooled TermRange paths never construct TermPostings)
+#: but _decode_rows — range eval and the interval pruner — never
+#: constructs TermPostings)
 _DECODE_SPY: list | None = None
 
 
@@ -60,18 +70,11 @@ def _spy_decodes(n: int) -> None:
 
 
 class TermPostings:
-    """Decoded postings of one term within one segment.
+    """Decoded postings of one term within one segment."""
 
-    ``stats`` (optional) overrides the kernel-level corpus stats for THIS
-    term — the BM25F multi-field path sets it to the owning FIELD's
-    (n_docs, avgdl, k1, b), so one kernel evaluates members from several
-    per-field indexes with each member scored against its own corpus."""
+    __slots__ = ("doc", "tf", "dl", "blocks", "decoded_mask", "df", "tomb")
 
-    __slots__ = ("doc", "tf", "dl", "blocks", "decoded_mask", "df", "tomb",
-                 "stats")
-
-    def __init__(self, blocks: pd.DataFrame, df: float, tomb=None,
-                 stats: dict | None = None):
+    def __init__(self, blocks: pd.DataFrame, df: float, tomb=None):
         # sorted by (segment, block_id) == global doc order: segments own
         # disjoint doc ranges, shards within a segment are contiguous, and
         # block_id = shard<<24 | seq — so one TermPostings can span the
@@ -81,7 +84,6 @@ class TermPostings:
         )
         self.df = df
         self.tomb = tomb if tomb is not None and len(tomb) else None
-        self.stats = stats
         self.doc = None
         self.tf = None
         self.dl = None
@@ -153,10 +155,8 @@ class TermPostings:
         """Block-max WAND upper bounds from stored (max_tf, min_dl) + df —
         computed at query time so they survive incremental stat drift;
         strict upper bounds under float rounding (the scorer's bound
-        contract). Per-term stats (BM25F fields) take precedence for the
-        NUMBERS; the scorer choice rides the query-level stats."""
+        contract)."""
         sc = get_scorer((stats or {}).get("scorer"))
-        stats = self.stats or stats
         return sc.bound(
             self.blocks["max_tf"].to_numpy(np.float64),
             self.blocks["min_dl"].to_numpy(np.float64),
@@ -232,7 +232,6 @@ def _ordinalize(cand: np.ndarray, rep: np.ndarray, pos: np.ndarray):
 
 def _score_arrays(tp: TermPostings, stats: dict) -> np.ndarray:
     sc = get_scorer((stats or {}).get("scorer"))
-    stats = tp.stats or stats
     return sc.score(
         tp.tf, tp.dl, sc.idf(tp.df, stats["n_docs"]),
         stats["avgdl"], stats["k1"], stats["b"],
@@ -262,15 +261,18 @@ class SegmentQueryKernel:
         self._sc = get_scorer(stats.get("scorer"))
         self.k = k
         self.tomb = plan.get("tombstones")
+        # (first term_id, stats, tombstones) per field, ascending: a
+        # frame may pool several fields' postings in disjoint term-id
+        # spans (the BM25F composer's remapped frame); one field else
+        self._fields = plan.get("fields") or [(0, stats, self.tomb)]
         self.by_tid: dict[int, TermPostings] = {}
-        # TermRange members never build per-term frames here: a hot
+        # Only planned (looked-up) tids get eager TermPostings: a hot
         # prefix can cover 10^5+ terms, and 10^5 groupby/TermPostings
-        # constructions ARE the cost at that scale. Planned (looked-up)
-        # tids get eager TermPostings; range terms stay pooled in
-        # self._raw and evaluate through the vectorized range paths
-        # (_eval_range / _topk_range_pruned), or materialize lazily via
-        # _ensure_tps_for_range for compound-query pruning (capped).
+        # constructions ARE the cost at that scale. Range members and
+        # every pruned multi-member root read the frame as pooled
+        # columns instead (_pool).
         self._raw = blocks
+        self._cols: dict | None = None
         planned = {int(t) for t in plan.get("df_by_tid", {})}
         if planned:
             tid_col = blocks["term_id"].to_numpy(np.int64)
@@ -281,51 +283,6 @@ class SegmentQueryKernel:
                 if df is None:
                     df = float(g["df"].iloc[0])
                 self.by_tid[int(tid)] = TermPostings(g, df, self.tomb)
-
-    def _raw_tids_in(self, lo: int, hi: int) -> np.ndarray:
-        """Distinct term_ids present in this kernel's blocks ∩ [lo, hi]."""
-        t = self._raw["term_id"].to_numpy(np.int64)
-        return np.unique(t[(t >= lo) & (t <= hi)])
-
-    def _ensure_tps_for_range(self, lo: int, hi: int) -> list[int]:
-        """Materialize TermPostings for every range member (compound-
-        query pruning path — member count pre-capped by RANGE_GROUP_MAX);
-        ONE groupby over the range's sub-frame, not one scan per term."""
-        t = self._raw["term_id"].to_numpy(np.int64)
-        m = (t >= lo) & (t <= hi)
-        out = []
-        missing = []
-        for tid in np.unique(t[m]).tolist():
-            if tid in self.by_tid:
-                out.append(tid)
-            else:
-                missing.append(tid)
-        if missing:
-            sub = self._raw[m & np.isin(t, missing)]
-            for tid, g in sub.groupby("term_id"):
-                self.by_tid[int(tid)] = TermPostings(
-                    g, float(g["df"].iloc[0]), self.tomb
-                )
-                out.append(int(tid))
-        return sorted(out)
-
-    @classmethod
-    def from_term_postings(cls, by_tid: dict[int, TermPostings],
-                           stats: dict, k: int) -> "SegmentQueryKernel":
-        """Kernel over pre-built TermPostings — the BM25F multi-field
-        composer enters here with members drawn from SEVERAL per-field
-        indexes (synthetic tid namespace, per-member stats/tombstones on
-        each TermPostings), then drives _topk_interval_pruned directly
-        with its own group model."""
-        self = cls.__new__(cls)
-        self.plan = {"tokens_by_text": {}, "df_by_tid": {}}
-        self.stats = stats
-        self._sc = get_scorer(stats.get("scorer"))
-        self.k = k
-        self.by_tid = dict(by_tid)
-        self.tomb = None
-        self._raw = None  # no pooled range paths through this entry
-        return self
 
     def _leaf_tokens(self, text: str) -> list[int] | None:
         """term text → its token term_ids (None if any token unknown)."""
@@ -394,31 +351,105 @@ class SegmentQueryKernel:
             return empty
         raise TypeError(type(node))
 
-    def _range_sub(self, lo: int, hi: int) -> pd.DataFrame:
-        """This kernel's block rows for term_ids in [lo, hi], sorted
-        (term_id, segment, block_id) — tid-MAJOR pooled order, so any
-        per-doc accumulation over the concatenated decode follows
-        ascending term_id (the enumerated-OR float sequence)."""
-        t = self._raw["term_id"].to_numpy(np.int64)
-        return self._raw[(t >= lo) & (t <= hi)].sort_values(
-            ["term_id", "segment", "block_id"]
-        )
+    # --- the pooled block frame ---------------------------------------------
 
-    def _bm25_pooled(self, tf: np.ndarray, dl: np.ndarray,
-                     df_rep: np.ndarray) -> np.ndarray:
-        """The query's scorer over pooled arrays whose df varies per
-        element. idf is computed per UNIQUE df via the scorer's idf fn
-        (math.log, not np.log over the array) so every element gets the
-        BIT-identical idf the per-term path produces — np.log may differ
-        from libm by an ulp."""
-        st = self.stats
-        uniq, inv = np.unique(df_rep, return_inverse=True)
-        idf_u = np.asarray(
-            [self._sc.idf(d, st["n_docs"]) for d in uniq.tolist()],
-            np.float64,
+    def _pool(self) -> dict:
+        """The kernel's block frame as numpy columns, plus the row order
+        (term_id, segment, block_id) and each row's field — built once,
+        on first use. Range members and the interval pruner read blocks
+        through these arrays only: no per-term frames."""
+        if self._cols is None:
+            b = self._raw
+            c = {n: b[n].to_numpy(np.int64)
+                 for n in ("term_id", "n_docs", "min_doc_id", "max_doc_id")}
+            for n in ("max_tf", "min_dl", "df"):
+                c[n] = b[n].to_numpy(np.float64)
+            for n in ("doc_deltas", "tfs", "dls"):
+                c[n] = b[n].to_numpy(object)
+            c["order"] = np.lexsort((b["block_id"].to_numpy(np.int64),
+                                     b["segment"].to_numpy(np.int64),
+                                     c["term_id"]))
+            c["sorted_tid"] = c["term_id"][c["order"]]
+            c["field"] = np.searchsorted(
+                np.asarray([f[0] for f in self._fields], np.int64),
+                c["term_id"], side="right") - 1
+            self._cols = c
+        return self._cols
+
+    def _rows(self, lo: int, hi: int) -> np.ndarray:
+        """Frame rows of term_ids in [lo, hi], tid-major then doc order —
+        so a per-doc fold over their postings follows ascending term_id
+        (the enumerated-OR float sequence)."""
+        c = self._pool()
+        st = c["sorted_tid"]
+        return c["order"][np.searchsorted(st, lo, side="left"):
+                          np.searchsorted(st, hi, side="right")]
+
+    def _member(self, key) -> tuple[np.ndarray, np.ndarray]:
+        """(frame rows, per-row df) of one pruner member: a looked-up
+        term id (the plan's df) or a (lo, hi) term-id range (each
+        block's own df column, as _eval_range scores it)."""
+        if isinstance(key, tuple):
+            rows = self._rows(*key)
+            return rows, self._pool()["df"][rows]
+        rows = self._rows(key, key)
+        df = self.plan["df_by_tid"].get(key)
+        if df is None:
+            return rows, self._pool()["df"][rows]
+        return rows, np.full(len(rows), float(df))
+
+    def _idf(self, df: np.ndarray, fld: np.ndarray) -> np.ndarray:
+        """Per-element idf: the scorer's idf fn (math.log, not np.log
+        over the array) once per UNIQUE df of each field, so every
+        element gets the BIT-identical idf the per-term path produces —
+        np.log may differ from libm by an ulp."""
+        out = np.empty(len(df), np.float64)
+        for f, (_lo, st, _tomb) in enumerate(self._fields):
+            m = fld == f
+            uniq, inv = np.unique(df[m], return_inverse=True)
+            out[m] = np.asarray(
+                [self._sc.idf(d, st["n_docs"]) for d in uniq.tolist()],
+                np.float64)[inv]
+        return out
+
+    def _by_field(self, fn, fld: np.ndarray, x: np.ndarray, y: np.ndarray,
+                  idf: np.ndarray) -> np.ndarray:
+        """The scorer's ``fn`` (score or bound) elementwise, each element
+        under its own field's (avgdl, k1, b)."""
+        if len(self._fields) == 1:
+            st = self._fields[0][1]
+            return fn(x, y, idf, st["avgdl"], st["k1"], st["b"])
+        out = np.empty(len(x), np.float64)
+        for f, (_lo, st, _tomb) in enumerate(self._fields):
+            m = fld == f
+            out[m] = fn(x[m], y[m], idf[m], st["avgdl"], st["k1"], st["b"])
+        return out
+
+    def _decode_rows(self, rows: np.ndarray):
+        """ONE vb_decode per stream over the given frame rows → (doc, tf,
+        dl, postings kept per row), each row's field tombstones masked
+        (LSM delete semantics: stats stay as-built until compaction)."""
+        _spy_decodes(len(rows))
+        c = self._pool()
+        nd = c["n_docs"][rows]
+        doc = _segmented_cumsum(
+            vb_decode(b"".join(c["doc_deltas"][rows])).astype(np.int64), nd
         )
-        return self._sc.score(tf, dl, idf_u[inv],
-                              st["avgdl"], st["k1"], st["b"])
+        tf = vb_decode(b"".join(c["tfs"][rows])).astype(np.int64)
+        dl = vb_decode(b"".join(c["dls"][rows])).astype(np.int64)
+        drop = None
+        for f, (_lo, _st, tomb) in enumerate(self._fields):
+            if tomb is None or not len(tomb):
+                continue
+            m = np.isin(doc, tomb)
+            if len(self._fields) > 1:
+                m &= np.repeat(c["field"][rows], nd) == f
+            drop = m if drop is None else drop | m
+        if drop is not None and drop.any():
+            keep = ~drop
+            nd = np.add.reduceat(keep.astype(np.int64), np.cumsum(nd) - nd)
+            doc, tf, dl = doc[keep], tf[keep], dl[keep]
+        return doc, tf, dl, nd
 
     def _eval_range(self, lo: int, hi: int) -> tuple[np.ndarray, np.ndarray]:
         """TermRange ≡ OR over every term_id in [lo, hi] present here,
@@ -426,28 +457,18 @@ class SegmentQueryKernel:
         to the enumerated Or([Term…]) path (np.add.at accumulates in
         concatenation order == the sequential union-merge order, and
         0 + x == x exactly). POOLED: one vb_decode per stream over every
-        range block, one bm25 pass with per-element df — zero per-term
+        range block, one scorer pass with per-element idf — zero per-term
         Python/pandas (a 10^5-term prefix is a handful of numpy passes)."""
         empty = (np.empty(0, np.int64), np.empty(0, np.float64))
-        sub = self._range_sub(lo, hi)
-        if not len(sub):
+        rows = self._rows(lo, hi)
+        if not len(rows):
             return empty
-        _spy_decodes(len(sub))
-        nd = sub["n_docs"].to_numpy(np.int64)
-        doc = _segmented_cumsum(
-            vb_decode(b"".join(sub["doc_deltas"])).astype(np.int64), nd
-        )
-        tf = vb_decode(b"".join(sub["tfs"])).astype(np.int64)
-        dl = vb_decode(b"".join(sub["dls"])).astype(np.int64)
-        df_rep = np.repeat(sub["df"].to_numpy(np.float64), nd)
-        if self.tomb is not None and len(self.tomb):
-            keep = ~np.isin(doc, self.tomb, assume_unique=False)
-            if not keep.all():
-                doc, tf, dl, df_rep = (doc[keep], tf[keep], dl[keep],
-                                       df_rep[keep])
+        doc, tf, dl, nd = self._decode_rows(rows)
         if not len(doc):
             return empty
-        s = self._bm25_pooled(tf, dl, df_rep)
+        fld = self._pool()["field"][rows]
+        idf = np.repeat(self._idf(self._pool()["df"][rows], fld), nd)
+        s = self._by_field(self._sc.score, np.repeat(fld, nd), tf, dl, idf)
         uniq, inv = np.unique(doc, return_inverse=True)
         agg = np.zeros(len(uniq), np.float64)
         np.add.at(agg, inv, s)
@@ -668,7 +689,7 @@ class SegmentQueryKernel:
         CHUNK = 64
         doc = np.empty(0, np.int64)
         score = np.empty(0, np.float64)
-        st = tp.stats or self.stats
+        st = self.stats
         for i in range(0, len(order), CHUNK):
             if len(doc) >= self.k and score[-1] > ub[order[i]]:
                 break  # kth best beats every remaining bound
@@ -683,18 +704,20 @@ class SegmentQueryKernel:
                 doc, score = _topk(doc, score, self.k)
         return _topk(doc, score, self.k)
 
-    # --- multi-term block-max pruning (interval algorithm) ------------------
+    # --- multi-member block-max pruning (interval algorithm) ----------------
     #
     # Doc-id space is partitioned at every block boundary of every query
-    # term.  Each interval's upper bound is the sum of the covering blocks'
-    # bounds (a term's blocks are doc-disjoint, and every block edge is a
-    # boundary, so ≤1 block per term covers an interval); for AND the bound
-    # is 0 when any term lacks coverage.  Intervals are processed in
-    # descending-bound order; a doc's score is EXACT when its interval is
-    # processed (all covering blocks decode), so once the running kth score
-    # strictly exceeds the best remaining bound, the rest never decode —
-    # rank-identical to the exhaustive path, ties and all.  This is the
-    # block-level analogue of BMW/BMM (Ding & Suel 2011; Dimopoulos 2013).
+    # member.  Each interval's upper bound is the sum of the covering
+    # blocks' bounds; a conjunctive unit's bound is 0 where any member lacks
+    # coverage, and so is an AND query's where any group does.  Intervals
+    # are processed in descending-bound order; a doc's score is EXACT when
+    # its interval is processed (all covering blocks decode), so once the
+    # running kth score strictly exceeds the best remaining bound, the rest
+    # never decode — rank-identical to the exhaustive path, ties and all.
+    # Every block of every member sits in ONE set of pooled arrays (one
+    # entry per (member, block)), so a prefix member covering 10^5 terms
+    # costs the same machinery as one fat term.  This is the block-level
+    # analogue of BMW/BMM (Ding & Suel 2011; Dimopoulos 2013).
 
     def _topk_interval_pruned(
         self,
@@ -705,10 +728,13 @@ class SegmentQueryKernel:
     ) -> tuple[np.ndarray, np.ndarray]:
         """Interval-pruned top-k over ``groups``.
 
-        A group is one query-AST child, in one of two forms:
-        - ``{"kind": "or"|"and", "members": [(tid, w), ...], "post":
+        A member is ``(key, w)``: ``key`` is a looked-up term id or a
+        ``(lo, hi)`` term-id range (a TermRange child, whose terms add
+        in ascending term_id order inside the member); ``w`` scales its
+        scores. A group is one query-AST child, in one of two forms:
+        - ``{"kind": "or"|"and", "members": [...], "post":
           checker|None}`` — kind 'or' = any member matches (plain term /
-          OR-of-terms); kind 'and' = every member + an optional
+          OR-of-terms / range); kind 'and' = every member + an optional
           positional post check (phrase / near);
         - ``{"kind": "disjuncts", "disjuncts": [{"members": [...],
           "post": ...}, ...]}`` — a UNION of conjunctive units in child
@@ -716,19 +742,23 @@ class SegmentQueryKernel:
           each disjunct intersects its members (+ post check), disjunct
           sums add per doc in listed order — the exhaustive _eval_or
           sequence over mixed children.
-        ``mode`` 'or' unions groups (scores add in group order — the
-        exhaustive _eval_or merge sequence); ``mode`` 'and' intersects
-        groups (scores add in group order — the exhaustive non-fused
-        _eval_and sequence; fused callers pass sorted-unique
-        single-member groups with dup-count weights to match
-        _intersect_scored)."""
+        The members of a multi-member disjunct are single terms (≤1
+        block of each covers a doc). ``mode`` 'or' unions groups (scores
+        add in group order — the exhaustive _eval_or merge sequence);
+        ``mode`` 'and' intersects groups (scores add in group order —
+        the exhaustive non-fused _eval_and sequence; fused callers pass
+        sorted-unique single-member groups with dup-count weights to
+        match _intersect_scored). ``neg_tids`` mask candidates chunk by
+        chunk, decoding only their blocks that overlap a candidate (a
+        huge negative term never fully decodes); complex negatives
+        arrive pre-evaluated in ``neg_docs``."""
         empty = (np.empty(0, np.int64), np.empty(0, np.float64))
 
         def _disjuncts(g) -> list[dict]:
             """Normalize a group to its disjunct list. or-kind → one
-            single-member disjunct per member (np.add.at over the flat
-            member concat == union-add of singleton disjuncts, so the
-            float sequences are unchanged); and-kind → one disjunct."""
+            single-member disjunct per member (a singleton disjunct's sum
+            IS its member's score, so the float sequences are unchanged);
+            and-kind → one disjunct."""
             if g["kind"] == "disjuncts":
                 return g["disjuncts"]
             if g["kind"] == "or":
@@ -736,250 +766,214 @@ class SegmentQueryKernel:
                         for m in g["members"]]
             return [{"members": g["members"], "post": g["post"]}]
 
-        norm = [(g, _disjuncts(g)) for g in groups]
-        uniq_tids = sorted({
-            t for _, ds in norm for d in ds for t, _ in d["members"]
-        })
-        tps = {t: self.by_tid[t] for t in uniq_tids}
-        lo_d = {t: tps[t].blocks["min_doc_id"].to_numpy(np.int64)
-                for t in uniq_tids}
-        hi_d = {t: tps[t].blocks["max_doc_id"].to_numpy(np.int64)
-                for t in uniq_tids}
-        ub_d = {t: tps[t].block_bounds(self.stats) for t in uniq_tids}
-        bounds = np.unique(np.concatenate(
-            [lo_d[t] for t in uniq_tids]
-            + [hi_d[t] + 1 for t in uniq_tids]
-        ))
-        n_int = len(bounds) - 1
-        if n_int <= 0:
+        # flatten groups → disjuncts → members → entries (one per frame
+        # row a member covers), in (disjunct, member, row) order. Bound
+        # units: a group's singleton disjuncts share one; each
+        # conjunctive disjunct is its own.
+        c = self._pool()
+        dis_group, dis_need, posts, units = [], [], [], []
+        e_rows, e_df, e_dis, e_w, e_unit = [], [], [], [], []
+        for gi, g in enumerate(groups):
+            shared = None
+            for d in _disjuncts(g):
+                members = d["members"]
+                if len(members) > 1:
+                    u = len(units)
+                    units.append((gi, len(members)))
+                else:
+                    if shared is None:
+                        shared = len(units)
+                        units.append((gi, 1))
+                    u = shared
+                di = len(dis_need)
+                dis_group.append(gi)
+                dis_need.append(len(members))
+                if d["post"] is not None:
+                    posts.append((di, d["post"]))
+                for key, w in members:
+                    rows, df = self._member(key)
+                    e_rows.append(rows)
+                    e_df.append(df)
+                    e_dis.append(np.full(len(rows), di, np.int64))
+                    e_w.append(np.full(len(rows), float(w)))
+                    e_unit.append(np.full(len(rows), u, np.int64))
+        row = np.concatenate(e_rows) if e_rows else np.empty(0, np.int64)
+        if not len(row):
             return empty
+        dis = np.concatenate(e_dis)
+        wt = np.concatenate(e_w)
+        unit = np.concatenate(e_unit)
+        fld = c["field"][row]
+        idf = self._idf(np.concatenate(e_df), fld)
+        ub = wt * self._by_field(self._sc.bound, fld, c["max_tf"][row],
+                                 c["min_dl"][row], idf)
+        lo, hi = c["min_doc_id"][row], c["max_doc_id"][row]
+        bounds = np.unique(np.concatenate([lo, hi + 1]))
+        n_int = len(bounds) - 1
+        s_idx = np.searchsorted(bounds, lo)
+        e_idx = np.searchsorted(bounds, hi + 1)
 
-        # per-token interval structures (shared across groups)
-        blk_of_int: dict[int, np.ndarray] = {}
-        iub_d: dict[int, np.ndarray] = {}
-        for t in uniq_tids:
-            s_idx = np.searchsorted(bounds, lo_d[t])
-            e_idx = np.searchsorted(bounds, hi_d[t] + 1)
-            diff = np.zeros(n_int + 1, np.float64)
-            np.add.at(diff, s_idx, ub_d[t])
-            np.add.at(diff, e_idx, -ub_d[t])
-            iub_d[t] = np.cumsum(diff[:n_int])
-            counts = e_idx - s_idx
-            blk = np.full(n_int, -1, np.int64)
-            starts = np.repeat(s_idx, counts)
-            offs = np.arange(int(counts.sum())) - np.repeat(
-                np.cumsum(counts) - counts, counts
-            )
-            blk[starts + offs] = np.repeat(
-                np.arange(len(counts), dtype=np.int64), counts
-            )
-            blk_of_int[t] = blk
-
+        # interval bounds: one diff/cumsum pass per unit — Σ entry bounds
+        # and the count of covering entries with a positive bound
         total_ub = np.zeros(n_int, np.float64)
-        covered_all = np.ones(n_int, bool)
-        for _g, ds in norm:
-            g_ub = np.zeros(n_int, np.float64)
-            g_cov = np.zeros(n_int, bool)
-            for d in ds:
-                d_ub = np.zeros(n_int, np.float64)
-                d_cov = np.ones(n_int, bool)
-                for t, w in d["members"]:
-                    d_ub += w * iub_d[t]
-                    d_cov &= iub_d[t] > 0
-                # a conjunctive unit needs EVERY member token, so
-                # intervals missing any member can't contain its docs
-                d_ub[~d_cov] = 0.0
-                g_ub += d_ub
-                g_cov |= d_cov
-            total_ub += g_ub
+        g_cov = np.zeros((len(groups) if mode == "and" else 0, n_int), bool)
+        live = ub > 0.0
+        for u, (gi, need) in enumerate(units):
+            m = unit == u
+            u_ub = np.cumsum(
+                np.bincount(s_idx[m], ub[m], n_int + 1)
+                - np.bincount(e_idx[m], ub[m], n_int + 1))[:n_int]
+            m &= live
+            cov = np.cumsum(
+                np.bincount(s_idx[m], minlength=n_int + 1)
+                - np.bincount(e_idx[m], minlength=n_int + 1))[:n_int] >= need
+            total_ub += np.where(cov, u_ub, 0.0)
             if mode == "and":
-                covered_all &= g_cov
+                g_cov[gi] |= cov
         if mode == "and":
-            total_ub[~covered_all] = 0.0
+            total_ub[~g_cov.all(axis=0)] = 0.0
         order = np.argsort(-total_ub, kind="stable")
         order = order[total_ub[order] > 0.0]
         if len(order) == 0:
             return empty
 
-        decoded: dict[tuple[int, int], tuple] = {}
+        # decode memo: frame row → (doc, tf, dl) until its entries pool
+        # (all of a row's entries pool in the same chunk), then (doc,)
+        # while a negative term may still read it. Each chunk decodes
+        # its not-yet-seen rows in ONE batch, so every block decodes at
+        # most once, whichever members (or negatives) read it
+        done = np.zeros(len(c["n_docs"]), bool)
+        memo: dict[int, tuple] = {}
 
-        def _ensure_blocks(t: int, need: np.ndarray) -> None:
-            """Batch-decode every not-yet-decoded block of term t in one
-            vb_decode pass (per-block decode calls were the dominant cost
-            of this path at small scale)."""
-            new = [b for b in need.tolist() if (t, b) not in decoded]
-            if not new:
+        def _fetch(rows: np.ndarray) -> None:
+            new = rows[~done[rows]]
+            if not len(new):
                 return
-            splits = tps[t].decode_idx_split(np.asarray(new, np.int64))
-            st = tps[t].stats or self.stats
-            for b, (d, tf, dl) in zip(new, splits):
-                s = self._sc.score(
-                    tf, dl, self._sc.idf(tps[t].df, st["n_docs"]),
-                    st["avgdl"], st["k1"], st["b"],
-                )
-                iid = np.searchsorted(bounds, d, side="right") - 1
-                decoded[(t, b)] = (d, s, iid)
+            done[new] = True
+            d, t, l, nd = self._decode_rows(new)
+            a = 0
+            for r, b in zip(new.tolist(), np.cumsum(nd).tolist()):
+                memo[r] = (d[a:b], t[a:b], l[a:b])
+                a = b
 
-        def _member_chunk(t, w, chunk, in_chunk):
-            """One member's (sorted docs, weighted scores) within the
-            chunk's intervals."""
-            d_parts, s_parts = [], []
-            need = np.unique(blk_of_int[t][chunk])
-            for b in need[need >= 0].tolist():
-                d, s, iid = decoded[(t, b)]
-                m = in_chunk[iid]
-                if m.any():
-                    d_parts.append(d[m])
-                    s_parts.append(w * s[m] if w != 1.0 else s[m])
-            if not d_parts:
-                return None
-            return np.concatenate(d_parts), np.concatenate(s_parts)
+        neg_rows = np.unique(np.concatenate(
+            [self._rows(t, t) for t in neg_tids or []]
+            + [np.empty(0, np.int64)]))
+        neg_lo, neg_hi = c["min_doc_id"][neg_rows], c["max_doc_id"][neg_rows]
+        is_neg = np.zeros(len(c["n_docs"]), bool)
+        is_neg[neg_rows] = True
+        need_of = np.asarray(dis_need, np.int64)
+        group_of = np.asarray(dis_group, np.int64)
+        regroup = not np.array_equal(group_of, np.arange(len(groups)))
+        conjunctive = bool(posts) or need_of.max() > 1
 
-        def _disjunct_docs_scores(d, chunk, in_chunk):
-            """(sorted docs, scores) of one conjunctive unit within the
-            chunk's intervals: intersect members, scores Σ w·bm25 in
-            member order (the exhaustive _intersect_scored sequence for
-            phrase/near members, plain per-term score for singletons),
-            then the positional post check on the unit's own docs."""
-            per = [
-                _member_chunk(t, w, chunk, in_chunk) for t, w in d["members"]
-            ]
-            if any(p is None for p in per):
-                return None
-            cand = per[0][0]
-            for dd, _ in per[1:]:
-                if len(cand) == 0:
-                    return None
-                cand = cand[np.isin(cand, dd, assume_unique=True)]
-            if len(cand) == 0:
-                return None
-            if len(per) == 1:
-                score = per[0][1]
-            else:
-                score = per[0][1][np.searchsorted(per[0][0], cand)].copy()
-                for dd, s in per[1:]:
-                    score += s[np.searchsorted(dd, cand)]
-            if d["post"] is not None:
-                keep = d["post"](cand)
-                cand, score = cand[keep], score[keep]
-                if len(cand) == 0:
-                    return None
-            return cand, score
-
-        def _group_docs_scores(g_ds, chunk, in_chunk):
-            """(sorted docs, aggregated scores) of one group within the
-            chunk's intervals: union-add over the group's disjuncts in
-            listed order (np.add.at operand order — the exhaustive
-            _eval_or sequence over the child's parts)."""
-            per = [
-                _disjunct_docs_scores(d, chunk, in_chunk) for d in g_ds
-            ]
-            per = [p for p in per if p is not None]
-            if not per:
-                return None
-            if len(per) == 1:
-                return per[0]
-            docs_all = np.concatenate([d for d, _ in per])
-            uniq_docs, inv = np.unique(docs_all, return_inverse=True)
-            agg = np.zeros(len(uniq_docs), np.float64)
-            np.add.at(agg, inv, np.concatenate([s for _, s in per]))
-            return uniq_docs, agg
-
-        # candidate-driven NOT: single-token negative terms decode only
-        # blocks overlapping surviving candidates, chunk by chunk (a huge
-        # neg term never fully decodes); complex negs arrive pre-decoded
-        # in neg_docs
-        neg_state = []
-        for t in (neg_tids or []):
-            tp = self.by_tid.get(t)
-            if tp is not None:
-                neg_state.append((
-                    tp,
-                    tp.blocks["min_doc_id"].to_numpy(np.int64),
-                    tp.blocks["max_doc_id"].to_numpy(np.int64),
-                    {},
-                ))
-
-        def _neg_mask(cand: np.ndarray) -> np.ndarray:
-            keep = np.ones(len(cand), bool)
-            if neg_docs is not None:
-                keep &= ~np.isin(cand, neg_docs, assume_unique=True)
-            for tp, nlo, nhi, memo in neg_state:
-                left = np.searchsorted(cand, nlo, side="left")
-                hit = (left < len(cand)) & (
-                    cand[np.minimum(left, len(cand) - 1)] <= nhi
-                )
-                hit_b = np.flatnonzero(hit)
-                new = [b for b in hit_b.tolist() if b not in memo]
-                if new:
-                    for b, (d, _, _) in zip(
-                        new, tp.decode_idx_split(np.asarray(new, np.int64))
-                    ):
-                        memo[b] = d
-                parts = [memo[b] for b in hit_b.tolist()]
-                if parts:
-                    nd = np.concatenate(parts)  # blocks disjoint+sorted
-                    keep &= ~np.isin(cand, nd, assume_unique=True)
-            return keep
+        # each interval's chunk (-1: bound 0, never processed). An entry
+        # is pooled once, by the first chunk it covers: its postings are
+        # scored then (one scorer call per chunk and field) and wait in
+        # their own interval's chunk bucket — each posting is scored and
+        # folded exactly once, however many chunks its block spans
+        CHUNK = 32
+        chunk_of = np.full(n_int, -1, np.int64)
+        chunk_of[order] = np.arange(len(order)) // CHUNK
+        pooled = np.zeros(len(row), bool)
+        bucket: dict[int, list] = {}
 
         k = self.k
         run_doc = np.empty(0, np.int64)
         run_score = np.empty(0, np.float64)
-        in_chunk = np.zeros(n_int, bool)
-        CHUNK = 32
-        i = 0
-        while i < len(order):
+        for ci in range(-(-len(order) // CHUNK)):
+            i = ci * CHUNK
             if len(run_doc) >= k and run_score[-1] > total_ub[order[i]]:
                 break  # kth best strictly beats every remaining interval
-            chunk = order[i : i + CHUNK]
-            i += CHUNK
-            in_chunk[:] = False
-            in_chunk[chunk] = True
-            for t in uniq_tids:
-                need = np.unique(blk_of_int[t][chunk])
-                _ensure_blocks(t, need[need >= 0])
-            if mode == "or":
-                # union-add across groups in child order (the exhaustive
-                # _eval_or merge sequence per doc)
-                per_group = []
-                for _g, ds in norm:
-                    got = _group_docs_scores(ds, chunk, in_chunk)
-                    if got is not None:
-                        per_group.append(got)
-                if not per_group:
-                    continue
-                docs_all = np.concatenate([d for d, _ in per_group])
-                uniq_docs, inv = np.unique(docs_all, return_inverse=True)
-                agg = np.zeros(len(uniq_docs), np.float64)
-                np.add.at(agg, inv,
-                          np.concatenate([s for _, s in per_group]))
-                cand, cscore = uniq_docs, agg
+            # unpooled entries covering ANY chunk interval (searchsorted
+            # against the sorted chunk ids — no interval→block map)
+            cs = np.sort(order[i : i + CHUNK])
+            p = np.searchsorted(cs, s_idx, side="left")
+            need = np.flatnonzero(~pooled & (p < len(cs)) & (
+                cs[np.minimum(p, len(cs) - 1)] < e_idx))
+            if len(need):
+                pooled[need] = True
+                rows = np.unique(row[need])
+                _fetch(rows)
+                parts = [memo[r] for r in row[need].tolist()]
+                doc = np.concatenate([q[0] for q in parts])
+                cn = chunk_of[np.searchsorted(bounds, doc, side="right") - 1]
+                m = cn >= 0
+                ent = np.repeat(need, [len(q[0]) for q in parts])[m]
+                doc = doc[m]
+                s = wt[ent] * self._by_field(
+                    self._sc.score, fld[ent],
+                    np.concatenate([q[1] for q in parts])[m],
+                    np.concatenate([q[2] for q in parts])[m], idf[ent])
+                for r in rows.tolist():
+                    if is_neg[r]:
+                        memo[r] = memo[r][:1]
+                    else:
+                        del memo[r]
+                o = np.argsort(cn[m], kind="stable")
+                ent, doc, s, cn = ent[o], doc[o], s[o], cn[m][o]
+                cut = np.flatnonzero(np.diff(cn)) + 1
+                for a, b in zip([0, *cut.tolist()], [*cut.tolist(), len(cn)]):
+                    if a < b:
+                        bucket.setdefault(int(cn[a]), []).append(
+                            (ent[a:b], doc[a:b], s[a:b]))
+            got = bucket.pop(ci, None)
+            if not got:
+                continue
+            ent = np.concatenate([g[0] for g in got])
+            o = np.argsort(ent, kind="stable")  # back to entry order
+            ent = ent[o]
+            doc = np.concatenate([g[1] for g in got])[o]
+            s = np.concatenate([g[2] for g in got])[o]
+
+            # per doc: member scores add into their disjunct in member
+            # order (np.add.at follows the entry order), disjuncts into
+            # their group in listed order, groups in group order
+            udoc, dord = np.unique(doc, return_inverse=True)
+            n_u = len(udoc)
+            if len(need_of) == 1:
+                key, inv = np.arange(n_u), dord
             else:
-                per_group = []
-                ok = True
-                for _g, ds in norm:
-                    got = _group_docs_scores(ds, chunk, in_chunk)
-                    if got is None:
-                        ok = False
-                        break  # a group matched nothing in these intervals
-                    per_group.append(got)
-                if not ok:
-                    continue
-                cand = per_group[0][0]
-                for gd, _ in per_group[1:]:
-                    if len(cand) == 0:
-                        break
-                    cand = cand[np.isin(cand, gd, assume_unique=True)]
-                if len(cand) == 0:
-                    continue
-                # scores add across groups in group order (exhaustive)
-                cscore = per_group[0][1][
-                    np.searchsorted(per_group[0][0], cand)
-                ].copy()
-                for gd, gs in per_group[1:]:
-                    cscore += gs[np.searchsorted(gd, cand)]
-            if (neg_docs is not None or neg_state) and len(cand):
-                keep = _neg_mask(cand)
+                key, inv = np.unique(dis[ent] * n_u + dord,
+                                     return_inverse=True)
+            tot = np.zeros(len(key), np.float64)
+            np.add.at(tot, inv, s)
+            if conjunctive:
+                ok = (np.bincount(inv, minlength=len(key))
+                      >= need_of[key // n_u])
+                for di, post in posts:
+                    sel = np.flatnonzero(ok & (key // n_u == di))
+                    if len(sel):
+                        ok[sel] = post(udoc[key[sel] % n_u])
+                key, tot = key[ok], tot[ok]
+            if regroup:
+                key, inv = np.unique(group_of[key // n_u] * n_u + key % n_u,
+                                     return_inverse=True)
+                gsum = np.zeros(len(key), np.float64)
+                np.add.at(gsum, inv, tot)
+                tot = gsum
+            cand = key % n_u
+            if len(groups) > 1:
+                cand, inv = np.unique(cand, return_inverse=True)
+                cscore = np.zeros(len(cand), np.float64)
+                np.add.at(cscore, inv, tot)
+                if mode == "and":
+                    full = np.bincount(inv, minlength=len(cand)) == len(groups)
+                    cand, cscore = cand[full], cscore[full]
+            else:
+                cscore = tot
+            cand = udoc[cand]
+            if len(cand) and (neg_docs is not None or len(neg_rows)):
+                keep = np.ones(len(cand), bool)
+                if neg_docs is not None:
+                    keep &= ~np.isin(cand, neg_docs, assume_unique=True)
+                p = np.searchsorted(cand, neg_lo, side="left")
+                hit = neg_rows[(p < len(cand)) & (
+                    cand[np.minimum(p, len(cand) - 1)] <= neg_hi)]
+                if len(hit):
+                    _fetch(hit)
+                    keep &= ~np.isin(cand, np.concatenate(
+                        [memo[r][0] for r in hit.tolist()]))
                 cand, cscore = cand[keep], cscore[keep]
             if len(cand) == 0:
                 continue
@@ -990,166 +984,17 @@ class SegmentQueryKernel:
                 run_doc, run_score = _topk(run_doc, run_score, k)
         return _topk(run_doc, run_score, k)
 
-    def _topk_range_pruned(self, lo: int, hi: int
-                           ) -> tuple[np.ndarray, np.ndarray]:
-        """Interval-pruned top-k for a ROOT TermRange (hot prefix).
-
-        Unlike _topk_interval_pruned, all member terms' blocks are POOLED:
-        interval bounds come from every block edge, each interval's upper
-        bound is Σ covering-block bounds computed in ONE diff/cumsum pass
-        over the pooled block arrays, and the working structures are
-        O(total blocks) — no per-member arrays, so a prefix covering 10⁶
-        lexicon terms costs the same machinery as one fat term. Decoding
-        is chunk-driven and memoized; per-doc score addition happens in
-        ascending-term_id block order (a doc sits in ≤1 block per term),
-        reproducing _eval_range's float sequence exactly — bit-identical
-        to the exhaustive path, ties and all."""
-        empty = (np.empty(0, np.int64), np.empty(0, np.float64))
-        sub = self._range_sub(lo, hi)
-        if not len(sub):
-            return empty
-        nd = sub["n_docs"].to_numpy(np.int64)
-        blo = sub["min_doc_id"].to_numpy(np.int64)
-        bhi = sub["max_doc_id"].to_numpy(np.int64)
-        df_blk = sub["df"].to_numpy(np.float64)
-        st = self.stats
-        # per-block bounds with per-row df: idf via math.log per UNIQUE
-        # df (bit-matches the per-term path), the scorer's bound formula
-        uniq_df, inv_df = np.unique(df_blk, return_inverse=True)
-        idf_u = np.asarray(
-            [self._sc.idf(d, st["n_docs"]) for d in uniq_df.tolist()],
-            np.float64,
-        )
-        ub = self._sc.bound(
-            sub["max_tf"].to_numpy(np.float64),
-            sub["min_dl"].to_numpy(np.float64),
-            idf_u[inv_df], st["avgdl"], st["k1"], st["b"],
-        )
-
-        bounds = np.unique(np.concatenate([blo, bhi + 1]))
-        n_int = len(bounds) - 1
-        if n_int <= 0:
-            return empty
-        s_idx = np.searchsorted(bounds, blo)
-        e_idx = np.searchsorted(bounds, bhi + 1)
-        diff = np.zeros(n_int + 1, np.float64)
-        np.add.at(diff, s_idx, ub)
-        np.add.at(diff, e_idx, -ub)
-        total_ub = np.cumsum(diff[:n_int])
-        order = np.argsort(-total_ub, kind="stable")
-        order = order[total_ub[order] > 0.0]
-        if len(order) == 0:
-            return empty
-
-        # decode memo: pooled block idx → (docs, scores, interval ids) —
-        # each new chunk batch-decodes ONE vb_decode per stream over the
-        # concatenated buffers of its not-yet-seen blocks (never a
-        # per-term frame, never a per-block decode call)
-        decoded: dict[int, tuple] = {}
-        deltas_col = sub["doc_deltas"].to_numpy(object)
-        tfs_col = sub["tfs"].to_numpy(object)
-        dls_col = sub["dls"].to_numpy(object)
-
-        def _decode_new(new: np.ndarray) -> None:
-            if not len(new):
-                return
-            _spy_decodes(len(new))
-            nd_n = nd[new]
-            doc = _segmented_cumsum(
-                vb_decode(b"".join(deltas_col[new])).astype(np.int64), nd_n
-            )
-            tf = vb_decode(b"".join(tfs_col[new])).astype(np.int64)
-            dl = vb_decode(b"".join(dls_col[new])).astype(np.int64)
-            dfr = np.repeat(df_blk[new], nd_n)
-            keep = None
-            if self.tomb is not None and len(self.tomb):
-                keep = ~np.isin(doc, self.tomb, assume_unique=False)
-                doc, tf, dl, dfr = doc[keep], tf[keep], dl[keep], dfr[keep]
-                nd_k = np.add.reduceat(
-                    keep.astype(np.int64), np.cumsum(nd_n) - nd_n
-                ) if len(nd_n) else np.empty(0, np.int64)
-            else:
-                nd_k = nd_n
-            s = self._bm25_pooled(tf, dl, dfr)
-            iid = np.searchsorted(bounds, doc, side="right") - 1
-            ends = np.cumsum(nd_k)
-            starts = ends - nd_k
-            for j, b in enumerate(new.tolist()):
-                sl = slice(int(starts[j]), int(ends[j]))
-                decoded[b] = (doc[sl], s[sl], iid[sl])
-
-        k = self.k
-        run_doc = np.empty(0, np.int64)
-        run_score = np.empty(0, np.float64)
-        in_chunk = np.zeros(n_int, bool)
-        CHUNK = 32
-        i = 0
-        while i < len(order):
-            if len(run_doc) >= k and run_score[-1] > total_ub[order[i]]:
-                break  # kth best strictly beats every remaining interval
-            chunk = order[i : i + CHUNK]
-            i += CHUNK
-            chunk_sorted = np.sort(chunk)
-            # pooled blocks covering ANY chunk interval (searchsorted
-            # against the 32 sorted interval ids — no interval→block map)
-            pos = np.searchsorted(chunk_sorted, s_idx, side="left")
-            hit = (pos < len(chunk_sorted)) & (
-                chunk_sorted[np.minimum(pos, len(chunk_sorted) - 1)] < e_idx
-            )
-            need = np.flatnonzero(hit)  # ascending == (term_id, block) order
-            _decode_new(np.asarray(
-                [b for b in need.tolist() if b not in decoded], np.int64
-            ))
-            in_chunk[:] = False
-            in_chunk[chunk] = True
-            d_parts, s_parts = [], []
-            for b in need.tolist():
-                d, s, iid = decoded[b]
-                m = in_chunk[iid]
-                if m.any():
-                    d_parts.append(d[m])
-                    s_parts.append(s[m])
-            if not d_parts:
-                continue
-            docs_all = np.concatenate(d_parts)
-            uniq, inv = np.unique(docs_all, return_inverse=True)
-            agg = np.zeros(len(uniq), np.float64)
-            np.add.at(agg, inv, np.concatenate(s_parts))
-            run_doc = np.concatenate([run_doc, uniq])
-            run_score = np.concatenate([run_score, agg])
-            if len(run_doc) >= k:
-                # keep (doc, score) sorted desc so score[-1] IS the kth
-                run_doc, run_score = _topk(run_doc, run_score, k)
-        return _topk(run_doc, run_score, k)
-
-    #: a TermRange inside a compound query enumerates its members (the
-    #: terms present in THIS kernel's blocks) for the generic interval
-    #: pruner, whose per-member interval arrays are O(members ×
-    #: intervals) — past this cap the query falls back to exhaustive
-    #: (root-level ranges use _topk_range_pruned, which pools blocks
-    #: and has no per-member arrays, so no cap applies there)
-    RANGE_GROUP_MAX = 256
-
-    def _range_members(self, lo: int, hi: int) -> list[int] | None:
-        """tids of this kernel's terms inside [lo, hi], ascending, with
-        TermPostings materialized; None when too many for the per-member
-        interval machinery."""
-        if len(self._raw_tids_in(lo, hi)) > self.RANGE_GROUP_MAX:
-            return None
-        return self._ensure_tps_for_range(lo, hi)
-
     def _or_disjuncts(self, children) -> list[dict] | None:
         """Or-under-And children → disjunct list in child order: plain
         single-token terms become singleton disjuncts, phrase/near
         leaves become multi-member disjuncts with their positional post
-        checks. None → not pruneable. A TermRange child may NOT join
-        (the exhaustive _eval_or adds its PRE-aggregated sum —
-        ((s_a)+(s_r1+s_r2)) — while disjunct-per-term would add
-        ((s_a+s_r1)+s_r2), a different float sequence); ranges under an
-        OR-under-AND take the exhaustive path."""
+        checks. None → not pruneable. A TermRange child joins as ONE
+        singleton disjunct whose member sums its terms first, so the
+        exhaustive _eval_or sequence ((s_a)+(s_r1+s_r2)) holds — never
+        one disjunct per term, which would add ((s_a+s_r1)+s_r2)."""
         out = []
         for c in children:
-            if not isinstance(c, (Term, Phrase, Near)):
+            if not isinstance(c, (Term, Phrase, Near, TermRange)):
                 return None
             g = self._leaf_group(c)
             if g == "empty":
@@ -1164,8 +1009,15 @@ class SegmentQueryKernel:
     PRUNE_MIN_BLOCKS = 512
 
     def _leaf_group(self, node):
-        """Term/Phrase/Near/Similar leaf → group dict; "empty" when the
-        leaf cannot match anything here; None → not pruneable."""
+        """Term/Phrase/Near/Similar/TermRange leaf → group dict; "empty"
+        when the leaf cannot match anything here."""
+        if isinstance(node, TermRange):
+            # one member however many terms the range covers: its terms
+            # add inside the member first — the exhaustive per-child order
+            key = (node.lo_tid, node.hi_tid)
+            if not len(self._rows(*key)):
+                return "empty"
+            return {"kind": "or", "members": [(key, 1.0)], "post": None}
         if isinstance(node, Similar):
             # rare-term-bounded *S ≡ OR over its selected tokens: an
             # or-kind group whose members add in ascending-tid order —
@@ -1209,60 +1061,30 @@ class SegmentQueryKernel:
         }
 
     def _pruned_multi(self, ast):
-        """Route prunable roots to the interval pruner: multi-token
-        Term/Phrase/Near leaves, ORs of leaves, and ANDs whose positive
-        children are leaves or ORs of single-token leaves (phrases and
-        nears ride along as "and"-kind groups with positional post
-        checks). None → exhaustive fallback."""
+        """Route prunable roots to the interval pruner: leaves (multi-
+        token Term/Phrase/Near, Similar, TermRange), ORs of leaves, and
+        ANDs whose positive children are leaves or ORs of single-token
+        leaves (phrases and nears ride along as "and"-kind groups with
+        positional post checks). A root that reduces to one single term
+        takes _topk_single_pruned. None → exhaustive fallback."""
         empty = (np.empty(0, np.int64), np.empty(0, np.float64))
         if len(self._raw) < self.PRUNE_MIN_BLOCKS:
             return None  # tiny posting set: decode-all is cheaper
-        if isinstance(ast, TermRange):
-            # hot prefix at the root: pooled-block interval pruning — no
-            # per-member structures, so NO member cap applies
-            return self._topk_range_pruned(ast.lo_tid, ast.hi_tid)
-        if isinstance(ast, Similar):
-            g = self._leaf_group(ast)
-            if g == "empty":
-                return empty
-            if len(g["members"]) == 1:
-                return self._topk_single_pruned(g["members"][0][0])
-            return self._topk_interval_pruned([g], "or")
-        if isinstance(ast, (Phrase, Term, Near)):
-            g = self._leaf_group(ast)
-            if g == "empty":
-                return empty
-            if g["kind"] == "or" and g["members"][0][1] == 1.0:
-                return self._topk_single_pruned(g["members"][0][0])
-            if g["kind"] == "or":  # weighted single token (degenerate Near)
-                return self._topk_interval_pruned([g], "or")
-            return self._topk_interval_pruned([g], "and")
-        if isinstance(ast, Or):
-            groups = []
-            for c in ast.children:
-                if isinstance(c, TermRange):
-                    # one group per range CHILD (members aggregate inside
-                    # the group first — the exhaustive per-child order)
-                    mem = self._range_members(c.lo_tid, c.hi_tid)
-                    if mem is None:
-                        return None
-                    if mem:
-                        groups.append({"kind": "or",
-                                       "members": [(t, 1.0) for t in mem],
-                                       "post": None})
-                    continue
-                if not isinstance(c, (Term, Phrase, Near, Similar)):
-                    return None
-                g = self._leaf_group(c)
-                if g == "empty":
-                    continue  # contributes nothing, like the exhaustive OR
-                groups.append(g)
+        leaves = (Term, Phrase, Near, Similar, TermRange)
+        if isinstance(ast, (Or,) + leaves):
+            children = ast.children if isinstance(ast, Or) else [ast]
+            if not all(isinstance(c, leaves) for c in children):
+                return None
+            # an empty leaf contributes nothing, like the exhaustive OR
+            groups = [g for g in map(self._leaf_group, children)
+                      if g != "empty"]
             if not groups:
                 return empty
+            m = groups[0]["members"]
             if (len(groups) == 1 and groups[0]["kind"] == "or"
-                    and len(groups[0]["members"]) == 1
-                    and groups[0]["members"][0][1] == 1.0):
-                return self._topk_single_pruned(groups[0]["members"][0][0])
+                    and len(m) == 1 and m[0][1] == 1.0
+                    and not isinstance(m[0][0], tuple)):
+                return self._topk_single_pruned(m[0][0])
             return self._topk_interval_pruned(groups, "or")
         if isinstance(ast, And):
             pos = [c for c in ast.children if not isinstance(c, Not)]
@@ -1293,20 +1115,12 @@ class SegmentQueryKernel:
                            "post": None} for t in sorted(cnt)]
             else:
                 # general shape: positives are leaves (single-token,
-                # phrase, near) or ORs of single-token leaves; groups add
-                # in child order — the exhaustive non-fused order
+                # phrase, near, similar, range) or ORs of single-token
+                # leaves; groups add in child order — the exhaustive
+                # non-fused order
                 groups = []
                 for c in pos:
-                    if isinstance(c, TermRange):
-                        mem = self._range_members(c.lo_tid, c.hi_tid)
-                        if mem is None:
-                            return None
-                        if not mem:
-                            return empty  # range matches nothing here
-                        groups.append({"kind": "or",
-                                       "members": [(t, 1.0) for t in mem],
-                                       "post": None})
-                    elif isinstance(c, (Term, Phrase, Near, Similar)):
+                    if isinstance(c, leaves):
                         g = self._leaf_group(c)
                         if g == "empty":
                             return empty  # an AND child can't match

@@ -1,7 +1,7 @@
 """Multi-term block-max WAND pruning benchmark on a ≥2M-doc index.
 
-Measures the interval block-max pruned top-k path (wand.SegmentQueryKernel
-.run) against the exhaustive path (eval + topk) for the reference query
+Measures the block-max pruned top-k path (wand.SegmentQueryKernel.run)
+against the exhaustive path (eval + topk) for the reference query
 shapes, kernel-level (both sides share the same pyarrow-pruned block
 scan), plus decoded-block counts from a decode spy. Appends a marked
 section to BENCH.md and writes BENCH_WAND.json.
@@ -35,8 +35,9 @@ QUERIES = [
     ("q_or3", "spark OR stream OR vector"),
     ("q_not", "(table OR merge) -slow"),
     ("q_phrase", '"spark fast"'),
-    ("q_prefix", "s*"),          # TermRange root → pooled-block pruner
+    ("q_prefix", "s*"),          # TermRange root → one-group pruner call
     ("q_prefix_and", "s* table"),  # range as an AND child
+    ("q_prefix_or", "s* OR table"),  # range as an OR child
     # phrase inside an OR inside an AND → disjunct groups (round 3)
     ("q_phrase_or", '(merge OR "spark fast") table'),
 ]

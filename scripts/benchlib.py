@@ -1,7 +1,7 @@
 """Shared helpers for the bench scripts: the BENCH.md marked-section
 splice (one implementation instead of one copy per script) and the
 posting-decode spy (TermPostings monkeypatch + the pooled-path counter
-hook)."""
+hook of the range eval and the interval pruner)."""
 
 from __future__ import annotations
 
@@ -67,8 +67,9 @@ def extract_marked_sections(text: str) -> str:
 
 def spy_decodes(fn):
     """Run ``fn`` counting every posting-block decode: TermPostings'
-    decode_idx/decode_idx_split (per-term paths) plus the pooled
-    TermRange paths via wand._DECODE_SPY. → (result, blocks_decoded)."""
+    decode_idx/decode_idx_split (per-term paths) plus the pooled paths
+    (range eval and the interval pruner) via wand._DECODE_SPY.
+    → (result, blocks_decoded)."""
     import groonga_spark.wand as W
     from groonga_spark.wand import TermPostings
 

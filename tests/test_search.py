@@ -153,56 +153,41 @@ def test_bigram_index_with_cjk_and_phrases(spark, tmp_path):
 def test_blockmax_pruning_identical_and_effective(spark, corpus, tmp_path):
     """The block-max WAND path must equal the exhaustive path exactly,
     and must actually skip blocks once top-k stabilizes."""
-    import numpy as np
-
-    from groonga_spark.wand import SegmentQueryKernel, TermPostings, _topk
+    from groonga_spark.ql import parse_query
+    from groonga_spark.score import bm25 as _bm
+    from groonga_spark.wand import SegmentQueryKernel, _topk
+    from scripts.benchlib import spy_decodes
 
     docs, _ = corpus
     path = str(tmp_path / "idx_bm")
-    # tiny shards → many blocks per term → pruning has room to act
+    # tiny shards → many blocks per term → pruning has room to act: the
+    # single-term loop decodes 64 blocks per step, so a term needs more
+    # than 64 blocks before a skip can show (shard_size=4 → ~125 here)
     build_index(spark, docs, path, mode="delimit", segment_size=1 << 20,
-                shard_size=16)
+                shard_size=4)
     idx = FulltextIndex(spark, path)
+    st = idx._stats()
 
+    skipped = []
     for q in ["spark", "the", "vector"]:
-        plan = idx._plan(idx._expand_ast(__import__("groonga_spark.ql",
-                                                    fromlist=["parse_query"])
-                                         .parse_query(q)))
+        plan = idx._plan(idx._expand_ast(parse_query(q)))
         pdf = idx._local_blocks(plan["needed_tids"], plan, force=True)
-        kern = SegmentQueryKernel(pdf, plan, idx._stats(), 3)
         tid = plan["needed_tids"][0]
-        pruned = kern._topk_single_pruned(tid)
-
-        tp = kern.by_tid[tid]
-        decoded: list[int] = []
-        orig = TermPostings.decode_idx
-
-        def spy(self, idx_arr, _d=decoded, _o=orig):
-            _d.append(len(idx_arr))
-            return _o(self, idx_arr)
-
-        TermPostings.decode_idx = spy
-        try:
-            kern2 = SegmentQueryKernel(pdf, plan, idx._stats(), 3)
-            kern2._topk_single_pruned(tid)
-        finally:
-            TermPostings.decode_idx = orig
+        pruned, n_decoded = spy_decodes(
+            lambda: SegmentQueryKernel(pdf, plan, st, 3)
+            ._topk_single_pruned(tid))
 
         # exhaustive reference
+        tp = SegmentQueryKernel(pdf, plan, st, 3).by_tid[tid]
         tp.decode_all()
-        from groonga_spark.score import bm25 as _bm
-
-        full = _bm(tp.tf, tp.dl, tp.df, idx._stats()["n_docs"],
-                   idx._stats()["avgdl"], idx._stats()["k1"],
-                   idx._stats()["b"])
+        full = _bm(tp.tf, tp.dl, tp.df, st["n_docs"], st["avgdl"], st["k1"],
+                   st["b"])
         want = _topk(tp.doc, full, 3)
-        assert (pruned[0] == want[0]).all()
-        assert np.allclose(pruned[1], want[1])
-        n_blocks = len(tp.blocks)
-        n_decoded = sum(decoded)
-        assert n_decoded <= n_blocks  # never decodes more than exists
-    # at least one of the queries should have pruned (uniform synthetic
-    # corpus keeps bounds close, so just assert the machinery ran)
+        assert pruned[0].tolist() == want[0].tolist(), q
+        assert pruned[1].tolist() == want[1].tolist(), q  # bit-identical
+        assert 0 < n_decoded <= len(tp.blocks), q
+        skipped.append(n_decoded < len(tp.blocks))
+    assert any(skipped), "no query skipped a block"
 
 
 def test_prefix_search_matches_expanded_or(built):
@@ -410,9 +395,11 @@ def test_multiterm_blockmax_rank_identity(spark, tmp_path):
 
 def test_multiterm_blockmax_actually_prunes(spark, tmp_path):
     """On the skewed corpus, small-k AND/OR queries must decode fewer
-    blocks than the exhaustive path."""
+    blocks than the exhaustive path — counted by the decode spy the
+    benchmarks read, which sees the pooled pruner's decodes too."""
     from groonga_spark.ql import parse_query
-    from groonga_spark.wand import SegmentQueryKernel, TermPostings
+    from groonga_spark.wand import SegmentQueryKernel
+    from scripts.benchlib import spy_decodes
 
     # block-max pruning needs bounds that VARY BY DOC RANGE (clustered
     # tf), not randomly-scattered heavy docs — cluster the heavy hitters
@@ -438,35 +425,12 @@ def test_multiterm_blockmax_actually_prunes(spark, tmp_path):
         ast = idx._expand_ast(parse_query(q))
         plan = idx._plan(ast)
         pdf = idx._local_blocks(plan["needed_tids"], plan, force=True)
-
-        counts = {"n": 0}
-        orig = TermPostings.decode_idx
-
-        def spy(self, idx_arr, _c=counts, _o=orig):
-            _c["n"] += len(idx_arr)
-            return _o(self, idx_arr)
-
-        TermPostings.decode_idx = spy
-        TermPostings.decode_idx_split_orig = TermPostings.decode_idx_split
-        orig_split = TermPostings.decode_idx_split
-
-        def spy_split(self, idx_arr, _c=counts, _o=orig_split):
-            _c["n"] += len(idx_arr)
-            return _o(self, idx_arr)
-
-        TermPostings.decode_idx_split = spy_split
-        try:
-            kern = SegmentQueryKernel(pdf, plan, idx._stats(), 3)
-            kern.PRUNE_MIN_BLOCKS = 0
-            kern._pruned_multi(ast)
-        finally:
-            TermPostings.decode_idx = orig
-            TermPostings.decode_idx_split = orig_split
-        total_blocks = sum(
-            len(tp.blocks) for tp in kern.by_tid.values()
-        )
-        assert counts["n"] <= total_blocks
-        if counts["n"] < total_blocks:
+        kern = SegmentQueryKernel(pdf, plan, idx._stats(), 3)
+        kern.PRUNE_MIN_BLOCKS = 0
+        got, n_decoded = spy_decodes(lambda: kern._pruned_multi(ast))
+        assert got is not None and len(got[0]) == 3, q
+        assert 0 < n_decoded <= len(pdf), q
+        if n_decoded < len(pdf):
             pruned_any = True
     assert pruned_any, "no multi-term query pruned any block"
 
@@ -710,7 +674,7 @@ def test_pruned_path_fuzz_random_queries(spark, tmp_path):
         if r < 0.92:
             return (f'({t} OR *N{rng.randrange(2, 6)}'
                     f'"{rng.choice(vocab)} {rng.choice(vocab)}")')
-        # QL prefix → TermRange leaf (pooled/enumerated range paths)
+        # QL prefix → TermRange leaf (one pooled range member)
         return t[: rng.randrange(1, 3)] + "*"
 
     def rand_query():
@@ -989,6 +953,106 @@ def test_prefix_range_respects_tombstones(spark, tmp_path):
     assert pr is not None
     assert (pr[0] == want[0]).all() and (pr[1] == want[1]).all()
     assert not set(pr[0].tolist()) & {3, 7, 42, 99}
+
+
+def test_prefix_children_prune_past_256_terms(spark, tmp_path):
+    """A prefix matching more than 256 terms, as a child of an OR, of an
+    AND, and of an OR under an AND, takes the pruned path bit-identically
+    to the exhaustive path — with and without tombstones."""
+    import random
+
+    from groonga_spark.ql import TermRange, parse_query
+    from groonga_spark.wand import SegmentQueryKernel, _topk
+
+    rng = random.Random(31)
+    rows = []
+    for d in range(3000):
+        words = [f"p{rng.randrange(400):03d}"
+                 for _ in range(rng.randrange(1, 4))]
+        if rng.random() < 0.5:
+            words += ["x"] * (12 if d < 100 else 1)
+        if rng.random() < 0.3:
+            words.append("y")
+        words += [f"f{rng.randrange(20)}" for _ in range(rng.randrange(2, 12))]
+        rng.shuffle(words)
+        rows.append((d, " ".join(words)))
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    path = str(tmp_path / "idx_pfx_cap")
+    build_index(spark, docs, path, mode="delimit", segment_size=1 << 20,
+                shard_size=64)
+    idx = FulltextIndex(spark, path)
+    rng_ast = idx._expand_ast(parse_query("p*"))
+    assert isinstance(rng_ast, TermRange) and rng_ast.n_terms > 256
+
+    def check() -> set:
+        seen = set()
+        for q in ["p* OR x", "p* x", "(p* OR x) -y"]:
+            ast = idx._expand_ast(parse_query(q))
+            plan = idx._plan(ast)
+            pdf = idx._local_blocks(plan["needed_tids"], plan, force=True)
+            for k in (1, 10, 50):
+                kern = SegmentQueryKernel(pdf, plan, idx._stats(), k)
+                kern.PRUNE_MIN_BLOCKS = 0
+                pr = kern._pruned_multi(ast)
+                assert pr is not None, (q, k)
+                want = _topk(*SegmentQueryKernel(pdf, plan, idx._stats(), k)
+                             .eval(ast), k)
+                assert len(want[0]) == k, (q, k)
+                assert pr[0].tolist() == want[0].tolist(), (q, k)
+                assert pr[1].tolist() == want[1].tolist(), (q, k)
+                seen |= set(pr[0].tolist())
+        return seen
+
+    # every 3rd hit, plus the first three 64-doc shards whole: blocks
+    # whose docs are all deleted decode to nothing
+    victims = sorted(check())[::3] + list(range(192))
+    idx.delete_docs(victims)
+    assert not check() & set(victims)
+
+
+def test_pruned_path_skips_blocks_emptied_by_deletes(spark, tmp_path):
+    """Blocks whose every doc is tombstoned decode to nothing; the
+    pruned path must step over them (a whole chunk of such blocks
+    included) and stay bit-identical to the exhaustive path."""
+    import random
+
+    from groonga_spark.ql import parse_query
+    from groonga_spark.wand import SegmentQueryKernel, _topk
+
+    rng = random.Random(5)
+    vocab = ([f"{c}{i}" for c in "pqr" for i in range(60)]
+             + ["alpha", "beta", "gamma"])
+    rows = []
+    for d in range(4000):
+        words = []
+        if rng.random() < 0.5:
+            words += ["alpha"] * (20 if d < 100 else 1)
+        if rng.random() < 0.4:
+            words += ["beta"] * (15 if 1000 <= d < 1100 else 1)
+        words += [rng.choice(vocab) for _ in range(rng.randrange(3, 25))]
+        rng.shuffle(words)
+        rows.append((d, " ".join(words)))
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    path = str(tmp_path / "idx_emptied")
+    build_index(spark, docs, path, mode="delimit", segment_size=1 << 20,
+                shard_size=48)
+    idx = FulltextIndex(spark, path)
+    idx.delete_docs(list(range(0, 4000, 7)))
+    for q in ["q*", "q20 OR q*", "q* alpha", "(q* OR alpha) -beta"]:
+        ast = idx._expand_ast(parse_query(q))
+        plan = idx._plan(ast)
+        pdf = idx._local_blocks(plan["needed_tids"], plan, force=True)
+        for scorer in (None, "tf_idf"):
+            st = idx._stats(scorer)
+            for k in (1, 10, 50):
+                kern = SegmentQueryKernel(pdf, plan, st, k)
+                kern.PRUNE_MIN_BLOCKS = 0
+                pr = kern._pruned_multi(ast)
+                want = _topk(*SegmentQueryKernel(pdf, plan, st, k).eval(ast),
+                             k)
+                assert pr is not None, (q, k, scorer)
+                assert pr[0].tolist() == want[0].tolist(), (q, k, scorer)
+                assert pr[1].tolist() == want[1].tolist(), (q, k, scorer)
 
 
 def test_external_tombstones_executor_side(spark, corpus, tmp_path):

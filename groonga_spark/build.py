@@ -74,6 +74,11 @@ from groonga_spark.tokenize import tokenize_batch_encoded
 
 DEFAULT_SEGMENT_SIZE = 1 << 20          # docs per segment
 DEFAULT_SHARD_SIZE = 2048               # docs per shard (fixed per index)
+#: target parquet row-group size of the postings and lexicon files: small
+#: enough that per-group term_id / term min/max let a query's driver
+#: read skip most of a file, big enough to keep footers and per-group
+#: overhead small
+ROW_GROUP_BYTES = 256 << 10
 SALT_TARGET = 50_000                    # retained for API compat (unused)
 
 
@@ -582,7 +587,9 @@ def finalize_index(
         tmp_dir = lex_dir + ".tmp"
         _sh.rmtree(tmp_dir, ignore_errors=True)
         os.makedirs(tmp_dir)
-        pq.write_table(tbl, os.path.join(tmp_dir, "part-00000.parquet"))
+        rg_rows = max(1, ROW_GROUP_BYTES * n_terms // max(1, tbl.nbytes))
+        pq.write_table(tbl, os.path.join(tmp_dir, "part-00000.parquet"),
+                       row_group_size=rg_rows)
         _sh.rmtree(lex_dir, ignore_errors=True)
         os.replace(tmp_dir, lex_dir)
         # explicit schema: an empty vocabulary (every doc tokenized to
@@ -656,7 +663,9 @@ def finalize_index(
         # lexicon inline); reads assign_dense_ids' persisted
         # intermediate — no recompute
         t0 = time.time()
-        lex.write.mode("overwrite").parquet(store.p("lexicon"))
+        (lex.write.mode("overwrite")
+            .option("parquet.block.size", ROW_GROUP_BYTES)
+            .parquet(store.p("lexicon")))
         FINALIZE_PHASES["lex_write_s"] = time.time() - t0
 
     # lexicon write and doc_map decode are independent of the postings
@@ -679,8 +688,10 @@ def finalize_index(
     # inner join with the lexicon drops the "" marker rows. Partitioning:
     # bucket = term_id·P/n_terms — a DETERMINISTIC range bucket (dense ids
     # make it exact), so no repartitionByRange sampling pass (which would
-    # execute this join twice). Files stay term-range-clustered → parquet
-    # row-group / Iceberg partition pruning on term_id at query time. A
+    # execute this join twice). Files stay term-range-clustered, in
+    # ROW_GROUP_BYTES row groups whose term_id min/max let the driver
+    # read only a query's groups (search._RowGroupDirectory) and Spark
+    # / Iceberg prune row groups / partitions on term_id. A
     # giant term's blocks exceed one bucket only at extreme df; the shard
     # dimension (block_id >> 24) is the documented sub-split lever then.
     # `_sub` (shard mod 4) splits each term range across 4 partitions so a
@@ -702,7 +713,9 @@ def finalize_index(
         .drop("term", "_bucket", "_sub")
     )
     _t_post0 = time.time()
-    final.write.mode("overwrite").parquet(store.p("postings"))
+    (final.write.mode("overwrite")
+          .option("parquet.block.size", ROW_GROUP_BYTES)
+          .parquet(store.p("postings")))
     FINALIZE_PHASES["postings_s"] = time.time() - _t_post0
     _doc_map_fut.result()
     if _lex_write_fut is not None:

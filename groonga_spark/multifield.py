@@ -217,6 +217,7 @@ class MultiFieldIndex:
         out = None
         for name, w in cols:
             fidx = self.field(name)
+            fidx._check_generation()  # before _expand_ast reads the lexicon
             df = fidx.match_ast(fidx._expand_ast(node))
             if w != 1.0:
                 df = df.select(

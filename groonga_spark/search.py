@@ -19,10 +19,14 @@ queries alike, on one of two routes:
 Callers cannot force a route; the rule above is the only one. Every
 driver-side result becomes a DataFrame through ``result_frame``.
 
-Scale notes: the postings scan is filtered by ``term_id IN (...)`` which
-prunes parquet row groups (postings are written term_id-sorted) / Iceberg
-partitions; only matched terms' blocks move. The per-segment kernel holds
-q terms × that segment's blocks — bounded by segment size, independent of
+Scale notes: postings are written term_id-sorted in small row groups
+(build.ROW_GROUP_BYTES) and the lexicon term-sorted the same way. A
+driver read consults the handle's row-group directory (per-group key
+min/max, from the footers) and decodes only the groups that can hold the
+query's terms — the lexicon entry pointing at a term's posting chunks
+[G: lib/ii.c · grn_ii_cursor_open]; the cluster route pushes the same
+predicate to the parquet / Iceberg scan. The per-segment kernel holds q
+terms × that segment's blocks — bounded by segment size, independent of
 corpus size.
 """
 
@@ -74,6 +78,107 @@ def _prefix_upper_bound(prefix: str) -> str | None:
     return p[:-1] + chr(nxt)
 
 
+#: key column of each table a driver read addresses by row group
+_TABLE_KEYS = {"postings": "term_id", "lexicon": "term"}
+
+
+def _data_files(root: str) -> list[str]:
+    """A table directory's data files in pyarrow dataset order: recursive,
+    sorted by path, skipping names that start with '.' or '_' (Spark's
+    ``.crc`` files and ``_SUCCESS`` marker)."""
+    out = []
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs if not x.startswith((".", "_"))]
+        out.extend(os.path.join(d, f) for f in files
+                   if not f.startswith((".", "_")))
+    return sorted(out)
+
+
+class _RowGroupDirectory:
+    """Where each key of one table lives: for every data file, in dataset
+    order, its footer and each row group's min/max of the key column —
+    the lexicon's pointer to a term's posting chunks [G: lib/pat.c ·
+    grn_pat_get → lib/ii.c · grn_ii_cursor_open reads only those
+    chunks]. Built from the footers alone; holds no open file."""
+
+    def __init__(self, root: str, key: str):
+        import pyarrow.parquet as pq
+
+        self.key = key
+        self.files = []  # (path, FileMetaData)
+        self.schema = None
+        self.starts = [0]  # first row group of each file
+        mins, maxs = [], []  # None where a group has no statistics
+        for path in _data_files(root):
+            md = pq.read_metadata(path)
+            if self.schema is None:
+                self.schema = md.schema.to_arrow_schema()
+            col = md.schema.names.index(key)
+            for i in range(md.num_row_groups):
+                st = md.row_group(i).column(col).statistics
+                ok = (st is not None and st.has_min_max
+                      and not isinstance(st.min, bytes))
+                mins.append(st.min if ok else None)
+                maxs.append(st.max if ok else None)
+            self.files.append((path, md))
+            self.starts.append(len(mins))
+        self.known = np.array([m is not None for m in mins], bool)
+        ints = self.schema is not None and pa.types.is_integer(
+            self.schema.field(key).type)
+        fill, dtype = (0, np.int64) if ints else ("", object)
+        self.mins = np.array([fill if m is None else m for m in mins], dtype)
+        self.maxs = np.array([fill if m is None else m for m in maxs], dtype)
+
+    def select(self, keys, ranges) -> np.ndarray:
+        """Mask of the row groups whose [min, max] holds any of ``keys``
+        or overlaps any half-open range [lo, hi) (hi None = unbounded).
+        A group without statistics is always selected."""
+        hit = ~self.known
+        if len(keys):
+            k = np.sort(np.asarray(keys, self.mins.dtype))
+            hit |= (np.searchsorted(k, self.mins, "left")
+                    < np.searchsorted(k, self.maxs, "right"))
+        for lo, hi in ranges:
+            m = self.maxs >= lo
+            if hi is not None:
+                m &= self.mins < hi
+            hit |= m
+        return hit
+
+    def read(self, columns: list[str] | None, keys=(), ranges=()) -> pa.Table:
+        """Rows whose key is in ``keys`` or in any [lo, hi) of ``ranges``,
+        in file then row-group then row order — the rows, and the order,
+        of a dataset scan with the same filter — decoding only the
+        selected row groups. No keys and no ranges → no rows."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        if self.schema is None:  # no data file
+            return pa.table({})
+        names = columns if columns is not None else self.schema.names
+        cols = names if self.key in names else [*names, self.key]
+        hit = (self.select(keys, ranges) if len(keys) or ranges
+               else np.zeros(len(self.known), bool))
+        parts = []
+        for f, (path, md) in enumerate(self.files):
+            sel = np.flatnonzero(hit[self.starts[f]:self.starts[f + 1]])
+            if len(sel):
+                parts.append(pq.ParquetFile(path, metadata=md).read_row_groups(
+                    sel.tolist(), columns=cols, use_threads=False))
+        if not parts:
+            return self.schema.empty_table().select(names)
+        tbl = pa.concat_tables(parts)
+        col = tbl.column(self.key)
+        mask = (pc.is_in(col, value_set=pa.array(keys, col.type))
+                if len(keys) else None)
+        for lo, hi in ranges:
+            m = pc.greater_equal(col, pa.scalar(lo, col.type))
+            if hi is not None:
+                m = pc.and_(m, pc.less(col, pa.scalar(hi, col.type)))
+            mask = m if mask is None else pc.or_(mask, m)
+        return tbl.filter(mask).select(names)
+
+
 def _bounded_levenshtein(a: str, b: str, bound: int) -> int | None:
     """Edit distance if ≤ bound else None (banded DP, early exit)."""
     if abs(len(a) - len(b)) > bound:
@@ -106,6 +211,7 @@ class FulltextIndex:
         self.meta = self.store.read_meta()
         self._lex_cache: dict[str, tuple[int, float] | None] = {}
         self._postings_df: DataFrame | None = None
+        self._row_groups: dict[str, _RowGroupDirectory] = {}
         from collections import OrderedDict
 
         self._result_cache: OrderedDict[tuple, tuple] = OrderedDict()
@@ -121,6 +227,7 @@ class FulltextIndex:
         if gen != self._generation:
             self._lex_cache.clear()
             self._postings_df = None
+            self._row_groups.clear()
             self._tombstones = None
             self._tombstone_est = None
             self.meta = self.store.read_meta()
@@ -143,22 +250,29 @@ class FulltextIndex:
 
     # ---------------------------------------------------------------------
 
+    def _table_rows(self, table: str, columns: list[str] | None,
+                    keys=(), ranges=()) -> pa.Table:
+        """The one driver read of ``postings`` or ``lexicon``: the rows
+        whose key (term_id / term) is in ``keys`` or in a half-open
+        [lo, hi) of ``ranges``, decoding only the row groups that can
+        hold them. The table's row-group directory is built on first use
+        and dropped with the other caches on a generation change."""
+        d = self._row_groups.get(table)
+        if d is None:
+            d = self._row_groups[table] = _RowGroupDirectory(
+                self.store.p(table), _TABLE_KEYS[table])
+        return d.read(columns, keys, ranges)
+
     def _lexicon_lookup(self, tokens: list[str]) -> list[tuple[str, int, int]]:
-        """Driver-side term → (term_id, df) lookup via a direct pyarrow
-        predicate scan of the lexicon parquet — the PAT-trie seek
-        [G: lib/pat.c · grn_pat_get] without a Spark job. Parquet
-        row-group stats prune; a q-term query touches a few row groups.
-        (The prod Iceberg deployment does the same through its metadata
-        tables.) Results are memoized per index handle."""
+        """Driver-side term → (term_id, df) lookup — the PAT-trie seek
+        [G: lib/pat.c · grn_pat_get] without a Spark job: the lexicon's
+        row-group directory picks the groups whose term min/max can hold
+        a token, and only those are decoded (a q-term query reads at most
+        q small groups). Results are memoized per index handle."""
         missing = [t for t in tokens if t not in self._lex_cache]
         if missing:
-            import pyarrow.dataset as ds
-
-            dset = ds.dataset(self.store.p("lexicon"), format="parquet")
-            tbl = dset.to_table(
-                columns=["term", "term_id", "df"],
-                filter=ds.field("term").isin(missing),
-            )
+            tbl = self._table_rows("lexicon", ["term", "term_id", "df"],
+                                   keys=missing)
             found = set()
             for term, tid, df in zip(*(c.to_pylist() for c in tbl.columns)):
                 self._lex_cache[term] = (int(tid), float(df))
@@ -198,6 +312,7 @@ class FulltextIndex:
         runs on the executors (StringStartsWith pushes to parquet /
         Iceberg) and only MATCHED terms transfer — with a limit, only
         limit+1 of them."""
+        self._check_generation()
         if self.meta.get("n_terms", 0) > self.PREFIX_DRIVER_SCAN_MAX:
             df = self.lexicon.select("term").filter(
                 F.col("term").startswith(prefix)
@@ -220,14 +335,8 @@ class FulltextIndex:
         return terms
 
     def _prefix_terms_pyarrow(self, prefix: str) -> list[str]:
-        import pyarrow.dataset as ds
-
-        f = ds.field("term") >= prefix
-        ub = _prefix_upper_bound(prefix)
-        if ub is not None:
-            f = f & (ds.field("term") < ub)
-        dset = ds.dataset(self.store.p("lexicon"), format="parquet")
-        tbl = dset.to_table(columns=["term"], filter=f)
+        tbl = self._table_rows("lexicon", ["term"],
+                               ranges=[(prefix, _prefix_upper_bound(prefix))])
         return sorted(
             t for t in tbl.column("term").to_pylist() if t.startswith(prefix)
         )
@@ -271,13 +380,9 @@ class FulltextIndex:
                 )
             return lo, hi, n, float(row["sum_df"])
         import pyarrow.compute as pc
-        import pyarrow.dataset as ds
 
-        f = ds.field("term") >= prefix
-        if ub is not None:
-            f = f & (ds.field("term") < ub)
-        dset = ds.dataset(self.store.p("lexicon"), format="parquet")
-        tbl = dset.to_table(columns=["term_id", "df"], filter=f)
+        tbl = self._table_rows("lexicon", ["term_id", "df"],
+                               ranges=[(prefix, ub)])
         n = tbl.num_rows
         if n == 0:
             return None
@@ -306,19 +411,13 @@ class FulltextIndex:
         Small lexicons scan driver-side (pyarrow + a bounded DP, zero
         Spark jobs); big ones run one Catalyst job with
         ``levenshtein(term, q) <= d`` (+ the prefix range prune)."""
+        self._check_generation()
         q = normalize_str(term)  # normalize_str already lowercases
         pfx = q[:prefix_length] if prefix_length else ""
         if self.meta.get("n_terms", 0) <= 100_000:
-            import pyarrow.dataset as ds
-
-            f = None
-            if pfx:
-                f = ds.field("term") >= pfx
-                ub = _prefix_upper_bound(pfx)
-                if ub is not None:
-                    f = f & (ds.field("term") < ub)
-            dset = ds.dataset(self.store.p("lexicon"), format="parquet")
-            tbl = dset.to_table(columns=["term"], filter=f)
+            # every term is >= "": no prefix reads the whole lexicon
+            rng = (pfx, _prefix_upper_bound(pfx)) if pfx else ("", None)
+            tbl = self._table_rows("lexicon", ["term"], ranges=[rng])
             cands = [
                 t for t in tbl.column("term").to_pylist()
                 if abs(len(t) - len(q)) <= max_distance
@@ -678,24 +777,19 @@ class FulltextIndex:
 
     def _local_blocks(self, tids: list[int], plan: dict,
                       force: bool = False):
-        """term_id-pruned pyarrow scan of postings for the driver-local
-        path, or None when the estimated volume warrants the cluster.
-        TermRange spans prune as BETWEEN predicates (postings files are
-        term_id-sorted → row-group range pruning), never as IN lists."""
+        """The postings rows of ``tids`` and of the plan's TermRange spans
+        for the driver-local path, or None when the estimated volume
+        warrants the cluster. Only the row groups whose term_id min/max
+        can hold them are decoded (postings files are term_id-sorted); a
+        span selects groups as a range, never as an IN list."""
         if not force and self._posting_bytes(
             sum(plan["df_by_tid"].get(t, 0.0) for t in tids)
             + plan.get("ranges_sum_df", 0.0)
         ) > self.DRIVER_QUERY_MAX_BYTES:
             return None
-        import pyarrow.dataset as ds
-
-        f = ds.field("term_id").isin(list(tids)) if tids else None
-        for lo, hi in plan.get("tid_ranges") or []:
-            rf = (ds.field("term_id") >= lo) & (ds.field("term_id") <= hi)
-            f = rf if f is None else (f | rf)
-        dset = ds.dataset(self.store.p("postings"), format="parquet")
-        tbl = dset.to_table(filter=f)
-        return tbl.to_pandas()
+        ranges = [(lo, hi + 1) for lo, hi in plan.get("tid_ranges") or []]
+        return self._table_rows("postings", None, keys=list(tids),
+                                ranges=ranges).to_pandas()
 
     def _postings_pred(self, plan: dict):
         """Catalyst predicate selecting the plan's postings: IN over the
@@ -877,6 +971,7 @@ class FulltextIndex:
                    expansions: dict | None = None,
                    scorer: str | None = None) -> DataFrame:
         """All matching doc ids (no top-k) — the COUNT/filter path."""
+        self._check_generation()  # before _expand_ast reads the lexicon
         ast = self._expand_ast(parse_query(query), expansions)
         return self.match_ast(ast, scorer=scorer)
 

@@ -1408,8 +1408,11 @@ def test_prefix_prod_path_never_materializes_matched_rows(spark, tmp_path):
         raise AssertionError("driver materialized lexicon rows via pyarrow")
 
     with _pytest.MonkeyPatch.context() as mp:
-        # the Spark branch must not open the lexicon with pyarrow at all
+        # the Spark branch must not open the lexicon with pyarrow at all:
+        # neither as a dataset nor through the row-group reader every
+        # driver read of the lexicon goes through
         mp.setattr(pds, "dataset", boom)
+        mp.setattr(FulltextIndex, "_table_rows", boom)
         got_range = idx2._prefix_tid_range("pre")
         assert got_range == want_range
         assert idx2._prefix_tid_range("nosuchprefix") is None

@@ -1083,8 +1083,12 @@ def build_weighted_index(
     ``split:`` tokenizer, so EVERY invariant (dl = Σtf, fingerprints,
     resume, merge determinism) holds with zero new code paths, and
     multi-word tag values stay single tokens. weight 0 drops the
-    element (reference semantics). Query with the ``tf`` scorer for the
-    reference's weighted-match score (_score = Σ matched weights):
+    element (reference semantics). A NULL tags array, element, value or
+    weight, a negative weight, or a value containing the separator
+    raises: none of them has a tag meaning, and each would otherwise
+    turn silently into NULL or missing synthetic text. Query with the
+    ``tf`` scorer for the reference's weighted-match score (_score = Σ
+    matched weights):
 
         FulltextIndex(spark, path).search('"my tag"', scorer="tf")
 
@@ -1094,23 +1098,37 @@ def build_weighted_index(
     """
     # validation rides the build's OWN scan (no separate job, and a
     # non-deterministic source can't pass a pre-check then feed bad
-    # values into the real pass): a value containing the separator
-    # raises from inside the expression
+    # values into the real pass): a bad tags array or element raises
+    # from inside the expression. The repeat count is checked, not the
+    # value: array_repeat evaluates its count first and skips the value
+    # when the count is NULL.
+    def fail(msg: str):
+        return F.raise_error(F.lit(msg))
+
     checked_value = (
         lambda e: F.when(
             e["value"].contains(WEIGHT_SEP),
-            F.raise_error(F.lit(
-                "tag values must not contain the \\x1f element separator"
-            )).cast("string"),
+            fail("tag values must not contain the \\x1f element "
+                 "separator").cast("string"),
         ).otherwise(e["value"])
+    )
+    checked_weight = (
+        lambda e: F.when(e.isNull(), fail("tag elements must not be NULL"))
+        .when(e["value"].isNull(), fail("tag values must not be NULL"))
+        .when(e["weight"].isNull(), fail("tag weights must not be NULL"))
+        .when(e["weight"] < 0, fail("tag weights must not be negative"))
+        .otherwise(e["weight"])
     )
     expanded = F.flatten(
         F.transform(
             F.col(tags_col),
-            lambda e: F.array_repeat(checked_value(e), e["weight"]),
+            lambda e: F.array_repeat(checked_value(e), checked_weight(e)),
         )
     )
-    text = F.array_join(expanded, WEIGHT_SEP)
+    text = F.when(
+        F.col(tags_col).isNull(),
+        fail("the tags array must not be NULL").cast("string"),
+    ).otherwise(F.array_join(expanded, WEIGHT_SEP))
     out = docs.select(
         F.col(id_col).alias("doc_id"), text.alias("text")
     )

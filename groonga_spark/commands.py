@@ -47,7 +47,10 @@ def _mode_of(tokenizer: str) -> str:
         if not m:
             raise ValueError(f"{t!r} needs a quoted regex argument")
         base = "pattern" if t.startswith("TokenPattern") else "split"
-        return f"{base}:{m.group(1)}"
+        # decode the DDL string literal's own escapes (\\ and \") to the
+        # regex the user wrote — like select's @~ literals
+        regex = re.sub(r'\\([\\"])', r"\1", m.group(1))
+        return f"{base}:{regex}"
     if (t in ("bigram", "trigram", "delimit")
             or t.startswith(("ngram:", "pattern:", "split:"))):
         return t  # already a mode string
@@ -592,14 +595,16 @@ def _cols_header(df: DataFrame) -> list:
     return [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
 
 
-def _select_body(res, hits_df: DataFrame) -> list:
+def _select_body(n_hits: int, hits_df: DataFrame) -> list:
+    """``[[n_hits], [[col, type]...], rows...]`` — the body of a select
+    result, a slice and a drilldown alike."""
     # fetch cap+1 so truncation is DETECTED, never silent: a limit=-1
     # ("all rows") select bigger than the cap keeps the true n_hits in
     # the header and marks the body as truncated instead of quietly
     # returning fewer rows than n_hits.
     rows = hits_df.limit(SELECT_BODY_MAX_ROWS + 1).collect()
     cols = _cols_header(hits_df)
-    header: list = [res.n_hits]
+    header: list = [n_hits]
     if len(rows) > SELECT_BODY_MAX_ROWS:
         rows = rows[:SELECT_BODY_MAX_ROWS]
         header.append({"truncated": True, "cap": SELECT_BODY_MAX_ROWS})
@@ -653,26 +658,39 @@ def _cmd_select(
     refs = ctx.resolve_references(table)
     if refs:
         sel_kwargs["references"] = refs
+
+    def _limited(spec) -> dict:
+        # a drilldown or slice the command gives no limit returns the
+        # reference's default 10 rows (drilldown_limit, slices[].limit)
+        spec = {"keys": spec} if isinstance(spec, str) else dict(spec)
+        spec.setdefault("limit", 10)
+        return spec
+
     if drilldown is not None:
-        sel_kwargs["drilldowns"] = [k.strip() for k in drilldown.split(",")]
+        sel_kwargs["drilldowns"] = [_limited(k.strip())
+                                    for k in drilldown.split(",")]
     elif drilldowns is not None:
-        sel_kwargs["drilldowns"] = drilldowns
+        sel_kwargs["drilldowns"] = {label: _limited(s)
+                                    for label, s in drilldowns.items()}
+    if slices is not None:
+        sel_kwargs["slices"] = {label: _limited(s)
+                                for label, s in slices.items()}
     base_df = _df if _df is not None else ctx.tables[table]
     with _select(base_df,
                  index=ctx.indexes.get(table), **sel_kwargs) as res:
-        body = [_select_body(res, res.hits)]
-        for label in (res.drilldowns or {}):
-            dd = res.drilldowns[label]
-            rows = dd.collect()
-            cols = [[f.name, f.dataType.simpleString()]
-                    for f in dd.schema.fields]
-            # the reference reports the TOTAL group count in the header;
-            # limit bounds rows only (same shape as [[n_hits], ...]).
-            # Always prefer the pre-limit frame: with limit=0 the rows
-            # are suppressed but the total group count is still reported.
-            total = res.drilldown_totals[label].count() \
-                if label in res.drilldown_totals else len(rows)
-            body.append([[total], cols, *[list(r) for r in rows]])
+        body = [_select_body(res.n_hits, res.hits)]
+        # the reference emits slices as ONE {label: body} object after
+        # the result set, then the drilldowns; each header reports the
+        # TOTAL (pre-limit) count — with limit=0 the rows are suppressed
+        # but the total is still reported
+        if res.slices:
+            body.append({
+                label: _select_body(res.slice_totals[label].count(), sl)
+                for label, sl in res.slices.items()
+            })
+        for label, dd in (res.drilldowns or {}).items():
+            body.append(_select_body(res.drilldown_totals[label].count(),
+                                     dd))
     if output_type == "json":
         return json.dumps(body, default=str)
     return body

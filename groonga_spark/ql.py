@@ -84,6 +84,21 @@ class Similar:
 
 
 @dataclass
+class Field:
+    """A leaf scoped to one field of a multi-field index — one section
+    of a WITH_SECTION index [G: lib/ii.c · grn_ii_select over a section
+    id]. ``leaf`` is resolved at plan time against that field's own
+    lexicon (a prefix becomes its TermRange, ``*S`` its rare tids), with
+    term ids in the field's namespace of the pooled block frame; its
+    score is the field's leaf score × ``weight``. ``field`` indexes the
+    query's match_columns list."""
+
+    field: int
+    weight: float
+    leaf: object
+
+
+@dataclass
 class And:
     children: list = field(default_factory=list)
 
@@ -269,14 +284,14 @@ def collect_ranges(node) -> list[TermRange]:
 
 def rewrite(node, fn):
     """Bottom-up AST rewrite: ``fn(leaf) -> node`` applied to every
-    Term/Phrase/Prefix/Similar leaf (query expansion, prefix expansion,
-    similar rare-term selection)."""
+    Term/Phrase/Prefix/Near/Similar leaf (query expansion, prefix
+    expansion, similar rare-term selection, field scoping)."""
     if node is None:
         return None
-    if isinstance(node, (Term, Phrase, Prefix, Similar)):
+    if isinstance(node, (Term, Phrase, Prefix, Near, Similar)):
         return fn(node)
-    if isinstance(node, (Near, TermRange)):
-        return node  # positional/range leaves pass through
+    if isinstance(node, (TermRange, Field)):
+        return node  # resolved leaves pass through
     if isinstance(node, Not):
         child = rewrite(node.child, fn)
         return Not(child) if child is not None else None

@@ -2,19 +2,20 @@
 
 The distributed shape of [G: lib/proc/proc_select.c · grn_select] step 3
 (selection): the driver parses the query and looks up the handful of query
-terms in the lexicon (tiny, pruned scan), then ONE executor
-(``FulltextIndex._execute``) runs the kernel for top-k and match-set
-queries alike, on one of two routes:
+terms in the lexicon (tiny, pruned scan), then ONE route (``run_query``)
+runs the kernel for top-k and match-set queries alike, for a single-field
+FulltextIndex and a multi-field MultiFieldIndex (whose fields' blocks
+share one frame, term ids shifted per field), on one of two routes:
 
-- driver: when no more than TOMBSTONE_DRIVER_MAX docs are tombstoned and
-  the estimated posting volume fits DRIVER_QUERY_MAX_BYTES, the driver
-  reads the term_id-pruned blocks with pyarrow and runs the kernel over
-  them — no Spark job;
+- driver: when no field's tombstones are past TOMBSTONE_DRIVER_MAX and
+  the fields' summed posting-volume estimate fits
+  DRIVER_QUERY_MAX_BYTES, the driver reads the term_id-pruned blocks
+  with pyarrow and runs the kernel over them — no Spark job;
 - cluster: otherwise executors each evaluate the AST over ONE (segment,
-  shard)'s blocks (shards partition the doc-id space, so every set
-  operation is shard-local); a global ``orderBy(score desc, doc_id
-  asc).limit(k)`` merges per-shard top-k — Spark's TakeOrderedAndProject,
-  touching k rows per shard, not the corpus.
+  shard)'s blocks of every field (shards partition the doc-id space, so
+  every set operation is shard-local); a global ``orderBy(score desc,
+  doc_id asc).limit(k)`` merges per-shard top-k — Spark's
+  TakeOrderedAndProject, touching k rows per shard, not the corpus.
 
 Callers cannot force a route; the rule above is the only one. Every
 driver-side result becomes a DataFrame through ``result_frame``.
@@ -58,6 +59,58 @@ def result_frame(spark: SparkSession, doc=(), score=()) -> DataFrame:
         "doc_id": pa.array(doc, pa.int64()),
         "score": pa.array(score, pa.float64()),
     }))
+
+
+def run_query(parts: list, ast, plan: dict, stats: dict, k: int | None):
+    """Run a planned query — the one place that picks its route, for a
+    single-field and a multi-field index alike.
+
+    ``parts`` holds, per field of the query, (index, its own plan,
+    term-id base): a single-field query is ``[(idx, plan, 0)]``; a
+    multi-field one shifts field i's term ids by (i + 1) << 40 so every
+    field's blocks share one frame, and ``ast``/``plan`` are in that
+    namespace (Field leaves; per-field stats and tombstones in
+    ``plan["fields"]``). ``k`` asks for the top-k by (score desc, doc_id
+    asc); None asks for every match.
+
+    Route: when any field's tombstones are external (past
+    TOMBSTONE_DRIVER_MAX the driver never holds that mask), or the
+    fields' SUMMED posting-volume estimate exceeds
+    DRIVER_QUERY_MAX_BYTES, the kernel runs per (segment, shard) on the
+    cluster (``_per_shard_eval``) and a DataFrame comes back. Otherwise
+    the driver reads the pruned blocks and runs ONE kernel over them
+    (blocks are globally doc-disjoint and ordered by (segment,
+    block_id)), returning ``(doc, score)`` arrays."""
+    if ast is None or not any(p["needed_tids"] or p["tid_ranges"]
+                              for _i, p, _b in parts):
+        return np.empty(0, np.int64), np.empty(0, np.float64)
+    limit = (1 << 62) if k is None else k
+    head = parts[0][0]
+    external = any(p.get("tombstones_external") for _i, p, _b in parts)
+    if not external and sum(
+        idx._posting_bytes(p) for idx, p, _b in parts
+    ) <= head.DRIVER_QUERY_MAX_BYTES:
+        kernel = SegmentQueryKernel(_driver_blocks(parts), plan, stats, limit)
+        return kernel.eval(ast) if k is None else kernel.run(ast)
+    per_shard = head._per_shard_eval(ast, plan, stats, limit,
+                                     topk=k is not None, parts=parts)
+    if k is None:
+        return per_shard
+    return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def _driver_blocks(parts: list) -> pd.DataFrame:
+    """The driver route's block frame: each field's pruned postings
+    (``_local_blocks``), term ids shifted by the field's base."""
+    frames = []
+    for idx, p, base in parts:
+        if p["needed_tids"] or p["tid_ranges"]:
+            pdf = idx._local_blocks(p["needed_tids"], p, force=True)
+            if base:
+                pdf = pdf.assign(term_id=pdf["term_id"].astype("int64") + base)
+            frames.append(pdf)
+    return frames[0] if len(frames) == 1 else pd.concat(frames,
+                                                         ignore_index=True)
 
 
 def _prefix_upper_bound(prefix: str) -> str | None:
@@ -762,11 +815,14 @@ class FulltextIndex:
         self._tombstone_est = total
         return total
 
-    def _posting_bytes(self, sum_df: float) -> float:
-        """Estimated driver bytes to fetch and decode ``sum_df`` postings
-        of this index: bytes per stored posting × 2. Every driver-volume
-        gate (here and in multifield) compares this to
-        DRIVER_QUERY_MAX_BYTES."""
+    def _posting_bytes(self, plan: dict) -> float:
+        """Estimated driver bytes to fetch and decode the postings of a
+        plan's looked-up terms and TermRange spans in this index: bytes
+        per stored posting × 2. The route (``run_query``) sums it over a
+        query's fields and compares it to DRIVER_QUERY_MAX_BYTES."""
+        sum_df = (sum(plan["df_by_tid"].get(t, 0.0)
+                      for t in plan["needed_tids"])
+                  + plan.get("ranges_sum_df", 0.0))
         meta = self.meta
         bpp = (
             meta["bytes_compressed"] / meta["postings_total"]
@@ -776,17 +832,13 @@ class FulltextIndex:
         return sum_df * bpp * 2.0
 
     def _local_blocks(self, tids: list[int], plan: dict,
-                      force: bool = False):
+                      force: bool = True):
         """The postings rows of ``tids`` and of the plan's TermRange spans
-        for the driver-local path, or None when the estimated volume
-        warrants the cluster. Only the row groups whose term_id min/max
-        can hold them are decoded (postings files are term_id-sorted); a
-        span selects groups as a range, never as an IN list."""
-        if not force and self._posting_bytes(
-            sum(plan["df_by_tid"].get(t, 0.0) for t in tids)
-            + plan.get("ranges_sum_df", 0.0)
-        ) > self.DRIVER_QUERY_MAX_BYTES:
-            return None
+        on the driver. Only the row groups whose term_id min/max can hold
+        them are decoded (postings files are term_id-sorted); a span
+        selects groups as a range, never as an IN list. The route has
+        already chosen the driver (``run_query``); ``force`` is accepted
+        for callers that fetch outside it, and the read is the same."""
         ranges = [(lo, hi + 1) for lo, hi in plan.get("tid_ranges") or []]
         return self._table_rows("postings", None, keys=list(tids),
                                 ranges=ranges).to_pandas()
@@ -803,32 +855,6 @@ class FulltextIndex:
             rc = F.col("term_id").between(int(lo), int(hi))
             cond = rc if cond is None else (cond | rc)
         return cond if cond is not None else F.lit(False)
-
-    def _execute(self, ast, plan: dict, scorer: str | None, k: int | None):
-        """Run a planned query — the one place that picks its route.
-
-        ``k`` asks for the top-k by (score desc, doc_id asc); None asks
-        for every match. Past TOMBSTONE_DRIVER_MAX tombstones the plan
-        marks them external and the query runs on the cluster (the
-        driver never holds that mask); otherwise the volume estimate in
-        _local_blocks decides. The driver route runs ONE kernel over the
-        whole pruned block set (blocks are globally doc-disjoint and
-        ordered by (segment, block_id)) and returns ``(doc, score)``
-        arrays; the cluster route returns a DataFrame."""
-        if ast is None or not (plan["needed_tids"] or plan["tid_ranges"]):
-            return np.empty(0, np.int64), np.empty(0, np.float64)
-        stats = self._stats(scorer)
-        limit = (1 << 62) if k is None else k
-        if not plan.get("tombstones_external"):
-            pdf = self._local_blocks(plan["needed_tids"], plan)
-            if pdf is not None:
-                kernel = SegmentQueryKernel(pdf, plan, stats, limit)
-                return kernel.eval(ast) if k is None else kernel.run(ast)
-        per_shard = self._per_shard_eval(ast, plan, stats, limit,
-                                         topk=k is not None)
-        if k is None:
-            return per_shard
-        return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     # -- query result cache -------------------------------------------------
     #
@@ -871,7 +897,7 @@ class FulltextIndex:
         """Top-k for a Groonga-QL query → DataFrame(doc_id, score),
         ordered by (score desc, doc_id asc).
 
-        The route (driver or cluster) is _execute's. ``expansions`` =
+        The route (driver or cluster) is ``run_query``'s. ``expansions`` =
         synonym map (query_expand). Driver-route results are served from
         the per-handle result cache unless ``use_cache=False``
         (invalidated by deletes/compaction). ``scorer`` picks a
@@ -888,7 +914,8 @@ class FulltextIndex:
             if hit is not None:
                 return result_frame(self.spark, *hit)
         ast = self._expand_ast(parse_query(query), expansions)
-        out = self._execute(ast, self._plan(ast), scorer, k)
+        plan = self._plan(ast)
+        out = run_query([(self, plan, 0)], ast, plan, self._stats(scorer), k)
         if isinstance(out, DataFrame):
             return out
         if cache_key is not None:
@@ -896,25 +923,38 @@ class FulltextIndex:
         return result_frame(self.spark, *out)
 
     def _per_shard_eval(self, ast, plan: dict, stats: dict, k: int,
-                        topk: bool) -> DataFrame:
-        """Fan the kernel out per (segment, shard). Shards are
-        doc-disjoint → the kernel is correct per group; parallelism =
-        live shards, not segments.
+                        topk: bool, parts: list) -> DataFrame:
+        """The cluster leg of ``run_query``: fan the kernel out per
+        (segment, shard) over the union of ``parts``' postings — each
+        (index, its plan, term-id base) of the query's fields, term ids
+        shifted by the base. Shards are
+        doc-disjoint and the fields of one layout share their shard
+        geometry, so one group holds every field's blocks for its doc
+        range and the kernel is exact per group; parallelism = live
+        shards, not segments.
 
-        When the plan marks tombstones as external (set too big for the
-        driver), each shard group is COGROUPED with exactly its doc
-        range's tombstones: the tombstone table is range-assigned to
-        shards via a broadcast join against the O(shards) range frame,
-        so the full set is never materialized on the driver nor shipped
+        A field whose plan marks its tombstones external (set too big
+        for the driver) has them COGROUPED with each shard: its
+        tombstone table is range-assigned to shards via a broadcast join
+        against the O(shards) range frame and tagged with the field, so
+        the full set is never materialized on the driver nor shipped
         whole to any executor."""
         spark = self.spark
-        external = plan.pop("tombstones_external", False)
         bplan = spark.sparkContext.broadcast(plan)
         ast_b = spark.sparkContext.broadcast(ast)
-        blocks = self.postings.filter(
-            self._postings_pred(plan)
-        ).withColumn("shard", F.shiftright("block_id", 24))
+        blocks = None
+        for fidx, p, base in parts:
+            if not (p["needed_tids"] or p["tid_ranges"]):
+                continue
+            b = fidx.postings.filter(fidx._postings_pred(p))
+            if base:
+                b = b.withColumn(
+                    "term_id", (F.col("term_id") + F.lit(base)).cast("long"))
+            blocks = b if blocks is None else blocks.unionByName(b)
+        blocks = blocks.withColumn("shard", F.shiftright("block_id", 24))
 
+        external = [(fi, fidx) for fi, (fidx, p, _b) in enumerate(parts)
+                    if p.get("tombstones_external")]
         if not external:
             def _run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
                 kernel = SegmentQueryKernel(pdf, bplan.value, stats, k)
@@ -929,8 +969,12 @@ class FulltextIndex:
         # recursiveFileLookup: big deletes are adopted as whole t-<uuid>
         # DIRECTORIES (atomic rename); Spark's listing skips the
         # dot/underscore-prefixed staging dirs and _SUCCESS markers
-        tomb = (spark.read.option("recursiveFileLookup", "true")
-                     .parquet(self.store.p("tombstones")))
+        tomb = None
+        for fi, fidx in external:
+            t = (spark.read.option("recursiveFileLookup", "true")
+                      .parquet(fidx.store.p("tombstones"))
+                      .select("doc_id", F.lit(fi).alias("field")))
+            tomb = t if tomb is None else tomb.unionByName(t)
         # fresh column names break the shared lineage with `blocks`
         # (the cogroup below would otherwise trip Spark's ambiguous
         # self-join analysis — both sides descend from the same scan)
@@ -949,15 +993,19 @@ class FulltextIndex:
         ).select(
             F.col("_seg").alias("segment"),
             F.col("_shd").alias("shard"),
-            "doc_id",
+            "doc_id", "field",
         )
 
         def _run_t(key, bpdf: pd.DataFrame,
                    tpdf: pd.DataFrame) -> pd.DataFrame:
             p = dict(bplan.value)
-            t = (np.unique(tpdf["doc_id"].to_numpy(np.int64))
-                 if len(tpdf) else None)
-            p["tombstones"] = t if t is not None and len(t) else None
+            fields = list(p.get("fields")
+                          or [(0, stats, p.get("tombstones"))])
+            for fi, g in tpdf.groupby("field"):
+                base, st, _t = fields[int(fi)]
+                fields[int(fi)] = (base, st,
+                                   np.unique(g["doc_id"].to_numpy(np.int64)))
+            p["fields"] = fields
             kernel = SegmentQueryKernel(bpdf, p, stats, k)
             doc, score = (kernel.run(ast_b.value) if topk
                           else kernel.eval(ast_b.value))
@@ -976,10 +1024,12 @@ class FulltextIndex:
         return self.match_ast(ast, scorer=scorer)
 
     def match_ast(self, ast, scorer: str | None = None) -> DataFrame:
-        """match_docs over a pre-expanded AST (multi-field leaf eval and
-        other composers enter here)."""
+        """match_docs over a pre-expanded AST (select's match escalation
+        and other composers enter here)."""
         self._check_generation()
-        out = self._execute(ast, self._plan(ast), scorer, None)
+        plan = self._plan(ast)
+        out = run_query([(self, plan, 0)], ast, plan, self._stats(scorer),
+                      None)
         if isinstance(out, DataFrame):
             return out
         return result_frame(self.spark, *out)

@@ -488,6 +488,8 @@ class SelectResult:
     #: `limit` bounds only the returned rows; lazy DataFrames (count on
     #: demand), same plan as drilldowns[label] minus the limit
     drilldown_totals: dict = field(default_factory=dict)
+    #: per-label PRE-limit slice record sets (the slice header's n_hits)
+    slice_totals: dict = field(default_factory=dict)
     _cached: DataFrame | None = None
 
     def close(self) -> None:
@@ -764,8 +766,9 @@ def select(
                 dd_tot[label] = _drilldown(base, s, apply_limit=False)
 
     sl = {}
+    sl_tot = {}
     for label, spec in (slices or {}).items():
-        s = base.filter(F.expr(script_to_sql(spec["filter"])))
+        s = sl_tot[label] = base.filter(F.expr(script_to_sql(spec["filter"])))
         if spec.get("sort_keys"):
             s = s.orderBy(*_parse_sort_keys(spec["sort_keys"], id_col=id_col))
         if spec.get("limit") is not None:
@@ -812,6 +815,7 @@ def select(
 
     return SelectResult(hits=hits, n_hits=n_hits, drilldowns=dd,
                         slices=sl, drilldown_totals=dd_tot,
+                        slice_totals=sl_tot,
                         _cached=cached)
 
 

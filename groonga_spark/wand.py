@@ -29,7 +29,13 @@ grn_table_sort], this kernel prunes with the skip-block metadata:
   (searchsorted range pruning — the skip-list seek);
 - phrase: positional adjacency via intersect of (pos - offset) arrays
   (the reference's ngram-adjacency check in token_info chaining);
-- NOT: doc-id setdiff (AND-NOT of [G: grn_table_setoperation]).
+- NOT: doc-id setdiff (AND-NOT of [G: grn_table_setoperation]);
+- fields: a multi-field index's frame pools every field's blocks in
+  disjoint term-id spans (``plan["fields"]``); each term scores with its
+  own field's stats and masks its own field's tombstones, and a Field
+  leaf scales its field's leaf score by the column weight. A shape the
+  interval pruner cannot add in the exhaustive float order runs eval +
+  top-k.
 
 Everything operates on numpy arrays decoded batch-at-once (one vb_decode
 over concatenated block buffers, segmented cumsum to rebuild absolute doc
@@ -41,12 +47,15 @@ order → bit-reproducible across parallelism (rank-identity contract).
 
 from __future__ import annotations
 
+from bisect import bisect_right
+
 import numpy as np
 import pandas as pd
 
 from groonga_spark.codec import _segmented_cumsum, vb_decode
 from groonga_spark.ql import (
     And,
+    Field,
     Near,
     Not,
     Or,
@@ -70,11 +79,14 @@ def _spy_decodes(n: int) -> None:
 
 
 class TermPostings:
-    """Decoded postings of one term within one segment."""
+    """Decoded postings of one term within one segment, scored under its
+    own field's corpus ``stats`` and masked by that field's tombstones."""
 
-    __slots__ = ("doc", "tf", "dl", "blocks", "decoded_mask", "df", "tomb")
+    __slots__ = ("doc", "tf", "dl", "blocks", "decoded_mask", "df", "tomb",
+                 "stats")
 
-    def __init__(self, blocks: pd.DataFrame, df: float, tomb=None):
+    def __init__(self, blocks: pd.DataFrame, df: float, tomb=None,
+                 stats: dict | None = None):
         # sorted by (segment, block_id) == global doc order: segments own
         # disjoint doc ranges, shards within a segment are contiguous, and
         # block_id = shard<<24 | seq — so one TermPostings can span the
@@ -83,6 +95,7 @@ class TermPostings:
             drop=True
         )
         self.df = df
+        self.stats = stats
         self.tomb = tomb if tomb is not None and len(tomb) else None
         self.doc = None
         self.tf = None
@@ -151,12 +164,13 @@ class TermPostings:
             out.append((d, t, l))
         return out
 
-    def block_bounds(self, stats: dict) -> np.ndarray:
+    def block_bounds(self) -> np.ndarray:
         """Block-max WAND upper bounds from stored (max_tf, min_dl) + df —
         computed at query time so they survive incremental stat drift;
         strict upper bounds under float rounding (the scorer's bound
         contract)."""
-        sc = get_scorer((stats or {}).get("scorer"))
+        stats = self.stats
+        sc = get_scorer(stats.get("scorer"))
         return sc.bound(
             self.blocks["max_tf"].to_numpy(np.float64),
             self.blocks["min_dl"].to_numpy(np.float64),
@@ -230,8 +244,9 @@ def _ordinalize(cand: np.ndarray, rep: np.ndarray, pos: np.ndarray):
     return idx[m], pos[m]
 
 
-def _score_arrays(tp: TermPostings, stats: dict) -> np.ndarray:
-    sc = get_scorer((stats or {}).get("scorer"))
+def _score_arrays(tp: TermPostings) -> np.ndarray:
+    stats = tp.stats
+    sc = get_scorer(stats.get("scorer"))
     return sc.score(
         tp.tf, tp.dl, sc.idf(tp.df, stats["n_docs"]),
         stats["avgdl"], stats["k1"], stats["b"],
@@ -260,11 +275,12 @@ class SegmentQueryKernel:
         # + strict block bound threaded through every kernel path
         self._sc = get_scorer(stats.get("scorer"))
         self.k = k
-        self.tomb = plan.get("tombstones")
         # (first term_id, stats, tombstones) per field, ascending: a
         # frame may pool several fields' postings in disjoint term-id
-        # spans (the BM25F composer's remapped frame); one field else
-        self._fields = plan.get("fields") or [(0, stats, self.tomb)]
+        # spans (a multi-field index's remapped frame); one field else
+        self._fields = (plan.get("fields")
+                        or [(0, stats, plan.get("tombstones"))])
+        bases = [f[0] for f in self._fields]
         self.by_tid: dict[int, TermPostings] = {}
         # Only planned (looked-up) tids get eager TermPostings: a hot
         # prefix can cover 10^5+ terms, and 10^5 groupby/TermPostings
@@ -282,29 +298,41 @@ class SegmentQueryKernel:
                 df = plan["df_by_tid"].get(int(tid))
                 if df is None:
                     df = float(g["df"].iloc[0])
-                self.by_tid[int(tid)] = TermPostings(g, df, self.tomb)
+                _b, st, tomb = self._fields[bisect_right(bases, tid) - 1]
+                self.by_tid[int(tid)] = TermPostings(g, df, tomb, st)
 
-    def _leaf_tokens(self, text: str) -> list[int] | None:
+    def _tokens(self, text: str, field: int | None = None) -> list | None:
+        """term text → its token term_ids as planned (None per unknown
+        token; None if the text was not planned). A Field leaf's texts
+        are planned per field."""
+        return self.plan["tokens_by_text"].get(
+            text if field is None else (field, text))
+
+    def _leaf_tokens(self, text: str,
+                     field: int | None = None) -> list[int] | None:
         """term text → its token term_ids (None if any token unknown)."""
-        toks = self.plan["tokens_by_text"].get(text)
-        if toks is None or any(t is None for t in toks):
-            return None
-        return toks
+        toks = self._tokens(text, field)
+        return None if toks is None or None in toks else toks
 
-    def eval(self, node) -> tuple[np.ndarray, np.ndarray]:
-        """→ (doc_ids sorted asc, scores)."""
+    def eval(self, node, field: int | None = None
+             ) -> tuple[np.ndarray, np.ndarray]:
+        """→ (doc_ids sorted asc, scores). ``field``: the Field whose
+        lexicon planned this leaf's texts."""
         empty = (np.empty(0, np.int64), np.empty(0, np.float64))
         if node is None:
             return empty
+        if isinstance(node, Field):
+            d, s = self.eval(node.leaf, node.field)
+            return d, s * node.weight
         if isinstance(node, (Term, Phrase)):
-            tids = self._leaf_tokens(node.text)
+            tids = self._leaf_tokens(node.text, field)
             if not tids:  # unknown token (None) or zero tokens ("" / "   ")
                 return empty
             if len(tids) == 1:
                 return self._eval_single(tids[0])
             return self._eval_phrase(tids)
         if isinstance(node, Near):
-            tids = self._leaf_tokens(node.text)
+            tids = self._leaf_tokens(node.text, field)
             if not tids:
                 return empty
             if len(set(tids)) == 1:
@@ -326,8 +354,8 @@ class SegmentQueryKernel:
             if node.tids is not None:
                 tids = [t for t, _ in node.tids]
             else:
-                toks = self.plan["tokens_by_text"].get(node.text) or []
-                tids = [t for t in toks if t is not None]
+                tids = [t for t in self._tokens(node.text, field) or []
+                        if t is not None]
             if not tids:
                 return empty
             # OR over distinct tokens (sorted order → deterministic
@@ -481,7 +509,7 @@ class SegmentQueryKernel:
         if tp is None:
             return np.empty(0, np.int64), np.empty(0, np.float64)
         tp.decode_all()
-        return tp.doc, _score_arrays(tp, self.stats)
+        return tp.doc, _score_arrays(tp)
 
     def _docs_only(self, node) -> np.ndarray:
         d, _ = self.eval(node)
@@ -615,7 +643,7 @@ class SegmentQueryKernel:
         for t in uniq:  # fixed term-id order for float determinism
             tp = tps[t]
             ix = np.searchsorted(tp.doc, cand)
-            s = _score_arrays(tp, self.stats)[ix]
+            s = _score_arrays(tp)[ix]
             score += s if c[t] == 1 else c[t] * s
         return cand, score
 
@@ -684,12 +712,12 @@ class SegmentQueryKernel:
         empty = (np.empty(0, np.int64), np.empty(0, np.float64))
         if tp is None:
             return empty
-        ub = tp.block_bounds(self.stats)
+        ub = tp.block_bounds()
         order = np.argsort(-ub, kind="stable")
         CHUNK = 64
         doc = np.empty(0, np.int64)
         score = np.empty(0, np.float64)
-        st = self.stats
+        st = tp.stats
         for i in range(0, len(order), CHUNK):
             if len(doc) >= self.k and score[-1] > ub[order[i]]:
                 break  # kth best beats every remaining bound
@@ -984,33 +1012,15 @@ class SegmentQueryKernel:
                 run_doc, run_score = _topk(run_doc, run_score, k)
         return _topk(run_doc, run_score, k)
 
-    def _or_disjuncts(self, children) -> list[dict] | None:
-        """Or-under-And children → disjunct list in child order: plain
-        single-token terms become singleton disjuncts, phrase/near
-        leaves become multi-member disjuncts with their positional post
-        checks. None → not pruneable. A TermRange child joins as ONE
-        singleton disjunct whose member sums its terms first, so the
-        exhaustive _eval_or sequence ((s_a)+(s_r1+s_r2)) holds — never
-        one disjunct per term, which would add ((s_a+s_r1)+s_r2)."""
-        out = []
-        for c in children:
-            if not isinstance(c, (Term, Phrase, Near, TermRange)):
-                return None
-            g = self._leaf_group(c)
-            if g == "empty":
-                continue  # unknown/empty leaf contributes nothing
-            out.append({"members": g["members"],
-                        "post": g.get("post")})
-        return out
-
     #: below this many total blocks the exhaustive path's single batched
     #: decode beats the interval machinery (measured crossover; the
     #: distributed per-shard kernels almost always land here)
     PRUNE_MIN_BLOCKS = 512
 
-    def _leaf_group(self, node):
+    def _leaf_group(self, node, field: int | None = None):
         """Term/Phrase/Near/Similar/TermRange leaf → group dict; "empty"
-        when the leaf cannot match anything here."""
+        when the leaf cannot match anything here. ``field``: the Field
+        whose lexicon planned the leaf's texts."""
         if isinstance(node, TermRange):
             # one member however many terms the range covers: its terms
             # add inside the member first — the exhaustive per-child order
@@ -1026,14 +1036,14 @@ class SegmentQueryKernel:
             if node.tids is not None:
                 stids = sorted({t for t, _ in node.tids})
             else:
-                toks = self.plan["tokens_by_text"].get(node.text) or []
+                toks = self._tokens(node.text, field) or []
                 stids = sorted({t for t in toks if t is not None})
             stids = [t for t in stids if t in self.by_tid]
             if not stids:
                 return "empty"
             return {"kind": "or", "members": [(t, 1.0) for t in stids],
                     "post": None}
-        tids = self._leaf_tokens(node.text)
+        tids = self._leaf_tokens(node.text, field)
         if not tids:
             return "empty"
         if isinstance(node, Near) and len(set(tids)) == 1:
@@ -1060,101 +1070,145 @@ class SegmentQueryKernel:
             "post": post,
         }
 
+    def _group(self, node):
+        """An AND/OR child (or root) → group dict; "empty" when it cannot
+        match here; None when the pruner cannot add its scores in the
+        exhaustive float order. A Field scales its leaf's sum by w, and
+        w·(a + b) is not w·a + w·b in floats, so a weighted Field prunes
+        only as one unit-weight member. An OR's children become
+        disjuncts in child order — a phrase/near child one conjunctive
+        unit with its positional post check, any other child one
+        singleton disjunct per member — and the per-doc left fold over
+        them is the exhaustive _eval_or sequence only while a
+        multi-member sum (a Similar, a nested OR) comes first."""
+        if isinstance(node, Field):
+            g = self._leaf_group(node.leaf, node.field)
+            if g == "empty" or node.weight == 1.0:
+                return g
+            m = g["members"]
+            if (g["kind"] == "or" and len(m) == 1 and m[0][1] == 1.0
+                    and not isinstance(m[0][0], tuple)):
+                return {"kind": "or", "members": [(m[0][0], node.weight)],
+                        "post": None}
+            return None
+        if not isinstance(node, Or):
+            return (self._leaf_group(node)
+                    if isinstance(node, (Term, Phrase, Near, Similar,
+                                         TermRange)) else None)
+        dis = []
+        for c in node.children:
+            g = self._group(c)
+            if g is None:
+                return None
+            if g == "empty":
+                continue  # an unknown/empty child contributes nothing
+            if g["kind"] == "or" and (len(g["members"]) == 1 or not dis):
+                dis += [{"members": [m], "post": None}
+                        for m in g["members"]]
+            elif g["kind"] == "and":
+                dis.append({"members": g["members"], "post": g["post"]})
+            else:
+                return None
+        if not dis:
+            return "empty"
+        if all(d["post"] is None and len(d["members"]) == 1 for d in dis):
+            return {"kind": "or", "post": None,
+                    "members": [d["members"][0] for d in dis]}
+        return {"kind": "disjuncts", "disjuncts": dis}
+
+    def _neg_tids(self, node, field: int | None = None) -> list | None:
+        """Term ids whose postings a negative child removes when it is
+        made of single-token Term/Phrase leaves (plain, Field-scoped,
+        OR-ed) — masked candidate-driven; None → evaluate it whole."""
+        if isinstance(node, Or):
+            parts = [self._neg_tids(c) for c in node.children]
+            return None if None in parts else [t for p in parts for t in p]
+        if isinstance(node, Field):
+            return self._neg_tids(node.leaf, node.field)
+        if not isinstance(node, (Term, Phrase)):
+            return None
+        toks = self._tokens(node.text, field) or []
+        return None if len(toks) > 1 else [t for t in toks if t is not None]
+
     def _pruned_multi(self, ast):
         """Route prunable roots to the interval pruner: leaves (multi-
-        token Term/Phrase/Near, Similar, TermRange), ORs of leaves, and
-        ANDs whose positive children are leaves or ORs of single-token
-        leaves (phrases and nears ride along as "and"-kind groups with
-        positional post checks). A root that reduces to one single term
-        takes _topk_single_pruned. None → exhaustive fallback."""
+        token Term/Phrase/Near, Similar, TermRange, Field leaves), ORs,
+        and ANDs of them (phrases and nears ride along as "and"-kind
+        groups with positional post checks), wherever _group can keep
+        the exhaustive float order. One query leaf over several fields
+        (an OR of Field leaves) is one group. A root that reduces to one
+        single term takes _topk_single_pruned. None → exhaustive
+        fallback."""
         empty = (np.empty(0, np.int64), np.empty(0, np.float64))
         if len(self._raw) < self.PRUNE_MIN_BLOCKS:
             return None  # tiny posting set: decode-all is cheaper
-        leaves = (Term, Phrase, Near, Similar, TermRange)
-        if isinstance(ast, (Or,) + leaves):
-            children = ast.children if isinstance(ast, Or) else [ast]
-            if not all(isinstance(c, leaves) for c in children):
+        if not isinstance(ast, And):
+            scoped = isinstance(ast, Or) and all(
+                isinstance(c, Field) for c in ast.children)
+            children = (ast.children if isinstance(ast, Or) and not scoped
+                        else [ast])
+            groups = [self._group(c) for c in children]
+            if None in groups:
                 return None
             # an empty leaf contributes nothing, like the exhaustive OR
-            groups = [g for g in map(self._leaf_group, children)
-                      if g != "empty"]
+            groups = [g for g in groups if g != "empty"]
             if not groups:
                 return empty
-            m = groups[0]["members"]
+            m = groups[0].get("members")
             if (len(groups) == 1 and groups[0]["kind"] == "or"
                     and len(m) == 1 and m[0][1] == 1.0
                     and not isinstance(m[0][0], tuple)):
                 return self._topk_single_pruned(m[0][0])
             return self._topk_interval_pruned(groups, "or")
-        if isinstance(ast, And):
-            pos = [c for c in ast.children if not isinstance(c, Not)]
-            neg = [c.child for c in ast.children if isinstance(c, Not)]
-            if not pos:
-                return None
-            fused_tids = []
-            fused = True
-            for c in pos:
-                if isinstance(c, (Term, Phrase)):
-                    t = self._leaf_tokens(c.text)
-                    if not t:  # AND with an unmatchable leaf → empty
-                        return empty
-                    if len(t) == 1:
-                        fused_tids.append(t[0])
-                        continue
-                fused = False  # multi-token leaf / OR / TermRange child
-                break
-            if fused:
-                # all-single-token AND: sorted-unique groups with dup
-                # weights — the exhaustive _intersect_scored order
-                from collections import Counter
-
-                cnt = Counter(fused_tids)
-                if any(t not in self.by_tid for t in cnt):
+        pos = [c for c in ast.children if not isinstance(c, Not)]
+        neg = [c.child for c in ast.children if isinstance(c, Not)]
+        if not pos:
+            return None
+        fused_tids = []
+        fused = True
+        for c in pos:
+            if isinstance(c, (Term, Phrase)):
+                t = self._leaf_tokens(c.text)
+                if not t:  # AND with an unmatchable leaf → empty
                     return empty
-                groups = [{"kind": "or", "members": [(t, float(cnt[t]))],
-                           "post": None} for t in sorted(cnt)]
+                if len(t) == 1:
+                    fused_tids.append(t[0])
+                    continue
+            fused = False  # multi-token leaf / OR / TermRange / Field child
+            break
+        if fused:
+            # all-single-token AND: sorted-unique groups with dup
+            # weights — the exhaustive _intersect_scored order
+            from collections import Counter
+
+            cnt = Counter(fused_tids)
+            if any(t not in self.by_tid for t in cnt):
+                return empty
+            groups = [{"kind": "or", "members": [(t, float(cnt[t]))],
+                       "post": None} for t in sorted(cnt)]
+        else:
+            # general shape: groups add in child order — the exhaustive
+            # non-fused order
+            groups = [self._group(c) for c in pos]
+            if None in groups:
+                return None
+            if "empty" in groups:
+                return empty  # an AND child can't match
+        neg_docs = None
+        neg_tids: list[int] = []
+        complex_negs = []
+        for n in neg:
+            t = self._neg_tids(n)
+            if t is None:
+                complex_negs.append(n)
             else:
-                # general shape: positives are leaves (single-token,
-                # phrase, near, similar, range) or ORs of single-token
-                # leaves; groups add in child order — the exhaustive
-                # non-fused order
-                groups = []
-                for c in pos:
-                    if isinstance(c, leaves):
-                        g = self._leaf_group(c)
-                        if g == "empty":
-                            return empty  # an AND child can't match
-                        groups.append(g)
-                    elif isinstance(c, Or):
-                        dis = self._or_disjuncts(c.children)
-                        if dis is None:
-                            return None
-                        if not dis:
-                            return empty  # OR child matches nothing
-                        groups.append({"kind": "disjuncts",
-                                       "disjuncts": dis})
-                    else:
-                        return None
-            neg_docs = None
-            neg_tids: list[int] = []
-            complex_negs = []
-            for n in neg:
-                t = (self._leaf_tokens(n.text)
-                     if isinstance(n, (Term, Phrase)) else None)
-                if t is not None and len(t) == 1:
-                    neg_tids.append(t[0])  # candidate-driven masking
-                elif t is not None and len(t) == 0:
-                    continue  # unmatchable neg removes nothing
-                else:
-                    complex_negs.append(n)
-            if complex_negs:
-                nd = np.empty(0, np.int64)
-                for n in complex_negs:
-                    nd = np.union1d(nd, self._docs_only(n))
-                neg_docs = nd
-            return self._topk_interval_pruned(groups, "and", neg_docs,
-                                              neg_tids)
-        return None
+                neg_tids += t  # candidate-driven masking
+        if complex_negs:
+            nd = np.empty(0, np.int64)
+            for n in complex_negs:
+                nd = np.union1d(nd, self._docs_only(n))
+            neg_docs = nd
+        return self._topk_interval_pruned(groups, "and", neg_docs, neg_tids)
 
     def run(self, ast) -> tuple[np.ndarray, np.ndarray]:
         # single-token leaf at the root → block-max WAND pruned path

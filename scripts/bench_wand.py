@@ -132,17 +132,20 @@ def main() -> None:
 
 
 def _bench_multifield(spark, corpus: str, args) -> dict:
-    """BM25F pruned top-k (one interval-pruner kernel call with per-field
-    stats) vs the exhaustive leaf-algebra DataFrame path (per-leaf×field
-    kernel runs + combine joins + global sort — the round-2 shape)."""
-    from pyspark.sql import functions as F
-
+    """BM25F top-k through the one query route's driver leg
+    (search.run_query): pruned = MultiFieldIndex._scope planning + the
+    fields' pruned block fetch + the kernel's run; exhaustive = the same
+    plan and block frame through the kernel's eval + top-k (what the
+    route runs for shapes the pruner cannot add in the exhaustive float
+    order). Both return (doc, score) arrays."""
     from groonga_spark.build import index_is_current
     from groonga_spark.multifield import (
         MultiFieldIndex,
         build_multifield_index,
     )
     from groonga_spark.ql import parse_query
+    from groonga_spark.search import _driver_blocks
+    from groonga_spark.wand import SegmentQueryKernel, _topk
 
     mf_path = os.path.join(tempfile.gettempdir(), f"gs_wand_mf_{args.mult}")
     # stale unless the manifest exists AND every field index matches the
@@ -178,26 +181,29 @@ def _bench_multifield(spark, corpus: str, args) -> dict:
         ("mf_not", "table -slow", "title*10||body"),
     ]
     for name, q, mc in shapes:
-        cols = mf._cols(mc)
         ast = parse_query(q)
-        assert mf._pruned_plan(ast, cols) is not None, name
+        cols = mf._cols(mc)
+
+        def kernel():
+            scoped, parts, plan = mf._scope(ast, cols)
+            return scoped, SegmentQueryKernel(
+                _driver_blocks(parts), plan, plan["fields"][0][1], args.k)
+
+        scoped, kern = kernel()
+        assert kern._pruned_multi(scoped) is not None, name  # pruner takes it
 
         def pruned_topk():
-            # driver-local BM25F top-k, planning included → (doc, score)
-            return mf._driver_topk(mf._pruned_plan(ast, cols), cols, args.k)
-
-        pruned, blk_pruned = spy_decodes(pruned_topk)
+            scoped, kern = kernel()
+            return kern.run(scoped)
 
         def exhaustive():
-            return (
-                mf.match_docs(q, match_columns=mc)
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(args.k).collect()
-            )
+            scoped, kern = kernel()
+            return _topk(*kern.eval(scoped), args.k)
 
+        pruned, blk_pruned = spy_decodes(pruned_topk)
         exh, blk_exh = spy_decodes(exhaustive)
-        assert pruned[0].tolist() == [r["doc_id"] for r in exh], name
-        assert pruned[1].tolist() == [r["score"] for r in exh], name
+        assert pruned[0].tolist() == exh[0].tolist(), name
+        assert pruned[1].tolist() == exh[1].tolist(), name
 
         t_pruned = min(_time(pruned_topk) for _ in range(args.repeat))
         t_exh = min(_time(exhaustive) for _ in range(args.repeat))
@@ -251,12 +257,11 @@ def _append_bench_md(out: dict) -> None:
             "### BM25F multi-field pruned top-k (same corpus, "
             "title/body split)",
             "",
-            "Pruned = one interval-pruner kernel call with per-field "
-            "stats/weights;",
-            "exhaustive = the leaf-algebra DataFrame path (kernel per "
-            "leaf×field +",
-            "combine joins + global sort). Results asserted bit-identical "
-            "first.",
+            "Both columns run the one query route's driver leg (planning",
+            "and the fields' pruned block fetch included): pruned = the",
+            "kernel's interval-pruned run with per-field stats/weights;",
+            "exhaustive = the same frame through the kernel's eval + top-k.",
+            "Results asserted bit-identical first.",
             "",
             "| query | pruned s | exhaustive s | speedup | blocks decoded |"
             " skipped |",

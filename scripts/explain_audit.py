@@ -109,30 +109,29 @@ def main() -> None:
                       "BroadcastNestedLoopJoin)"]))
     release(dups)
 
-    # 8. multifield leaf combine: doc_id equi-joins (SortMerge or
-    # broadcast), never nested-loop
+    # 8. multifield match set: the one query route answers a small
+    # match on the driver — a local relation, no join, no scan
     mf = E._mf_index(spark, SF)
     mdf = mf.match_docs("spark merge", "title*3||body")
-    p_mf = plan_of(mdf)
-    if "BroadcastNestedLoopJoin" in p_mf or "CartesianProduct" in p_mf:
-        checks_failed.append("multifield_match: nested-loop join present")
-    sections.append(("multifield_match_equijoins", p_mf,
-                     ["(MUST NOT contain CartesianProduct / "
-                      "BroadcastNestedLoopJoin)"]))
+    audit("multifield_match_driver_route", mdf, ["LocalTableScan"])
 
-    # 8b. distributed BM25F pruned top-k (round 3): per-shard
-    # FlatMapGroupsInPandas over the unioned field postings (term_id
-    # IN pushed per field), global TakeOrderedAndProject merge
-    from groonga_spark.ql import parse_query
+    # 8b. the same route's cluster leg for a BM25F top-k (forced by a
+    # zero driver cap on a fresh handle): per-shard FlatMapGroupsInPandas
+    # over the union of the fields' postings (term_id IN pushed per
+    # field), global TakeOrderedAndProject merge
+    from groonga_spark.multifield import MultiFieldIndex
+    from groonga_spark.search import FulltextIndex
 
-    cols = mf._cols("title*3||body")
-    dmf = mf._cluster_topk(
-        mf._pruned_plan(parse_query("spark merge"), cols), cols, 10
-    )
-    if dmf is not None:
-        audit("multifield_distributed_pruned", dmf,
-              ["FlatMapGroupsInPandas", "TakeOrderedAndProject",
-               "PushedFilters: [In(term_id"])
+    cap = FulltextIndex.DRIVER_QUERY_MAX_BYTES
+    FulltextIndex.DRIVER_QUERY_MAX_BYTES = 0
+    try:
+        dmf = MultiFieldIndex(spark, mf.path).search(
+            "spark merge", "title*3||body", k=10)
+    finally:
+        FulltextIndex.DRIVER_QUERY_MAX_BYTES = cap
+    audit("multifield_distributed_pruned", dmf,
+          ["FlatMapGroupsInPandas", "TakeOrderedAndProject",
+           "PushedFilters: [In(term_id", "Union"])
 
     # 9. segment build corpus scan (round 4): each build_segment filters
     # the corpus to its doc-id range — the predicate MUST reach the scan

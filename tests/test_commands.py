@@ -144,6 +144,67 @@ def test_select_body_row_cap(ctx, monkeypatch):
     assert len(hits) - 2 == 3      # materialized rows capped
 
 
+def test_select_body_emits_slices(ctx):
+    """Each slice comes back in the reference body shape — one
+    {label: [[n_hits], [[col, type]...], rows...]} object after the
+    result set, before the drilldowns — its header the slice's total,
+    its rows bounded by the slice limit (the reference's 10 when the
+    command names none)."""
+    from groonga_spark.select import select
+
+    docs = ctx.tables["Docs"]
+    n_en = docs.filter('lang = "en"').count()
+    assert n_en > 10
+    body = execute(ctx, "select", table="Docs", limit=0, drilldown="lang",
+                   output_columns="doc_id",
+                   slices={"en": {"filter": 'lang == "en"', "limit": 3,
+                                  "sort_keys": "doc_id"},
+                           "all_en": {"filter": 'lang == "en"'}})
+    assert len(body) == 3
+    slices, dd = body[1], body[2]
+    assert set(slices) == {"en", "all_en"}
+    head, cols, *rows = slices["en"]
+    assert head == [n_en] and ["doc_id", "bigint"] in cols
+    with select(docs, filter='lang == "en"', sort_keys="doc_id",
+                limit=3) as res:
+        want = [list(r) for r in res.hits.collect()]
+    assert rows == want
+    assert slices["all_en"][0] == [n_en] and len(slices["all_en"]) - 2 == 10
+    assert ["_key", "string"] in dd[1]           # drilldown still follows
+
+
+def test_drilldown_default_limit_is_ten(spark):
+    """A drilldown the command gives no limit returns the reference's
+    default drilldown_limit of 10 groups; the header keeps the total."""
+    ctx = CommandContext(spark)
+    ctx.register("G", spark.createDataFrame(
+        [(i, f"g{i % 25:02d}") for i in range(100)], "doc_id long, g string"))
+    for kw in ({"drilldown": "g"},
+               {"drilldowns": {"by_g": {"keys": ["g"],
+                                        "sort_keys": "_key"}}}):
+        dd = execute(ctx, "select", table="G", limit=0, **kw)[1]
+        assert dd[0] == [25] and len(dd) - 2 == 10, kw
+    dd = execute(ctx, "select", table="G", limit=0,
+                 drilldowns={"g": {"keys": ["g"], "limit": 20}})[1]
+    assert dd[0] == [25] and len(dd) - 2 == 20
+
+
+def test_tokenizer_regex_decodes_ddl_escapes(ctx):
+    """TokenPattern/TokenRegexp take their regex from a DDL string
+    literal: its escapes (\\\\ and \\") decode one level, so the regex
+    is the one the user wrote."""
+    from groonga_spark.commands import _mode_of
+
+    assert _mode_of('TokenPattern("\\\\d+")') == "pattern:\\d+"
+    assert _mode_of('TokenRegexp("[,\\"]")') == 'split:[,"]'
+    toks = execute(ctx, "tokenize", tokenizer='TokenPattern("\\\\d+")',
+                   string="ab 12 c345")
+    assert [t["value"] for t in toks] == ["12", "345"]
+    toks = execute(ctx, "tokenize", tokenizer='TokenRegexp("[,\\"]")',
+                   string='a,b"c')
+    assert [t["value"] for t in toks] == ["a", "b", "c"]
+
+
 def test_delete_filter_streams_tombstones(spark, tmp_path):
     """delete --filter must never collect the doomed ids to the driver:
     the index receives the id DataFrame and writes tombstones from the

@@ -361,6 +361,25 @@ def test_weighted_vector_index_with_weight(spark, tmp_path):
         build_weighted_index(spark, bad, str(tmp_path / "idx_bad"))
 
 
+def test_weighted_index_rejects_null_and_negative(spark, tmp_path):
+    """A NULL tags array, element, value or weight, and a negative
+    weight, raise from inside the build's own scan instead of turning
+    into NULL (or silently dropped) synthetic text."""
+    from groonga_spark.build import build_weighted_index
+
+    schema = "doc_id long, tags array<struct<value string, weight int>>"
+    for i, (tags, msg) in enumerate([
+        (None, "tags array must not be NULL"),
+        ([("a", 1), None], "elements must not be NULL"),
+        ([(None, 2)], "values must not be NULL"),
+        ([("a", None)], "weights must not be NULL"),
+        ([("a", 1), ("b", -1)], "must not be negative"),
+    ]):
+        bad = spark.createDataFrame([(1, [("ok", 1)]), (2, tags)], schema)
+        with pytest.raises(Exception, match=msg):
+            build_weighted_index(spark, bad, str(tmp_path / f"idx_{i}"))
+
+
 def test_legacy_migration_resumes_after_crash_mid_stage(spark, docs,
                                                         tmp_path):
     """A crash AFTER staging all legacy files but BEFORE the epoch=-1

@@ -1,12 +1,16 @@
 """Weighted multi-field match (match_columns / BM25F) vs a brute-force
 python oracle: leaf-level cross-field OR semantics, per-field BM25 with
-own stats, column weights."""
+own stats, column weights — and the one query route (search.run_query)
+every multi-field shape takes: pruned top-k ≡ the kernel's exhaustive
+eval bit for bit, driver ≡ cluster, no Spark job under the driver cap."""
 
 from __future__ import annotations
 
 from collections import defaultdict
 
+import numpy as np
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from groonga_spark.multifield import (
@@ -14,33 +18,58 @@ from groonga_spark.multifield import (
     build_multifield_index,
     parse_match_columns,
 )
-from groonga_spark.ql import And, Not, Or, Phrase, Term, parse_query
+from groonga_spark.normalize import normalize_str
+from groonga_spark.ql import (
+    And,
+    Near,
+    Not,
+    Or,
+    Phrase,
+    Prefix,
+    Similar,
+    Term,
+    parse_query,
+)
 from oracle import OracleIndex
 
 
 class MultiFieldOracle:
     """Per-field OracleIndex; leaf = Σ_f w_f·leaf_f; same AND/OR/NOT
-    combinators as the engine."""
+    combinators as the engine. A prefix leaf is the OR of the field's
+    terms with that prefix, in term order. ``dead`` doc ids (tombstones)
+    drop from every result while corpus stats stay as built."""
 
-    def __init__(self, rows, fields, mode="delimit"):
+    def __init__(self, rows, fields, mode="delimit", dead=()):
         # rows: list of (doc_id, {field: text})
         self.oracles = {
             f: OracleIndex([(d, vals.get(f, "")) for d, vals in rows], mode)
             for f in fields
         }
+        self.dead = set(dead)
 
-    def _leaf(self, text, cols):
+    def _field_leaf(self, o, node):
+        if isinstance(node, Prefix):
+            pfx = normalize_str(node.text)
+            acc = defaultdict(float)
+            for t in sorted(x for x in o.postings if x.startswith(pfx)):
+                for d, s in o.score_term(t).items():
+                    acc[d] += s
+            return dict(acc)
+        return o.eval(node)
+
+    def _leaf(self, node, cols):
         acc = defaultdict(float)
         for name, w in cols:
-            for d, s in self.oracles[name]._leaf(text).items():
-                acc[d] += w * s
+            for d, s in self._field_leaf(self.oracles[name], node).items():
+                if d not in self.dead:
+                    acc[d] += w * s
         return dict(acc)
 
     def eval(self, node, cols):
         if node is None:
             return {}
-        if isinstance(node, (Term, Phrase)):
-            return self._leaf(node.text, cols)
+        if isinstance(node, (Term, Phrase, Near, Similar, Prefix)):
+            return self._leaf(node, cols)
         if isinstance(node, And):
             pos = [c for c in node.children if not isinstance(c, Not)]
             neg = [c.child for c in node.children if isinstance(c, Not)]
@@ -187,6 +216,37 @@ def test_multifield_near_and_prefix_leaves(built, oracle, corpus):
     assert gp == wp and gp
 
 
+def _kernel_paths(mf, q, mc, k=10):
+    """The driver route's kernel on (q, mc), over one block frame: run
+    (pruned top-k, the pruner forced on whatever the index size),
+    _topk(eval) (exhaustive), and whether the pruner took the shape
+    (None when no field's lexicon holds a query term)."""
+    from groonga_spark.search import _driver_blocks
+    from groonga_spark.wand import SegmentQueryKernel, _topk
+
+    scoped, parts, plan = mf._scope(parse_query(q), mf._cols(mc))
+    if scoped is None or not any(p["needed_tids"] or p["tid_ranges"]
+                                 for _f, p, _b in parts):
+        empty = (np.empty(0, np.int64), np.empty(0, np.float64))
+        return empty, empty, None  # no field knows a term: nothing runs
+    pdf = _driver_blocks(parts)
+
+    def kernel():
+        kern = SegmentQueryKernel(pdf, plan, plan["fields"][0][1], k)
+        kern.PRUNE_MIN_BLOCKS = 0
+        return kern
+
+    pruned = kernel()._pruned_multi(scoped) is not None
+    return kernel().run(scoped), _topk(*kernel().eval(scoped), k), pruned
+
+
+def _pairs(res) -> list:
+    """(doc, score) arrays or a result DataFrame → [(doc_id, score)]."""
+    if isinstance(res, DataFrame):
+        return [(r["doc_id"], r["score"]) for r in res.collect()]
+    return list(zip(res[0].tolist(), res[1].tolist()))
+
+
 @pytest.mark.parametrize("q,mc", [
     ("spark", "title*10||body"),
     ("spark merge", "title*10||body"),
@@ -197,35 +257,35 @@ def test_multifield_near_and_prefix_leaves(built, oracle, corpus):
     ("spark", "title"),
 ])
 def test_multifield_pruned_topk_bit_identity(q, mc, built):
-    """The interval-pruned BM25F top-k must equal the exhaustive
-    leaf-algebra path BIT-for-bit (same float sequences), ties and all —
-    and must actually be the path search() takes for these shapes."""
-    from groonga_spark.ql import parse_query
-
-    cols = built._cols(mc)
-    pp = built._pruned_plan(parse_query(q), cols)
-    assert pp is not None, (q, mc)  # shape must be eligible
-    got = built._driver_topk(pp, cols, 10)
-    exhaustive = [
-        (r["doc_id"], r["score"])
-        for r in built.match_docs(q, match_columns=mc)
-        .orderBy(F.desc("score"), F.asc("doc_id")).limit(10).collect()
-    ]
-    assert got[0].tolist() == [d for d, _ in exhaustive], (q, mc)
-    assert got[1].tolist() == [s for _, s in exhaustive], (q, mc)
+    """The interval-pruned BM25F top-k must equal the kernel's
+    exhaustive eval BIT-for-bit (same float sequences), ties and all —
+    the pruner must take these shapes, and search() must return exactly
+    that top-k."""
+    run, exhaustive, pruned = _kernel_paths(built, q, mc)
+    assert pruned, (q, mc)
+    assert _pairs(run) == _pairs(exhaustive), (q, mc)
+    assert _pairs(built.search(q, match_columns=mc, k=10)) == \
+        _pairs(exhaustive), (q, mc)
 
 
 def test_multifield_pruned_ineligible_shapes(built):
-    """Phrases / Near / nested boolean mixes fall back (None) — and
-    search() still answers them correctly through the exhaustive path."""
-    from groonga_spark.ql import parse_query
-
-    cols = built._cols("title||body")
-    assert built._pruned_plan(parse_query('"spark fast"'), cols) is None
-    assert built._pruned_plan(parse_query('*N3"spark merge"'), cols) is None
-    assert built._pruned_plan(
-        parse_query("(spark OR merge) table"), cols
-    ) is None
+    """Shapes the pruner cannot add in the exhaustive float order — a
+    weighted multi-token leaf (w·(a + b) is not w·a + w·b in floats),
+    an OR of scoped leaves under an AND — run the kernel's eval + top-k
+    inside the same route; unit-weight phrases and nears prune. Either
+    way search() answers exactly."""
+    for q, mc, want_pruned in [
+        ('"spark fast"', "title*10||body", False),
+        ('*N3"spark merge"', "title*10||body", False),
+        ("(spark OR merge) table", "title||body", False),
+        ('"spark fast"', "title||body", True),
+        ('*N3"spark merge"', "title||body", True),
+    ]:
+        run, exhaustive, pruned = _kernel_paths(built, q, mc)
+        assert pruned == want_pruned, (q, mc)
+        assert _pairs(run) == _pairs(exhaustive), (q, mc)
+        assert _pairs(built.search(q, match_columns=mc, k=10)) == \
+            _pairs(exhaustive), (q, mc)
 
 
 @pytest.mark.parametrize("q,mc", [
@@ -233,31 +293,29 @@ def test_multifield_pruned_ineligible_shapes(built):
     ("spark -slow", "title||body"),
     ("spark OR stream", "title*3||body"),
 ])
-def test_multifield_pruned_distributed_matches_local(q, mc, built):
-    """The cluster-scale pruned path (per-(segment, shard) kernels over
-    the unioned field postings + global top-k merge) must equal the
-    driver-local pruned kernel exactly — shards partition doc space, so
-    per-shard scores are the global scores restricted to the range."""
-    from groonga_spark.ql import parse_query
+def test_multifield_pruned_distributed_matches_local(q, mc, built,
+                                                     monkeypatch):
+    """The cluster route (per-(segment, shard) kernels over the union of
+    the fields' postings + global top-k merge) must equal the driver
+    route exactly — shards partition doc space, so per-shard scores are
+    the global scores restricted to the range. The cluster route is
+    forced on a fresh handle by a zero driver cap."""
+    from groonga_spark.search import FulltextIndex
 
-    cols = built._cols(mc)
-    pp = built._pruned_plan(parse_query(q), cols)
-    local = built._driver_topk(pp, cols, 10)
-    assert isinstance(local, tuple)
-    dist = built._cluster_topk(pp, cols, 10)
-    assert dist is not None
-    got = [(r["doc_id"], r["score"]) for r in dist.collect()]
-    assert [d for d, _ in got] == local[0].tolist(), (q, mc)
-    assert [s for _, s in got] == local[1].tolist(), (q, mc)
+    local = built._run(parse_query(q), mc, 10)
+    assert isinstance(local, tuple) and len(local[0])
+    monkeypatch.setattr(FulltextIndex, "DRIVER_QUERY_MAX_BYTES", 0)
+    dist = MultiFieldIndex(built.spark, built.path)._run(
+        parse_query(q), mc, 10)
+    assert isinstance(dist, DataFrame)
+    assert _pairs(dist) == _pairs(local), (q, mc)
 
 
 def test_multifield_pruned_fuzz(built):
-    """Fuzz: random eligible shapes × random column specs — the pruned
-    BM25F kernel must match the exhaustive DataFrame algebra bit-for-bit
-    every time."""
+    """Fuzz: random flat Term AND/OR/NOT shapes × random column specs —
+    the pruned BM25F kernel must take every one and match the kernel's
+    exhaustive eval bit-for-bit every time."""
     import random
-
-    from groonga_spark.ql import parse_query
 
     rng = random.Random(23)
     vocab = ["spark", "merge", "table", "scan", "stream", "window",
@@ -276,19 +334,141 @@ def test_multifield_pruned_fuzz(built):
             if rng.random() < 0.4:
                 q += f" -{rng.choice(vocab)}"
         mc = rng.choice(specs)
-        cols = built._cols(mc)
-        pp = built._pruned_plan(parse_query(q), cols)
-        assert pp is not None, (q, mc)
-        got = built._driver_topk(pp, cols, 10)
-        exh = [
-            (r["doc_id"], r["score"])
-            for r in built.match_docs(q, match_columns=mc)
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(10).collect()
-        ]
-        assert got[0].tolist() == [d for d, _ in exh], (q, mc)
-        assert got[1].tolist() == [s for _, s in exh], (q, mc)
+        run, exh, pruned = _kernel_paths(built, q, mc)
+        assert pruned is not False, (q, mc)
+        assert _pairs(run) == _pairs(exh), (q, mc)
         checked += 1
     assert checked == 40
+
+
+def _route_fuzz_cases(seed: int, per_shape: int) -> list[tuple[str, str]]:
+    """(query, match_columns) cases covering every shape that used to
+    leave the pruned BM25F path: prefix, phrase, near, *S, an OR under
+    an AND, prefix AND-NOT, multi-token leaves mixed with terms."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = ["spark", "merge", "table", "scan", "stream", "window",
+             "fast", "slow", "index", "query", "vector", "join",
+             "zzznope"]
+    pfx = ["s", "sp", "st", "m", "w", "in", "q", "zz", "t"]
+    specs = ["title*10||body", "title||body", "title*3||body", "body",
+             "title", "body*2||title", "title*0.7||body*1.3"]
+
+    def w():
+        return rng.choice(vocab)
+
+    def p():
+        return rng.choice(pfx)
+
+    shapes = [
+        lambda: f"{p()}*",
+        lambda: f'"{w()} {w()}"',
+        lambda: f'*N{rng.randrange(1, 6)}"{w()} {w()}"',
+        lambda: f'*S"{w()} {w()} {w()}"',
+        lambda: f"({w()} OR {w()}) {w()}",
+        lambda: f"{p()}* -{w()}",
+        lambda: f'{w()} "{w()} {w()}"',
+        lambda: f'"{w()} {w()}" OR {p()}*',
+        lambda: f"({p()}* OR {w()}) -{w()}",
+        lambda: f'*N3"{w()} {w()}" {w()} -{w()}',
+        lambda: f"{w()} {w()} OR {w()}",
+    ]
+    return [(shape(), rng.choice(specs))
+            for _ in range(per_shape) for shape in shapes]
+
+
+def _check_route(spark, path, cases, cols_oracle, monkeypatch, spark_jobs,
+                 dead=()):
+    """Every case on the driver route (top-k ≡ _topk(eval) bit for bit,
+    no Spark job for search or match_docs, results within 1e-9 of the
+    oracle), then on the cluster route forced on a fresh handle by a
+    zero DRIVER_QUERY_MAX_BYTES and, separately, a zero
+    TOMBSTONE_DRIVER_MAX (cluster only when something is tombstoned):
+    bit-identical to the driver route."""
+    from groonga_spark.search import FulltextIndex
+
+    mf = MultiFieldIndex(spark, path)
+    want = {}
+    n_pruned = 0
+    for q, mc in cases:
+        run, exh, pruned = _kernel_paths(mf, q, mc)
+        n_pruned += bool(pruned)
+        assert _pairs(run) == _pairs(exh), (q, mc)
+        top, match = [], []
+        assert spark_jobs(lambda: top.extend(
+            mf.search(q, match_columns=mc, k=10).collect())) == [], (q, mc)
+        assert spark_jobs(lambda: match.extend(
+            mf.match_docs(q, match_columns=mc).collect())) == [], (q, mc)
+        top = [(r["doc_id"], r["score"]) for r in top]
+        match = sorted((r["doc_id"], r["score"]) for r in match)
+        assert top == _pairs(exh), (q, mc)
+        o = cols_oracle.eval(parse_query(q), parse_match_columns(mc))
+        assert [d for d, _ in match] == sorted(o), (q, mc)
+        for d, s in match:
+            assert abs(s - o[d]) <= 1e-9, (q, mc, d)
+        ranked = sorted(o.items(), key=lambda kv: (-kv[1], kv[0]))
+        assert len(top) == min(10, len(ranked)), (q, mc)
+        if top:
+            kth = top[-1][1]
+            assert {d for d, s in ranked if s > kth + 1e-9} <= \
+                {d for d, _ in top}, (q, mc)
+        want[(q, mc)] = (top, match)
+    assert n_pruned, "no case took the pruner"
+
+    for attr in ("DRIVER_QUERY_MAX_BYTES", "TOMBSTONE_DRIVER_MAX"):
+        with monkeypatch.context() as m:
+            m.setattr(FulltextIndex, attr, 0)
+            fresh = MultiFieldIndex(spark, path)
+            cluster = attr == "DRIVER_QUERY_MAX_BYTES" or bool(dead)
+            for q, mc in cases:
+                top, match = want[(q, mc)]
+                out = fresh._run(parse_query(q), mc, 10)
+                if match:
+                    assert isinstance(out, DataFrame) == cluster, (q, mc, attr)
+                assert _pairs(out) == top, (q, mc, attr)
+                got = sorted(_pairs(fresh.match_docs(q, match_columns=mc)))
+                assert got == match, (q, mc, attr)
+
+
+def test_multifield_route_fuzz_all_shapes(spark, corpus, tmp_path,
+                                          monkeypatch, spark_jobs):
+    """Prefix, phrase, near, *S, (a OR b) c, p* -x and multi-token
+    leaves over a two-field index, with and without tombstones: one
+    route, one kernel, driver ≡ cluster ≡ oracle."""
+    import shutil
+
+    rows, df = corpus
+    path = str(tmp_path / "mf_fuzz")
+    build_multifield_index(spark, df, path, ["title", "body"],
+                           mode="delimit", segment_size=100)
+    tomb_path = str(tmp_path / "mf_fuzz_tomb")
+    shutil.copytree(path, tomb_path)
+    dead = [d for d, _ in rows if d % 7 == 3]
+    MultiFieldIndex(spark, tomb_path).delete_docs(dead)
+    cases = _route_fuzz_cases(31, 2)
+    _check_route(spark, path, cases, MultiFieldOracle(rows, ["title", "body"]),
+                 monkeypatch, spark_jobs)
+    _check_route(spark, tomb_path, cases,
+                 MultiFieldOracle(rows, ["title", "body"], dead=dead),
+                 monkeypatch, spark_jobs, dead=dead)
+
+
+def test_multifield_route_fuzz_bigram(spark, corpus, tmp_path, monkeypatch,
+                                      spark_jobs):
+    """The same checks on a bigram index, where every word of the fuzz
+    vocabulary is a multi-token leaf (positional adjacency per field)."""
+    rows, df = corpus
+    path = str(tmp_path / "mf_fuzz_bigram")
+    build_multifield_index(spark, df, path, ["title", "body"],
+                           mode="bigram", segment_size=100)
+    cases = [("spark", "title*10||body"), ("spark merge", "title||body"),
+             ("table OR scan", "title*3||body"), ("sp*", "title||body"),
+             ('"fast slow"', "body*2||title"), ("index -query", "title"),
+             ("(spark OR merge) table", "title*10||body")]
+    _check_route(spark, path, cases,
+                 MultiFieldOracle(rows, ["title", "body"], mode="bigram"),
+                 monkeypatch, spark_jobs)
 
 
 def test_multifield_search_routes_distributed(built, monkeypatch):
@@ -347,27 +527,26 @@ def test_multifield_aggregate_driver_cap(built, monkeypatch):
     """DRIVER_QUERY_MAX_BYTES must gate the SUM of all fields' posting
     volume, not each field individually — N fields each just under the
     cap would otherwise load N× the cap onto the driver."""
-    from groonga_spark.ql import parse_query
     from groonga_spark.search import FulltextIndex
 
-    cols = built._cols("title||body")
     ast = parse_query("spark merge")
-    pp = built._pruned_plan(ast, cols)
-    assert pp not in (None, "empty")
+    _scoped, parts, _plan = built._scope(ast, built._cols("title||body"))
     per_field = []
-    for fi, (name, _w) in enumerate(cols):
-        m = built.field(name).meta
+    for fidx, p, _base in parts:
+        m = fidx.meta
         bpp = (m["bytes_compressed"] / m["postings_total"]
                if m.get("postings_total") else 8.0)
-        sdf = sum(d for t, d in pp["df_by_tid"].items()
-                  if t >> built._FIELD_SHIFT == fi + 1)
+        sdf = sum(p["df_by_tid"][t] for t in p["needed_tids"])
+        assert fidx._posting_bytes(p) == sdf * bpp * 2.0
         per_field.append(sdf * bpp * 2.0)
     agg = sum(per_field)
     assert max(per_field) < agg
     # a cap every field passes individually but the aggregate exceeds
     monkeypatch.setattr(FulltextIndex, "DRIVER_QUERY_MAX_BYTES",
                         (max(per_field) + agg) / 2)
-    assert not built._fits_driver(pp, cols)
+    assert isinstance(built._run(ast, "title||body", 10), DataFrame)
+    monkeypatch.setattr(FulltextIndex, "DRIVER_QUERY_MAX_BYTES", agg)
+    assert isinstance(built._run(ast, "title||body", 10), tuple)
 
 
 def test_multifield_escalation_per_field(spark, built, corpus, oracle):
@@ -436,10 +615,10 @@ def test_multifield_adjuster_match_columns(spark, built, corpus, oracle):
 
 def test_pruned_ineligible_past_tombstone_cap(spark, tmp_path, monkeypatch):
     """Past TOMBSTONE_DRIVER_MAX the driver must never materialize the
-    tombstone set on the MULTIFIELD paths either: the pruned kernels
-    carry per-field masks inside the plan, so a giant delete makes the
-    pruned shape ineligible and search falls back to the exhaustive
-    per-field algebra, whose FulltextIndex path masks executor-side."""
+    tombstone set on the MULTIFIELD route either: the query goes to the
+    cluster, where each shard is cogrouped with its range of every
+    field's tombstones (tagged with the field) and masks them
+    executor-side — same answers as the driver-masked route."""
     from groonga_spark.search import FulltextIndex
 
     df = spark.createDataFrame(
@@ -458,23 +637,23 @@ def test_pruned_ineligible_past_tombstone_cap(spark, tmp_path, monkeypatch):
             for r in mf.search("spark stream", "title*2||body", k=10)
             .collect()}
     assert want and not ({d for d, _ in want} & set(doomed))
+    want_all = sorted(_pairs(mf.match_docs("spark OR stream",
+                                           "title*2||body")))
 
     monkeypatch.setattr(FulltextIndex, "TOMBSTONE_DRIVER_MAX", 0)
     mf2 = MultiFieldIndex(spark, path)
-    from groonga_spark.ql import parse_query
-
-    cols = mf2._cols("title*2||body")
-    assert mf2._pruned_plan(parse_query("spark stream"), cols) is None
 
     # PROVE the driver never materializes the set under the cap
     def boom(self):
         raise AssertionError("driver materialized the tombstone set")
 
     monkeypatch.setattr(FulltextIndex, "tombstones", boom)
-    got = {(r["doc_id"], round(r["score"], 9))
-           for r in mf2.search("spark stream", "title*2||body", k=10)
-           .collect()}
+    out = mf2._run(parse_query("spark stream"), "title*2||body", 10)
+    assert isinstance(out, DataFrame)  # the cluster route
+    got = {(d, round(s, 9)) for d, s in _pairs(out)}
     assert got == want
+    assert sorted(_pairs(mf2.match_docs("spark OR stream",
+                                        "title*2||body"))) == want_all
 
 
 def _tiny_multifield(spark, path):
@@ -498,6 +677,22 @@ def test_multifield_driver_route_starts_no_spark_job(spark, tmp_path,
         assert spark_jobs(lambda: got.extend(
             mf.search(q, match_columns="title*2||body").collect())) == [], q
         assert {r["doc_id"] for r in got} == want, q
+
+
+def test_misaligned_field_geometry_refuses_to_open(spark, tmp_path):
+    """One shard group must hold every field's blocks for its doc range,
+    so a layout whose fields disagree on segment/shard geometry raises
+    when the handle opens."""
+    from groonga_spark.build import IndexStore
+
+    path = str(tmp_path / "mf_geom")
+    _tiny_multifield(spark, path)
+    store = IndexStore(f"{path}/fields/body")
+    meta = store.read_meta()
+    meta["shard_size"] = meta["shard_size"] // 2
+    store.write_meta(meta)
+    with pytest.raises(ValueError, match="shard_size"):
+        MultiFieldIndex(spark, path)
 
 
 def test_grouped_map_udfs_declare_their_eval_type(spark, tmp_path,

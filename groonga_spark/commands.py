@@ -328,6 +328,15 @@ def _cmd_column_create(ctx: CommandContext, table: str, name: str,
     return True
 
 
+def _pop_index(ctx: CommandContext, meta: dict) -> None:
+    """Drop a COLUMN_INDEX declaration's built index from its source
+    table's slot — only when the slot holds THAT index (same path): two
+    declarations over one source share the slot, and removing the one
+    whose index is not live must leave the other serving."""
+    if getattr(ctx.indexes.get(meta["type"]), "path", None) == meta["path"]:
+        ctx.indexes.pop(meta["type"])
+
+
 def _drop_dependent_indexes(ctx: CommandContext, table: str,
                             column: str | None = None) -> None:
     """Cascade removal the way grn_obj_remove does: drop every built
@@ -347,7 +356,7 @@ def _drop_dependent_indexes(ctx: CommandContext, table: str,
                 and (column is None or column in srcs)
             )
             if hit:
-                ctx.indexes.pop(meta["type"], None)
+                _pop_index(ctx, meta)
                 cols.pop(cname)
 
 
@@ -378,7 +387,7 @@ def _cmd_column_remove(ctx: CommandContext, table: str, name: str):
     ddl_cols = ctx.ddl.get(table, {}).get("columns", {})
     meta = ddl_cols.get(name)
     if meta is not None and "COLUMN_INDEX" in meta["flags"]:
-        ctx.indexes.pop(meta["type"], None)
+        _pop_index(ctx, meta)
         ddl_cols.pop(name)
         return True
     if name not in ctx.tables[table].columns:

@@ -260,6 +260,7 @@ class FulltextIndex:
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
+        self.path = path
         self.store = IndexStore(path)
         self.meta = self.store.read_meta()
         self._lex_cache: dict[str, tuple[int, float] | None] = {}

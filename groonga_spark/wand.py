@@ -37,17 +37,33 @@ grn_table_sort], this kernel prunes with the skip-block metadata:
   interval pruner cannot add in the exhaustive float order runs eval +
   top-k.
 
-Everything operates on numpy arrays decoded batch-at-once (one vb_decode
-over concatenated block buffers, segmented cumsum to rebuild absolute doc
-ids). Python loops occur per BLOCK or per query NODE, never per row/doc.
+One block store: the kernel reads its block frame once as pooled numpy
+columns (_pool; rows ordered by term_id, segment, block_id), and every
+path addresses blocks as row indices into it — a term's blocks are
+_rows(tid, tid), a prefix's _rows(lo, hi). Postings decode in exactly
+two places: _decode_rows (doc/tf/dl with each field's tombstones
+masked — the decode the bench's block counter wraps) and _positions
+(doc ids and positions, for the phrase/near checks). What each path
+decodes:
+- single term (eval): every row of the term; (run) 64-row chunks in
+  descending-bound order until the kth score beats the rest;
+- AND of terms / phrase / near (eval): rarest-first as above; the
+  positions of only the rows overlapping the final candidates;
+- TermRange (eval): every row of the range, in one batch;
+- interval pruner (run): the rows covering each processed interval
+  chunk, each row at most once; negative terms only their rows
+  overlapping candidates.
+Each decode is one vb_decode per stream over the concatenated block
+buffers, with a segmented cumsum to rebuild absolute doc ids; scores
+take the scorer's idf once per unique df (_idf) and each field's
+(avgdl, k1, b) (_by_field). Python loops occur per BLOCK or per query
+NODE, never per row/doc.
 
 Scores: float64; per-term contributions accumulated in term-string-sorted
 order → bit-reproducible across parallelism (rank-identity contract).
 """
 
 from __future__ import annotations
-
-from bisect import bisect_right
 
 import numpy as np
 import pandas as pd
@@ -65,154 +81,6 @@ from groonga_spark.ql import (
     TermRange,
 )
 from groonga_spark.score import get_scorer
-
-#: bench/test hook: when set to a list, pooled-path decodes append their
-#: block counts here (TermPostings.decode_idx* can be monkeypatch-spied,
-#: but _decode_rows — range eval and the interval pruner — never
-#: constructs TermPostings)
-_DECODE_SPY: list | None = None
-
-
-def _spy_decodes(n: int) -> None:
-    if _DECODE_SPY is not None:
-        _DECODE_SPY.append(int(n))
-
-
-class TermPostings:
-    """Decoded postings of one term within one segment, scored under its
-    own field's corpus ``stats`` and masked by that field's tombstones."""
-
-    __slots__ = ("doc", "tf", "dl", "blocks", "decoded_mask", "df", "tomb",
-                 "stats")
-
-    def __init__(self, blocks: pd.DataFrame, df: float, tomb=None,
-                 stats: dict | None = None):
-        # sorted by (segment, block_id) == global doc order: segments own
-        # disjoint doc ranges, shards within a segment are contiguous, and
-        # block_id = shard<<24 | seq — so one TermPostings can span the
-        # whole index (driver-local path) or one shard (executor path)
-        self.blocks = blocks.sort_values(["segment", "block_id"]).reset_index(
-            drop=True
-        )
-        self.df = df
-        self.stats = stats
-        self.tomb = tomb if tomb is not None and len(tomb) else None
-        self.doc = None
-        self.tf = None
-        self.dl = None
-
-    def decode_all(self) -> None:
-        self._decode(np.arange(len(self.blocks)))
-
-    def decode_overlapping(self, candidates: np.ndarray) -> None:
-        """Decode only blocks whose doc range intersects candidates."""
-        lo = self.blocks["min_doc_id"].to_numpy()
-        hi = self.blocks["max_doc_id"].to_numpy()
-        # block i survives iff ∃ candidate in [lo_i, hi_i]
-        left = np.searchsorted(candidates, lo, side="left")
-        keep = (left < len(candidates)) & (
-            candidates[np.minimum(left, len(candidates) - 1)] <= hi
-        )
-        self._decode(np.flatnonzero(keep))
-
-    def _decode(self, idx: np.ndarray) -> None:
-        self.doc, self.tf, self.dl = self.decode_idx(idx)
-
-    def decode_idx(self, idx: np.ndarray):
-        """Decode the given block rows → (doc, tf, dl) arrays. Blocks are
-        independent (deltas reset per block), so idx order is free."""
-        if len(idx) == 0:
-            return (np.empty(0, np.int64), np.empty(0, np.int64),
-                    np.empty(0, np.int64))
-        sub = self.blocks.iloc[idx]
-        nd = sub["n_docs"].to_numpy(np.int64)
-        deltas = vb_decode(b"".join(sub["doc_deltas"])).astype(np.int64)
-        doc = _segmented_cumsum(deltas, nd)
-        tf = vb_decode(b"".join(sub["tfs"])).astype(np.int64)
-        dl = vb_decode(b"".join(sub["dls"])).astype(np.int64)
-        if self.tomb is not None:
-            # tombstone mask (LSM delete semantics): drop deleted docs at
-            # decode; stats stay as-built until compaction
-            keep = ~np.isin(doc, self.tomb, assume_unique=True)
-            if not keep.all():
-                doc, tf, dl = doc[keep], tf[keep], dl[keep]
-        return doc, tf, dl
-
-    def decode_idx_split(self, idx: np.ndarray) -> list[tuple]:
-        """Decode the given block rows → list of per-block (doc, tf, dl)
-        arrays, in ``idx`` order. ONE vb_decode per stream over the
-        concatenated buffers (the batch fast path), split by the
-        pre-tombstone doc counts, then masked per block — so callers can
-        memoize per block without paying per-block decode overhead."""
-        if len(idx) == 0:
-            return []
-        sub = self.blocks.iloc[idx]
-        nd = sub["n_docs"].to_numpy(np.int64)
-        deltas = vb_decode(b"".join(sub["doc_deltas"])).astype(np.int64)
-        doc = _segmented_cumsum(deltas, nd)
-        tf = vb_decode(b"".join(sub["tfs"])).astype(np.int64)
-        dl = vb_decode(b"".join(sub["dls"])).astype(np.int64)
-        ends = np.cumsum(nd)
-        starts = ends - nd
-        out = []
-        for s, e in zip(starts.tolist(), ends.tolist()):
-            d, t, l = doc[s:e], tf[s:e], dl[s:e]
-            if self.tomb is not None:
-                keep = ~np.isin(d, self.tomb, assume_unique=True)
-                if not keep.all():
-                    d, t, l = d[keep], t[keep], l[keep]
-            out.append((d, t, l))
-        return out
-
-    def block_bounds(self) -> np.ndarray:
-        """Block-max WAND upper bounds from stored (max_tf, min_dl) + df —
-        computed at query time so they survive incremental stat drift;
-        strict upper bounds under float rounding (the scorer's bound
-        contract)."""
-        stats = self.stats
-        sc = get_scorer(stats.get("scorer"))
-        return sc.bound(
-            self.blocks["max_tf"].to_numpy(np.float64),
-            self.blocks["min_dl"].to_numpy(np.float64),
-            sc.idf(self.df, stats["n_docs"]),
-            stats["avgdl"], stats["k1"], stats["b"],
-        )
-
-    def positions_arrays(self, doc_ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """(doc_rep, pos) parallel arrays over blocks overlapping doc_ids,
-        doc-major / position-minor sorted. All buffers of the surviving
-        blocks decode in ONE vb_decode each; the only per-block Python is
-        numpy slicing to split each block's [counts][deltas] stream."""
-        lo = self.blocks["min_doc_id"].to_numpy()
-        hi_arr = self.blocks["max_doc_id"].to_numpy()
-        left = np.searchsorted(doc_ids, lo, side="left")
-        keep = (left < len(doc_ids)) & (
-            doc_ids[np.minimum(left, len(doc_ids) - 1)] <= hi_arr
-        )
-        idx = np.flatnonzero(keep)
-        if len(idx) == 0:
-            return np.empty(0, np.int64), np.empty(0, np.int64)
-        sub = self.blocks.iloc[idx]
-        nd = sub["n_docs"].to_numpy(np.int64)
-        docs_all = _segmented_cumsum(
-            vb_decode(b"".join(sub["doc_deltas"])).astype(np.int64), nd
-        )
-        vals = vb_decode(b"".join(sub["positions"])).astype(np.int64)
-        counts_parts, delta_parts = [], []
-        p = 0
-        for n in nd.tolist():
-            cnt = vals[p : p + n]
-            p += n
-            ntok = int(cnt.sum())
-            delta_parts.append(vals[p : p + ntok])
-            p += ntok
-            counts_parts.append(cnt)
-        counts = np.concatenate(counts_parts)
-        deltas = np.concatenate(delta_parts)
-        # deltas reset to absolute at each doc start (postings.py) →
-        # per-doc segmented cumsum rebuilds absolute positions
-        pos_abs = _segmented_cumsum(deltas, counts)
-        return np.repeat(docs_all, counts), pos_abs
 
 
 def _union_add(doc: np.ndarray, score: np.ndarray,
@@ -244,15 +112,6 @@ def _ordinalize(cand: np.ndarray, rep: np.ndarray, pos: np.ndarray):
     return idx[m], pos[m]
 
 
-def _score_arrays(tp: TermPostings) -> np.ndarray:
-    stats = tp.stats
-    sc = get_scorer(stats.get("scorer"))
-    return sc.score(
-        tp.tf, tp.dl, sc.idf(tp.df, stats["n_docs"]),
-        stats["avgdl"], stats["k1"], stats["b"],
-    )
-
-
 def _topk(doc: np.ndarray, score: np.ndarray, k: int):
     """top-k by (score desc, doc_id asc) — deterministic ties."""
     if len(doc) <= k:
@@ -280,26 +139,10 @@ class SegmentQueryKernel:
         # spans (a multi-field index's remapped frame); one field else
         self._fields = (plan.get("fields")
                         or [(0, stats, plan.get("tombstones"))])
-        bases = [f[0] for f in self._fields]
-        self.by_tid: dict[int, TermPostings] = {}
-        # Only planned (looked-up) tids get eager TermPostings: a hot
-        # prefix can cover 10^5+ terms, and 10^5 groupby/TermPostings
-        # constructions ARE the cost at that scale. Range members and
-        # every pruned multi-member root read the frame as pooled
-        # columns instead (_pool).
+        # the block frame; every path reads it as pooled numpy columns
+        # (_pool, built on first use)
         self._raw = blocks
         self._cols: dict | None = None
-        planned = {int(t) for t in plan.get("df_by_tid", {})}
-        if planned:
-            tid_col = blocks["term_id"].to_numpy(np.int64)
-            sub = (blocks if len(planned) >= len(np.unique(tid_col))
-                   else blocks[np.isin(tid_col, sorted(planned))])
-            for tid, g in sub.groupby("term_id"):
-                df = plan["df_by_tid"].get(int(tid))
-                if df is None:
-                    df = float(g["df"].iloc[0])
-                _b, st, tomb = self._fields[bisect_right(bases, tid) - 1]
-                self.by_tid[int(tid)] = TermPostings(g, df, tomb, st)
 
     def _tokens(self, text: str, field: int | None = None) -> list | None:
         """term text → its token term_ids as planned (None per unknown
@@ -384,16 +227,17 @@ class SegmentQueryKernel:
     def _pool(self) -> dict:
         """The kernel's block frame as numpy columns, plus the row order
         (term_id, segment, block_id) and each row's field — built once,
-        on first use. Range members and the interval pruner read blocks
-        through these arrays only: no per-term frames."""
+        on first use. THE block store: every path reads its blocks
+        through these arrays."""
         if self._cols is None:
             b = self._raw
             c = {n: b[n].to_numpy(np.int64)
                  for n in ("term_id", "n_docs", "min_doc_id", "max_doc_id")}
             for n in ("max_tf", "min_dl", "df"):
                 c[n] = b[n].to_numpy(np.float64)
-            for n in ("doc_deltas", "tfs", "dls"):
-                c[n] = b[n].to_numpy(object)
+            for n in ("doc_deltas", "tfs", "dls", "positions"):
+                if n in b:
+                    c[n] = b[n].to_numpy(object)
             c["order"] = np.lexsort((b["block_id"].to_numpy(np.int64),
                                      b["segment"].to_numpy(np.int64),
                                      c["term_id"]))
@@ -414,9 +258,9 @@ class SegmentQueryKernel:
                           np.searchsorted(st, hi, side="right")]
 
     def _member(self, key) -> tuple[np.ndarray, np.ndarray]:
-        """(frame rows, per-row df) of one pruner member: a looked-up
-        term id (the plan's df) or a (lo, hi) term-id range (each
-        block's own df column, as _eval_range scores it)."""
+        """(frame rows, per-row df) of a looked-up term id (the plan's
+        df, else its blocks' df column) or a (lo, hi) term-id range
+        (each block's own df column) — the one df rule of every path."""
         if isinstance(key, tuple):
             rows = self._rows(*key)
             return rows, self._pool()["df"][rows]
@@ -425,6 +269,10 @@ class SegmentQueryKernel:
         if df is None:
             return rows, self._pool()["df"][rows]
         return rows, np.full(len(rows), float(df))
+
+    def _has(self, tid: int) -> bool:
+        """Whether term ``tid`` has blocks in this frame."""
+        return len(self._rows(tid, tid)) > 0
 
     def _idf(self, df: np.ndarray, fld: np.ndarray) -> np.ndarray:
         """Per-element idf: the scorer's idf fn (math.log, not np.log
@@ -456,8 +304,9 @@ class SegmentQueryKernel:
     def _decode_rows(self, rows: np.ndarray):
         """ONE vb_decode per stream over the given frame rows → (doc, tf,
         dl, postings kept per row), each row's field tombstones masked
-        (LSM delete semantics: stats stay as-built until compaction)."""
-        _spy_decodes(len(rows))
+        (LSM delete semantics: stats stay as-built until compaction).
+        The one posting decode of doc/tf/dl, on every path — so the
+        bench's decode counter wraps this method alone."""
         c = self._pool()
         nd = c["n_docs"][rows]
         doc = _segmented_cumsum(
@@ -479,6 +328,61 @@ class SegmentQueryKernel:
             doc, tf, dl = doc[keep], tf[keep], dl[keep]
         return doc, tf, dl, nd
 
+    def _scored(self, rows: np.ndarray, df: np.ndarray
+                ) -> tuple[np.ndarray, np.ndarray]:
+        """Decode ``rows`` → (doc, score): each posting scored under its
+        row's df (per-element idf) and its row's field."""
+        if not len(rows):
+            return np.empty(0, np.int64), np.empty(0, np.float64)
+        doc, tf, dl, nd = self._decode_rows(rows)
+        fld = self._pool()["field"][rows]
+        idf = np.repeat(self._idf(df, fld), nd)
+        return doc, self._by_field(self._sc.score, np.repeat(fld, nd),
+                                   tf, dl, idf)
+
+    def _overlapping(self, rows: np.ndarray, cand: np.ndarray) -> np.ndarray:
+        """Mask of the ``rows`` whose [min_doc_id, max_doc_id] holds a doc
+        of the sorted, non-empty ``cand`` (searchsorted range pruning —
+        the skip-list seek)."""
+        c = self._pool()
+        p = np.searchsorted(cand, c["min_doc_id"][rows], side="left")
+        return (p < len(cand)) & (
+            cand[np.minimum(p, len(cand) - 1)] <= c["max_doc_id"][rows])
+
+    def _positions(self, tid: int, cand: np.ndarray
+                   ) -> tuple[np.ndarray, np.ndarray]:
+        """(doc_rep, pos) parallel arrays over term ``tid``'s blocks that
+        overlap the sorted ``cand``, doc-major / position-minor — the one
+        positions decode (not tombstone-masked: callers keep only
+        candidate docs). All buffers decode in ONE vb_decode each; the
+        only per-block Python is numpy slicing to split each block's
+        [counts][deltas] stream."""
+        rows = self._rows(tid, tid)
+        rows = rows[self._overlapping(rows, cand)]
+        if not len(rows):
+            return np.empty(0, np.int64), np.empty(0, np.int64)
+        c = self._pool()
+        nd = c["n_docs"][rows]
+        docs_all = _segmented_cumsum(
+            vb_decode(b"".join(c["doc_deltas"][rows])).astype(np.int64), nd
+        )
+        vals = vb_decode(b"".join(c["positions"][rows])).astype(np.int64)
+        counts_parts, delta_parts = [], []
+        p = 0
+        for n in nd.tolist():
+            cnt = vals[p : p + n]
+            p += n
+            ntok = int(cnt.sum())
+            delta_parts.append(vals[p : p + ntok])
+            p += ntok
+            counts_parts.append(cnt)
+        counts = np.concatenate(counts_parts)
+        deltas = np.concatenate(delta_parts)
+        # deltas reset to absolute at each doc start (postings.py) →
+        # per-doc segmented cumsum rebuilds absolute positions
+        pos_abs = _segmented_cumsum(deltas, counts)
+        return np.repeat(docs_all, counts), pos_abs
+
     def _eval_range(self, lo: int, hi: int) -> tuple[np.ndarray, np.ndarray]:
         """TermRange ≡ OR over every term_id in [lo, hi] present here,
         scores ADDING per doc in ascending-term_id order — bit-identical
@@ -487,16 +391,7 @@ class SegmentQueryKernel:
         0 + x == x exactly). POOLED: one vb_decode per stream over every
         range block, one scorer pass with per-element idf — zero per-term
         Python/pandas (a 10^5-term prefix is a handful of numpy passes)."""
-        empty = (np.empty(0, np.int64), np.empty(0, np.float64))
-        rows = self._rows(lo, hi)
-        if not len(rows):
-            return empty
-        doc, tf, dl, nd = self._decode_rows(rows)
-        if not len(doc):
-            return empty
-        fld = self._pool()["field"][rows]
-        idf = np.repeat(self._idf(self._pool()["df"][rows], fld), nd)
-        s = self._by_field(self._sc.score, np.repeat(fld, nd), tf, dl, idf)
+        doc, s = self._scored(*self._member((lo, hi)))
         uniq, inv = np.unique(doc, return_inverse=True)
         agg = np.zeros(len(uniq), np.float64)
         np.add.at(agg, inv, s)
@@ -505,11 +400,7 @@ class SegmentQueryKernel:
     # --- leaves ------------------------------------------------------------
 
     def _eval_single(self, tid: int) -> tuple[np.ndarray, np.ndarray]:
-        tp = self.by_tid.get(tid)
-        if tp is None:
-            return np.empty(0, np.int64), np.empty(0, np.float64)
-        tp.decode_all()
-        return tp.doc, _score_arrays(tp)
+        return self._scored(*self._member(tid))
 
     def _docs_only(self, node) -> np.ndarray:
         d, _ = self.eval(node)
@@ -523,13 +414,12 @@ class SegmentQueryKernel:
         reference's ngram-adjacency check without the per-doc loop). The
         position field is sized from the actual max position (≥20 bits),
         so pathological million-token docs can't alias keys."""
-        tps = [self.by_tid[t] for t in tids]
 
         def check(cand: np.ndarray) -> np.ndarray:
             arrays = []
             max_pos = 0
-            for i, tp in enumerate(tps):
-                rep, pos = tp.positions_arrays(cand)
+            for i, t in enumerate(tids):
+                rep, pos = self._positions(t, cand)
                 rep, pos = _ordinalize(cand, rep, pos)
                 arrays.append((i, rep, pos))
                 if len(pos):
@@ -554,13 +444,12 @@ class SegmentQueryKernel:
         """→ check(cand) -> bool mask: the exact near-window test (see
         _eval_near)."""
         uniq = sorted(set(tids))
-        tps = [self.by_tid[t] for t in uniq]
 
         def check(cand: np.ndarray) -> np.ndarray:
             arrays = []
             max_pos = 0
-            for tp in tps:
-                rep, pos = tp.positions_arrays(cand)
+            for t in uniq:
+                rep, pos = self._positions(t, cand)
                 rep, pos = _ordinalize(cand, rep, pos)
                 arrays.append((rep, pos))
                 if len(pos):
@@ -589,8 +478,6 @@ class SegmentQueryKernel:
     def _eval_phrase(self, tids: list[int]) -> tuple[np.ndarray, np.ndarray]:
         """Adjacent-position AND over the token sequence; score = sum of
         the member tokens' BM25 (term-id order), like ngram query eval."""
-        if any(self.by_tid.get(t) is None for t in tids):
-            return np.empty(0, np.int64), np.empty(0, np.float64)
         cand, score = self._intersect_scored(tids)
         if len(cand) == 0:
             return cand, score
@@ -614,26 +501,27 @@ class SegmentQueryKernel:
     # --- boolean combinators ------------------------------------------------
 
     def _intersect_scored(self, tids: list[int]) -> tuple[np.ndarray, np.ndarray]:
-        """Rarest-first intersection with block range pruning; scores
-        summed in sorted-unique-term order (determinism)."""
-        if not tids:
-            return np.empty(0, np.int64), np.empty(0, np.float64)
+        """Rarest-first intersection: the rarest term (min df) decodes
+        whole, every later term only its rows overlapping the surviving
+        candidates; scores summed in sorted-unique-term order
+        (determinism)."""
+        empty = (np.empty(0, np.int64), np.empty(0, np.float64))
         uniq = sorted(set(tids))
-        tps = {t: self.by_tid.get(t) for t in uniq}
-        if any(v is None for v in tps.values()):
-            return np.empty(0, np.int64), np.empty(0, np.float64)
-        order = sorted(uniq, key=lambda t: (tps[t].df, t))
-        rare = tps[order[0]]
-        rare.decode_all()
-        cand = rare.doc
+        mem = {t: self._member(t) for t in uniq}
+        if not uniq or any(not len(rows) for rows, _df in mem.values()):
+            return empty
+        order = sorted(uniq, key=lambda t: (mem[t][1][0], t))
+        got = {order[0]: self._scored(*mem[order[0]])}
+        cand = got[order[0]][0]
         for t in order[1:]:
             if len(cand) == 0:
-                return cand, np.empty(0, np.float64)
-            tp = tps[t]
-            tp.decode_overlapping(cand)
-            cand = cand[np.isin(cand, tp.doc, assume_unique=True)]
+                return empty
+            rows, df = mem[t]
+            keep = self._overlapping(rows, cand)
+            got[t] = self._scored(rows[keep], df[keep])
+            cand = cand[np.isin(cand, got[t][0], assume_unique=True)]
         if len(cand) == 0:
-            return cand, np.empty(0, np.float64)
+            return empty
         # duplicated tokens in tids (e.g. "a a") score once per occurrence:
         # one pass, weight 1 keeps the no-dup float sequence (x == 1·x)
         from collections import Counter
@@ -641,9 +529,8 @@ class SegmentQueryKernel:
         c = Counter(tids)
         score = np.zeros(len(cand), np.float64)
         for t in uniq:  # fixed term-id order for float determinism
-            tp = tps[t]
-            ix = np.searchsorted(tp.doc, cand)
-            s = _score_arrays(tp)[ix]
+            doc, s = got[t]
+            s = s[np.searchsorted(doc, cand)]
             score += s if c[t] == 1 else c[t] * s
         return cand, score
 
@@ -707,24 +594,23 @@ class SegmentQueryKernel:
         descending upper-bound order, stop once the running kth score
         strictly exceeds every remaining block's bound. Strict comparison
         + the bounds' float headroom keep results identical to the
-        exhaustive path, ties and all."""
-        tp = self.by_tid.get(tid)
-        empty = (np.empty(0, np.int64), np.empty(0, np.float64))
-        if tp is None:
-            return empty
-        ub = tp.block_bounds()
+        exhaustive path, ties and all. The bounds come from each block's
+        stored (max_tf, min_dl) and the term's df at query time, so they
+        survive incremental stat drift."""
+        rows, df = self._member(tid)
+        c = self._pool()
+        fld = c["field"][rows]
+        ub = self._by_field(self._sc.bound, fld, c["max_tf"][rows],
+                            c["min_dl"][rows], self._idf(df, fld))
         order = np.argsort(-ub, kind="stable")
         CHUNK = 64
         doc = np.empty(0, np.int64)
         score = np.empty(0, np.float64)
-        st = tp.stats
         for i in range(0, len(order), CHUNK):
             if len(doc) >= self.k and score[-1] > ub[order[i]]:
                 break  # kth best beats every remaining bound
             idx = order[i : i + CHUNK]
-            d, tf, dl = tp.decode_idx(idx)
-            s = self._sc.score(tf, dl, self._sc.idf(tp.df, st["n_docs"]),
-                               st["avgdl"], st["k1"], st["b"])
+            d, s = self._scored(rows[idx], df[idx])
             doc = np.concatenate([doc, d])
             score = np.concatenate([score, s])
             if len(doc) >= self.k:
@@ -887,7 +773,6 @@ class SegmentQueryKernel:
         neg_rows = np.unique(np.concatenate(
             [self._rows(t, t) for t in neg_tids or []]
             + [np.empty(0, np.int64)]))
-        neg_lo, neg_hi = c["min_doc_id"][neg_rows], c["max_doc_id"][neg_rows]
         is_neg = np.zeros(len(c["n_docs"]), bool)
         is_neg[neg_rows] = True
         need_of = np.asarray(dis_need, np.int64)
@@ -995,9 +880,7 @@ class SegmentQueryKernel:
                 keep = np.ones(len(cand), bool)
                 if neg_docs is not None:
                     keep &= ~np.isin(cand, neg_docs, assume_unique=True)
-                p = np.searchsorted(cand, neg_lo, side="left")
-                hit = neg_rows[(p < len(cand)) & (
-                    cand[np.minimum(p, len(cand) - 1)] <= neg_hi)]
+                hit = neg_rows[self._overlapping(neg_rows, cand)]
                 if len(hit):
                     _fetch(hit)
                     keep &= ~np.isin(cand, np.concatenate(
@@ -1038,30 +921,24 @@ class SegmentQueryKernel:
             else:
                 toks = self._tokens(node.text, field) or []
                 stids = sorted({t for t in toks if t is not None})
-            stids = [t for t in stids if t in self.by_tid]
+            stids = [t for t in stids if self._has(t)]
             if not stids:
                 return "empty"
             return {"kind": "or", "members": [(t, 1.0) for t in stids],
                     "post": None}
         tids = self._leaf_tokens(node.text, field)
-        if not tids:
+        if not tids or not all(self._has(t) for t in set(tids)):
             return "empty"
         if isinstance(node, Near) and len(set(tids)) == 1:
             # degenerate Near: window check is trivial; keep the duplicate-
             # occurrence weight (count × BM25 — mirrors eval())
-            if tids[0] not in self.by_tid:
-                return "empty"
             return {"kind": "or", "members": [(tids[0], float(len(tids)))],
                     "post": None}
         if len(tids) == 1:
-            if tids[0] not in self.by_tid:
-                return "empty"
             return {"kind": "or", "members": [(tids[0], 1.0)], "post": None}
         from collections import Counter
 
         cnt = Counter(tids)
-        if any(t not in self.by_tid for t in cnt):
-            return "empty"
         post = (self._near_checker(tids, node.max_interval)
                 if isinstance(node, Near) else self._phrase_checker(tids))
         return {
@@ -1182,7 +1059,7 @@ class SegmentQueryKernel:
             from collections import Counter
 
             cnt = Counter(fused_tids)
-            if any(t not in self.by_tid for t in cnt):
+            if not all(self._has(t) for t in cnt):
                 return empty
             groups = [{"kind": "or", "members": [(t, float(cnt[t]))],
                        "post": None} for t in sorted(cnt)]

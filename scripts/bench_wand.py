@@ -121,7 +121,8 @@ def main() -> None:
               f"({results[name]['speedup']}x), blocks {blk_pruned}/{blk_exh}",
               file=sys.stderr)
 
-    out = {"n_docs": n_docs, "k": args.k, "queries": results}
+    out = {"n_docs": n_docs, "k": args.k, "host": _host(),
+           "queries": results}
     if args.multifield:
         out["multifield"] = _bench_multifield(spark, corpus, args)
     with open(os.path.join(REPO, "BENCH_WAND.json"), "w") as f:
@@ -225,6 +226,21 @@ def _bench_multifield(spark, corpus: str, args) -> dict:
     return results
 
 
+def _host() -> dict:
+    """The machine the timings came from: a kernel timing is only
+    comparable to one taken on the same CPU model and count."""
+    import platform
+
+    model = platform.machine()
+    try:
+        with open("/proc/cpuinfo") as f:
+            model = next((ln.split(":", 1)[1].strip() for ln in f
+                          if ln.startswith("model name")), model)
+    except OSError:  # no /proc (not Linux): the architecture only
+        pass
+    return {"cpus": os.cpu_count(), "cpu_model": model}
+
+
 def _time(fn) -> float:
     t0 = time.time()
     fn()
@@ -239,6 +255,7 @@ def _append_bench_md(out: dict) -> None:
         "",
         "Kernel-level timing (both paths share the same pyarrow-pruned",
         "block scan), best-of-3; results asserted bit-identical first.",
+        f"Host: {out['host']['cpus']} CPUs, {out['host']['cpu_model']}.",
         "",
         "| query | pruned s | exhaustive s | speedup | blocks decoded |"
         " skipped |",

@@ -1,7 +1,7 @@
 """Shared helpers for the bench scripts: the BENCH.md marked-section
 splice (one implementation instead of one copy per script) and the
-posting-decode spy (TermPostings monkeypatch + the pooled-path counter
-hook of the range eval and the interval pruner)."""
+posting-block decode counter (``spy_decodes``, a wrapper around the
+query kernel's one doc/tf/dl decode)."""
 
 from __future__ import annotations
 
@@ -66,34 +66,26 @@ def extract_marked_sections(text: str) -> str:
 
 
 def spy_decodes(fn):
-    """Run ``fn`` counting every posting-block decode: TermPostings'
-    decode_idx/decode_idx_split (per-term paths) plus the pooled paths
-    (range eval and the interval pruner) via wand._DECODE_SPY.
-    → (result, blocks_decoded)."""
-    import groonga_spark.wand as W
-    from groonga_spark.wand import TermPostings
+    """Run ``fn`` counting every posting block it decodes → (result,
+    blocks_decoded). Every kernel path decodes doc/tf/dl through
+    ``SegmentQueryKernel._decode_rows`` (one row per block), so the count
+    wraps that one method for the duration of ``fn`` and restores it
+    after; a nested call counts into its own total and into every
+    enclosing one. Position decodes (phrase/near checks) are not
+    counted."""
+    from groonga_spark.wand import SegmentQueryKernel as K
 
-    counts = {"blocks": 0}
-    orig = TermPostings.decode_idx
-    orig_split = TermPostings.decode_idx_split
-    pooled: list[int] = []
+    orig = K.__dict__["_decode_rows"]
+    blocks = 0
 
-    def spy(self, idx_arr, _c=counts, _o=orig):
-        _c["blocks"] += len(idx_arr)
-        return _o(self, idx_arr)
+    def counted(self, rows):
+        nonlocal blocks
+        blocks += len(rows)
+        return orig(self, rows)
 
-    def spy_split(self, idx_arr, _c=counts, _o=orig_split):
-        _c["blocks"] += len(idx_arr)
-        return _o(self, idx_arr)
-
-    TermPostings.decode_idx = spy
-    TermPostings.decode_idx_split = spy_split
-    prev_spy = W._DECODE_SPY
-    W._DECODE_SPY = pooled
+    K._decode_rows = counted
     try:
         out = fn()
     finally:
-        TermPostings.decode_idx = orig
-        TermPostings.decode_idx_split = orig_split
-        W._DECODE_SPY = prev_spy  # nest-safe: restore, don't clobber
-    return out, counts["blocks"] + sum(pooled)
+        K._decode_rows = orig  # restore, so an enclosing spy keeps counting
+    return out, blocks

@@ -542,6 +542,41 @@ def test_ddl_remove_cascades_drop_dependent_indexes(spark, tmp_path):
     assert execute(ctx, "object_exist", name="Lex.d_idx") is False
 
 
+def test_ddl_remove_older_of_two_indexes_keeps_newer(spark, tmp_path):
+    """Two COLUMN_INDEX declarations over one source share its index
+    slot, which serves the newer one: removing the OLDER declaration
+    (its column or its lexicon table) must leave the newer index
+    answering select; removing the newer one then drops the slot."""
+    def fresh(prefix):
+        ctx = CommandContext(spark, index_root=str(tmp_path / prefix))
+        execute(ctx, "table_create", name="D", flags="TABLE_NO_KEY")
+        execute(ctx, "column_create", table="D", name="text", type="Text")
+        execute(ctx, "load", table="D", values=[
+            {"_id": 1, "text": "spark fast"}, {"_id": 2, "text": "slow"}])
+        for lex in ("Old", "New"):
+            execute(ctx, "table_create", name=lex, key_type="ShortText",
+                    default_tokenizer="TokenDelimit")
+            execute(ctx, "column_create", table=lex, name="d_idx",
+                    flags="COLUMN_INDEX", type="D", source="text")
+        return ctx
+
+    def hits(ctx):
+        body = execute(ctx, "select", table="D", query="spark",
+                       output_columns="_id")
+        return sorted(r[0] for r in body[0][2:])
+
+    ctx = fresh("col")
+    execute(ctx, "column_remove", table="Old", name="d_idx")
+    assert ctx.indexes["D"].path.endswith("New__d_idx")
+    assert hits(ctx) == [1]
+    execute(ctx, "column_remove", table="New", name="d_idx")
+    assert "D" not in ctx.indexes
+
+    ctx = fresh("tbl")
+    execute(ctx, "table_remove", name="Old")
+    assert hits(ctx) == [1]
+
+
 def test_logical_commands_over_time_shards(spark):
     """logical_select / logical_count / logical_range_filter
     [G: plugins/sharding/*.rb]: the shard-key range predicate IS the
@@ -605,7 +640,7 @@ def test_logical_commands_over_time_shards(spark):
                 shard_key="nope")
 
 
-def test_logical_range_filter_hardening(spark):
+def test_logical_range_filter_hardening(spark, tmp_path):
     """Round-5 review fixes: deterministic tie-break pagination, loud
     bad-bound/offset errors, script query() filters work in
     logical_count, and limit=-1 raises past the body cap instead of
@@ -659,9 +694,8 @@ def test_logical_range_filter_hardening(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     from groonga_spark.build import build_index
     from groonga_spark.search import FulltextIndex
-    import tempfile
 
-    p = tempfile.mkdtemp(prefix="gs_logidx_")
+    p = str(tmp_path / "logidx")
     build_index(spark, docs, p, mode="delimit", segment_size=200)
     ctx.register("Docs", docs, index=FulltextIndex(spark, p))
     n = cmds.execute(ctx, "logical_count", logical_table="Docs",

@@ -579,7 +579,8 @@ def test_multifield_escalation_per_field(spark, built, corpus, oracle):
         assert a == pytest.approx(b, abs=1e-9)
 
 
-def test_multifield_adjuster_match_columns(spark, built, corpus, oracle):
+def test_multifield_adjuster_match_columns(spark, built, corpus, oracle,
+                                          tmp_path):
     """3-tuple adjuster entries run the boost under their OWN column
     spec (the reference's per-column ``col @ "kw" * n`` element)."""
     from groonga_spark.ql import Term
@@ -602,9 +603,8 @@ def test_multifield_adjuster_match_columns(spark, built, corpus, oracle):
     # a 3-tuple against a single-field index is a hard error
     from groonga_spark.build import build_index
     from groonga_spark.search import FulltextIndex
-    import tempfile
 
-    sf_path = tempfile.mkdtemp(prefix="gs_adj1f_")
+    sf_path = str(tmp_path / "adj1f")
     build_index(spark, df.select("doc_id", F.col("body").alias("text")),
                 sf_path, mode="delimit")
     single = FulltextIndex(spark, sf_path)

@@ -153,6 +153,7 @@ def test_bigram_index_with_cjk_and_phrases(spark, tmp_path):
 def test_blockmax_pruning_identical_and_effective(spark, corpus, tmp_path):
     """The block-max WAND path must equal the exhaustive path exactly,
     and must actually skip blocks once top-k stabilizes."""
+    from groonga_spark.codec import delta_decode, vb_decode
     from groonga_spark.ql import parse_query
     from groonga_spark.score import bm25 as _bm
     from groonga_spark.wand import SegmentQueryKernel, _topk
@@ -177,16 +178,20 @@ def test_blockmax_pruning_identical_and_effective(spark, corpus, tmp_path):
             lambda: SegmentQueryKernel(pdf, plan, st, 3)
             ._topk_single_pruned(tid))
 
-        # exhaustive reference
-        tp = SegmentQueryKernel(pdf, plan, st, 3).by_tid[tid]
-        tp.decode_all()
-        full = _bm(tp.tf, tp.dl, tp.df, st["n_docs"], st["avgdl"], st["k1"],
-                   st["b"])
-        want = _topk(tp.doc, full, 3)
+        # exhaustive reference, decoded block by block from the term's
+        # rows of the frame and scored here, apart from the kernel
+        blk = pdf[pdf["term_id"] == tid]
+        doc = np.concatenate([delta_decode(vb_decode(b))
+                              for b in blk["doc_deltas"]])
+        tf = np.concatenate([vb_decode(b) for b in blk["tfs"]])
+        dl = np.concatenate([vb_decode(b) for b in blk["dls"]])
+        full = _bm(tf, dl, plan["df_by_tid"][tid], st["n_docs"], st["avgdl"],
+                   st["k1"], st["b"])
+        want = _topk(doc, full, 3)
         assert pruned[0].tolist() == want[0].tolist(), q
         assert pruned[1].tolist() == want[1].tolist(), q  # bit-identical
-        assert 0 < n_decoded <= len(tp.blocks), q
-        skipped.append(n_decoded < len(tp.blocks))
+        assert 0 < n_decoded <= len(blk), q
+        skipped.append(n_decoded < len(blk))
     assert any(skipped), "no query skipped a block"
 
 
@@ -391,6 +396,48 @@ def test_multiterm_blockmax_rank_identity(spark, tmp_path):
             want = _topk(d, s, k)
             assert (pr[0] == want[0]).all(), (q, k, pr, want)
             assert (pr[1] == want[1]).all(), (q, k)  # bit-identical floats
+
+
+def test_spy_decodes_nests_and_restores():
+    """The bench's decode counter: a nested call counts into its own
+    total and the enclosing one, and the kernel's decode is restored
+    afterwards, also when ``fn`` raises."""
+    import pandas as pd
+
+    from groonga_spark.codec import vb_encode
+    from groonga_spark.ql import Term
+    from groonga_spark.wand import SegmentQueryKernel
+    from scripts.benchlib import spy_decodes
+
+    def enc(*v):
+        return vb_encode(np.asarray(v, np.uint64))
+
+    # one term, three blocks of two docs (doc deltas reset per block)
+    blocks = pd.DataFrame({
+        "term_id": [0, 0, 0], "segment": [0, 0, 0], "block_id": [0, 1, 2],
+        "n_docs": [2, 2, 2], "min_doc_id": [0, 2, 4], "max_doc_id": [1, 3, 5],
+        "doc_deltas": [enc(0, 1), enc(2, 1), enc(4, 1)],
+        "tfs": [enc(1, 2)] * 3, "dls": [enc(5, 5)] * 3,
+        "max_tf": [2.0] * 3, "min_dl": [5.0] * 3, "df": [6.0] * 3,
+    })
+    plan = {"tokens_by_text": {"a": [0]}, "df_by_tid": {0: 6.0}}
+    stats = {"n_docs": 10, "avgdl": 5.0, "k1": 1.2, "b": 0.75}
+    orig = SegmentQueryKernel._decode_rows
+
+    def run():
+        return SegmentQueryKernel(blocks, plan, stats, 10).eval(Term("a"))
+
+    def twice():
+        run()
+        return spy_decodes(run)
+
+    ((doc, _score), inner), outer = spy_decodes(twice)
+    assert doc.tolist() == [0, 1, 2, 3, 4, 5]
+    assert (inner, outer) == (3, 6)
+    assert SegmentQueryKernel._decode_rows is orig
+    with pytest.raises(ZeroDivisionError):
+        spy_decodes(lambda: 1 / 0)
+    assert SegmentQueryKernel._decode_rows is orig
 
 
 def test_multiterm_blockmax_actually_prunes(spark, tmp_path):

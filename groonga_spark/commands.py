@@ -418,12 +418,17 @@ def _cmd_object_exist(ctx: CommandContext, name: str):
 def _cmd_truncate(ctx: CommandContext, target_name: str):
     """The reference's truncate [G: lib/proc.c · proc_truncate]: drop
     every record, keep the schema. A fulltext index OVER the truncated
-    table is dropped too (its postings describe rows that no longer
-    exist — the reference clears index columns the same way)."""
+    table is dropped too, COLUMN_INDEX declaration and all, through the
+    same cascade as column_remove / table_remove: its postings describe
+    rows that no longer exist. The reference keeps an empty index column
+    instead; here a declaration with no index behind it would still be
+    listed by column_list / object_exist and make ``select query=``
+    fail."""
     if target_name not in ctx.tables:
         raise ValueError(f"unknown table {target_name!r}")
     df = ctx.tables[target_name]
     ctx.tables[target_name] = ctx.spark.createDataFrame([], df.schema)
+    _drop_dependent_indexes(ctx, target_name)
     ctx.indexes.pop(target_name, None)
     return True
 

@@ -153,6 +153,7 @@ class MultiFieldIndex:
         self.path = path
         with open(os.path.join(path, MANIFEST)) as fh:
             self.manifest = json.load(fh)
+        self._empty_frame: DataFrame | None = None
         self._fields = {
             name: FulltextIndex(spark, os.path.join(path, "fields", name))
             for name in self.manifest["fields"]
@@ -243,7 +244,7 @@ class MultiFieldIndex:
     def _frame(self, out) -> DataFrame:
         if isinstance(out, DataFrame):
             return out
-        return result_frame(self.spark, *out)
+        return result_frame(self, *out)
 
     # -- public API ---------------------------------------------------------
 

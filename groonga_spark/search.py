@@ -51,14 +51,23 @@ from groonga_spark.wand import SegmentQueryKernel
 RESULT_SCHEMA = "doc_id long, score double"
 
 
-def result_frame(spark: SparkSession, doc=(), score=()) -> DataFrame:
-    """(doc_id, score) DataFrame around driver-side result arrays. Built
-    from a typed Arrow table, which Spark wraps as a local relation with
-    no job — an empty pandas frame would start one with Python workers."""
-    return spark.createDataFrame(pa.table({
+def result_frame(handle, doc=(), score=()) -> DataFrame:
+    """(doc_id, score) DataFrame around driver-side result arrays, for a
+    FulltextIndex or MultiFieldIndex ``handle``. Built from a typed Arrow
+    table, which Spark wraps as a local relation with no job — an empty
+    pandas frame would start one with Python workers. An empty result is
+    the handle's one empty frame, built on first use and handed back
+    every time after: a frame already collected once skips the plan
+    analysis a fresh one pays."""
+    if len(doc) == 0 and handle._empty_frame is not None:
+        return handle._empty_frame
+    df = handle.spark.createDataFrame(pa.table({
         "doc_id": pa.array(doc, pa.int64()),
         "score": pa.array(score, pa.float64()),
     }))
+    if len(doc) == 0:
+        handle._empty_frame = df
+    return df
 
 
 def run_query(parts: list, ast, plan: dict, stats: dict, k: int | None):
@@ -268,7 +277,8 @@ class FulltextIndex:
         self._row_groups: dict[str, _RowGroupDirectory] = {}
         from collections import OrderedDict
 
-        self._result_cache: OrderedDict[tuple, tuple] = OrderedDict()
+        self._result_cache: OrderedDict[tuple, DataFrame] = OrderedDict()
+        self._empty_frame: DataFrame | None = None
         self._generation = self._cache_generation()
 
     def _check_generation(self) -> tuple:
@@ -284,6 +294,7 @@ class FulltextIndex:
             self._row_groups.clear()
             self._tombstones = None
             self._tombstone_est = None
+            self._result_cache.clear()
             self.meta = self.store.read_meta()
             self._generation = gen
         return gen
@@ -515,7 +526,7 @@ class FulltextIndex:
 
         terms = self.fuzzy_terms(term, max_distance, prefix_length)
         if not terms:
-            return result_frame(self.spark)
+            return result_frame(self)
         ast = Or([Term(t) for t in terms]) if len(terms) > 1 else Term(terms[0])
         return self.match_ast(ast)
 
@@ -541,7 +552,7 @@ class FulltextIndex:
 
         terms = self.prefix_rk_terms(romaji)
         if not terms:
-            return result_frame(self.spark)
+            return result_frame(self)
         ast = Or([Term(t) for t in terms]) if len(terms) > 1 else Term(terms[0])
         return self.match_ast(ast)
 
@@ -861,10 +872,14 @@ class FulltextIndex:
     #
     # The reference caches whole select outputs keyed by the request and
     # clears the cache on table update [G: lib/cache.c · grn_cache_fetch /
-    # grn_cache_expire]. Here: an LRU of driver-local TOP-K results (tiny
-    # (doc, score) arrays) per handle, keyed by the query plus the index
-    # generation (meta mtime + tombstone file count — two stat calls), so
-    # deletes and compaction invalidate naturally. match_docs results are
+    # grn_cache_expire]. Here: an LRU of driver-route TOP-K result frames
+    # per handle — the (doc_id, score) DataFrame built on the miss, handed
+    # back as is on every hit, so a hit builds no frame and re-collects a
+    # plan Spark has already analyzed. Frames are local relations, never
+    # persisted. Keyed by the query plus the index generation (meta
+    # mtime + tombstone file count — two stat calls), so deletes and
+    # compaction invalidate naturally; a generation change also drops the
+    # old entries so they stop pinning JVM plans. match_docs results are
     # unbounded and never cached.
 
     def _cache_generation(self) -> tuple:
@@ -879,14 +894,14 @@ class FulltextIndex:
                   if os.path.isdir(d) else 0)
         return (gen_meta, n_tomb)
 
-    def _result_cache_get(self, key: tuple) -> tuple | None:
+    def _result_cache_get(self, key: tuple) -> DataFrame | None:
         got = self._result_cache.get(key)
         if got is not None:
             self._result_cache.move_to_end(key)
         return got
 
-    def _result_cache_put(self, key: tuple, result: tuple) -> None:
-        self._result_cache[key] = result
+    def _result_cache_put(self, key: tuple, frame: DataFrame) -> None:
+        self._result_cache[key] = frame
         self._result_cache.move_to_end(key)
         while len(self._result_cache) > self.RESULT_CACHE_MAX:
             self._result_cache.popitem(last=False)
@@ -913,15 +928,16 @@ class FulltextIndex:
             cache_key = (query, k, exp_key, gen, scorer)
             hit = self._result_cache_get(cache_key)
             if hit is not None:
-                return result_frame(self.spark, *hit)
+                return hit
         ast = self._expand_ast(parse_query(query), expansions)
         plan = self._plan(ast)
         out = run_query([(self, plan, 0)], ast, plan, self._stats(scorer), k)
         if isinstance(out, DataFrame):
             return out
+        frame = result_frame(self, *out)
         if cache_key is not None:
-            self._result_cache_put(cache_key, out)
-        return result_frame(self.spark, *out)
+            self._result_cache_put(cache_key, frame)
+        return frame
 
     def _per_shard_eval(self, ast, plan: dict, stats: dict, k: int,
                         topk: bool, parts: list) -> DataFrame:
@@ -1033,4 +1049,4 @@ class FulltextIndex:
                       None)
         if isinstance(out, DataFrame):
             return out
-        return result_frame(self.spark, *out)
+        return result_frame(self, *out)

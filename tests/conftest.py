@@ -36,3 +36,28 @@ def spark_jobs(spark):
         return list(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture
+def frames_built(spark):
+    """``frames_built(fn)`` runs ``fn`` and returns how many times it
+    called ``SparkSession.createDataFrame``; the method is restored
+    afterwards, also when ``fn`` raises."""
+    from pyspark.sql import SparkSession
+
+    def run(fn) -> int:
+        calls = [0]
+        orig = SparkSession.createDataFrame
+
+        def counted(self, *args, **kwargs):
+            calls[0] += 1
+            return orig(self, *args, **kwargs)
+
+        SparkSession.createDataFrame = counted
+        try:
+            fn()
+        finally:
+            SparkSession.createDataFrame = orig
+        return calls[0]
+
+    return run

@@ -405,6 +405,8 @@ def test_ddl_table_column_create_index_truncate(spark, tmp_path):
     assert ctx.tables["Docs"].count() == 0
     assert ctx.tables["Docs"].columns == ["_id", "text", "tag", "scores"]
     assert "Docs" not in ctx.indexes
+    # the COLUMN_INDEX declaration goes with its index, as on column_remove
+    assert execute(ctx, "object_exist", name="Terms.docs_text") is False
 
 
 def test_ddl_multifield_index_and_errors(spark, tmp_path):

@@ -577,9 +577,12 @@ def test_near_and_similar_vs_oracle(spark, corpus, tmp_path):
             assert abs(gs - ws) <= 1e-6, q
 
 
-def test_query_result_cache(spark, corpus, tmp_path):
-    """Driver-local top-k results come from the per-handle LRU on repeat;
-    deletes invalidate via the tombstone generation (grn_cache model)."""
+def test_query_result_cache(spark, corpus, tmp_path, spark_jobs,
+                            frames_built):
+    """Driver-local top-k results come from the per-handle LRU on repeat:
+    a hit hands back the frame the miss built, so it builds no frame and
+    starts no Spark job; deletes invalidate via the tombstone generation
+    (grn_cache model) and drop the stale entries."""
     from groonga_spark.wand import SegmentQueryKernel
 
     docs, _ = corpus
@@ -598,7 +601,11 @@ def test_query_result_cache(spark, corpus, tmp_path):
     try:
         a = [(r["doc_id"], r["score"]) for r in idx.search("spark merge", 10).collect()]
         n1 = calls["n"]
-        b = [(r["doc_id"], r["score"]) for r in idx.search("spark merge", 10).collect()]
+        hit, jobs = [], []
+        assert frames_built(lambda: jobs.extend(spark_jobs(lambda: hit.extend(
+            idx.search("spark merge", 10).collect())))) == 0
+        assert jobs == []
+        b = [(r["doc_id"], r["score"]) for r in hit]
         assert calls["n"] == n1          # second call served from cache
         assert a == b
         c = [(r["doc_id"], r["score"]) for r in
@@ -608,8 +615,69 @@ def test_query_result_cache(spark, corpus, tmp_path):
         d = [(r["doc_id"], r["score"]) for r in idx.search("spark merge", 10).collect()]
         assert calls["n"] == n1 + 2      # generation changed → recompute
         assert a[0][0] not in [x for x, _ in d]
+        assert len(idx._result_cache) == 1   # only the new generation's
     finally:
         SegmentQueryKernel.run = orig
+
+
+def _tiny_indexes(spark, tmp_path):
+    """A single-field index over ``title`` and a two-field index over
+    (title, body), on the same three docs."""
+    from groonga_spark.multifield import MultiFieldIndex, build_multifield_index
+
+    df = spark.createDataFrame(
+        [(0, "alpha beta", "beta"), (1, "gamma", "delta gamma"),
+         (2, "alpha", "beta beta")],
+        "doc_id long, title string, body string")
+    build_index(spark, df.selectExpr("doc_id", "title AS text"),
+                str(tmp_path / "one"), mode="delimit", segment_size=64)
+    build_multifield_index(spark, df, str(tmp_path / "two"),
+                           ["title", "body"], mode="delimit", segment_size=64)
+    return (FulltextIndex(spark, str(tmp_path / "one")),
+            MultiFieldIndex(spark, str(tmp_path / "two")))
+
+
+def test_empty_results_share_one_frame_per_handle(spark, tmp_path,
+                                                  frames_built):
+    """Every empty driver-route result of a handle is the same frame,
+    built on the first one, for both index types: a missing term, an
+    AND of known terms with no doc in common, match sets, and the fuzzy
+    and romaji-prefix early returns. It holds no rows and keeps the
+    result schema."""
+    idx, mf = _tiny_indexes(spark, tmp_path)
+    for handle, calls in [
+        (idx, [lambda: idx.search("zzznope", 10),
+               lambda: idx.search("alpha gamma", 10),
+               lambda: idx.match_docs("zzznope"),
+               lambda: idx.match_docs("alpha gamma"),
+               lambda: idx.fuzzy_match_docs("qqqqqqq", 1),
+               lambda: idx.prefix_rk_match_docs("xyz")]),
+        (mf, [lambda: mf.search("zzznope", match_columns="title*2||body"),
+              lambda: mf.search("alpha delta"),
+              lambda: mf.match_docs("zzznope"),
+              lambda: mf.match_docs("alpha delta", "title||body")]),
+    ]:
+        frames = []
+        assert frames_built(
+            lambda: frames.extend(call() for call in calls)) == 1
+        assert all(f is frames[0] for f in frames)
+        assert frames[0].collect() == []
+        assert frames[0].schema.simpleString() == \
+            "struct<doc_id:bigint,score:double>"
+
+
+def test_shared_frames_combine_with_themselves(spark, tmp_path):
+    """A shared frame (the handle's empty frame, a cached hit) used on
+    both sides of a set operation or a join still answers correctly."""
+    from groonga_spark.algebra import combine
+
+    idx, _mf = _tiny_indexes(spark, tmp_path)
+    e = idx.search("zzznope", 10)
+    assert combine(e, e, "adjust").collect() == []
+    a, b = idx.search("alpha", 10), idx.search("alpha", 10)
+    assert a is b
+    rows = a.join(b, a["doc_id"] == b["doc_id"]).collect()
+    assert sorted(r[0] for r in rows) == [0, 2]
 
 
 def test_fuzzy_search(spark, corpus, tmp_path):

@@ -43,15 +43,47 @@ total via file/partition pruning. Unclustered input degrades to
 O(n_segments) full scans; pick ``segment_size`` so n_segments stays
 O(100–1000) (the resume-granularity trade) or cluster the input first.
 
+Appends (``build_index(..., append_only=True)``, what
+``streaming.append_docs`` runs) take the reference's buffer route [G:
+lib/ii.c · buffer_flush, buffer_merge]: the docs above the recorded
+high-water mark become ONE new segment, numbered above the last one,
+whose doc range [hwm + 1, new max + 1) is recorded in lineage; stage 2
+then finalizes only that segment into a DELTA generation with its own
+lexicon (dense, term-sorted ids), postings and doc_map. The base and
+every earlier delta stay untouched. meta.json lists the deltas (each
+with its own N, Σdl, term count, postings and bytes) and carries the
+corpus totals (N, Σdl, postings, bytes) summed over every generation;
+a reader sums df per term across generations at plan time
+(search.FulltextIndex). Writing meta.json is the commit point: a delta
+is visible only once it is listed there.
+
+Compaction (``compact_index``, and an append that would make more than
+DELTA_MAX deltas or take the summed lexicon sizes past
+PREFIX_DRIVER_SCAN_MAX) is the multi-way merge: it folds the tombstones
+into every segment, base and delta alike, and runs stage 2 over all of
+them into a NEW base directory, so the base again covers the whole
+corpus. meta.json naming that base (and no deltas) is again the commit
+point; the old base and the deltas are removed after it. A crash
+before it leaves the old base and deltas serving, and a rerun folds
+and merges again.
+
 On-disk layout under an index root (local parquet; Iceberg tables in
 prod — same schemas, see SURVEY.md §1.3):
-  segments/<k>/   block partials keyed by term string (+ "" markers)
-  doc_map/        (doc_id, dl, segment, shard) — decoded from markers
+  segments/<k>/   block partials keyed by term string (+ "" markers),
+                  base segments and delta segments alike
+  vocab/<k>/      per-segment (term, df, cf) partials
   lineage/        (segment, status, docs_tokenized, postings_emitted,
-                   bytes_compressed, started_at, finished_at)
-  lexicon/        (term, term_id, df, cf)
-  postings/       final blocks keyed by term_id
-  meta.json       corpus stats + frozen contract versions
+                   bytes_compressed, dl_sum, started_at, finished_at,
+                   doc_fp, max_doc_id, doc_lo, doc_hi)
+  base/<id>/      the base generation, named by meta.json's base_id
+                  (IndexStore.base); every full finalize writes a new one:
+    lexicon/      (term, term_id, df, cf)
+    postings/     final blocks keyed by term_id
+    doc_map/      (doc_id, dl, segment, shard)
+  deltas/<k>/     lexicon/, postings/, doc_map/ of the delta built from
+                  segment k
+  meta.json       corpus stats summed over generations, the base's id
+                  and term count, the delta list, frozen contract versions
 """
 
 from __future__ import annotations
@@ -79,7 +111,21 @@ DEFAULT_SHARD_SIZE = 2048               # docs per shard (fixed per index)
 #: read skip most of a file, big enough to keep footers and per-group
 #: overhead small
 ROW_GROUP_BYTES = 256 << 10
-SALT_TARGET = 50_000                    # retained for API compat (unused)
+#: postings bytes per file of a delta generation (an append's worth of
+#: blocks is written as one file per this many bytes, not one per
+#: shuffle partition)
+DELTA_FILE_BYTES = 64 * ROW_GROUP_BYTES
+#: most delta generations an index keeps: an append that would add one
+#: more compacts instead. A query plans, fetches from and remaps every
+#: generation, so each one adds driver work to every read.
+DELTA_MAX = 4
+#: lexicon size past which prefix planning leaves the driver
+#: (search.FulltextIndex.PREFIX_DRIVER_SCAN_MAX defaults to it). A
+#: multi-generation prefix plan reads every generation's matching
+#: lexicon run on the driver, so an append that would take the summed
+#: lexicon sizes (terms_upper_bound) past it compacts instead of
+#: adding a delta: an index that big keeps one generation.
+PREFIX_DRIVER_SCAN_MAX = 10_000_000
 
 
 # --------------------------------------------------------------------------
@@ -208,6 +254,14 @@ class IndexStore:
     def p(self, *parts: str) -> str:
         return os.path.join(self.path, *parts)
 
+    def base(self, *parts: str, meta: dict | None = None) -> str:
+        """A path in the base generation's directory, which holds its
+        lexicon/, postings/ and doc_map/: ``base/<base_id>/`` of the
+        meta.json given (read when None). An index written before base
+        ids has them at its root."""
+        bid = (self.read_meta() if meta is None else meta).get("base_id")
+        return self.p("base", bid, *parts) if bid else self.p(*parts)
+
     @property
     def meta_path(self) -> str:
         return self.p("meta.json")
@@ -264,6 +318,8 @@ def index_is_current(path: str, n_docs: int | None = None,
         and m.get("tokenizer_mode") == mode
         and m.get("normalizer_version") == NORMALIZER_VERSION
         and (n_docs is None or m.get("n_docs") == n_docs)
+        # the base tables sit where this meta.json says they do
+        and os.path.isdir(IndexStore(path).base("postings", meta=m))
     )
 
 
@@ -421,6 +477,8 @@ def build_segment(
         "finished_at": time.time(),
         "doc_fp": int(m[4]) % (1 << 31),
         "max_doc_id": int(m[5]),
+        "doc_lo": int(lo),
+        "doc_hi": int(hi),
     }
     _append_lineage(store, lineage)
     return lineage
@@ -442,6 +500,11 @@ LINEAGE_ARROW_SCHEMA = [
     # max_doc_id = the segment's high-water mark (append-only pruning).
     ("doc_fp", "int64"),
     ("max_doc_id", "int64"),
+    # v3: the doc-id range [doc_lo, doc_hi) the segment was cut from — a
+    # base segment's doc_id // segment_size range, a delta's [hwm + 1,
+    # new max + 1); null on older files (read as the base range)
+    ("doc_lo", "int64"),
+    ("doc_hi", "int64"),
 ]
 
 
@@ -490,12 +553,23 @@ def finalize_index(
     b: float = score_mod.B_DEFAULT,
     segment_size: int = DEFAULT_SEGMENT_SIZE,
     shard_size: int = DEFAULT_SHARD_SIZE,
+    delta: int | None = None,
 ) -> dict:
+    """Stage 2 over the committed segments. ``delta=None`` merges every
+    committed segment into the base generation (index root) and writes
+    meta.json, which lists no deltas after it; ``delta=k`` finalizes
+    segment k alone into ``deltas/<k>/`` and returns that generation's
+    record (doc range, N, Σdl, terms, postings, bytes) without touching
+    meta.json — the caller lists it there."""
+    import uuid
+
     FINALIZE_PHASES.clear()
-    seg_root = store.p("segments")
-    seg_dirs = [
-        os.path.join(seg_root, d) for d in sorted(os.listdir(seg_root), key=int)
-    ]
+    segs = sorted(store.committed_segments()) if delta is None else [delta]
+    # a base is written next to the one meta.json names, never over it
+    base_id = uuid.uuid4().hex
+    out = IndexStore(store.p("base", base_id) if delta is None
+                     else store.p("deltas", str(delta)))
+    seg_dirs = [store.p("segments", str(s)) for s in segs]
     blocks = spark.read.parquet(*seg_dirs)
     markers = blocks.filter(F.col("term") == "")
 
@@ -511,10 +585,12 @@ def finalize_index(
                    coalesce(sum(dl_sum), 0),
                    coalesce(sum(postings_emitted), 0),
                    coalesce(sum(bytes_compressed), 0),
-                   coalesce(max(max_doc_id), -1)
+                   coalesce(max(max_doc_id), -1),
+                   min(doc_lo), max(doc_hi)
             FROM read_parquet('{store.p("lineage")}/*.parquet',
                               union_by_name=true)
-            WHERE status = 'committed'"""
+            WHERE status = 'committed'
+              AND segment IN ({", ".join(map(str, segs))})"""
     ).fetchone()
     n_docs = int(srow[0])
     avgdl = float(srow[1]) / n_docs if n_docs else 0.0
@@ -583,7 +659,7 @@ def finalize_index(
             "term_id", pa.array(np.arange(n_terms, dtype=np.int64))
         )
         # overwrite-equivalent directory swap (no Spark write job)
-        lex_dir = store.p("lexicon")
+        lex_dir = out.p("lexicon")
         tmp_dir = lex_dir + ".tmp"
         _sh.rmtree(tmp_dir, ignore_errors=True)
         os.makedirs(tmp_dir)
@@ -654,7 +730,7 @@ def finalize_index(
                 schema="doc_id long, dl long, segment int, shard int",
             )
             .write.mode("overwrite")
-            .parquet(store.p("doc_map"))
+            .parquet(out.p("doc_map"))
         )
         FINALIZE_PHASES["doc_map_s"] = time.time() - t0
 
@@ -665,7 +741,7 @@ def finalize_index(
         t0 = time.time()
         (lex.write.mode("overwrite")
             .option("parquet.block.size", ROW_GROUP_BYTES)
-            .parquet(store.p("lexicon")))
+            .parquet(out.p("lexicon")))
         FINALIZE_PHASES["lex_write_s"] = time.time() - t0
 
     # lexicon write and doc_map decode are independent of the postings
@@ -698,6 +774,10 @@ def finalize_index(
     # head term's block pile can't straggle one task; pruning still works
     # (a term's blocks live in ≤4 term-range-clustered files).
     n_part = max(1, int(spark.conf.get("spark.sql.shuffle.partitions")))
+    if delta is not None:
+        # a delta is one append's worth of blocks: one file per
+        # DELTA_FILE_BYTES of postings, not one per shuffle partition
+        n_part = min(n_part, 1 + int(srow[3]) // DELTA_FILE_BYTES)
     final = (
         blocks.join(lex_join, "term")
         .withColumn(
@@ -715,7 +795,7 @@ def finalize_index(
     _t_post0 = time.time()
     (final.write.mode("overwrite")
           .option("parquet.block.size", ROW_GROUP_BYTES)
-          .parquet(store.p("postings")))
+          .parquet(out.p("postings")))
     FINALIZE_PHASES["postings_s"] = time.time() - _t_post0
     _doc_map_fut.result()
     if _lex_write_fut is not None:
@@ -727,11 +807,20 @@ def finalize_index(
         lex_agg.unpersist()
     FINALIZE_PHASES["writes_s"] = time.time() - _t_writes0
 
-    totals = (srow[2], srow[3])
+    gen = {
+        "n_docs": n_docs,
+        "dl_sum": int(srow[1]),
+        "n_terms": n_terms,
+        "postings_total": int(srow[2]),
+        "bytes_compressed": int(srow[3]),
+    }
+    if delta is not None:
+        return {"segment": delta, "doc_lo": int(srow[5]),
+                "doc_hi": int(srow[6]), "max_doc_id": hwm, **gen}
+    import shutil
 
     meta = {
         "format_version": 1,
-        "n_docs": n_docs,
         "avgdl": avgdl,
         "k1": k1,
         "b": b,
@@ -740,13 +829,27 @@ def finalize_index(
         "segment_size": segment_size,
         "shard_size": shard_size,
         "n_segments": len(seg_dirs),
-        "n_terms": n_terms,
-        "postings_total": int(totals[0]),
-        "bytes_compressed": int(totals[1]),
+        # names this base generation's directory (IndexStore.base):
+        # readers key the caches of its immutable files on it
+        "base_id": base_id,
+        "last_segment": segs[-1],
+        "deltas": [],
+        **gen,
     }
     if hwm >= 0:
         meta["max_doc_id"] = hwm
+    # the commit point: until meta.json names the new base, readers,
+    # appends and a rerun after a crash see the old base and deltas
     store.write_meta(meta)
+    # every other generation's files are unreachable now: the deltas
+    # folded into this base, older bases, and the root-level tables of
+    # a layout written before base ids
+    shutil.rmtree(store.p("deltas"), ignore_errors=True)
+    for name in os.listdir(store.p("base")):
+        if name != base_id:
+            shutil.rmtree(store.p("base", name), ignore_errors=True)
+    for table in ("lexicon", "postings", "doc_map"):
+        shutil.rmtree(store.p(table), ignore_errors=True)
     return meta
 
 
@@ -755,33 +858,52 @@ def finalize_index(
 # --------------------------------------------------------------------------
 
 def compact_index(spark: SparkSession, path: str) -> dict:
-    """Fold tombstones into the segment partials and re-finalize.
+    """Fold the tombstones and every delta generation into the base.
 
-    The LSM compaction step: deleted docs leave the posting blocks and
-    doc stats for good, corpus stats (N, avgdl, df) refresh, and the
-    tombstone set resets. Segments stay the single source of truth —
-    query results after compaction differ from tombstone-masked results
-    only in SCORES (stats moved), exactly the reference's post-delete
-    behavior [G: lib/ii.c · grn_ii_column_update on delete].
+    The LSM compaction step and the multi-way merge: deleted docs leave
+    the posting blocks and doc stats of every segment, base and delta
+    alike, for good; stage 2 then merges all segments into one base
+    generation, so corpus stats (N, avgdl, df) refresh, the tombstone
+    set resets and meta.json lists no deltas. Segments stay the single
+    source of truth — query results after compaction differ from
+    tombstone-masked results only in SCORES (stats moved), exactly the
+    reference's post-delete behavior [G: lib/ii.c · grn_ii_column_update
+    on delete].
     """
-    import shutil as _shutil
-
     store = IndexStore(path)
     meta = store.read_meta()
-    tomb_dir = store.p("tombstones")
-    if not os.path.isdir(tomb_dir) or not os.listdir(tomb_dir):
+    if not meta.get("deltas") and not _tombstone_entries(store):
         return meta  # nothing to do
-    import pyarrow.dataset as ds
+    return _compact(spark, store, meta)
 
-    tomb = np.unique(np.asarray(
-        ds.dataset(tomb_dir, format="parquet").to_table()
-        .column("doc_id").to_pylist(), np.int64))
-    b_tomb = spark.sparkContext.broadcast(tomb)
 
-    seg_root = store.p("segments")
-    for d in sorted(os.listdir(seg_root), key=int):
-        seg_dir = os.path.join(seg_root, d)
-        tmp_dir = seg_dir + ".compact"
+def _tombstone_entries(store: IndexStore) -> list[str]:
+    d = store.p("tombstones")
+    return ([e for e in os.listdir(d) if not e.startswith(".")]
+            if os.path.isdir(d) else [])
+
+
+def _compact(spark: SparkSession, store: IndexStore, meta: dict) -> dict:
+    import glob
+    import shutil
+
+    import duckdb
+
+    tomb_dir = store.p("tombstones")
+    if _tombstone_entries(store):
+        import pyarrow.dataset as ds
+
+        tomb = np.unique(np.asarray(
+            ds.dataset(tomb_dir, format="parquet").to_table()
+            .column("doc_id").to_pylist(), np.int64))
+        b_tomb = spark.sparkContext.broadcast(tomb)
+        ranges = dict(
+            (int(seg), rest) for seg, *rest in duckdb.sql(
+                f"""SELECT segment, max(doc_lo), max(doc_hi), max(max_doc_id)
+                    FROM read_parquet('{store.p("lineage")}/*.parquet',
+                                      union_by_name=true)
+                    WHERE status = 'committed' GROUP BY segment"""
+            ).fetchall())
 
         def _filter(it):
             from groonga_spark.postings import filter_blocks
@@ -791,54 +913,63 @@ def compact_index(spark: SparkSession, path: str) -> dict:
                 if len(out):
                     yield out
 
-        (
-            spark.read.parquet(seg_dir)
-            .mapInPandas(_filter, schema=BLOCK_SCHEMA)
-            .write.mode("overwrite").parquet(tmp_dir)
-        )
-        _shutil.rmtree(seg_dir)
-        os.replace(tmp_dir, seg_dir)
-        # the segment's blocks changed → its stage-1 vocab partial is
-        # stale; drop it so finalize falls back to the full block scan
-        _shutil.rmtree(store.p("vocab", d), ignore_errors=True)
+        def _fold(seg: int) -> None:
+            lo, hi, hwm = ranges[seg]
+            seg_dir = store.p("segments", str(seg))
+            tmp_dir = seg_dir + ".compact"
+            (
+                spark.read.parquet(seg_dir)
+                .mapInPandas(_filter, schema=BLOCK_SCHEMA)
+                .write.mode("overwrite").parquet(tmp_dir)
+            )
+            shutil.rmtree(seg_dir)
+            os.replace(tmp_dir, seg_dir)
+            # the segment's blocks changed → its stage-1 vocab partial is
+            # stale; drop it so finalize falls back to the full block scan
+            shutil.rmtree(store.p("vocab", str(seg)), ignore_errors=True)
 
-        # refresh the segment's lineage metrics (replace its rows)
-        import glob as _glob
+            # refresh the segment's lineage metrics (replace its rows)
+            for f in glob.glob(store.p("lineage", f"part-{seg:05d}-*")):
+                os.remove(f)
+            con = duckdb.connect()
+            m = con.sql(
+                f"""SELECT coalesce(sum(CASE WHEN term =  '' THEN n_docs END), 0),
+                           coalesce(sum(CASE WHEN term <> '' THEN n_docs END), 0),
+                           coalesce(sum(octet_length(doc_deltas)
+                                        + octet_length(tfs) + octet_length(dls)
+                                        + octet_length(positions)), 0),
+                           coalesce(sum(CASE WHEN term = '' THEN sum_tf END), 0),
+                           coalesce(max(CASE WHEN term = '' THEN max_doc_id END),
+                                    -1)
+                    FROM '{seg_dir}/*.parquet'"""
+            ).fetchone()
+            con.close()
+            # doc_fp stays null (unknown): filter_blocks can drop docs from
+            # a marker but cannot recompute the content crc without the
+            # text — compacted segments fall back to the count-only
+            # staleness check. The high-water mark stays where it was even
+            # when its doc is gone: an append must never take a deleted id
+            # for a new one.
+            _append_lineage(store, {
+                "segment": seg, "status": "committed",
+                "docs_tokenized": int(m[0]), "postings_emitted": int(m[1]),
+                "bytes_compressed": int(m[2]), "dl_sum": int(m[3]),
+                "started_at": time.time(), "finished_at": time.time(),
+                "max_doc_id": int(m[4]) if hwm is None else max(hwm, int(m[4])),
+                "doc_lo": lo, "doc_hi": hi,
+            })
 
-        for f in _glob.glob(store.p("lineage", f"part-{int(d):05d}-*")):
-            os.remove(f)
-        import duckdb
-
-        _con = duckdb.connect()
-        m = _con.sql(
-            f"""SELECT coalesce(sum(CASE WHEN term =  '' THEN n_docs END), 0),
-                       coalesce(sum(CASE WHEN term <> '' THEN n_docs END), 0),
-                       coalesce(sum(octet_length(doc_deltas)
-                                    + octet_length(tfs) + octet_length(dls)
-                                    + octet_length(positions)), 0),
-                       coalesce(sum(CASE WHEN term = '' THEN sum_tf END), 0),
-                       coalesce(max(CASE WHEN term = '' THEN max_doc_id END),
-                                -1)
-                FROM '{seg_dir}/*.parquet'"""
-        ).fetchone()
-        _con.close()
-        # doc_fp stays null (unknown): filter_blocks can drop docs from a
-        # marker but cannot recompute the content crc without the text —
-        # compacted segments fall back to the count-only staleness check
-        _append_lineage(store, {
-            "segment": int(d), "status": "committed",
-            "docs_tokenized": int(m[0]), "postings_emitted": int(m[1]),
-            "bytes_compressed": int(m[2]), "dl_sum": int(m[3]),
-            "started_at": time.time(), "finished_at": time.time(),
-            "max_doc_id": int(m[4]),
-        })
+        # only segments whose doc range holds a tombstone change
+        for seg, (lo, hi, _h) in sorted(ranges.items()):
+            if lo is None or np.any((tomb >= lo) & (tomb < hi)):
+                _fold(seg)
 
     out = finalize_index(
         spark, store, meta["tokenizer_mode"], k1=meta["k1"], b=meta["b"],
         segment_size=meta["segment_size"],
         shard_size=meta.get("shard_size", DEFAULT_SHARD_SIZE),
     )
-    _shutil.rmtree(tomb_dir)
+    shutil.rmtree(tomb_dir, ignore_errors=True)
     return out
 
 
@@ -852,7 +983,6 @@ def build_index(
     path: str,
     mode: str | None = "delimit",
     segment_size: int | None = None,
-    salt_target: int | None = None,
     resume: bool = True,
     fail_after_segments: int | None = None,
     shard_size: int | None = None,
@@ -862,17 +992,18 @@ def build_index(
     """Build (or resume) a full index over docs(doc_id, text, ...).
 
     ``fail_after_segments`` is a test hook: raise after N segment commits
-    to exercise resume-after-kill (BASELINE.md row 6). ``salt_target`` is
-    accepted for API compatibility; skew handling is now structural
-    (doc-range shards), so it is unused.
+    to exercise resume-after-kill (BASELINE.md row 6).
 
     ``append_only=True`` promises docs only ever gain NEW doc ids above
-    the last build's high-water mark (the streaming append contract) —
-    the staleness scan then reads only ``doc_id >= hwm-segment`` (a
-    pushed-down range filter → partition/row-group pruning), not the
-    whole corpus. Leave False when existing rows may have been upserted
-    in place: the full scan also compares per-segment content
-    fingerprints, which is what catches same-id text replacement.
+    the last build's high-water mark (the streaming append contract): one
+    aggregation over ``doc_id > hwm`` (a pushed-down range filter →
+    partition/row-group pruning) finds the new docs, and they become one
+    delta generation (module docstring) — nothing below the mark is read,
+    re-encoded or re-finalized. Leave False when existing rows may have
+    been upserted in place: the full scan compares every segment's doc
+    count and content fingerprint over its recorded doc range, which is
+    what catches same-id text replacement, and re-finalizes the whole
+    corpus into the base.
     """
     store = IndexStore(path)
     os.makedirs(path, exist_ok=True)
@@ -880,6 +1011,7 @@ def build_index(
     # a resumed build MUST tokenize like the committed segments — mixed
     # modes silently corrupt the index (same lexicon, different token
     # streams). mode=None adopts the index's recorded mode.
+    recorded = None
     if resume and os.path.exists(store.meta_path):
         recorded = store.read_meta()
         recorded_mode = recorded.get("tokenizer_mode")
@@ -918,27 +1050,70 @@ def build_index(
         segment_size = DEFAULT_SEGMENT_SIZE
     if shard_size is None:
         shard_size = DEFAULT_SHARD_SIZE
+    if segment_size // shard_size > (1 << 31) - 1:
+        raise ValueError(
+            f"segment_size // shard_size = {segment_size // shard_size} "
+            "exceeds the int32 shard id: shrink segment_size or grow "
+            "shard_size (shards number a segment's doc ranges)"
+        )
+    if not resume:
+        import shutil
 
-    # OCCUPIED segments only, from the data — never range(max_id/size):
-    # a sparse or snowflake-style id space would enumerate trillions of
-    # empty ranges on the driver. Segment numbering stays the pure
-    # doc_id // segment_size function (bit-identity unchanged); driver
-    # memory is O(occupied) ≤ n_docs / segment_size.
-    # Integer division (`div`), NOT `/`: Spark's `/` on bigint returns
-    # double, and above 2^53 (snowflake-style ids — exactly the regime
-    # where the int32 guard below tells users to raise segment_size) a
-    # doc near a segment boundary rounds into the WRONG segment number
-    # while build_segment's range filter uses exact int64 bounds — the
-    # doc's true segment would never be listed and the doc silently
-    # dropped from the index.
-    occ = (
-        docs.select(
-            F.expr(f"doc_id div {int(segment_size)}").alias("seg")
-        ).distinct().collect()
-    )
-    if not occ:
+        # a rebuild starts from nothing: segments, partials, lineage or
+        # deltas left by an earlier layout would merge into this one
+        for d in ("segments", "vocab", "lineage", "deltas"):
+            shutil.rmtree(store.p(d), ignore_errors=True)
+    if (append_only and recorded is not None
+            and recorded.get("max_doc_id") is not None):
+        return _append_delta(spark, store, docs, recorded, mode,
+                             segment_size, shard_size, fail_after_segments)
+
+    # one aggregation keys every doc to its segment: a base segment is
+    # doc_id // segment_size; a delta owns its recorded range; docs above
+    # the visible high-water mark of a layout with deltas form one new
+    # segment numbered above the last. Integer division (`div`), NOT `/`:
+    # Spark's `/` on bigint returns double, and above 2^53 (snowflake-
+    # style ids — exactly the regime where the int32 guard below tells
+    # users to raise segment_size) a doc near a segment boundary would
+    # round into the WRONG segment number while build_segment's range
+    # filter uses exact int64 bounds — the doc silently dropped.
+    deltas = recorded.get("deltas", []) if recorded else []
+    ranges: dict[int, tuple[int, int]] = {}
+    seg_of = F.expr(f"doc_id div {int(segment_size)}")
+    if deltas:
+        new_seg = _last_segment(recorded) + 1
+        ranges[new_seg] = (int(recorded["max_doc_id"]) + 1, 1 << 62)
+        key = F.when(F.col("doc_id") >= ranges[new_seg][0], new_seg)
+        for d in reversed(deltas):
+            ranges[d["segment"]] = (d["doc_lo"], d["doc_hi"])
+            key = key.when(F.col("doc_id") >= d["doc_lo"], d["segment"])
+        seg_of = key.otherwise(seg_of)
+
+    def seg_range(s: int) -> tuple[int, int]:
+        if s in ranges:
+            return ranges[s]
+        hi = (s + 1) * segment_size
+        return s * segment_size, min(hi, deltas[0]["doc_lo"]) if deltas else hi
+
+    done = store.committed_segments(spark) if resume else set()
+    if not done:
+        actual = {int(r["seg"]): None for r in
+                  docs.select(seg_of.alias("seg")).distinct().collect()}
+    else:
+        # incremental correctness: a committed segment is stale when its
+        # doc COUNT or its content FINGERPRINT (Σ crc32("{id}:{text}")
+        # mod 2^31 — catches in-place upserts that keep ids) no longer
+        # matches lineage — the same aggregation that lists the occupied
+        # segments
+        actual = {
+            int(r["seg"]): (int(r["n"]), int(r["fp"]) % (1 << 31))
+            for r in docs.groupBy(seg_of.alias("seg")).agg(
+                F.count(F.lit(1)).alias("n"), F.sum(_fp_expr()).alias("fp")
+            ).collect()
+        }
+    if not actual:
         raise ValueError("empty corpus")
-    occupied = sorted(int(r["seg"]) for r in occ)
+    occupied = sorted(actual)
     if occupied[-1] > (1 << 31) - 1:
         raise ValueError(
             f"segment number {occupied[-1]} (max doc_id // segment_size) "
@@ -946,89 +1121,26 @@ def build_index(
             "max(doc_id) / segment_size fits in int32, or re-key the "
             "corpus to dense ids at ingest"
         )
-    if segment_size // shard_size > (1 << 31) - 1:
-        raise ValueError(
-            f"segment_size // shard_size = {segment_size // shard_size} "
-            "exceeds the int32 shard id: shrink segment_size or grow "
-            "shard_size (shards number a segment's doc ranges)"
-        )
-
-    done = store.committed_segments(spark) if resume else set()
     if done:
-        # incremental correctness: a committed segment is stale when its
-        # doc COUNT or its content FINGERPRINT (Σ crc32("{id}:{text}")
-        # mod 2^31 — catches in-place upserts that keep ids) no longer
-        # matches lineage. One aggregation over (doc_id, text); with
-        # append_only + a recorded high-water mark, the scan is range-
-        # pruned to segments at/above the mark.
-        scan = docs
-        first_checked = 0
-        if append_only:
-            try:
-                prev_hwm = store.read_meta().get("max_doc_id")
-            except FileNotFoundError:
-                prev_hwm = None
-            if prev_hwm is not None:
-                first_checked = prev_hwm // segment_size
-                scan = docs.filter(
-                    F.col("doc_id") >= first_checked * segment_size
-                )
-        fp_expr = F.crc32(
-            F.encode(
-                F.concat(
-                    F.col("doc_id").cast("string"), F.lit(":"),
-                    F.coalesce(F.col("text"), F.lit("")),
-                ),
-                "utf-8",
-            )
-        )
-        actual = {
-            int(r["seg"]): (int(r["n"]), int(r["fp"]) % (1 << 31))
-            for r in scan.groupBy(
-                F.expr(f"doc_id div {int(segment_size)}").alias("seg")
-            ).agg(
-                F.count(F.lit(1)).alias("n"), F.sum(fp_expr).alias("fp")
-            ).collect()
-        }
-        import duckdb
-
-        _con = duckdb.connect()
-        recorded = {
-            int(seg): (int(n), None if fp is None else int(fp))
-            for seg, n, fp in _con.sql(
-                f"""SELECT segment, max(docs_tokenized),
-                           max(doc_fp)
-                    FROM read_parquet('{store.p("lineage")}/*.parquet',
-                                      union_by_name=true)
-                    WHERE status = 'committed' GROUP BY segment"""
-            ).fetchall()
-        }
-        _con.close()
+        recorded_segs = _lineage_rows(store)
 
         def _is_stale(s: int) -> bool:
-            if s < first_checked:
-                return False  # below the append-only high-water mark
             n, fp = actual.get(s, (0, 0))
-            rn, rfp = recorded.get(s, (-1, None))
+            rn, rfp = recorded_segs.get(s, (-1, None))[:2]
             if n != rn:
                 return True
             return rfp is not None and fp != rfp
 
         stale = {s for s in done if _is_stale(s)}
         for s in stale:
-            import glob as _glob
-
-            for f in _glob.glob(store.p("lineage", f"part-{s:05d}-*")):
-                os.remove(f)
+            _drop_segment(store, s, keep_files=s in actual)
         done -= stale
     pending = [s for s in occupied if s not in done]
     if fail_after_segments is not None or max_concurrent_segments <= 1:
         built = 0
         for seg in pending:
-            build_segment(
-                spark, store, docs, seg, seg * segment_size,
-                (seg + 1) * segment_size, mode, shard_size,
-            )
+            build_segment(spark, store, docs, seg, *seg_range(seg), mode,
+                          shard_size)
             built += 1
             if fail_after_segments is not None and built >= fail_after_segments:
                 raise RuntimeError(f"injected failure after {built} segments")
@@ -1044,11 +1156,8 @@ def build_index(
             max_workers=min(max_concurrent_segments, len(pending))
         ) as ex:
             futs = [
-                ex.submit(
-                    build_segment, spark, store, docs, seg,
-                    seg * segment_size, (seg + 1) * segment_size, mode,
-                    shard_size,
-                )
+                ex.submit(build_segment, spark, store, docs, seg,
+                          *seg_range(seg), mode, shard_size)
                 for seg in pending
             ]
             for f in futs:
@@ -1057,6 +1166,115 @@ def build_index(
     return finalize_index(
         spark, store, mode, segment_size=segment_size, shard_size=shard_size
     )
+
+
+def _fp_expr():
+    """Spark-side content fingerprint of one doc — bit-equal to the
+    per-doc term encode_shard sums into its marker row."""
+    return F.crc32(F.encode(F.concat(
+        F.col("doc_id").cast("string"), F.lit(":"),
+        F.coalesce(F.col("text"), F.lit("")),
+    ), "utf-8"))
+
+
+def terms_upper_bound(meta: dict) -> int:
+    """Lexicon terms summed over the generations meta.json lists (each
+    generation records its own ``n_terms``): the distinct count with one
+    generation, an upper bound with deltas, where a term present in two
+    generations counts twice."""
+    return meta.get("n_terms", 0) + sum(
+        d["n_terms"] for d in meta.get("deltas", []))
+
+
+def _last_segment(meta: dict) -> int:
+    """The highest segment number of the visible layout."""
+    if meta.get("last_segment") is not None:
+        return int(meta["last_segment"])
+    return int(meta["max_doc_id"]) // int(meta["segment_size"])
+
+
+def _lineage_rows(store: IndexStore) -> dict[int, tuple]:
+    """segment → (docs_tokenized, doc_fp, doc_lo, doc_hi) of its
+    committed lineage row (driver-side metadata read, no Spark job)."""
+    import duckdb
+
+    if not os.path.isdir(store.p("lineage")):
+        return {}
+    return {
+        int(seg): tuple(None if v is None else int(v) for v in rest)
+        for seg, *rest in duckdb.sql(
+            f"""SELECT segment, max(docs_tokenized), max(doc_fp),
+                       max(doc_lo), max(doc_hi)
+                FROM read_parquet('{store.p("lineage")}/*.parquet',
+                                  union_by_name=true)
+                WHERE status = 'committed' GROUP BY segment"""
+        ).fetchall()
+    }
+
+
+def _drop_segment(store: IndexStore, seg: int, keep_files: bool) -> None:
+    """Un-commit a segment (its lineage rows); ``keep_files=False`` also
+    removes its partials — a segment whose docs are all gone."""
+    import glob
+    import shutil
+
+    for f in glob.glob(store.p("lineage", f"part-{seg:05d}-*")):
+        os.remove(f)
+    if not keep_files:
+        shutil.rmtree(store.p("segments", str(seg)), ignore_errors=True)
+        shutil.rmtree(store.p("vocab", str(seg)), ignore_errors=True)
+
+
+def _append_delta(spark: SparkSession, store: IndexStore, docs: DataFrame,
+                  meta: dict, mode: str, segment_size: int, shard_size: int,
+                  fail_after_segments: int | None) -> dict:
+    """The append route of build_index: the docs above the visible
+    high-water mark become segment ``last + 1`` over [hwm + 1, max + 1)
+    — a pure function of meta.json and the new mark, so every field of a
+    multi-field layout cuts the same (segment, shard) geometry — then
+    finalize turns that segment alone into a delta generation, and
+    listing it in meta.json makes it visible. An append that would make
+    more than DELTA_MAX deltas compacts instead. A rerun after a crash
+    anywhere before meta.json is written finds the same number and
+    range, keeps the committed segment when its lineage still matches
+    the docs, and rewrites the unlisted delta files."""
+    hwm = int(meta["max_doc_id"])
+    new = docs.filter(F.col("doc_id") > hwm).agg(
+        F.count(F.lit(1)).alias("n"), F.max("doc_id").alias("hi"),
+        F.sum(_fp_expr()).alias("fp"),
+    ).collect()[0]
+    if not new["n"]:
+        return meta
+    seg = _last_segment(meta) + 1
+    lo, hi = hwm + 1, int(new["hi"]) + 1
+    if seg > (1 << 31) - 1:
+        raise ValueError(f"segment number {seg} exceeds the int32 block "
+                         "schema: compact_index renumbering is not supported")
+    want = (int(new["n"]), int(new["fp"]) % (1 << 31), lo, hi)
+    if _lineage_rows(store).get(seg) != want:
+        _drop_segment(store, seg, keep_files=True)
+        build_segment(spark, store, docs, seg, lo, hi, mode, shard_size)
+    if fail_after_segments is not None:
+        raise RuntimeError("injected failure after 1 segments")
+    if len(meta.get("deltas", [])) >= DELTA_MAX:
+        return _compact(spark, store, meta)
+    d = finalize_index(spark, store, mode, segment_size=segment_size,
+                       shard_size=shard_size, delta=seg)
+    if terms_upper_bound(meta) + d["n_terms"] > PREFIX_DRIVER_SCAN_MAX:
+        return _compact(spark, store, meta)
+    out = dict(meta)
+    # n_terms stays the base's: a term in several generations is one
+    # term, so only each generation's own count is exact
+    for k in ("n_docs", "postings_total", "bytes_compressed"):
+        out[k] = meta[k] + d[k]
+    out["dl_sum"] = meta.get("dl_sum", round(meta["avgdl"] * meta["n_docs"])) \
+        + d["dl_sum"]
+    out["avgdl"] = out["dl_sum"] / out["n_docs"] if out["n_docs"] else 0.0
+    out["max_doc_id"] = d["max_doc_id"]
+    out["last_segment"] = seg
+    out["deltas"] = [*meta.get("deltas", []), d]
+    store.write_meta(out)
+    return out
 
 
 #: element separator for weighted-vector indexes — a control char no

@@ -276,6 +276,17 @@ def _cmd_column_create(ctx: CommandContext, table: str, name: str,
         import os as _os
 
         mode = _index_mode_for(ctx, table)
+        live = _live_index_decl(ctx, type)
+        if live is not None and (
+                _index_sources(live[1]) != srcs
+                or _index_mode_for(ctx, live[0]) != mode):
+            raise ValueError(
+                f"table {type!r} is already indexed by {live[0]}.{live[2]} "
+                f"(source {live[1]['source']!r}); select resolves ONE index "
+                "per source table, so an index over other columns or with "
+                "another tokenizer would silently replace it — remove "
+                "that index column first"
+            )
         path = _os.path.join(ctx._index_root(), f"{table}__{name}")
         if len(srcs) == 1:
             from groonga_spark.build import build_index
@@ -328,6 +339,23 @@ def _cmd_column_create(ctx: CommandContext, table: str, name: str,
     return True
 
 
+def _index_sources(meta: dict) -> list[str]:
+    return [c.strip() for c in (meta.get("source") or "").split(",")
+            if c.strip()]
+
+
+def _live_index_decl(ctx: CommandContext, src_table: str):
+    """(lexicon table, meta, column name) of the COLUMN_INDEX declaration
+    whose built index serves ``src_table``'s slot, or None."""
+    live = getattr(ctx.indexes.get(src_table), "path", None)
+    for lex, d in ctx.ddl.items():
+        for cname, meta in d.get("columns", {}).items():
+            if ("COLUMN_INDEX" in meta["flags"] and meta["type"] == src_table
+                    and meta.get("path") == live):
+                return lex, meta, cname
+    return None
+
+
 def _pop_index(ctx: CommandContext, meta: dict) -> None:
     """Drop a COLUMN_INDEX declaration's built index from its source
     table's slot — only when the slot holds THAT index (same path): two
@@ -350,7 +378,7 @@ def _drop_dependent_indexes(ctx: CommandContext, table: str,
             meta = cols[cname]
             if "COLUMN_INDEX" not in meta["flags"]:
                 continue
-            srcs = [c.strip() for c in (meta.get("source") or "").split(",")]
+            srcs = _index_sources(meta)
             hit = (lex == table and column is None) or (
                 meta["type"] == table
                 and (column is None or column in srcs)

@@ -10,7 +10,7 @@ lib/db.c · grn_obj_set_value → grn_ii_column_update]. Here:
 - ``upsert`` merges records into a keyed corpus with last-write-wins
   (the MERGE INTO equivalent over plain parquet; prod uses Iceberg
   MERGE) — index maintenance is NOT a hook but a derived-data rebuild:
-  call streaming.append_docs afterwards (stale segments rebuild).
+  call streaming.append_docs afterwards (new docs become a delta).
 """
 
 from __future__ import annotations

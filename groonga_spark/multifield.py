@@ -118,11 +118,13 @@ def append_multifield(spark: SparkSession, docs: DataFrame, path: str,
     """Bring EVERY field index under ``path`` up to date with ``docs``
     (the full current table) — the repair path for the command facade's
     ``load`` → ``index_stale`` flag. Per-field streaming.append_docs
-    (each field adopts its recorded tokenizer mode); only segments with
-    new docs rebuild, so a micro-batch append costs O(batch), not
-    O(corpus). The append contract (new, monotonically growing doc ids)
-    applies per field; open handles pick the change up via their
-    generation check."""
+    (each field adopts its recorded tokenizer mode): each field gains one
+    delta generation holding only the new docs, so a micro-batch append
+    costs O(batch), not O(corpus). The delta's segment number and doc
+    range follow from the recorded layout and the new high-water mark
+    alone, so every field cuts the same (segment, shard) geometry. The
+    append contract (new, monotonically growing doc ids) applies per
+    field; open handles pick the change up via their generation check."""
     from groonga_spark.streaming import append_docs
 
     with open(os.path.join(path, MANIFEST)) as fh:

@@ -197,14 +197,18 @@ def filter_blocks(pdf: pd.DataFrame, tomb: np.ndarray) -> pd.DataFrame:
     """Rewrite block rows dropping tombstoned doc ids (compaction).
 
     Handles both posting blocks and "" marker rows. Blocks whose docs all
-    survive pass through untouched; emptied blocks are dropped. A
-    maintenance kernel: per-block Python loop with numpy inside (not a
-    query-path hot loop).
+    survive pass through untouched; emptied blocks are dropped. ``tomb``
+    is sorted. A maintenance kernel: only the blocks whose
+    [min_doc_id, max_doc_id] holds a tombstoned id are decoded, one by
+    one (not a query-path hot loop); the rest pass through in place.
     """
     from groonga_spark.codec import decode_positions, vb_encode
 
+    hit = (np.searchsorted(tomb, pdf["min_doc_id"].to_numpy(np.int64), "left")
+           < np.searchsorted(tomb, pdf["max_doc_id"].to_numpy(np.int64),
+                             "right"))
     out_rows = []
-    for _, row in pdf.iterrows():
+    for _, row in pdf[hit].iterrows():
         nd = int(row["n_docs"])
         docs = np.cumsum(vb_decode(row["doc_deltas"]).astype(np.int64))
         keep = ~np.isin(docs, tomb, assume_unique=True)
@@ -258,9 +262,11 @@ def filter_blocks(pdf: pd.DataFrame, tomb: np.ndarray) -> pd.DataFrame:
             )
             new["positions"] = vb_encode(stream)
         out_rows.append(new)
-    if not out_rows:
+    out = (pd.concat([pdf[~hit], pd.DataFrame(out_rows)]).sort_index()
+           if out_rows else pdf[~hit])
+    if not len(out):
         return pd.DataFrame({c: [] for c in BLOCK_COLUMNS})
-    return pd.DataFrame(out_rows)[BLOCK_COLUMNS]
+    return out[BLOCK_COLUMNS]
 
 
 def decode_block(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

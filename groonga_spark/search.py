@@ -20,6 +20,12 @@ share one frame, term ids shifted per field), on one of two routes:
 Callers cannot force a route; the rule above is the only one. Every
 driver-side result becomes a DataFrame through ``result_frame``.
 
+An index with delta generations (build.py) is read generation by
+generation: each term is looked up in every generation's lexicon, and
+the fetched blocks of all generations are relabeled with plan-local term
+ids and the df summed across generations, so the kernel and both routes
+see the frame a full rebuild would give.
+
 Scale notes: postings are written term_id-sorted in small row groups
 (build.ROW_GROUP_BYTES) and the lexicon term-sorted the same way. A
 driver read consults the handle's row-group directory (per-group key
@@ -41,7 +47,11 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from groonga_spark.build import IndexStore
+from groonga_spark.build import (
+    PREFIX_DRIVER_SCAN_MAX,
+    IndexStore,
+    terms_upper_bound,
+)
 from groonga_spark.normalize import normalize_str
 from groonga_spark.ql import parse_query, query_terms
 from groonga_spark.tokenize import tokenize_str
@@ -143,6 +153,14 @@ def _prefix_upper_bound(prefix: str) -> str | None:
 #: key column of each table a driver read addresses by row group
 _TABLE_KEYS = {"postings": "term_id", "lexicon": "term"}
 
+#: a delta generation with at most this many postings bytes keeps its
+#: lexicon and postings row groups decoded on the handle after their
+#: first read. Its files never change, and a small delta is one row
+#: group per table, so without it every query decodes each delta's
+#: whole lexicon and postings again. Memory: at most DELTA_MAX such
+#: deltas per field per handle.
+DELTA_HOLD_BYTES = 1 << 20
+
 
 def _data_files(root: str) -> list[str]:
     """A table directory's data files in pyarrow dataset order: recursive,
@@ -161,12 +179,15 @@ class _RowGroupDirectory:
     order, its footer and each row group's min/max of the key column —
     the lexicon's pointer to a term's posting chunks [G: lib/pat.c ·
     grn_pat_get → lib/ii.c · grn_ii_cursor_open reads only those
-    chunks]. Built from the footers alone; holds no open file."""
+    chunks]. Built from the footers alone; holds no open file. ``hold``
+    keeps each row group decoded after its first read (a small delta
+    generation's tables, see DELTA_HOLD_BYTES)."""
 
-    def __init__(self, root: str, key: str):
+    def __init__(self, root: str, key: str, hold: bool = False):
         import pyarrow.parquet as pq
 
         self.key = key
+        self._held: dict[int, pa.Table] | None = {} if hold else None
         self.files = []  # (path, FileMetaData)
         self.schema = None
         self.starts = [0]  # first row group of each file
@@ -184,6 +205,7 @@ class _RowGroupDirectory:
                 maxs.append(st.max if ok else None)
             self.files.append((path, md))
             self.starts.append(len(mins))
+        self.n_rows = sum(md.num_rows for _p, md in self.files)
         self.known = np.array([m is not None for m in mins], bool)
         ints = self.schema is not None and pa.types.is_integer(
             self.schema.field(key).type)
@@ -207,13 +229,36 @@ class _RowGroupDirectory:
             hit |= m
         return hit
 
+    def _groups(self, hit: np.ndarray, cols: list[str]) -> pa.Table:
+        """The selected row groups' ``cols``, in file then group order."""
+        import pyarrow.parquet as pq
+
+        parts = []
+        if self._held is not None:
+            for g in np.flatnonzero(hit).tolist():
+                t = self._held.get(g)
+                if t is None:
+                    f = int(np.searchsorted(self.starts, g, "right")) - 1
+                    path, md = self.files[f]
+                    t = self._held[g] = pq.ParquetFile(
+                        path, metadata=md).read_row_group(
+                        g - self.starts[f], use_threads=False)
+                parts.append(t.select(cols))
+            hit = np.zeros(len(hit), bool)
+        for f, (path, md) in enumerate(self.files):
+            sel = np.flatnonzero(hit[self.starts[f]:self.starts[f + 1]])
+            if len(sel):
+                parts.append(pq.ParquetFile(path, metadata=md).read_row_groups(
+                    sel.tolist(), columns=cols, use_threads=False))
+        return (pa.concat_tables(parts) if parts
+                else self.schema.empty_table().select(cols))
+
     def read(self, columns: list[str] | None, keys=(), ranges=()) -> pa.Table:
         """Rows whose key is in ``keys`` or in any [lo, hi) of ``ranges``,
         in file then row-group then row order — the rows, and the order,
         of a dataset scan with the same filter — decoding only the
         selected row groups. No keys and no ranges → no rows."""
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
         if self.schema is None:  # no data file
             return pa.table({})
@@ -221,15 +266,9 @@ class _RowGroupDirectory:
         cols = names if self.key in names else [*names, self.key]
         hit = (self.select(keys, ranges) if len(keys) or ranges
                else np.zeros(len(self.known), bool))
-        parts = []
-        for f, (path, md) in enumerate(self.files):
-            sel = np.flatnonzero(hit[self.starts[f]:self.starts[f + 1]])
-            if len(sel):
-                parts.append(pq.ParquetFile(path, metadata=md).read_row_groups(
-                    sel.tolist(), columns=cols, use_threads=False))
-        if not parts:
-            return self.schema.empty_table().select(names)
-        tbl = pa.concat_tables(parts)
+        tbl = self._groups(hit, cols)
+        if not tbl.num_rows:
+            return tbl.select(names)
         col = tbl.column(self.key)
         mask = (pc.is_in(col, value_set=pa.array(keys, col.type))
                 if len(keys) else None)
@@ -239,6 +278,100 @@ class _RowGroupDirectory:
                 m = pc.and_(m, pc.less(col, pa.scalar(hi, col.type)))
             mask = m if mask is None else pc.or_(mask, m)
         return tbl.filter(mask).select(names)
+
+    def seek(self, keys: list, columns: list[str]) -> tuple[pa.Table, np.ndarray]:
+        """Per key, the first row whose key is >= it, in a table sorted by
+        its key (the lexicon): (rows of the groups read, each key's row
+        index in them, -1 past the last row). The first such row lies in
+        the first group whose max is >= the key, so only those groups are
+        decoded (all of them when some group lacks statistics)."""
+        ks = np.asarray(keys, self.mins.dtype)
+        if self.known.all():
+            g = np.searchsorted(self.maxs, ks, "left")
+            hit = np.zeros(len(self.known), bool)
+            hit[g[g < len(hit)]] = True
+        else:
+            hit = np.ones(len(self.known), bool)
+        if self.schema is None:
+            return pa.table({c: [] for c in columns}), np.full(len(ks), -1)
+        import bisect
+
+        tbl = self._groups(hit, columns)
+        col = tbl.column(self.key).combine_chunks()
+        # bisect on the Arrow column: a few scalar probes per key, where
+        # converting the groups to Python objects would cost every row
+        probe = _ArrowProbe(col)
+        pos = [bisect.bisect_left(probe, k) for k in ks.tolist()]
+        return tbl, np.array([p if p < len(col) else -1 for p in pos])
+
+
+class _ArrowProbe:
+    """A sorted Arrow array as a sequence of Python values, for bisect."""
+
+    def __init__(self, arr: pa.Array):
+        self.arr = arr
+
+    def __len__(self) -> int:
+        return len(self.arr)
+
+    def __getitem__(self, i: int):
+        return self.arr[i].as_py()
+
+
+class _Generation:
+    """One generation of an index — the base (``base/<base_id>/``) or a
+    delta (``deltas/<segment>/``, build.py). Its files never change once
+    meta.json lists it, so its row-group directories, its lexicon seeks
+    and (``hold``) a small delta's decoded row groups live as long as
+    the generation stays in the layout: an append reads only the new
+    delta's footers."""
+
+    def __init__(self, root: str, key: tuple, hold: bool = False):
+        self.root = root
+        self.key = key
+        self.hold = hold
+        self._dirs: dict[str, _RowGroupDirectory] = {}
+        #: term → (lower bound, term_id or None, df): the number of this
+        #: generation's terms sorting before it, and its own entry
+        self._seeks: dict[str, tuple[int, int | None, float]] = {}
+
+    def directory(self, table: str) -> _RowGroupDirectory:
+        d = self._dirs.get(table)
+        if d is None:
+            d = self._dirs[table] = _RowGroupDirectory(
+                os.path.join(self.root, table), _TABLE_KEYS[table], self.hold)
+        return d
+
+    def seek(self, terms: list[str]) -> list[tuple[int, int | None, float]]:
+        """Per term, (how many of this generation's terms sort before it,
+        its term_id or None, its df or 0). Dense term ids are term ranks,
+        so the first term >= t has term_id = that count."""
+        missing = sorted({t for t in terms if t not in self._seeks})
+        if missing:
+            d = self.directory("lexicon")
+            tbl, pos = d.seek(missing, ["term", "term_id", "df"])
+            term, tid, df = (tbl.column(c) for c in ("term", "term_id", "df"))
+            for t, i in zip(missing, pos.tolist()):
+                if i < 0:
+                    self._seeks[t] = (d.n_rows, None, 0.0)
+                    continue
+                at = tid[i].as_py()
+                hit = term[i].as_py() == t
+                self._seeks[t] = (at, at if hit else None,
+                                  float(df[i].as_py()) if hit else 0.0)
+        return [self._seeks[t] for t in terms]
+
+
+def _postings_pred(tids, ranges):
+    """Catalyst predicate selecting postings: IN over ``tids`` + BETWEEN
+    per inclusive (lo, hi) span — both push down to the parquet scan
+    (term_id-sorted files → row-group pruning; the Iceberg deployment
+    prunes bucket(term_id) partitions the same way)."""
+    cond = F.col("term_id").isin([int(t) for t in tids]) if tids else None
+    for lo, hi in ranges:
+        rc = F.col("term_id").between(int(lo), int(hi))
+        cond = rc if cond is None else (cond | rc)
+    return cond if cond is not None else F.lit(False)
 
 
 def _bounded_levenshtein(a: str, b: str, bound: int) -> int | None:
@@ -274,7 +407,8 @@ class FulltextIndex:
         self.meta = self.store.read_meta()
         self._lex_cache: dict[str, tuple[int, float] | None] = {}
         self._postings_df: DataFrame | None = None
-        self._row_groups: dict[str, _RowGroupDirectory] = {}
+        self._gens: list[_Generation] = []
+        self._load_generations()
         from collections import OrderedDict
 
         self._result_cache: OrderedDict[tuple, DataFrame] = OrderedDict()
@@ -291,51 +425,106 @@ class FulltextIndex:
         if gen != self._generation:
             self._lex_cache.clear()
             self._postings_df = None
-            self._row_groups.clear()
             self._tombstones = None
             self._tombstone_est = None
             self._result_cache.clear()
             self.meta = self.store.read_meta()
+            self._load_generations()
             self._generation = gen
         return gen
+
+    def _load_generations(self) -> None:
+        """The generations meta.json lists — the base, then each delta —
+        keeping the ones this handle already holds (their files are
+        unchanged: a base lives in the directory named by the base_id
+        every full finalize draws). Drops the plan-id maps, which span
+        every generation."""
+        held = {g.key: g for g in self._gens}
+        base = self.meta.get("base_id")
+        roots = [(self.store.base(meta=self.meta), ("", base), False)] + [
+            (self.store.p("deltas", str(d["segment"])), (d["segment"], base),
+             d["bytes_compressed"] <= DELTA_HOLD_BYTES)
+            for d in self.meta.get("deltas", [])
+        ]
+        self._gens = [held.get(k) or _Generation(r, k, h)
+                      for r, k, h in roots]
+        #: plan term id → (summed df, [(generation, its term_id)])
+        self._pid_gens: dict[int, tuple[int, list]] = {}
+        #: plan (lo, hi) of a prefix → per generation (first term_id of
+        #: its run, plan ids of the run, summed dfs of the run), from
+        #: _expand_ast until _plan moves it into the query's plan
+        self._range_gens: dict[tuple[int, int], list] = {}
 
     @property
     def postings(self) -> DataFrame:
         if self._postings_df is None:
-            self._postings_df = self.spark.read.parquet(self.store.p("postings"))
+            self._postings_df = self.spark.read.parquet(
+                os.path.join(self._gens[0].root, "postings"))
         return self._postings_df
 
     @property
     def lexicon(self) -> DataFrame:
-        return self.spark.read.parquet(self.store.p("lexicon"))
+        """The lexicon (term, term_id, df, cf); with deltas, (term, df,
+        cf) summed over the generations — a merged view has no term ids."""
+        if len(self._gens) == 1:
+            return self.spark.read.parquet(
+                os.path.join(self._gens[0].root, "lexicon"))
+        return self._gen_tables("lexicon").groupBy("term").agg(
+            F.sum("df").alias("df"), F.sum("cf").alias("cf"))
 
     @property
     def doc_map(self) -> DataFrame:
-        return self.spark.read.parquet(self.store.p("doc_map"))
+        return self._gen_tables("doc_map")
 
-    # ---------------------------------------------------------------------
+    def _gen_tables(self, table: str) -> DataFrame:
+        return self.spark.read.parquet(
+            *[os.path.join(g.root, table) for g in self._gens])
 
     def _table_rows(self, table: str, columns: list[str] | None,
-                    keys=(), ranges=()) -> pa.Table:
-        """The one driver read of ``postings`` or ``lexicon``: the rows
-        whose key (term_id / term) is in ``keys`` or in a half-open
-        [lo, hi) of ``ranges``, decoding only the row groups that can
-        hold them. The table's row-group directory is built on first use
-        and dropped with the other caches on a generation change."""
-        d = self._row_groups.get(table)
-        if d is None:
-            d = self._row_groups[table] = _RowGroupDirectory(
-                self.store.p(table), _TABLE_KEYS[table])
-        return d.read(columns, keys, ranges)
+                    keys=(), ranges=(), gen: _Generation | None = None
+                    ) -> pa.Table:
+        """The one driver read of ``postings`` or ``lexicon`` rows, of one
+        generation (the base by default): the rows whose key (term_id /
+        term) is in ``keys`` or in a half-open [lo, hi) of ``ranges``,
+        decoding only the row groups that can hold them, through the
+        generation's row-group directory."""
+        g = gen or self._gens[0]
+        return g.directory(table).read(columns, keys, ranges)
+
+    # ---------------------------------------------------------------------
+    #
+    # Plan term ids. A single generation's plan uses its term ids as they
+    # are. With deltas, a term's plan id is the SUM over generations of
+    # how many of that generation's terms sort before it: strictly
+    # increasing in term order (a term counts itself in at least one
+    # generation), so a prefix's terms still form one contiguous id span
+    # and the kernel adds scores in the order a rebuild's dense ids give;
+    # with one generation it is the term id itself. Each generation's
+    # blocks are fetched by its own ids and relabeled with the plan id and
+    # the df summed over generations (``_gen_reads``), so the kernel sees
+    # the frame a full rebuild would give it.
 
     def _lexicon_lookup(self, tokens: list[str]) -> list[tuple[str, int, int]]:
-        """Driver-side term → (term_id, df) lookup — the PAT-trie seek
-        [G: lib/pat.c · grn_pat_get] without a Spark job: the lexicon's
-        row-group directory picks the groups whose term min/max can hold
-        a token, and only those are decoded (a q-term query reads at most
-        q small groups). Results are memoized per index handle."""
+        """Driver-side term → (plan term id, df) lookup — the PAT-trie
+        seek [G: lib/pat.c · grn_pat_get] without a Spark job: each
+        generation's lexicon row-group directory picks the groups whose
+        term min/max can hold a token, and only those are decoded (a
+        q-term query reads at most q small groups per generation).
+        Results are memoized per index handle."""
         missing = [t for t in tokens if t not in self._lex_cache]
-        if missing:
+        if missing and len(self._gens) > 1:
+            seeks = [g.seek(missing) for g in self._gens]
+            for i, t in enumerate(missing):
+                found = [(gi, s[i][1]) for gi, s in enumerate(seeks)
+                         if s[i][1] is not None]
+                if not found:
+                    self._lex_cache[t] = None
+                    continue
+                pid = sum(s[i][0] for s in seeks)
+                df = sum(int(s[i][2]) for s in seeks)
+                self._lex_cache[t] = (pid, float(df))
+                self._pid_gens[pid] = (df, found)
+        elif missing:
             tbl = self._table_rows("lexicon", ["term", "term_id", "df"],
                                    keys=missing)
             found = set()
@@ -358,7 +547,10 @@ class FulltextIndex:
     #: _prefix_tid_range is literally two ints + two scalars). Below it,
     #: the pyarrow path answers without scheduling a Spark job
     #: (search-head latency). Class attr so tests/deployments can tune.
-    PREFIX_DRIVER_SCAN_MAX = 10_000_000
+    #: An index with deltas plans prefixes on the driver whatever this
+    #: says; its appends compact instead of taking the summed lexicon
+    #: sizes past the build's bound of the same name.
+    PREFIX_DRIVER_SCAN_MAX = PREFIX_DRIVER_SCAN_MAX
 
     #: Similar (*S) keeps only this many of the input's rarest (lowest
     #: df) known tokens — the reference's rare-term selection [G:
@@ -378,7 +570,7 @@ class FulltextIndex:
         Iceberg) and only MATCHED terms transfer — with a limit, only
         limit+1 of them."""
         self._check_generation()
-        if self.meta.get("n_terms", 0) > self.PREFIX_DRIVER_SCAN_MAX:
+        if terms_upper_bound(self.meta) > self.PREFIX_DRIVER_SCAN_MAX:
             df = self.lexicon.select("term").filter(
                 F.col("term").startswith(prefix)
             )
@@ -400,11 +592,16 @@ class FulltextIndex:
         return terms
 
     def _prefix_terms_pyarrow(self, prefix: str) -> list[str]:
-        tbl = self._table_rows("lexicon", ["term"],
-                               ranges=[(prefix, _prefix_upper_bound(prefix))])
-        return sorted(
-            t for t in tbl.column("term").to_pylist() if t.startswith(prefix)
-        )
+        terms = self._lexicon_terms((prefix, _prefix_upper_bound(prefix)))
+        return sorted(t for t in terms if t.startswith(prefix))
+
+    def _lexicon_terms(self, rng: tuple) -> set[str]:
+        """Every generation's lexicon terms in the half-open range."""
+        out: set[str] = set()
+        for g in self._gens:
+            out.update(self._table_rows("lexicon", ["term"], ranges=[rng],
+                                        gen=g).column("term").to_pylist())
+        return out
 
     def _prefix_tid_range(self, prefix: str) -> tuple[int, int, int, float] | None:
         """(lo_tid, hi_tid, n_terms, sum_df) of every lexicon term with
@@ -420,6 +617,8 @@ class FulltextIndex:
         no finite successor (all U+10FFFF) is the open range [p, ∞):
         every term there starts with it, so the ids stay contiguous."""
         ub = _prefix_upper_bound(prefix)
+        if len(self._gens) > 1:
+            return self._merged_tid_range(prefix, ub)
         if self.meta.get("n_terms", 0) > self.PREFIX_DRIVER_SCAN_MAX:
             cond = F.col("term") >= prefix
             if ub is not None:
@@ -466,6 +665,38 @@ class FulltextIndex:
             )
         return int(lo), int(hi), int(n), float(pc.sum(tbl.column("df")).as_py())
 
+    def _merged_tid_range(self, prefix: str, ub: str | None):
+        """``_prefix_tid_range`` over several generations: each one's
+        matching lexicon run is read on the driver — bounded, since an
+        append that would take the summed lexicon sizes past the build's
+        PREFIX_DRIVER_SCAN_MAX compacts instead — and the union of their
+        terms gets plan ids and summed dfs; each generation's relabeling
+        is kept for ``_plan`` to hand to the fetch (``_gen_reads``)."""
+        runs = []
+        for g in self._gens:
+            tbl = self._table_rows("lexicon", ["term", "term_id", "df"],
+                                   ranges=[(prefix, ub)], gen=g)
+            terms = np.asarray(tbl.column("term").to_pylist(), object)
+            first = (tbl.column("term_id")[0].as_py() if len(terms)
+                     else g.seek([prefix])[0][0])
+            runs.append((first, terms,
+                         tbl.column("df").to_numpy().astype(np.int64)))
+        union = np.unique(np.concatenate([t for _f, t, _d in runs]))
+        if not len(union):
+            return None
+        pid = np.zeros(len(union), np.int64)
+        df = np.zeros(len(union), np.int64)
+        at = []
+        for first, terms, dfs in runs:
+            pid += first + np.searchsorted(terms, union, "left")
+            i = np.searchsorted(union, terms)
+            df[i] += dfs
+            at.append((first, i))
+        lo, hi = int(pid[0]), int(pid[-1])
+        self._range_gens[(lo, hi)] = [(first, pid[i], df[i])
+                                      for first, i in at]
+        return lo, hi, len(union), float(df.sum())
+
     def fuzzy_terms(self, term: str, max_distance: int = 1,
                     prefix_length: int = 0,
                     max_expansions: int = 64) -> list[str]:
@@ -479,12 +710,13 @@ class FulltextIndex:
         self._check_generation()
         q = normalize_str(term)  # normalize_str already lowercases
         pfx = q[:prefix_length] if prefix_length else ""
-        if self.meta.get("n_terms", 0) <= 100_000:
+        # with deltas the summed size may overcount and pick the Spark
+        # scan where a rebuild's handle would scan on the driver
+        if terms_upper_bound(self.meta) <= 100_000:
             # every term is >= "": no prefix reads the whole lexicon
             rng = (pfx, _prefix_upper_bound(pfx)) if pfx else ("", None)
-            tbl = self._table_rows("lexicon", ["term"], ranges=[rng])
             cands = [
-                t for t in tbl.column("term").to_pylist()
+                t for t in self._lexicon_terms(rng)
                 if abs(len(t) - len(q)) <= max_distance
                 and (not pfx or t.startswith(pfx))
             ]
@@ -642,6 +874,7 @@ class FulltextIndex:
             needed.add(s_tid)
             df_by_tid.setdefault(s_tid, s_df)
         ranges = collect_ranges(ast)
+        spans = sorted({(r.lo_tid, r.hi_tid) for r in ranges})
         plan = {
             "tokens_by_text": {
                 t: [tid.get(tok) for tok in toks]
@@ -649,9 +882,20 @@ class FulltextIndex:
             },
             "df_by_tid": df_by_tid,
             "needed_tids": sorted(needed),
-            "tid_ranges": sorted({(r.lo_tid, r.hi_tid) for r in ranges}),
+            "tid_ranges": spans,
             "ranges_sum_df": float(sum(r.sum_df for r in ranges)),
         }
+        if len(self._gens) > 1:
+            # each span's relabeling moves from the handle into the plan:
+            # the handle keeps none of it past the query
+            prefix = {(r.lo_tid, r.hi_tid): r.prefix for r in ranges}
+            plan["range_gens"] = {}
+            for span in spans:
+                if span not in self._range_gens:  # planned twice
+                    self._merged_tid_range(
+                        prefix[span], _prefix_upper_bound(prefix[span]))
+                plan["range_gens"][span] = self._range_gens.pop(span)
+            self._range_gens.clear()
         # Small tombstone sets ride the plan as a numpy mask (cheap,
         # broadcast once per query). Past TOMBSTONE_DRIVER_MAX the
         # driver must never materialize the set — the plan carries a
@@ -851,22 +1095,85 @@ class FulltextIndex:
         selects groups as a range, never as an IN list. The route has
         already chosen the driver (``run_query``); ``force`` is accepted
         for callers that fetch outside it, and the read is the same."""
-        ranges = [(lo, hi + 1) for lo, hi in plan.get("tid_ranges") or []]
-        return self._table_rows("postings", None, keys=list(tids),
-                                ranges=ranges).to_pandas()
+        if len(self._gens) == 1:
+            ranges = [(lo, hi + 1) for lo, hi in plan.get("tid_ranges") or []]
+            return self._table_rows("postings", None, keys=list(tids),
+                                    ranges=ranges).to_pandas()
+        parts = []
+        for g, keys, ranges, src, pid, df in self._gen_reads(tids, plan):
+            tbl = self._table_rows("postings", None, keys, ranges, gen=g)
+            i = np.searchsorted(src, tbl.column("term_id").to_numpy())
+            for name, v in (("term_id", pid[i]), ("df", df[i])):
+                tbl = tbl.set_column(tbl.schema.get_field_index(name), name,
+                                     pa.array(v, pa.int64()))
+            parts.append(tbl)
+        if not parts:
+            return self._table_rows("postings", None).to_pandas()
+        return pa.concat_tables(parts).to_pandas()
 
-    def _postings_pred(self, plan: dict):
-        """Catalyst predicate selecting the plan's postings: IN over the
-        looked-up tids + BETWEEN per TermRange span — both push down to
-        the parquet scan (term_id-sorted files → row-group pruning; the
-        Iceberg deployment prunes bucket(term_id) partitions the same
-        way)."""
-        tids = plan["needed_tids"]
-        cond = F.col("term_id").isin([int(t) for t in tids]) if tids else None
-        for lo, hi in plan.get("tid_ranges") or []:
-            rc = F.col("term_id").between(int(lo), int(hi))
-            cond = rc if cond is None else (cond | rc)
-        return cond if cond is not None else F.lit(False)
+    def _gen_reads(self, tids: list[int], plan: dict) -> list[tuple]:
+        """Per generation holding any of the plan's terms: (generation,
+        its term ids to read, its [lo, hi) term-id runs to read, and the
+        relabeling: its term ids sorted, their plan ids, summed dfs). A
+        term id appears once in the relabeling however many of the plan's
+        terms and spans cover it, so a join on it matches each block
+        once."""
+        spans = [plan["range_gens"][r] for r in plan.get("tid_ranges") or []]
+        out = []
+        for gi, g in enumerate(self._gens):
+            keys, src, pid, df = [], [], [], []
+            for t in tids:
+                t_df, found = self._pid_gens[t]
+                for gj, tid in found:
+                    if gj == gi:
+                        keys.append(tid)
+                        src.append([tid])
+                        pid.append([t])
+                        df.append([t_df])
+            ranges = []
+            for span in spans:
+                first, s_pid, s_df = span[gi]
+                if len(s_pid):
+                    ranges.append((first, first + len(s_pid)))
+                    src.append(np.arange(first, first + len(s_pid)))
+                    pid.append(s_pid)
+                    df.append(s_df)
+            if src:
+                src, o = np.unique(np.concatenate(src).astype(np.int64),
+                                   return_index=True)
+                out.append((g, keys, ranges, src,
+                            np.concatenate(pid).astype(np.int64)[o],
+                            np.concatenate(df).astype(np.int64)[o]))
+        return out
+
+    def _cluster_postings(self, plan: dict) -> DataFrame:
+        """The cluster route's postings of the plan, in plan term ids:
+        each generation's scan pushes its own term-id predicate down, and
+        a broadcast join relabels its rows (a single generation's scan is
+        returned as is)."""
+        if len(self._gens) == 1:
+            return self.postings.filter(_postings_pred(
+                plan["needed_tids"], plan.get("tid_ranges") or []))
+        parts, maps = [], []
+        for gi, (g, keys, ranges, src, pid, df) in enumerate(
+                self._gen_reads(plan["needed_tids"], plan)):
+            parts.append(
+                self.spark.read.parquet(os.path.join(g.root, "postings"))
+                .filter(_postings_pred(keys, [(a, b - 1) for a, b in ranges]))
+                .withColumn("_g", F.lit(gi)))
+            maps.append(pd.DataFrame({"_rg": gi, "_src": src, "_pid": pid,
+                                      "_df": df}))
+        blocks = parts[0]
+        for p in parts[1:]:
+            blocks = blocks.unionByName(p)
+        remap = F.broadcast(self.spark.createDataFrame(
+            pd.concat(maps, ignore_index=True),
+            schema="_rg int, _src long, _pid long, _df long"))
+        cols = [F.col("_pid").alias("term_id") if c == "term_id"
+                else F.col("_df").alias("df") if c == "df" else F.col(c)
+                for c in parts[0].columns if c != "_g"]
+        return blocks.join(remap, (F.col("_g") == F.col("_rg"))
+                           & (F.col("term_id") == F.col("_src"))).select(cols)
 
     # -- query result cache -------------------------------------------------
     #
@@ -963,7 +1270,7 @@ class FulltextIndex:
         for fidx, p, base in parts:
             if not (p["needed_tids"] or p["tid_ranges"]):
                 continue
-            b = fidx.postings.filter(fidx._postings_pred(p))
+            b = fidx._cluster_postings(p)
             if base:
                 b = b.withColumn(
                     "term_id", (F.col("term_id") + F.lit(base)).cast("long"))

@@ -7,9 +7,10 @@ arrive → new doc-id ranges → new segments → finalize merges. Two entry
 points:
 
 - ``append_docs``: batch-incremental — run after appending docs to the
-  corpus; ``build_index(resume=True)`` skips committed segments, rebuilds
-  any segment whose id range gained docs (stale detection via lineage),
-  and re-finalizes. Idempotent; safe to re-run after failures.
+  corpus; the docs above the recorded high-water mark become one new
+  segment and one delta generation (build.py), the rest of the index
+  is neither re-encoded nor re-finalized, and past build.DELTA_MAX
+  deltas the append compacts. Idempotent; safe to re-run after failures.
 
 - ``stream_build``: Structured Streaming — ``foreachBatch`` over any
   streaming source; each micro-batch appends its docs as segments via
@@ -41,12 +42,18 @@ def append_docs(
     """Bring the index at ``path`` up to date with ``all_docs``.
 
     ``all_docs`` is the full current corpus (e.g. the Iceberg table after
-    new snapshots); only segments with new/changed doc counts rebuild.
+    new snapshots); one aggregation over the docs above the recorded
+    high-water mark finds the new ones, which are encoded once into a new
+    segment and finalized into a delta generation — the base and earlier
+    deltas stay as they are. The append that would make more than
+    build.DELTA_MAX deltas, or take the summed lexicon sizes past
+    build.PREFIX_DRIVER_SCAN_MAX, compacts the index instead
+    (compact_index).
 
     Append contract: micro-batches must add docs with NEW, monotonically
-    growing doc ids — the staleness scan is range-pruned to the recorded
-    high-water mark, so an in-place text replacement below it is NOT
-    detected here. For upserts, delete_docs + compact_index, or run
+    growing doc ids — nothing below the high-water mark is read, so an
+    in-place text replacement below it is NOT detected here. For
+    upserts, delete_docs + compact_index, or run
     build_index(resume=True) (full fingerprint check), instead.
     """
     return build_index(

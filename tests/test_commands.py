@@ -579,6 +579,39 @@ def test_ddl_remove_older_of_two_indexes_keeps_newer(spark, tmp_path):
     assert hits(ctx) == [1]
 
 
+def test_second_index_over_other_columns_refuses(spark, tmp_path):
+    """A source table has ONE index slot: a second COLUMN_INDEX over other
+    columns (or with another tokenizer) must refuse instead of silently
+    replacing the index select answers from; the first keeps serving."""
+    import pytest as _pytest
+
+    ctx = CommandContext(spark, index_root=str(tmp_path / "two_cols"))
+    execute(ctx, "table_create", name="D", flags="TABLE_NO_KEY")
+    for col in ("title", "body"):
+        execute(ctx, "column_create", table="D", name=col, type="Text")
+    execute(ctx, "load", table="D", values=[
+        {"_id": 1, "title": "spark", "body": "slow"},
+        {"_id": 2, "title": "slow", "body": "spark"}])
+    for lex, tok in (("T", "TokenDelimit"), ("B", "TokenDelimit"),
+                     ("G", "TokenBigram")):
+        execute(ctx, "table_create", name=lex, key_type="ShortText",
+                default_tokenizer=tok)
+    execute(ctx, "column_create", table="T", name="idx",
+            flags="COLUMN_INDEX", type="D", source="title")
+    live = ctx.indexes["D"]
+    with _pytest.raises(ValueError, match="already indexed by T.idx"):
+        execute(ctx, "column_create", table="B", name="idx",
+                flags="COLUMN_INDEX", type="D", source="body")
+    with _pytest.raises(ValueError, match="already indexed by T.idx"):
+        execute(ctx, "column_create", table="G", name="idx",
+                flags="COLUMN_INDEX", type="D", source="title")
+    assert ctx.indexes["D"] is live
+    assert "idx" not in ctx.ddl.get("B", {}).get("columns", {})
+    body = execute(ctx, "select", table="D", query="spark",
+                   output_columns="_id")
+    assert sorted(r[0] for r in body[0][2:]) == [1]
+
+
 def test_logical_commands_over_time_shards(spark):
     """logical_select / logical_count / logical_range_filter
     [G: plugins/sharding/*.rb]: the shard-key range predicate IS the

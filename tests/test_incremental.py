@@ -21,36 +21,99 @@ def docs(spark):
 
 def _postings_rows(spark, path):
     return (
-        spark.read.parquet(IndexStore(path).p("postings"))
+        spark.read.parquet(IndexStore(path).base("postings"))
         .orderBy("term_id", "segment", "block_id")
         .collect()
     )
 
 
-def test_batch_append_rebuilds_stale_segment(spark, docs, tmp_path):
-    """Docs appended into a committed segment's id range must trigger a
-    rebuild of that segment; the result equals a from-scratch build."""
+def _logical_postings(path):
+    """Every generation's postings decoded to sorted (term, doc_id, tf,
+    positions) rows, plus the corpus stats: what the index holds,
+    whatever its segment, block and generation layout."""
+    import pyarrow.dataset as ds
+
+    from groonga_spark.postings import decode_block, decode_block_positions
+
+    store = IndexStore(path)
+    meta = store.read_meta()
+    roots = [store.base(meta=meta)] + [store.p("deltas", str(d["segment"]))
+                            for d in meta.get("deltas", [])]
+    out = []
+    for root in roots:
+        lex = ds.dataset(os.path.join(root, "lexicon")).to_table()
+        term = dict(zip(lex.column("term_id").to_pylist(),
+                        lex.column("term").to_pylist()))
+        for row in ds.dataset(os.path.join(root, "postings")).to_table() \
+                .to_pylist():
+            doc, tfs, _dls = decode_block(row)
+            for d, tf, pos in zip(doc.tolist(), tfs.tolist(),
+                                  decode_block_positions(row)):
+                out.append((term[row["term_id"]], d, tf, tuple(pos.tolist())))
+    stats = {k: meta[k] for k in ("n_docs", "avgdl", "postings_total")}
+    return sorted(out), stats
+
+
+def _hits(idx, q):
+    return ([(r["doc_id"], r["score"]) for r in idx.search(q, 20).collect()],
+            sorted((r["doc_id"], r["score"])
+                   for r in idx.match_docs(q).collect()))
+
+
+def test_batch_append_writes_delta_equal_to_rebuild(spark, docs, tmp_path):
+    """An append becomes one delta generation: no base file is rewritten,
+    the new docs are tokenized once, and the index answers exactly as a
+    from-scratch build of the same corpus; compaction then merges the
+    generations into the postings a from-scratch build writes."""
+    from groonga_spark.build import compact_index
+    from groonga_spark.streaming import append_docs
+
     path = str(tmp_path / "idx_inc")
     half = docs.filter(F.col("doc_id") < 250)   # segment 1 only partial
     build_index(spark, half, path, mode="delimit", segment_size=200)
+    store = IndexStore(path)
+    base_files = {
+        os.path.join(r, f): os.stat(os.path.join(r, f)).st_mtime_ns
+        for t in ("segments", "base")
+        for r, _d, fs in os.walk(store.p(t)) for f in fs
+    }
 
-    from groonga_spark.streaming import append_docs
-
-    append_docs(spark, docs, path, segment_size=200)
+    meta = append_docs(spark, docs, path, segment_size=200)
+    assert [(d["segment"], d["doc_lo"], d["doc_hi"], d["n_docs"])
+            for d in meta["deltas"]] == [(2, 250, 500, 250)]
+    assert all(os.stat(f).st_mtime_ns == m for f, m in base_files.items())
 
     path2 = str(tmp_path / "idx_scratch")
     build_index(spark, docs, path2, mode="delimit", segment_size=200)
-    assert _postings_rows(spark, path) == _postings_rows(spark, path2)
+    assert _logical_postings(path) == _logical_postings(path2)
+    idx, ref = FulltextIndex(spark, path), FulltextIndex(spark, path2)
+    for q in ["spark", "spark merge", "spark OR merge", "spark -merge",
+              '"spark fast"', "sp*", "fast*"]:
+        assert _hits(idx, q) == _hits(ref, q), q
 
-    # lineage: exactly one committed row per segment (stale rows replaced)
+    # lineage: exactly one committed row per segment, the delta's with
+    # its doc range
     import duckdb
 
     rows = duckdb.sql(
-        f"""SELECT segment, count(*) FROM
-            '{IndexStore(path).p("lineage")}/*.parquet'
-            WHERE status='committed' GROUP BY segment"""
+        f"""SELECT segment, count(*), max(doc_lo), max(doc_hi) FROM
+            read_parquet('{store.p("lineage")}/*.parquet')
+            WHERE status='committed' GROUP BY segment ORDER BY segment"""
     ).fetchall()
-    assert all(n == 1 for _, n in rows)
+    assert rows == [(0, 1, 0, 200), (1, 1, 200, 400), (2, 1, 250, 500)]
+
+    # appends cut at segment boundaries lay out the segments a full
+    # build cuts, so after compaction the postings themselves are equal
+    path3 = str(tmp_path / "idx_aligned")
+    build_index(spark, docs.filter(F.col("doc_id") < 200), path3,
+                mode="delimit", segment_size=200)
+    append_docs(spark, docs.filter(F.col("doc_id") < 400), path3)
+    append_docs(spark, docs, path3)
+    assert len(IndexStore(path3).read_meta()["deltas"]) == 2
+    compact_index(spark, path3)
+    assert IndexStore(path3).read_meta()["deltas"] == []
+    assert not os.path.exists(IndexStore(path3).p("deltas"))
+    assert _postings_rows(spark, path3) == _postings_rows(spark, path2)
 
 
 def test_append_is_noop_when_up_to_date(spark, docs, tmp_path):
@@ -87,9 +150,9 @@ def test_compaction_applies_tombstones(spark, docs, tmp_path):
     # block BOUNDARIES legitimately differ (holes punched vs never
     # existed); the logical index must agree: lexicon, stats, results
     lex_c = {(r["term"], r["df"], r["cf"], r["term_id"])
-             for r in spark.read.parquet(idx_c.store.p("lexicon")).collect()}
+             for r in spark.read.parquet(idx_c.store.base("lexicon")).collect()}
     lex_r = {(r["term"], r["df"], r["cf"], r["term_id"])
-             for r in spark.read.parquet(idx_r.store.p("lexicon")).collect()}
+             for r in spark.read.parquet(idx_r.store.base("lexicon")).collect()}
     assert lex_c == lex_r
     for k in ("n_docs", "avgdl", "n_terms", "postings_total"):
         assert idx_c.meta[k] == idx_r.meta[k], k
@@ -134,7 +197,7 @@ def test_stream_build_foreachbatch(spark, docs, tmp_path):
 
     path2 = str(tmp_path / "idx_batch")
     build_index(spark, docs, path2, mode="delimit", segment_size=200)
-    assert _postings_rows(spark, idx) == _postings_rows(spark, path2)
+    assert _logical_postings(idx) == _logical_postings(path2)
 
 
 def test_upsert_in_place_detected_by_fingerprint(spark, docs, tmp_path):
@@ -235,15 +298,8 @@ def test_resume_adopts_segment_geometry(spark, tmp_path):
     assert meta["n_docs"] == 160
 
     idx = FulltextIndex(spark, path)
-    import pyarrow.dataset as ds
-
-    lex = {
-        t: d for t, d in zip(
-            *(ds.dataset(idx.store.p("lexicon"), format="parquet")
-              .to_table(columns=["term", "df"]).column(c).to_pylist()
-              for c in ("term", "df"))
-        )
-    }
+    # the lexicon summed over the base and the delta
+    lex = {r["term"]: r["df"] for r in idx.lexicon.collect()}
     assert lex["alpha"] == 120 and lex["gamma"] == 40  # no double counting
     assert idx.match_docs("alpha").count() == 120
     assert idx.match_docs("gamma").count() == 40
@@ -270,7 +326,7 @@ def test_stream_batch_replay_is_idempotent(spark, docs, tmp_path):
 
     path2 = str(tmp_path / "replay_batch")
     build_index(spark, docs, path2, mode="delimit", segment_size=200)
-    assert _postings_rows(spark, idx) == _postings_rows(spark, path2)
+    assert _logical_postings(idx) == _logical_postings(path2)
 
 
 def test_legacy_flat_corpus_migrates_to_epoch_partition(spark, docs,
@@ -304,7 +360,7 @@ def test_legacy_flat_corpus_migrates_to_epoch_partition(spark, docs,
 
     path2 = str(tmp_path / "legacy_batch")
     build_index(spark, docs, path2, mode="delimit", segment_size=200)
-    assert _postings_rows(spark, idx) == _postings_rows(spark, path2)
+    assert _logical_postings(idx) == _logical_postings(path2)
 
 
 def test_weighted_vector_index_with_weight(spark, tmp_path):

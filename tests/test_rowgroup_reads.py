@@ -15,7 +15,7 @@ import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 import pytest
 
-from groonga_spark.build import build_index
+from groonga_spark.build import IndexStore, build_index
 from groonga_spark.search import FulltextIndex, _bounded_levenshtein
 
 TOP = "\U0010FFFF"
@@ -43,7 +43,7 @@ def base_path(spark, tmp_path_factory):
 
 
 def _files(path: str, table: str) -> list[str]:
-    return ds.dataset(os.path.join(path, table), format="parquet").files
+    return ds.dataset(IndexStore(path).base(table), format="parquet").files
 
 
 def _relayout(src: str, dst: str, rows_per_group: int,
@@ -80,7 +80,7 @@ def layout_idx(request, spark, base_path, tmp_path_factory):
 
 
 def _scan(path: str, table: str, filt=None, columns=None) -> pd.DataFrame:
-    return (ds.dataset(os.path.join(path, table), format="parquet")
+    return (ds.dataset(IndexStore(path).base(table), format="parquet")
             .to_table(columns=columns, filter=filt).to_pandas())
 
 
@@ -199,8 +199,10 @@ def test_empty_key_set_fetches_nothing(spark, base_path, monkeypatch):
 
 def test_stale_handle_reloads_directory(spark, tmp_path):
     """A handle opened before an append, a delete by another handle and a
-    compaction answers from the new state after each: its row-group
-    directories are rebuilt on the generation change."""
+    compaction answers from the new state after each. The append adds a
+    delta generation: the handle reads the delta's row-group directories
+    and keeps the base's (its files are unchanged); compaction rewrites
+    the base, whose directories are then read afresh."""
     from groonga_spark.build import compact_index
     from groonga_spark.streaming import append_docs
 
@@ -215,7 +217,8 @@ def test_stale_handle_reloads_directory(spark, tmp_path):
     assert idx.search("batchmark", 100).collect() == []
     assert len(idx.search("common", 5).collect()) == 5
     assert idx._prefix_tid_range("batch") is None
-    old_dirs = dict(idx._row_groups)
+    (base_gen,) = idx._gens
+    old_dirs = dict(base_gen._dirs)
     assert set(old_dirs) == {"postings", "lexicon"}
 
     append_docs(spark, spark.createDataFrame(base + batch, schema), path,
@@ -223,7 +226,15 @@ def test_stale_handle_reloads_directory(spark, tmp_path):
     got = {r["doc_id"] for r in idx.search("batchmark", 100).collect()}
     assert got == set(range(300, 340))
     assert {r["doc_id"] for r in idx.search("batch*", 100).collect()} == got
-    assert all(idx._row_groups[t] is not old_dirs[t] for t in old_dirs)
+    assert [g.root for g in idx._gens] == [
+        IndexStore(path).base(), os.path.join(path, "deltas", "2")]
+    assert idx._gens[0] is base_gen
+    assert all(base_gen._dirs[t] is old_dirs[t] for t in old_dirs)
+    assert set(idx._gens[1]._dirs) == {"postings", "lexicon"}
+    # the small delta keeps its decoded row groups (DELTA_HOLD_BYTES);
+    # the base decodes from its files on every read
+    assert all(d._held for d in idx._gens[1]._dirs.values())
+    assert all(d._held is None for d in base_gen._dirs.values())
 
     doomed = [300, 301, 302, 5]
     FulltextIndex(spark, path).delete_docs(doomed)
@@ -236,3 +247,9 @@ def test_stale_handle_reloads_directory(spark, tmp_path):
     common = {r["doc_id"] for r in idx.match_docs("common").collect()}
     assert common == set(range(340)) - set(doomed)
     assert idx.meta["n_docs"] == 340 - len(doomed)
+    assert len(idx._gens) == 1 and idx._gens[0] is not base_gen
+    # the compacted base is a new directory; the old one and the delta
+    # are gone
+    assert idx._gens[0].root == IndexStore(path).base() != base_gen.root
+    assert not os.path.exists(base_gen.root)
+    assert not os.path.exists(os.path.join(path, "deltas"))

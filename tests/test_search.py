@@ -34,7 +34,7 @@ def corpus(spark):
 def built(spark, corpus, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("idx") / "documents_idx")
     docs, _ = corpus
-    build_index(spark, docs, path, mode="delimit", segment_size=200, salt_target=300)
+    build_index(spark, docs, path, mode="delimit", segment_size=200)
     return FulltextIndex(spark, path)
 
 
@@ -201,7 +201,7 @@ def test_prefix_search_matches_expanded_or(built):
     import pyarrow.dataset as ds
 
     terms = sorted(
-        ds.dataset(built.store.p("lexicon"), format="parquet")
+        ds.dataset(built.store.base("lexicon"), format="parquet")
         .to_table(columns=["term"]).column("term").to_pylist()
     )
     sp = [t for t in terms if t.startswith("s")]
@@ -269,15 +269,14 @@ def test_merge_determinism_across_parallelism(spark, corpus, tmp_path):
             path,
             mode="delimit",
             segment_size=200,
-            salt_target=300,
         )
         store = IndexStore(path)
         post = (
-            spark.read.parquet(store.p("postings"))
+            spark.read.parquet(store.base("postings"))
             .orderBy("term_id", "segment", "block_id")
             .collect()
         )
-        lex = spark.read.parquet(store.p("lexicon")).orderBy("term_id").collect()
+        lex = spark.read.parquet(store.base("lexicon")).orderBy("term_id").collect()
         outs.append((post, lex))
     (p1, l1), (p2, l2) = outs
     assert l1 == l2
@@ -313,12 +312,12 @@ def test_resume_after_failure(spark, corpus, tmp_path):
     path2 = str(tmp_path / "idx_clean")
     build_index(spark, docs, path2, mode="delimit", segment_size=200)
     a = (
-        spark.read.parquet(store.p("postings"))
+        spark.read.parquet(store.base("postings"))
         .orderBy("term_id", "segment", "block_id")
         .collect()
     )
     b = (
-        spark.read.parquet(IndexStore(path2).p("postings"))
+        spark.read.parquet(IndexStore(path2).base("postings"))
         .orderBy("term_id", "segment", "block_id")
         .collect()
     )
@@ -1016,7 +1015,7 @@ def test_prefix_on_ngram_index_is_lexicon_or(spark, tmp_path):
     import pyarrow.dataset as ds
 
     lex = sorted(
-        ds.dataset(idx.store.p("lexicon"), format="parquet")
+        ds.dataset(idx.store.base("lexicon"), format="parquet")
         .to_table(columns=["term"]).column("term").to_pylist()
     )
     pfx_terms = [t for t in lex if t.startswith("日")]
@@ -1240,13 +1239,13 @@ def test_lexicon_driver_path_matches_distributed(spark, corpus, tmp_path,
         store = IndexStore(path)
         lex = [
             tuple(r)
-            for r in spark.read.parquet(store.p("lexicon"))
+            for r in spark.read.parquet(store.base("lexicon"))
             .select("term", "term_id", "df", "cf").orderBy("term_id")
             .collect()
         ]
         post = [
             tuple(r)
-            for r in spark.read.parquet(store.p("postings"))
+            for r in spark.read.parquet(store.base("postings"))
             .orderBy("term_id", "segment", "block_id").collect()
         ]
         outs[name] = (lex, post)
@@ -1265,14 +1264,14 @@ def test_lexicon_falls_back_without_vocab_partials(spark, corpus, tmp_path):
     store = IndexStore(path)
     before = [
         tuple(r)
-        for r in spark.read.parquet(store.p("lexicon"))
+        for r in spark.read.parquet(store.base("lexicon"))
         .select("term", "term_id", "df", "cf").orderBy("term_id").collect()
     ]
     shutil.rmtree(store.p("vocab"))
     B.finalize_index(spark, store, "delimit", segment_size=200)
     after = [
         tuple(r)
-        for r in spark.read.parquet(store.p("lexicon"))
+        for r in spark.read.parquet(store.base("lexicon"))
         .select("term", "term_id", "df", "cf").orderBy("term_id").collect()
     ]
     assert before == after
@@ -1293,7 +1292,7 @@ def test_empty_vocabulary_build(spark, tmp_path, monkeypatch):
         path = str(tmp_path / f"empty_{name}")
         build_index(spark, docs, path, mode="delimit", segment_size=10)
         store = IndexStore(path)
-        assert spark.read.parquet(store.p("lexicon")).count() == 0
+        assert spark.read.parquet(store.base("lexicon")).count() == 0
         idx = FulltextIndex(spark, path)
         assert idx.meta["n_docs"] == 3
         assert idx.search("anything", 10, use_cache=False).count() == 0

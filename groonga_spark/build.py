@@ -425,17 +425,31 @@ def build_segment(
     seg_dir = store.p("segments", str(segment))
     blocks.write.mode("overwrite").parquet(seg_dir)
 
-    # per-segment vocabulary partial (term, df, cf): a column-pruned agg
-    # over the JUST-WRITTEN segment (page-cache-warm locally; 3 narrow
-    # columns from the object store in prod). Runs inside the segment
-    # phase — overlapped with other segments' builds — so finalize's
-    # lexicon no longer scans every block partial on its critical path:
-    # it merges these O(vocab)-sized partials instead. Written BEFORE
-    # the lineage commit so committed ⇒ vocab partial exists; finalize
-    # falls back to the full block scan when any partial is missing
-    # (pre-upgrade indexes, post-compaction segments).
+    # Written BEFORE the lineage commit so committed ⇒ vocab partial
+    # exists; compaction rewrites it with the segment's folded blocks
+    _write_vocab(spark, store, segment)
+    m = _segment_metrics(seg_dir)
+    lineage = {
+        "segment": segment,
+        "status": "committed",
+        **m,
+        "started_at": t0,
+        "finished_at": time.time(),
+        "doc_lo": int(lo),
+        "doc_hi": int(hi),
+    }
+    _append_lineage(store, lineage)
+    return lineage
+
+
+def _write_vocab(spark: SparkSession, store: IndexStore, segment: int) -> None:
+    """A segment's vocabulary partial (term, df, cf): a column-pruned
+    aggregation over its committed blocks (page-cache-warm right after
+    the segment write; 3 narrow columns from the object store in prod).
+    Finalize's lexicon merges these O(vocab)-sized partials instead of
+    scanning every block."""
     (
-        spark.read.parquet(seg_dir)
+        spark.read.parquet(store.p("segments", str(segment)))
         .filter(F.col("term") != "")
         .groupBy("term")
         .agg(F.sum("n_docs").alias("df"), F.sum("sum_tf").alias("cf"))
@@ -443,15 +457,22 @@ def build_segment(
         .parquet(store.p("vocab", str(segment)))
     )
 
-    # metrics off the committed files (exactly what was written) + the
-    # lineage commit: both are METADATA ops over a few MB of parquet, so
-    # they run driver-side (duckdb scan / pyarrow write) — no Spark job.
-    # This mirrors how an Iceberg commit records snapshot stats: the
-    # cluster does the data pass, the coordinator does the bookkeeping.
+
+def _parquet_files(d: str) -> list[str]:
+    return ([os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")]
+            if os.path.isdir(d) else [])
+
+
+def _segment_metrics(seg_dir: str) -> dict:
+    """A segment's lineage metrics off its committed files (exactly what
+    was written): a METADATA op over a few MB of parquet, so it runs
+    driver-side (one duckdb scan) — no Spark job. This mirrors how an
+    Iceberg commit records snapshot stats: the cluster does the data
+    pass, the coordinator does the bookkeeping."""
     import duckdb
 
-    _con = duckdb.connect()
-    m = _con.sql(
+    con = duckdb.connect()
+    m = con.sql(
         f"""
         SELECT coalesce(sum(CASE WHEN term =  '' THEN n_docs END), 0) AS docs,
                coalesce(sum(CASE WHEN term <> '' THEN n_docs END), 0) AS postings,
@@ -465,23 +486,15 @@ def build_segment(
         FROM '{seg_dir}/*.parquet'
         """
     ).fetchone()
-
-    lineage = {
-        "segment": segment,
-        "status": "committed",
+    con.close()
+    return {
         "docs_tokenized": int(m[0]),
         "postings_emitted": int(m[1]),
         "bytes_compressed": int(m[2]),
         "dl_sum": int(m[3]),
-        "started_at": t0,
-        "finished_at": time.time(),
         "doc_fp": int(m[4]) % (1 << 31),
         "max_doc_id": int(m[5]),
-        "doc_lo": int(lo),
-        "doc_hi": int(hi),
     }
-    _append_lineage(store, lineage)
-    return lineage
 
 
 LINEAGE_ARROW_SCHEMA = [
@@ -597,52 +610,43 @@ def finalize_index(
     hwm = int(srow[4])  # corpus doc-id high-water mark (-1 = unknown)
     FINALIZE_PHASES["meta_s"] = time.time() - _t_meta0
 
-    # lexicon: df/cf roll up from the stage-1 vocab partials (or the
-    # block partials when any partial is missing); dense ids = rank of
-    # term. Two routes, split on a footer-estimated row count:
-    #  · DRIVER fast path (vocab partials complete and ≤
-    #    LEXICON_DRIVER_MAX rows): merge + sort the partials on the
-    #    driver (duckdb; binary UTF-8 collation — the same unsigned-byte
-    #    string order Spark sorts by, so ids are bit-identical to the
-    #    distributed path) and attach ids as one arange. Replaces three
-    #    vocab-sized Spark jobs (range-boundary sampling, per-partition
-    #    counts, lexicon write) with O(vocab) driver work + one
-    #    broadcast — those fixed job costs were the measured Amdahl
-    #    ceiling of finalize.
-    #  · DISTRIBUTED path (big vocab / missing partials):
-    #    assign_dense_ids. Its input is PERSISTED first because
-    #    repartitionByRange samples boundaries by executing the child —
-    #    unpersisted, the agg would scan + shuffle its source twice.
+    # lexicon: df/cf roll up from the stage-1 vocab partials, the one
+    # source (a segment committed without one — a layout older than the
+    # partials — gets it built here, by the helper build_segment and
+    # compaction use); dense ids = rank of term. Two routes, split on a
+    # footer-estimated row count:
+    #  · DRIVER fast path (≤ LEXICON_DRIVER_MAX partial rows): merge +
+    #    sort the partials on the driver (duckdb; binary UTF-8 collation
+    #    — the same unsigned-byte string order Spark sorts by, so ids
+    #    are bit-identical to the distributed path) and attach ids as
+    #    one arange. Replaces three vocab-sized Spark jobs
+    #    (range-boundary sampling, per-partition counts, lexicon write)
+    #    with O(vocab) driver work + one broadcast — those fixed job
+    #    costs were the measured Amdahl ceiling of finalize.
+    #  · DISTRIBUTED path (big vocab): assign_dense_ids. Its input is
+    #    PERSISTED first because repartitionByRange samples boundaries
+    #    by executing the child — unpersisted, the agg would scan +
+    #    shuffle its source twice.
+    import pyarrow.parquet as pq
+
     _t_lex0 = time.time()
-    vocab_dirs = [store.p("vocab", os.path.basename(d)) for d in seg_dirs]
+    vocab_dirs = [store.p("vocab", str(seg)) for seg in segs]
     vocab_files: list[str] = []
-    vocab_ok = True
-    for v in vocab_dirs:
-        fs = (
-            [os.path.join(v, f) for f in os.listdir(v) if f.endswith(".parquet")]
-            if os.path.isdir(v) else []
-        )
-        if not fs:
-            vocab_ok = False
-            break
-        vocab_files.extend(fs)
+    for seg, v in zip(segs, vocab_dirs):
+        if not _parquet_files(v):
+            _write_vocab(spark, store, seg)
+        vocab_files.extend(_parquet_files(v))
+    # upper bound: duplicate terms across segments inflate the sum,
+    # which only errs toward the (safe) distributed path
+    est_rows = sum(pq.ParquetFile(f).metadata.num_rows for f in vocab_files)
 
     lex_agg = None
     _lex_cached = None
     lex = None
-    if vocab_ok:
-        import pyarrow.parquet as pq
-
-        # upper bound: duplicate terms across segments inflate the sum,
-        # which only errs toward the (safe) distributed path
-        est_rows = sum(
-            pq.ParquetFile(f).metadata.num_rows for f in vocab_files
-        )
-    if vocab_ok and est_rows <= LEXICON_DRIVER_MAX:
+    if est_rows <= LEXICON_DRIVER_MAX:
         import shutil as _sh
 
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         files_sql = ", ".join(
             "'" + f.replace("'", "''") + "'" for f in vocab_files
@@ -677,16 +681,10 @@ def finalize_index(
             )
         )
     else:
-        if vocab_ok:
-            # merge the O(segments · vocab) partials — no block scan
-            lex_src = spark.read.parquet(*vocab_dirs).groupBy("term").agg(
-                F.sum("df").alias("df"), F.sum("cf").alias("cf")
-            )
-        else:
-            lex_src = blocks.filter(F.col("term") != "").groupBy("term").agg(
-                F.sum("n_docs").alias("df"), F.sum("sum_tf").alias("cf")
-            )
-        lex_agg = lex_src.persist(StorageLevel.MEMORY_AND_DISK)
+        # merge the O(segments · vocab) partials — no block scan
+        lex_agg = spark.read.parquet(*vocab_dirs).groupBy("term").agg(
+            F.sum("df").alias("df"), F.sum("cf").alias("cf")
+        ).persist(StorageLevel.MEMORY_AND_DISK)
         lex, n_terms, _lex_cached = assign_dense_ids(
             lex_agg, "term", "term_id", with_count=True
         )
@@ -924,38 +922,24 @@ def _compact(spark: SparkSession, store: IndexStore, meta: dict) -> dict:
             )
             shutil.rmtree(seg_dir)
             os.replace(tmp_dir, seg_dir)
-            # the segment's blocks changed → its stage-1 vocab partial is
-            # stale; drop it so finalize falls back to the full block scan
-            shutil.rmtree(store.p("vocab", str(seg)), ignore_errors=True)
-
-            # refresh the segment's lineage metrics (replace its rows)
+            # the segment's blocks changed → so do its vocab partial and
+            # its lineage metrics (its rows are replaced)
+            _write_vocab(spark, store, seg)
             for f in glob.glob(store.p("lineage", f"part-{seg:05d}-*")):
                 os.remove(f)
-            con = duckdb.connect()
-            m = con.sql(
-                f"""SELECT coalesce(sum(CASE WHEN term =  '' THEN n_docs END), 0),
-                           coalesce(sum(CASE WHEN term <> '' THEN n_docs END), 0),
-                           coalesce(sum(octet_length(doc_deltas)
-                                        + octet_length(tfs) + octet_length(dls)
-                                        + octet_length(positions)), 0),
-                           coalesce(sum(CASE WHEN term = '' THEN sum_tf END), 0),
-                           coalesce(max(CASE WHEN term = '' THEN max_doc_id END),
-                                    -1)
-                    FROM '{seg_dir}/*.parquet'"""
-            ).fetchone()
-            con.close()
+            m = _segment_metrics(seg_dir)
+            del m["doc_fp"]
             # doc_fp stays null (unknown): filter_blocks can drop docs from
             # a marker but cannot recompute the content crc without the
             # text — compacted segments fall back to the count-only
             # staleness check. The high-water mark stays where it was even
             # when its doc is gone: an append must never take a deleted id
             # for a new one.
+            if hwm is not None:
+                m["max_doc_id"] = max(hwm, m["max_doc_id"])
             _append_lineage(store, {
-                "segment": seg, "status": "committed",
-                "docs_tokenized": int(m[0]), "postings_emitted": int(m[1]),
-                "bytes_compressed": int(m[2]), "dl_sum": int(m[3]),
+                "segment": seg, "status": "committed", **m,
                 "started_at": time.time(), "finished_at": time.time(),
-                "max_doc_id": int(m[4]) if hwm is None else max(hwm, int(m[4])),
                 "doc_lo": lo, "doc_hi": hi,
             })
 
@@ -977,6 +961,11 @@ def _compact(spark: SparkSession, store: IndexStore, meta: dict) -> dict:
 # the end-to-end build
 # --------------------------------------------------------------------------
 
+#: segment builds in flight at once (build_index): enough to overlap one
+#: segment's driver-side bookkeeping with another's cluster work
+MAX_CONCURRENT_SEGMENTS = 3
+
+
 def build_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -986,7 +975,6 @@ def build_index(
     resume: bool = True,
     fail_after_segments: int | None = None,
     shard_size: int | None = None,
-    max_concurrent_segments: int = 3,
     append_only: bool = False,
 ) -> dict:
     """Build (or resume) a full index over docs(doc_id, text, ...).
@@ -1136,7 +1124,7 @@ def build_index(
             _drop_segment(store, s, keep_files=s in actual)
         done -= stale
     pending = [s for s in occupied if s not in done]
-    if fail_after_segments is not None or max_concurrent_segments <= 1:
+    if fail_after_segments is not None:
         built = 0
         for seg in pending:
             build_segment(spark, store, docs, seg, *seg_range(seg), mode,
@@ -1153,7 +1141,7 @@ def build_index(
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(
-            max_workers=min(max_concurrent_segments, len(pending))
+            max_workers=min(MAX_CONCURRENT_SEGMENTS, len(pending))
         ) as ex:
             futs = [
                 ex.submit(build_segment, spark, store, docs, seg,

@@ -20,11 +20,13 @@ share one frame, term ids shifted per field), on one of two routes:
 Callers cannot force a route; the rule above is the only one. Every
 driver-side result becomes a DataFrame through ``result_frame``.
 
-An index with delta generations (build.py) is read generation by
-generation: each term is looked up in every generation's lexicon, and
-the fetched blocks of all generations are relabeled with plan-local term
-ids and the df summed across generations, so the kernel and both routes
-see the frame a full rebuild would give.
+Every index is read as a list of generations (build.py: the base, then
+each delta); a lone base is the one-generation case, not a second path.
+Each term is looked up in every generation's lexicon, and each
+generation's fetched blocks go through one relabel (``_relabel``) to
+plan term ids plus the field's base, with the df summed across
+generations, so the kernel and both routes see the frame a full rebuild
+would give. A lone generation's map is the identity (plus the base).
 
 Scale notes: postings are written term_id-sorted in small row groups
 (build.ROW_GROUP_BYTES) and the lexicon term-sorted the same way. A
@@ -120,16 +122,48 @@ def run_query(parts: list, ast, plan: dict, stats: dict, k: int | None):
 
 def _driver_blocks(parts: list) -> pd.DataFrame:
     """The driver route's block frame: each field's pruned postings
-    (``_local_blocks``), term ids shifted by the field's base."""
-    frames = []
-    for idx, p, base in parts:
-        if p["needed_tids"] or p["tid_ranges"]:
-            pdf = idx._local_blocks(p["needed_tids"], p, force=True)
-            if base:
-                pdf = pdf.assign(term_id=pdf["term_id"].astype("int64") + base)
-            frames.append(pdf)
+    (``_local_blocks``), in the pooled frame's term ids."""
+    frames = [idx._local_blocks(p["needed_tids"], p, base=base)
+              for idx, p, base in parts
+              if p["needed_tids"] or p["tid_ranges"]]
     return frames[0] if len(frames) == 1 else pd.concat(frames,
                                                          ignore_index=True)
+
+
+def _relabel(pdf: pd.DataFrame, src: np.ndarray, maps: list) -> pd.DataFrame:
+    """Apply the term-id maps of ``FulltextIndex._gen_reads`` to postings
+    rows fetched by each generation's own term ids — the one relabel of
+    both routes. Row i came from the read ``src[i]``, whose map
+    ``maps[src[i]]`` is (field base, None) for the identity (a lone
+    generation: its term ids are the plan ids), else (field base, (its
+    term ids sorted, their plan ids, their summed dfs)). Sets term_id to
+    the plan id + base and df to the summed df, in place."""
+    tid = pdf["term_id"].to_numpy(np.int64)
+    out_tid = tid.copy()
+    out_df = pdf["df"].to_numpy(np.int64).copy()
+    for s, (base, idmap) in enumerate(maps):
+        rows = src == s
+        if idmap is None:
+            out_tid[rows] += base
+        else:
+            i = np.searchsorted(idmap[0], tid[rows])
+            out_tid[rows] = idmap[1][i] + base
+            out_df[rows] = idmap[2][i]
+    pdf["term_id"] = out_tid
+    pdf["df"] = out_df
+    return pdf
+
+
+def _check_run(prefix: str, lo: int, hi: int, n: int) -> None:
+    """A generation's prefix run must hold contiguous term ids: dense
+    ids are term ranks, so anything else is lexicon corruption, not a
+    soft fallback. An explicit raise (not assert): under ``python -O``
+    an assert is stripped and a corrupt lexicon would silently plan a
+    range matching unrelated terms."""
+    if hi - lo + 1 != n:
+        raise RuntimeError(
+            "lexicon corruption: dense term_id range for prefix "
+            f"{prefix!r} is non-contiguous (lo={lo}, hi={hi}, n={n})")
 
 
 def _prefix_upper_bound(prefix: str) -> str | None:
@@ -405,7 +439,6 @@ class FulltextIndex:
         self.path = path
         self.store = IndexStore(path)
         self.meta = self.store.read_meta()
-        self._lex_cache: dict[str, tuple[int, float] | None] = {}
         self._postings_df: DataFrame | None = None
         self._gens: list[_Generation] = []
         self._load_generations()
@@ -423,7 +456,6 @@ class FulltextIndex:
         and return wrong answers, not merely uncached ones."""
         gen = self._cache_generation()
         if gen != self._generation:
-            self._lex_cache.clear()
             self._postings_df = None
             self._tombstones = None
             self._tombstone_est = None
@@ -452,8 +484,9 @@ class FulltextIndex:
         self._pid_gens: dict[int, tuple[int, list]] = {}
         #: plan (lo, hi) of a prefix → per generation (first term_id of
         #: its run, plan ids of the run, summed dfs of the run), from
-        #: _expand_ast until _plan moves it into the query's plan
-        self._range_gens: dict[tuple[int, int], list] = {}
+        #: _expand_ast until _plan moves it into the query's plan (None
+        #: from the Spark route, which plans only a lone generation)
+        self._range_gens: dict[tuple[int, int], list | None] = {}
 
     @property
     def postings(self) -> DataFrame:
@@ -493,63 +526,47 @@ class FulltextIndex:
 
     # ---------------------------------------------------------------------
     #
-    # Plan term ids. A single generation's plan uses its term ids as they
-    # are. With deltas, a term's plan id is the SUM over generations of
-    # how many of that generation's terms sort before it: strictly
-    # increasing in term order (a term counts itself in at least one
-    # generation), so a prefix's terms still form one contiguous id span
-    # and the kernel adds scores in the order a rebuild's dense ids give;
-    # with one generation it is the term id itself. Each generation's
+    # Plan term ids. A term's plan id is the SUM over generations of how
+    # many of that generation's terms sort before it: strictly increasing
+    # in term order (a term counts itself in at least one generation), so
+    # a prefix's terms still form one id span and the kernel adds scores
+    # in the order a rebuild's dense ids give. With one generation it is
+    # the term id itself (dense ids are term ranks). Each generation's
     # blocks are fetched by its own ids and relabeled with the plan id and
-    # the df summed over generations (``_gen_reads``), so the kernel sees
-    # the frame a full rebuild would give it.
+    # the df summed over generations (``_gen_reads``, ``_relabel``), so
+    # the kernel sees the frame a full rebuild would give it.
 
     def _lexicon_lookup(self, tokens: list[str]) -> list[tuple[str, int, int]]:
         """Driver-side term → (plan term id, df) lookup — the PAT-trie
         seek [G: lib/pat.c · grn_pat_get] without a Spark job: each
         generation's lexicon row-group directory picks the groups whose
         term min/max can hold a token, and only those are decoded (a
-        q-term query reads at most q small groups per generation).
-        Results are memoized per index handle."""
-        missing = [t for t in tokens if t not in self._lex_cache]
-        if missing and len(self._gens) > 1:
-            seeks = [g.seek(missing) for g in self._gens]
-            for i, t in enumerate(missing):
-                found = [(gi, s[i][1]) for gi, s in enumerate(seeks)
-                         if s[i][1] is not None]
-                if not found:
-                    self._lex_cache[t] = None
-                    continue
+        q-term query reads at most q small groups per generation). The
+        seeks are memoized per generation, which lives as long as its
+        files."""
+        seeks = [g.seek(tokens) for g in self._gens]
+        out = []
+        for i, t in enumerate(tokens):
+            found = [(gi, s[i][1]) for gi, s in enumerate(seeks)
+                     if s[i][1] is not None]
+            if found:
                 pid = sum(s[i][0] for s in seeks)
                 df = sum(int(s[i][2]) for s in seeks)
-                self._lex_cache[t] = (pid, float(df))
                 self._pid_gens[pid] = (df, found)
-        elif missing:
-            tbl = self._table_rows("lexicon", ["term", "term_id", "df"],
-                                   keys=missing)
-            found = set()
-            for term, tid, df in zip(*(c.to_pylist() for c in tbl.columns)):
-                self._lex_cache[term] = (int(tid), float(df))
-                found.add(term)
-            for t in missing:
-                if t not in found:
-                    self._lex_cache[t] = None
-        return [
-            (t, *self._lex_cache[t])
-            for t in tokens
-            if self._lex_cache.get(t) is not None
-        ]
+                out.append((t, pid, float(df)))
+        return out
 
     #: Lexicon size above which prefix planning runs as ONE pruned Spark
-    #: aggregation / scan instead of a driver-side pyarrow fetch: on a
+    #: aggregation / scan instead of the driver's generation loop: on a
     #: 10^8–10^9-term lexicon a hot prefix can match millions of rows,
     #: and the driver must never materialize them (the contract of
     #: _prefix_tid_range is literally two ints + two scalars). Below it,
-    #: the pyarrow path answers without scheduling a Spark job
-    #: (search-head latency). Class attr so tests/deployments can tune.
-    #: An index with deltas plans prefixes on the driver whatever this
-    #: says; its appends compact instead of taking the summed lexicon
-    #: sizes past the build's bound of the same name.
+    #: the driver reads each generation's run without scheduling a Spark
+    #: job (search-head latency). Class attr so tests/deployments can
+    #: tune. Only a lone generation takes the Spark route: an index with
+    #: deltas plans prefixes on the driver whatever this says, since its
+    #: appends compact instead of taking the summed lexicon sizes past
+    #: the build's bound of the same name.
     PREFIX_DRIVER_SCAN_MAX = PREFIX_DRIVER_SCAN_MAX
 
     #: Similar (*S) keeps only this many of the input's rarest (lowest
@@ -604,22 +621,29 @@ class FulltextIndex:
         return out
 
     def _prefix_tid_range(self, prefix: str) -> tuple[int, int, int, float] | None:
-        """(lo_tid, hi_tid, n_terms, sum_df) of every lexicon term with
-        ``prefix`` — one pruned scan reading only term_id/df. Dense ids
-        are term-sorted (build.assign_dense_ids), so the match set is
-        exactly the CONTIGUOUS id range [lo, hi]; None when no term
-        matches. Past PREFIX_DRIVER_SCAN_MAX lexicon terms the range
-        comes from ONE Spark ``min/max/count/sum`` aggregation with the
-        range predicate pushed to the parquet/Iceberg scan — a hot
+        """(lo, hi, n_terms, sum_df) of every lexicon term with
+        ``prefix``, in plan term ids; None when no term matches. Plan ids
+        rise with the term, so the match set is the id span [lo, hi]
+        (exactly its n ids with one generation: dense ids are term
+        ranks). A prefix with no finite successor (all U+10FFFF) is the
+        open range [p, ∞): every term there starts with it.
+
+        On the driver, each generation's matching run is read (term,
+        term_id, df) and must hold contiguous term ids (``_check_run``);
+        the union of the runs is ranked in Arrow, and each generation's
+        relabeling is kept for ``_plan`` to hand to the fetch
+        (``_gen_reads``). Past PREFIX_DRIVER_SCAN_MAX lexicon terms the
+        span comes from ONE Spark ``min/max/count/sum`` aggregation with
+        the range predicate pushed to the parquet/Iceberg scan — a hot
         prefix over a 10^8-term lexicon never fetches matched rows to
-        the driver (the contract is two ints + two scalars); under it,
-        a driver pyarrow scan answers without a Spark job. A prefix with
-        no finite successor (all U+10FFFF) is the open range [p, ∞):
-        every term there starts with it, so the ids stay contiguous."""
+        the driver. Only a lone generation gets there: an append that
+        would take the summed lexicon sizes past the build's bound of
+        the same name compacts instead."""
+        import pyarrow.compute as pc
+
         ub = _prefix_upper_bound(prefix)
-        if len(self._gens) > 1:
-            return self._merged_tid_range(prefix, ub)
-        if self.meta.get("n_terms", 0) > self.PREFIX_DRIVER_SCAN_MAX:
+        if (len(self._gens) == 1
+                and self.meta.get("n_terms", 0) > self.PREFIX_DRIVER_SCAN_MAX):
             cond = F.col("term") >= prefix
             if ub is not None:
                 cond = cond & (F.col("term") < ub)
@@ -637,65 +661,42 @@ class FulltextIndex:
             if not row["n"]:
                 return None
             lo, hi, n = int(row["lo"]), int(row["hi"]), int(row["n"])
-            if hi - lo + 1 != n:
-                raise RuntimeError(
-                    "lexicon corruption: dense term_id range for prefix "
-                    f"{prefix!r} is non-contiguous (lo={lo}, hi={hi}, n={n})"
-                )
+            _check_run(prefix, lo, hi, n)
+            self._range_gens[(lo, hi)] = None  # the identity map
             return lo, hi, n, float(row["sum_df"])
-        import pyarrow.compute as pc
-
-        tbl = self._table_rows("lexicon", ["term_id", "df"],
-                               ranges=[(prefix, ub)])
-        n = tbl.num_rows
-        if n == 0:
+        runs = [self._table_rows("lexicon", ["term", "term_id", "df"],
+                                 ranges=[(prefix, ub)], gen=g)
+                for g in self._gens]
+        sizes = [t.num_rows for t in runs]
+        if not sum(sizes):
             return None
-        tid = tbl.column("term_id")
-        lo = pc.min(tid).as_py()
-        hi = pc.max(tid).as_py()
-        # dense ids are rank-of-term → a prefix range MUST be contiguous;
-        # anything else means lexicon corruption, not a soft fallback.
-        # Explicit raise (not assert): under `python -O` an assert is
-        # stripped and a corrupt lexicon would silently return a range
-        # matching unrelated terms.
-        if hi - lo + 1 != n:
-            raise RuntimeError(
-                "lexicon corruption: dense term_id range for prefix "
-                f"{prefix!r} is non-contiguous (lo={lo}, hi={hi}, n={n})"
-            )
-        return int(lo), int(hi), int(n), float(pc.sum(tbl.column("df")).as_py())
-
-    def _merged_tid_range(self, prefix: str, ub: str | None):
-        """``_prefix_tid_range`` over several generations: each one's
-        matching lexicon run is read on the driver — bounded, since an
-        append that would take the summed lexicon sizes past the build's
-        PREFIX_DRIVER_SCAN_MAX compacts instead — and the union of their
-        terms gets plan ids and summed dfs; each generation's relabeling
-        is kept for ``_plan`` to hand to the fetch (``_gen_reads``)."""
-        runs = []
-        for g in self._gens:
-            tbl = self._table_rows("lexicon", ["term", "term_id", "df"],
-                                   ranges=[(prefix, ub)], gen=g)
-            terms = np.asarray(tbl.column("term").to_pylist(), object)
-            first = (tbl.column("term_id")[0].as_py() if len(terms)
-                     else g.seek([prefix])[0][0])
-            runs.append((first, terms,
-                         tbl.column("df").to_numpy().astype(np.int64)))
-        union = np.unique(np.concatenate([t for _f, t, _d in runs]))
-        if not len(union):
-            return None
-        pid = np.zeros(len(union), np.int64)
-        df = np.zeros(len(union), np.int64)
-        at = []
-        for first, terms, dfs in runs:
-            pid += first + np.searchsorted(terms, union, "left")
-            i = np.searchsorted(union, terms)
-            df[i] += dfs
-            at.append((first, i))
+        firsts = []
+        for g, t in zip(self._gens, runs):
+            if t.num_rows:
+                lo, hi = pc.min_max(t.column("term_id")).values()
+                _check_run(prefix, lo.as_py(), hi.as_py(), t.num_rows)
+                firsts.append(lo.as_py())
+            else:  # how many of its terms sort before the prefix
+                firsts.append(g.seek([prefix])[0][0])
+        # rank the union: a term's plan id is the sum of the firsts plus
+        # the number of run rows (of any generation) sorting before it
+        union = pa.concat_tables(runs)
+        order = pc.sort_indices(union, [("term", "ascending")])
+        st = union.column("term").take(order)
+        new = np.ones(len(st), bool)
+        new[1:] = pc.not_equal(st[1:], st[:-1]).to_numpy()
+        starts = np.flatnonzero(new)
+        rank = np.cumsum(new) - 1
+        pid = sum(firsts) + starts
+        df = np.add.reduceat(union.column("df").take(order).to_numpy()
+                             .astype(np.int64), starts)
+        # a generation's rows come out of the sort in its term-id order
+        src = np.repeat(np.arange(len(runs)), sizes)[order.to_numpy()]
         lo, hi = int(pid[0]), int(pid[-1])
-        self._range_gens[(lo, hi)] = [(first, pid[i], df[i])
-                                      for first, i in at]
-        return lo, hi, len(union), float(df.sum())
+        self._range_gens[(lo, hi)] = [
+            (first, pid[rank[src == gi]], df[rank[src == gi]])
+            for gi, first in enumerate(firsts)]
+        return lo, hi, len(starts), float(df.sum())
 
     def fuzzy_terms(self, term: str, max_distance: int = 1,
                     prefix_length: int = 0,
@@ -885,17 +886,15 @@ class FulltextIndex:
             "tid_ranges": spans,
             "ranges_sum_df": float(sum(r.sum_df for r in ranges)),
         }
-        if len(self._gens) > 1:
-            # each span's relabeling moves from the handle into the plan:
-            # the handle keeps none of it past the query
-            prefix = {(r.lo_tid, r.hi_tid): r.prefix for r in ranges}
-            plan["range_gens"] = {}
-            for span in spans:
-                if span not in self._range_gens:  # planned twice
-                    self._merged_tid_range(
-                        prefix[span], _prefix_upper_bound(prefix[span]))
-                plan["range_gens"][span] = self._range_gens.pop(span)
-            self._range_gens.clear()
+        # each span's relabeling moves from the handle into the plan: the
+        # handle keeps none of it past the query
+        prefix = {(r.lo_tid, r.hi_tid): r.prefix for r in ranges}
+        plan["range_gens"] = {}
+        for span in spans:
+            if span not in self._range_gens:  # planned twice
+                self._prefix_tid_range(prefix[span])
+            plan["range_gens"][span] = self._range_gens.pop(span)
+        self._range_gens.clear()
         # Small tombstone sets ride the plan as a numpy mask (cheap,
         # broadcast once per query). Past TOMBSTONE_DRIVER_MAX the
         # driver must never materialize the set — the plan carries a
@@ -1088,37 +1087,40 @@ class FulltextIndex:
         return sum_df * bpp * 2.0
 
     def _local_blocks(self, tids: list[int], plan: dict,
-                      force: bool = True):
+                      force: bool = True, base: int = 0):
         """The postings rows of ``tids`` and of the plan's TermRange spans
-        on the driver. Only the row groups whose term_id min/max can hold
-        them are decoded (postings files are term_id-sorted); a span
+        on the driver, in plan term ids plus the field ``base``: each
+        generation's rows (``_gen_reads``) go through its map
+        (``_relabel``). Only the row groups whose term_id min/max can
+        hold them are decoded (postings files are term_id-sorted); a span
         selects groups as a range, never as an IN list. The route has
         already chosen the driver (``run_query``); ``force`` is accepted
         for callers that fetch outside it, and the read is the same."""
-        if len(self._gens) == 1:
-            ranges = [(lo, hi + 1) for lo, hi in plan.get("tid_ranges") or []]
-            return self._table_rows("postings", None, keys=list(tids),
-                                    ranges=ranges).to_pandas()
-        parts = []
-        for g, keys, ranges, src, pid, df in self._gen_reads(tids, plan):
-            tbl = self._table_rows("postings", None, keys, ranges, gen=g)
-            i = np.searchsorted(src, tbl.column("term_id").to_numpy())
-            for name, v in (("term_id", pid[i]), ("df", df[i])):
-                tbl = tbl.set_column(tbl.schema.get_field_index(name), name,
-                                     pa.array(v, pa.int64()))
-            parts.append(tbl)
-        if not parts:
+        reads = self._gen_reads(tids, plan, base)
+        if not reads:
             return self._table_rows("postings", None).to_pandas()
-        return pa.concat_tables(parts).to_pandas()
+        tbls = [self._table_rows("postings", None, keys, ranges, gen=g)
+                for g, keys, ranges, _m in reads]
+        src = np.repeat(np.arange(len(tbls)), [t.num_rows for t in tbls])
+        return _relabel(pa.concat_tables(tbls).to_pandas(), src,
+                        [m for *_r, m in reads])
 
-    def _gen_reads(self, tids: list[int], plan: dict) -> list[tuple]:
+    def _gen_reads(self, tids: list[int], plan: dict,
+                   base: int = 0) -> list[tuple]:
         """Per generation holding any of the plan's terms: (generation,
-        its term ids to read, its [lo, hi) term-id runs to read, and the
-        relabeling: its term ids sorted, their plan ids, summed dfs). A
-        term id appears once in the relabeling however many of the plan's
-        terms and spans cover it, so a join on it matches each block
-        once."""
-        spans = [plan["range_gens"][r] for r in plan.get("tid_ranges") or []]
+        its term ids to read, its [lo, hi) term-id runs to read, its map
+        for ``_relabel``: generation term id → plan id + field ``base``,
+        with the summed df). A term id appears once in a map however many
+        of the plan's terms and spans cover it, so each block is read and
+        relabeled once. A lone generation's plan ids are its term ids:
+        it reads the plan's ids and spans as they are, and its map is the
+        identity — so a plan with no per-generation runs (a hand-built
+        ``{"tid_ranges": ...}``) reads a one-generation index too."""
+        spans = plan.get("tid_ranges") or []
+        if len(self._gens) == 1:
+            return [(self._gens[0], list(tids),
+                     [(lo, hi + 1) for lo, hi in spans], (base, None))]
+        runs = [plan["range_gens"][r] for r in spans]
         out = []
         for gi, g in enumerate(self._gens):
             keys, src, pid, df = [], [], [], []
@@ -1131,49 +1133,34 @@ class FulltextIndex:
                         pid.append([t])
                         df.append([t_df])
             ranges = []
-            for span in spans:
-                first, s_pid, s_df = span[gi]
-                if len(s_pid):
-                    ranges.append((first, first + len(s_pid)))
-                    src.append(np.arange(first, first + len(s_pid)))
-                    pid.append(s_pid)
-                    df.append(s_df)
+            for run in runs:
+                first, r_pid, r_df = run[gi]
+                if len(r_pid):
+                    ranges.append((first, first + len(r_pid)))
+                    src.append(np.arange(first, first + len(r_pid)))
+                    pid.append(r_pid)
+                    df.append(r_df)
             if src:
                 src, o = np.unique(np.concatenate(src).astype(np.int64),
                                    return_index=True)
-                out.append((g, keys, ranges, src,
-                            np.concatenate(pid).astype(np.int64)[o],
-                            np.concatenate(df).astype(np.int64)[o]))
+                out.append((g, keys, ranges, (base, (
+                    src, np.concatenate(pid).astype(np.int64)[o],
+                    np.concatenate(df).astype(np.int64)[o]))))
         return out
 
-    def _cluster_postings(self, plan: dict) -> DataFrame:
-        """The cluster route's postings of the plan, in plan term ids:
-        each generation's scan pushes its own term-id predicate down, and
-        a broadcast join relabels its rows (a single generation's scan is
-        returned as is)."""
-        if len(self._gens) == 1:
-            return self.postings.filter(_postings_pred(
-                plan["needed_tids"], plan.get("tid_ranges") or []))
-        parts, maps = [], []
-        for gi, (g, keys, ranges, src, pid, df) in enumerate(
-                self._gen_reads(plan["needed_tids"], plan)):
-            parts.append(
-                self.spark.read.parquet(os.path.join(g.root, "postings"))
-                .filter(_postings_pred(keys, [(a, b - 1) for a, b in ranges]))
-                .withColumn("_g", F.lit(gi)))
-            maps.append(pd.DataFrame({"_rg": gi, "_src": src, "_pid": pid,
-                                      "_df": df}))
-        blocks = parts[0]
-        for p in parts[1:]:
-            blocks = blocks.unionByName(p)
-        remap = F.broadcast(self.spark.createDataFrame(
-            pd.concat(maps, ignore_index=True),
-            schema="_rg int, _src long, _pid long, _df long"))
-        cols = [F.col("_pid").alias("term_id") if c == "term_id"
-                else F.col("_df").alias("df") if c == "df" else F.col(c)
-                for c in parts[0].columns if c != "_g"]
-        return blocks.join(remap, (F.col("_g") == F.col("_rg"))
-                           & (F.col("term_id") == F.col("_src"))).select(cols)
+    def _cluster_postings(self, reads: list) -> DataFrame:
+        """The cluster route's postings of ``reads`` (``_gen_reads`` of
+        any fields and generations): each generation's scan pushes its
+        own term-id predicate down, and its rows carry ``_src``, the
+        read's position, for the per-shard UDF to apply that read's map
+        (``_relabel``)."""
+        blocks = None
+        for i, (g, keys, ranges, _m) in enumerate(reads):
+            b = (self.spark.read.parquet(os.path.join(g.root, "postings"))
+                 .filter(_postings_pred(keys, [(a, z - 1) for a, z in ranges]))
+                 .withColumn("_src", F.lit(i)))
+            blocks = b if blocks is None else blocks.unionByName(b)
+        return blocks
 
     # -- query result cache -------------------------------------------------
     #
@@ -1249,13 +1236,14 @@ class FulltextIndex:
     def _per_shard_eval(self, ast, plan: dict, stats: dict, k: int,
                         topk: bool, parts: list) -> DataFrame:
         """The cluster leg of ``run_query``: fan the kernel out per
-        (segment, shard) over the union of ``parts``' postings — each
-        (index, its plan, term-id base) of the query's fields, term ids
-        shifted by the base. Shards are
-        doc-disjoint and the fields of one layout share their shard
-        geometry, so one group holds every field's blocks for its doc
-        range and the kernel is exact per group; parallelism = live
-        shards, not segments.
+        (segment, shard) over the pruned postings of every generation of
+        ``parts``' fields — each (index, its plan, term-id base) of the
+        query's fields (``_cluster_postings``); the UDF relabels each
+        group's rows into the pooled frame's term ids from the broadcast
+        maps (``_relabel``). Shards are doc-disjoint and the fields of
+        one layout share their shard geometry, so one group holds every
+        field's blocks for its doc range and the kernel is exact per
+        group; parallelism = live shards, not segments.
 
         A field whose plan marks its tombstones external (set too big
         for the driver) has them COGROUPED with each shard: its
@@ -1264,24 +1252,22 @@ class FulltextIndex:
         the full set is never materialized on the driver nor shipped
         whole to any executor."""
         spark = self.spark
+        reads = [r for fidx, p, base in parts
+                 if p["needed_tids"] or p["tid_ranges"]
+                 for r in fidx._gen_reads(p["needed_tids"], p, base)]
         bplan = spark.sparkContext.broadcast(plan)
         ast_b = spark.sparkContext.broadcast(ast)
-        blocks = None
-        for fidx, p, base in parts:
-            if not (p["needed_tids"] or p["tid_ranges"]):
-                continue
-            b = fidx._cluster_postings(p)
-            if base:
-                b = b.withColumn(
-                    "term_id", (F.col("term_id") + F.lit(base)).cast("long"))
-            blocks = b if blocks is None else blocks.unionByName(b)
-        blocks = blocks.withColumn("shard", F.shiftright("block_id", 24))
+        maps_b = spark.sparkContext.broadcast([m for *_r, m in reads])
+        blocks = self._cluster_postings(reads).withColumn(
+            "shard", F.shiftright("block_id", 24))
 
         external = [(fi, fidx) for fi, (fidx, p, _b) in enumerate(parts)
                     if p.get("tombstones_external")]
         if not external:
             def _run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-                kernel = SegmentQueryKernel(pdf, bplan.value, stats, k)
+                kernel = SegmentQueryKernel(
+                    _relabel(pdf.drop(columns="_src"), pdf["_src"].to_numpy(),
+                             maps_b.value), bplan.value, stats, k)
                 doc, score = (kernel.run(ast_b.value) if topk
                               else kernel.eval(ast_b.value))
                 return pd.DataFrame({"doc_id": doc, "score": score})
@@ -1330,7 +1316,9 @@ class FulltextIndex:
                 fields[int(fi)] = (base, st,
                                    np.unique(g["doc_id"].to_numpy(np.int64)))
             p["fields"] = fields
-            kernel = SegmentQueryKernel(bpdf, p, stats, k)
+            kernel = SegmentQueryKernel(
+                _relabel(bpdf.drop(columns="_src"), bpdf["_src"].to_numpy(),
+                         maps_b.value), p, stats, k)
             doc, score = (kernel.run(ast_b.value) if topk
                           else kernel.eval(ast_b.value))
             return pd.DataFrame({"doc_id": doc, "score": score})

@@ -329,3 +329,45 @@ def test_index_is_current_checks_base_location(spark, tmp_path):
         shutil.move(os.path.join(base, table), os.path.join(path, table))
     shutil.rmtree(base)
     assert not index_is_current(path, n_docs=20)
+
+
+def test_compaction_rewrites_vocab_partials(spark, tmp_path, monkeypatch):
+    """Compaction folds each segment's vocab partial with its blocks:
+    after compact_index with tombstones, every committed segment's
+    partial equals (term, Σn_docs, Σsum_tf) over its folded blocks, and
+    the finalize merges those partials on the driver — it never takes
+    the distributed assign_dense_ids route."""
+    import pyarrow.dataset as ds
+
+    rows = [(i, f"w{i % 9} common extra{i % 4}") for i in range(60)]
+    path = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(rows[:48], "doc_id long, "
+                                             "text string"),
+                path, mode="delimit", segment_size=16)
+    append_docs(spark, spark.createDataFrame(rows, "doc_id long, "
+                                             "text string"), path)
+    FulltextIndex(spark, path).delete_docs([1, 2, 20, 33, 50, 51])
+
+    def boom(*a, **k):
+        raise AssertionError("compaction took the distributed lexicon route")
+
+    monkeypatch.setattr(build, "assign_dense_ids", boom)
+    meta = compact_index(spark, path)
+    assert meta["deltas"] == [] and meta["n_docs"] == 54
+
+    store = IndexStore(path)
+    segs = sorted(store.committed_segments())
+    assert segs == [0, 1, 2, 3]
+    for seg in segs:
+        blocks = ds.dataset(store.p("segments", str(seg))).to_table(
+            columns=["term", "n_docs", "sum_tf"]).to_pandas()
+        want = (blocks[blocks["term"] != ""].groupby("term", as_index=False)
+                .agg(df=("n_docs", "sum"), cf=("sum_tf", "sum")))
+        got = ds.dataset(store.p("vocab", str(seg))).to_table().to_pandas()
+        got = got.sort_values("term", ignore_index=True)
+        assert got[["term", "df", "cf"]].astype(
+            {"df": "int64", "cf": "int64"}).equals(
+            want.astype({"df": "int64", "cf": "int64"})), seg
+    # the deleted docs left the partials, hence the merged lexicon
+    lex = FulltextIndex(spark, path).lexicon.toPandas().set_index("term")
+    assert lex.loc["common", "df"] == 54

@@ -894,7 +894,10 @@ def test_handle_invalidation_on_external_mutation(spark, tmp_path):
     handle = FulltextIndex(spark, path)
     got1 = {r["doc_id"] for r in handle.search("apple", 10).collect()}
     assert got1 == {0, 1}
-    assert "apple" in handle._lex_cache  # the memo we must invalidate
+    # the memo we must not answer from after the rebuild: it lives on
+    # the base generation, which the rebuild replaces
+    (old_base,) = handle._gens
+    assert "apple" in old_base._seeks
 
     _t.sleep(0.02)  # ensure a distinct meta mtime
     docs2 = spark.createDataFrame(
@@ -909,6 +912,7 @@ def test_handle_invalidation_on_external_mutation(spark, tmp_path):
     fresh = FulltextIndex(spark, path)
     want2 = {r["doc_id"] for r in fresh.search("apple", 10).collect()}
     assert got2 == want2 == {1, 2}
+    assert handle._gens[0] is not old_base
     # scores also match the fresh handle bit-for-bit (stats refreshed)
     s_handle = sorted((r["doc_id"], r["score"])
                       for r in handle.search("apple", 10).collect())
@@ -1540,6 +1544,34 @@ def test_prefix_prod_path_never_materializes_matched_rows(spark, tmp_path):
                 for r in idx2.search("pre* common", 15,
                                      use_cache=False).collect()]
     assert got_hits == want_hits
+
+
+def test_prefix_run_with_a_gap_raises(spark, tmp_path):
+    """A lexicon whose prefix run skips a term id is corruption, not a
+    soft fallback: prefix planning raises on the driver's generation
+    loop and on the Spark route past PREFIX_DRIVER_SCAN_MAX alike."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = [(i, f"pre{i:03d} common") for i in range(40)]
+    path = str(tmp_path / "idx_gap")
+    build_index(spark, spark.createDataFrame(rows, "doc_id long, text string"),
+                path, mode="delimit", segment_size=100)
+    lex_dir = IndexStore(path).base("lexicon")
+    (f,) = [os.path.join(lex_dir, x) for x in os.listdir(lex_dir)
+            if x.endswith(".parquet")]
+    tbl = pq.read_table(f)
+    pq.write_table(tbl.filter(pa.array(
+        [t != "pre020" for t in tbl.column("term").to_pylist()])), f)
+
+    idx = FulltextIndex(spark, path)
+    assert idx._prefix_tid_range("com") is not None  # no gap there
+    with pytest.raises(RuntimeError, match="lexicon corruption"):
+        idx._prefix_tid_range("pre")
+    idx = FulltextIndex(spark, path)
+    idx.PREFIX_DRIVER_SCAN_MAX = 0  # the Spark aggregate route
+    with pytest.raises(RuntimeError, match="lexicon corruption"):
+        idx._prefix_tid_range("pre")
 
 
 def test_prefix_expansion_never_enumerates(spark, tmp_path, monkeypatch):
